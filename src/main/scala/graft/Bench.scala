@@ -298,6 +298,23 @@ object Bench {
       .getOrElse(s"$dir/BENCH_r02.json")
   }
 
+  /** The round number a full record is named for: the
+    * `SPARK_GRAFT_BENCH_ROUND` override when it holds an integer,
+    * otherwise one past the newest `BENCH_r*.json` in `dir`. A blank or
+    * garbage override falls back to that scan instead of crashing the
+    * bench after its whole run. */
+  private[graft] def benchRound(env: Option[String], dir: String): Int =
+    env.flatMap { e =>
+      val n = e.trim.toIntOption
+      if (n.isEmpty) System.err.println(s"SPARK_GRAFT_BENCH_ROUND='$e' is " +
+        "not an integer; naming the record from the BENCH_r*.json scan")
+      n
+    }.getOrElse(
+      1 + Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName)
+        .collect { case n if n.matches("BENCH_r\\d+\\.json") =>
+          n.stripPrefix("BENCH_r").stripSuffix(".json").toInt }
+        .foldLeft(0)(math.max))
+
   /** Query names inside one `"key":[{"q":...},...]` regression section
     * of a record fragment. Used by the compact summary line (names
     * only, no numbers) — the full entries stay in the full record. */
@@ -703,12 +720,7 @@ object Bench {
     // next round's comparison full-fidelity at both tiers.
     var fullRecordName = "bench_out.json"
     if (only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_TIER2", "1") != "0") {
-      val roundNo = sys.env.get("SPARK_GRAFT_BENCH_ROUND").map(_.toInt)
-        .getOrElse(1 + Option(new java.io.File(repoDir).listFiles())
-          .toSeq.flatten.map(_.getName)
-          .collect { case n if n.matches("BENCH_r\\d+\\.json") =>
-            n.stripPrefix("BENCH_r").stripSuffix(".json").toInt }
-          .foldLeft(0)(math.max))
+      val roundNo = benchRound(sys.env.get("SPARK_GRAFT_BENCH_ROUND"), repoDir)
       // NEVER clobber an existing record (round-11 verdict item 2: the
       // driver's post-round run silently overwrote the builder's
       // committed end-of-round record). Suffixed names don't match

@@ -1034,10 +1034,7 @@ class CorpusManager(
     // bloom + verify join) per ingest (guide §1.2 step 1 / §2.4;
     // measured in OPTIMIZATION_r11.md)
     val (nIn, nKept) = (docs.count(), kept.count())
-    // max(0, ·): the arithmetic compares fresh scans, so it requires
-    // `docs` to be deterministic between them (the ingest contract); the
-    // floor keeps scan disagreement from emitting a negative count
-    val nRej = math.max(0L, nIn - accepted.count())
+    val nRej = rejectCount(nIn, accepted.count())
     commitManifest(nKept, 1, CorpusFiles(
       listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
       listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
@@ -1119,6 +1116,22 @@ class CorpusManager(
           "docs' media column under the configured scheme.")
     }
 
+  /** |rej| = |in| − |accepted|: both gates partition their input
+    * row-wise. The two counts come from separate scans of the input, so
+    * the arithmetic holds only when the input is DETERMINISTIC between
+    * them (the ingest contract — a sampled or changing source breaks
+    * it). More accepted rows than input rows is that contract broken,
+    * and fails loudly with both counts rather than reporting a
+    * clamped or negative reject count. */
+  private def rejectCount(nIn: Long, nAccepted: Long): Long = {
+    if (nAccepted > nIn)
+      throw new IllegalStateException(
+        s"corpus $name: $nAccepted rows passed the ingest gates but a " +
+          s"rescan of the input counts only $nIn — the input is not " +
+          "deterministic between scans, so the reject count is undefined")
+    nIn - nAccepted
+  }
+
   def ingestShard(newDocs: DataFrame): IngestReport = withIngestLock {
     require(hasExisting, s"corpus $name has no initial ingest at $root")
     readManifest().foreach { m =>
@@ -1130,13 +1143,8 @@ class CorpusManager(
     // |rej| = |in| − |ok| (both gates partition row-wise — see
     // ingestInitial): one raw-input count + one pinned count instead of
     // a full reject-side gate recompute per shard
-    // the arithmetic compares a fresh scan of the raw input against the
-    // pinned gate output, so it requires `newDocs` to be DETERMINISTIC
-    // between the two scans (the ingest contract — a sampled/changing
-    // source would skew the count); max(0, ·) pins the floor so scan
-    // disagreement can never emit a negative reject count
     lazy val nIn = newDocs.count()
-    lazy val nRej = math.max(0L, nIn - shard.count())
+    lazy val nRej = rejectCount(nIn, shard.count())
     val nInCorpus = shard.select(col(idCol)).distinct()
       .join(corpus().select(col(idCol)), Seq(idCol), "left_semi").count()
     if (nInCorpus > 0) {

@@ -48,36 +48,41 @@ class DatasetManager(
 
   /** `pre_parse_quality_check` (`publish.py:499-539`): schema/dtype
     * assert, time contiguity at declared cadence, extreme-value bounds,
-    * missing-frequency binomial. Throws on violation. */
+    * missing-frequency binomial. Throws on violation. The three row
+    * checks share ONE aggregate pass (row count, out-of-bounds count,
+    * missing count); the interval is computed on the driver from the
+    * counts. */
   def preParseQualityCheck(update: DataFrame): Unit = {
     val t = descriptor.timeDim
+    val v = col(descriptor.dataVar)
     // (3) encoding dtype == declared (`publish.py:527-532`)
     val schema = update.schema
     require(schema.fieldNames.contains(descriptor.dataVar),
       s"update missing data var ${descriptor.dataVar}")
+    val r = update.select(col(t), v).agg(
+      count(lit(1)),
+      extremeBounds.fold(lit(0L)) { case (lo, hi) => count(when(v < lo || v > hi, lit(1))) },
+      count(when(v.isNull, lit(1)))).collect()(0)
+    val (n, nBad, nMissing) = (r.getLong(0), r.getLong(1), r.getLong(2))
     // (1) the update's time axis must be non-empty — a plain existence
-    // probe, NOT a contiguity pass: gap-freedom/cadence of the APPEND
+    // check, NOT a contiguity pass: gap-freedom/cadence of the APPEND
     // portion is enforced by GriddedStore.update's append guard (a
     // gapped update is legal when the gaps are insert islands, like the
     // reference's complex-update fixture), so running the full
     // gaps-and-islands window here would be a single-task global sort
     // that can only ever confirm non-emptiness. `publish.py:654-696`.
-    require(update.select(t).limit(1).count() == 1, "update has no times")
+    require(n > 0, "update has no times")
     // (2) extreme values (`publish.py:567-575`)
     extremeBounds.foreach { case (lo, hi) =>
-      val bad = update.filter(col(descriptor.dataVar) < lo ||
-        col(descriptor.dataVar) > hi).limit(1).count()
-      require(bad == 0, s"update contains values outside [$lo, $hi]")
+      require(nBad == 0, s"update contains values outside [$lo, $hi]")
     }
     // (4) missing-frequency binomial vs expectation (`publish.py:577-602`)
     expectedMissingFrequency.foreach { exp =>
-      val r = QualityChecks.missingFrequency(
-          update.withColumn("_g", lit(1)), "_g", col(descriptor.dataVar).isNull)
-        .select("ci_lo", "ci_hi").collect()(0)
-      if (exp < r.getDouble(0) || exp > r.getDouble(1))
+      val (ciLo, ciHi) = QualityChecks.wilson(nMissing, n, QualityChecks.Z_ALPHA_1E5)
+      if (exp < ciLo || exp > ciHi)
         throw new graft.qc.NanFrequencyMismatchException(
           f"expected missing frequency $exp%.6f outside observed CI " +
-            f"[${r.getDouble(0)}%.6f, ${r.getDouble(1)}%.6f]")
+            f"[$ciLo%.6f, $ciHi%.6f]")
     }
   }
 

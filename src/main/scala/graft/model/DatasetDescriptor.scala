@@ -47,6 +47,10 @@ object ChunkGrid {
   def bucketExpr(t: String, bucketUs: Long): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.expr(
       s"(($t div $bucketUs) - (CASE WHEN $t % $bucketUs < 0 THEN 1 ELSE 0 END))")
+
+  /** [[bucketExpr]] for one time value on the driver (the update
+    * planner's bucket arithmetic); the same floor division. */
+  def bucketOf(t: Long, bucketUs: Long): Long = Math.floorDiv(t, bucketUs)
 }
 
 /** The `.zmetadata`/attrs analog: everything the reference keeps in Zarr

@@ -6,27 +6,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Incremental-update planning over a time axis.
+/** Time-axis planning operators.
   *
-  * Re-expresses the reference's update planner
-  * (`utils/publish.py:303-330` `prepare_update_times`,
-  * `utils/publish.py:432-495` contiguous-region detection) as Spark set
-  * logic + gaps-and-islands window queries.
+  * Re-expresses the reference's contiguous-region detection
+  * (`utils/publish.py:432-495`) and cadence reports as Spark
+  * gaps-and-islands window queries. The store's own update planner
+  * (`prepare_update_times`, `utils/publish.py:303-330`) works on the
+  * driver-side time axis instead: see `GriddedStore.planUpdate`.
   *
-  * Scale note: these operate on the *distinct time axis*, which is small by
-  * construction (the reference holds it in driver memory as a coordinate
-  * array — ~10^4..10^6 values even for 100 TB of cell data). The
-  * un-partitioned `Window.orderBy` here is therefore deliberate and safe;
-  * cell-level data never flows through these plans — and since round 5 that
-  * contract is ENFORCED, not trusted: the distinct axis is materialized and
-  * counted first, and anything above `maxAxis` (default
-  * [[UpdatePlanner.DefaultMaxAxis]]) throws instead of silently
+  * Scale note: `contiguousRegions` operates on the *distinct time axis*,
+  * which is small by construction (the reference holds it in driver
+  * memory as a coordinate array — ~10^4..10^6 values even for 100 TB of
+  * cell data). The un-partitioned `Window.orderBy` there is therefore
+  * deliberate and safe; cell-level data never flows through it. That
+  * contract is ENFORCED, not trusted: the distinct axis is materialized
+  * and counted first, and anything above `maxAxis`
+  * (default [[UpdatePlanner.DefaultMaxAxis]]) throws instead of silently
   * single-tasking (see `axis`).
   */
 object UpdatePlanner {
 
-  /** Ceiling on the distinct-axis size the single-task windows below will
-    * accept. The axes-sized contract (class note) is real but was
+  /** Ceiling on the distinct-axis size the single-task windows below,
+    * and the store's driver-side update planner, will accept. The axes-sized contract (class note) is real but was
     * previously only documented: called on CELL-level data these windows
     * silently serialize the whole input onto one task and crawl. Now the
     * axis is materialized (axis-sized, one localCheckpoint), counted, and
@@ -46,17 +47,6 @@ object UpdatePlanner {
         "is this large")
     ax
   }
-
-  /** Times present in BOTH update and existing → in-place insert (region
-    * overwrite). `publish.py:303-318`. Broadcast-friendly semi join. */
-  def insertTimes(update: DataFrame, existing: DataFrame, key: String): DataFrame =
-    update.select(key).distinct()
-      .join(existing.select(key).distinct(), Seq(key), "left_semi")
-
-  /** Times only in the update → append. `publish.py:319-330`. */
-  def appendTimes(update: DataFrame, existing: DataFrame, key: String): DataFrame =
-    update.select(key).distinct()
-      .join(existing.select(key).distinct(), Seq(key), "left_anti")
 
   /** Group a set of (integral) time keys into contiguous runs: any gap
     * larger than `step` starts a new region. Returns one row per region
@@ -100,19 +90,5 @@ object UpdatePlanner {
         count(when(col("delta") > maxStep || col("delta") < minStep, lit(1)))
           .as("n_gaps"),
         max("delta").as("max_delta"))
-  }
-
-  /** Deltas of the distinct sorted time axis that fall outside
-    * [minStep, maxStep] — the irregular-cadence append validator. Time
-    * axis only (small by construction, see the class note). */
-  def cadenceViolations(times: DataFrame, key: String,
-                        minStep: Long, maxStep: Long,
-                        maxAxis: Long = DefaultMaxAxis): DataFrame = {
-    val w = Window.orderBy(key)
-    axis(times, key, maxAxis)
-      .withColumn("delta", col(key) - lag(col(key), 1).over(w))
-      .filter(col("delta").isNotNull &&
-        (col("delta") > maxStep || col("delta") < minStep))
-      .select(col(key), col("delta"))
   }
 }

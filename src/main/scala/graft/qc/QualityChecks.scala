@@ -44,6 +44,20 @@ object QualityChecks {
     ((center - half) / denom, (center + half) / denom)
   }
 
+  /** [[wilson]] for one `(x, n)` pair on the driver: the same operations
+    * in the same order, so the bounds equal `missingFrequency`'s
+    * `ci_lo`/`ci_hi` bit for bit. For callers that already hold the
+    * counts and need no per-group frame. */
+  def wilson(x: Long, n: Long, z: Double): (Double, Double) = {
+    val nd = n.toDouble
+    val phat = x.toDouble / nd
+    val z2 = z * z
+    val denom = 1.0 + z2 / nd
+    val center = phat + z2 / (2.0 * nd)
+    val half = z * math.sqrt(phat * (1.0 - phat) / nd + z2 / (4.0 * nd * nd))
+    ((center - half) / denom, (center + half) / denom)
+  }
+
   /** NaN/missing-frequency check per group (`publish.py:577-602`):
     * observed missing fraction with a CI at significance 1e-5 — Wilson
     * by default (closed-form, codegen'd), Clopper-Pearson when

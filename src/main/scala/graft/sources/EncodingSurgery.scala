@@ -34,9 +34,8 @@ object EncodingSurgery {
     // the pre-update metadata (e.g. a stale dateRange). Same anchoring
     // as update()/compact() (see GriddedStore.latestCommittedVersion).
     val base = store.latestVersionNumber()
-    val commitV = store.latestCommittedVersion()
-    val d = (if (commitV > 0) store.readDescriptorAt(commitV) else None)
-      .getOrElse(pd)
+    val a = store.anchor(pd)
+    val d = a.descriptor
     require(coord != d.dataVar,
       s"refusing to modify data variable ${d.dataVar}") // metadata.py:858-866
     require(d.dims.contains(coord), s"unknown coordinate $coord")
@@ -46,11 +45,8 @@ object EncodingSurgery {
     require(coord != d.timeDim,
       s"refusing to rewrite the time dimension ${d.timeDim}; " +
         "use update()/rebuild for time-axis changes")
-    val rewritten = (if (commitV > 0) store.readAt(commitV) else store.read())
-      .withColumn(coord, f(col(coord)))
-    val committedFiles =
-      (if (commitV > 0) store.snapshotFilesAt(commitV) else store.snapshotFiles())
-    store.claimInProgress(base, d, committedFiles)
+    val rewritten = a.scan().withColumn(coord, f(col(coord)))
+    store.claimInProgress(base, d, Some(a.files), a.schema)
     // A full-store rewrite under the manifest protocol: write the
     // rewritten rows as NEW files next to the old ones (via writeBuckets,
     // so the surgered store keeps the sorted row-group min/max skipping
@@ -59,6 +55,8 @@ object EncodingSurgery {
     // the old manifest — and the old files are retired by vacuum().
     val fresh = store.writeBuckets(rewritten, d)
     val committed = d.copy(updateInProgress = false)
+    // `f` may change the coordinate's type: the commit infers the schema
+    // from the rewritten files rather than carrying the old one forward
     store.commitAtBase(base, committed, Some(fresh))
     committed
   }

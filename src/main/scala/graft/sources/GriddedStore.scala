@@ -1,10 +1,11 @@
 package graft.sources
 
-import graft.model.{DatasetDescriptor}
+import graft.model.{ChunkGrid, DatasetDescriptor}
 import graft.operators.UpdatePlanner
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
 
@@ -32,7 +33,15 @@ import java.nio.charset.StandardCharsets
   *    with an existing-rows merge) — the analog of Zarr `region=` writes
   *    (`publish.py:332-371`); appends just add files/partitions.
   *  - all driver-side logic touches only the distinct time axis and the
-  *    descriptor; cell data never reaches the driver.
+  *    descriptor; cell data never reaches the driver. An update collects
+  *    its own distinct times to the driver (bounded by
+  *    [[UpdatePlanner.DefaultMaxAxis]], refused above it) and plans the
+  *    insert/append split there, like the reference's in-memory time
+  *    coordinate (`prepare_update_times`, `publish.py:303-330`); a pure
+  *    append (every time after the committed end) reads no store data.
+  *  - reads and commits take the data schema from the manifest, so
+  *    neither builds a frame nor commits through a parquet footer
+  *    inference job.
   *
   * Writes use a two-phase descriptor commit (`update_in_progress`,
   * `publish.py:152-180`): readers treat a store whose descriptor has
@@ -114,12 +123,37 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * commit — a lost update (found by StoreConcurrencySpec). Mutations
     * anchor to this instead; readers keep the cheap pointer. 0 when no
     * committed version exists (fresh store or legacy layout). */
-  private[sources] def latestCommittedVersion(): Long = {
-    var v = latestVersionNumber()
-    while (v >= 1 && !readDescriptorAt(v).exists(d => !d.updateInProgress))
-      v -= 1
-    v
+  private[sources] def latestCommittedVersion(): Long =
+    latestCommitted().fold(0L)(_._1)
+
+  /** [[latestCommittedVersion]] with its manifest bytes, read once. */
+  private def latestCommitted(): Option[(Long, String)] =
+    (latestVersionNumber() to 1L by -1L).iterator
+      .map(v => v -> readVersionJson(v))
+      .collectFirst { case (v, Some(j)) if parseDescriptor(j).exists(!_.updateInProgress) =>
+        v -> j }
+
+  private def parseDescriptor(json: String): Option[DatasetDescriptor] =
+    scala.util.Try(DatasetDescriptor.fromJson(json)).toOption
+
+  /** The writer-side snapshot of a mutation: ONE committed manifest —
+    * the latest committed version, or the pointer when none exists
+    * (legacy layout) — from which descriptor, file list, data schema and
+    * data scan all come. `fallback` is the descriptor used when that
+    * manifest carries none (the pointer's). */
+  private[sources] final class Anchor(json: Option[String], fallback: DatasetDescriptor) {
+    val descriptor: DatasetDescriptor = json.flatMap(parseDescriptor).getOrElse(fallback)
+    /** The pinned file list; a legacy manifest pins none, so the data
+      * directory's listing stands in. */
+    lazy val files: Seq[String] =
+      json.flatMap(extractFiles).getOrElse(listDataFiles(None).toSeq)
+    /** The recorded data schema; None for manifests older than the field. */
+    val schema: Option[StructType] = json.flatMap(extractSchema)
+    def scan(): DataFrame = pinnedScan(json)
   }
+
+  private[sources] def anchor(fallback: DatasetDescriptor): Anchor =
+    new Anchor(latestCommitted().map(_._2).orElse(pointerJson()), fallback)
 
   /** Recover from a crashed writer: re-point the committed pointer at
     * the latest COMMITTED manifest, clearing a stuck in-progress flag.
@@ -155,8 +189,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * for the same need). None for a zero-byte/partial claim left by a
     * crashed commit. */
   def readDescriptorAt(v: Long): Option[DatasetDescriptor] =
-    readVersionJson(v).flatMap(j =>
-      scala.util.Try(DatasetDescriptor.fromJson(j)).toOption)
+    readVersionJson(v).flatMap(parseDescriptor)
 
   private def readVersionJson(v: Long): Option[String] =
     if (!fs.exists(versionPath(v))) None
@@ -181,34 +214,44 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * an empty-pin store stays readable after vacuum reclaims every
     * unpinned file under data/ (directory schema inference has nothing
     * left to infer from). None for manifests older than the field. */
-  private def extractSchema(json: String)
-      : Option[org.apache.spark.sql.types.StructType] =
+  private def extractSchema(json: String): Option[StructType] =
     scala.util.Try(org.json4s.jackson.JsonMethods.parse(json) \ "data_schema")
       .toOption.flatMap {
         case org.json4s.JString(s) => scala.util.Try(
           org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
+            .asInstanceOf[StructType]).toOption
         case _ => None
       }
 
-  private def snapshotSchema(): Option[org.apache.spark.sql.types.StructType] =
-    pointerJson().flatMap(extractSchema)
-
-  private def snapshotSchemaAt(v: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    readVersionJson(v).flatMap(extractSchema)
-
-  private def emptyPinned(
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema match {
-      case Some(s) =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s)
-      case None =>
-        // pre-schema-field manifest: directory schema inference is the
-        // only source left (fails once vacuum has emptied data/ — such
-        // stores re-commit once to gain the schema field)
-        spark.read.parquet(dataPath).filter(lit(false))
+  /** The data of one manifest (`None`: no manifest, i.e. legacy). Reads
+    * exactly the pinned file list with the manifest-recorded schema, so
+    * building the frame runs no footer-inference job; manifests older
+    * than the schema field fall back to inference. */
+  private def pinnedScan(json: Option[String]): DataFrame = {
+    val schema = json.flatMap(extractSchema)
+    json.flatMap(extractFiles) match {
+      case Some(files) if files.nonEmpty =>
+        val reader = spark.read.option("basePath", dataPath)
+        schema.fold(reader)(reader.schema).parquet(files.map(f => s"$root/$f"): _*)
+      case Some(_) =>
+        // A manifest that pins an EMPTY list means "committed empty":
+        // a zero-row frame with the MANIFEST-RECORDED schema — falling
+        // through to a dir scan would make crashed-writer orphans and
+        // retired files reader-visible (the phantom-visibility hole the
+        // pinning exists to close), and dir schema inference dies the
+        // moment vacuum reclaims the orphans.
+        schema match {
+          case Some(s) =>
+            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s)
+          case None =>
+            // pre-schema-field manifest: directory schema inference is
+            // the only source left (fails once vacuum has emptied data/ —
+            // such stores re-commit once to gain the schema field)
+            spark.read.parquet(dataPath).filter(lit(false))
+        }
+      case None => spark.read.parquet(dataPath) // legacy, pre-file-tracking
     }
+  }
 
   /** All manifest versions, ascending. */
   def descriptorHistory(): Seq[(Long, DatasetDescriptor)] =
@@ -261,38 +304,46 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * number first throws ConcurrentModificationException HERE, before
     * any data write. */
   private[sources] def claimInProgress(base: Long, d: DatasetDescriptor,
-                                       files: Option[Seq[String]] = None): Unit =
+                                       files: Option[Seq[String]] = None,
+                                       schema: Option[StructType] = None): Unit =
     writeDescriptorAsVersion(base + 1, d.copy(updateInProgress = true),
-      files.orElse(snapshotFiles()))
+      files.orElse(snapshotFiles()), schema)
 
   /** Second phase: the committed manifest at `base + 2`. */
   private[sources] def commitAtBase(base: Long, d: DatasetDescriptor,
-                                    files: Option[Seq[String]]): Unit =
-    writeDescriptorAsVersion(base + 2, d, files.orElse(snapshotFiles()))
+                                    files: Option[Seq[String]],
+                                    schema: Option[StructType] = None): Unit =
+    writeDescriptorAsVersion(base + 2, d, files.orElse(snapshotFiles()), schema)
 
   /** The commit body at a FIXED version — two writers that both read the
     * same latest version race to claim the same file here, and exactly
     * one wins. Exposed package-private so the race is testable without a
-    * second process. */
+    * second process.
+    *
+    * `schema` is the data schema the manifest records. Mutations that
+    * keep the columns (update, compact) pass their anchor's, so the
+    * commit reads no footer; when None, a non-empty pin derives it from
+    * the pinned files (one inference job — writeInitial, surgery and
+    * legacy anchors) and an empty pin carries the committed pointer's
+    * forward. */
   private[sources] def writeDescriptorAsVersion(
       version: Long, d: DatasetDescriptor,
-      files: Option[Seq[String]] = None): Unit = {
+      files: Option[Seq[String]] = None,
+      schema: Option[StructType] = None): Unit = {
     fs.mkdirs(versionsDir)
     // the version manifest = descriptor fields + the pinned file list +
-    // the data schema (Spark DataType JSON — read back by the
-    // committed-empty path, which must not depend on data/ still
-    // containing inferable files); DatasetDescriptor.fromJson ignores
-    // the extra fields on read-back. Non-empty pins derive the schema
-    // from the pinned files themselves (one footer read per commit);
-    // empty pins carry the committed pointer's schema forward.
+    // the data schema (Spark DataType JSON — read back by every pinned
+    // scan, and by the committed-empty path, which must not depend on
+    // data/ still containing inferable files); DatasetDescriptor.fromJson
+    // ignores the extra fields on read-back.
     val json = files match {
       case Some(fl) =>
         import org.json4s._
-        val schemaJson: Option[String] =
+        val schemaJson: Option[String] = schema.map(_.json).orElse(
           if (fl.nonEmpty) scala.util.Try(
             spark.read.option("basePath", dataPath)
               .parquet(fl.map(f => s"$root/$f"): _*).schema.json).toOption
-          else snapshotSchema().map(_.json)
+          else pointerJson().flatMap(extractSchema).map(_.json))
         val base = jackson.JsonMethods.parse(d.toJson).asInstanceOf[JObject]
         val withFiles = base.obj :+
           ("files" -> (JArray(fl.sorted.map(JString(_)).toList): JValue))
@@ -320,33 +371,13 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * Partition pruning applies to any time_bucket / time predicates
     * stacked on top (`basePath` keeps the directory-partition column
     * live on an explicit file list). */
-  def read(): DataFrame = snapshotFiles() match {
-    case Some(files) if files.nonEmpty =>
-      spark.read.option("basePath", dataPath)
-        .parquet(files.map(f => s"$root/$f"): _*)
-    case Some(_) =>
-      // A manifest that pins an EMPTY list means "committed empty":
-      // a zero-row frame with the MANIFEST-RECORDED schema — falling
-      // through to a dir scan would make crashed-writer orphans and
-      // retired files reader-visible (the phantom-visibility hole the
-      // pinning exists to close), and dir schema inference dies the
-      // moment vacuum reclaims the orphans.
-      emptyPinned(snapshotSchema())
-    case None => spark.read.parquet(dataPath) // legacy, pre-file-tracking
-  }
+  def read(): DataFrame = pinnedScan(pointerJson())
 
   /** The store as of manifest version `v` — data time travel. Valid
     * while `v` is inside the `vacuum` retention window; reading a
     * vacuumed version fails on the missing files. Falls back to a
     * directory scan for pre-file-tracking (legacy) versions. */
-  def readAt(v: Long): DataFrame = snapshotFilesAt(v) match {
-    case Some(files) if files.nonEmpty =>
-      spark.read.option("basePath", dataPath)
-        .parquet(files.map(f => s"$root/$f"): _*)
-    case Some(_) => // committed-empty version: schema only (see read())
-      emptyPinned(snapshotSchemaAt(v))
-    case None => spark.read.parquet(dataPath) // legacy, pre-file-tracking
-  }
+  def readAt(v: Long): DataFrame = pinnedScan(readVersionJson(v))
 
   /** Root-relative paths of the data files now on disk, confined to the
     * given buckets (all buckets when None). Mutations diff this
@@ -596,31 +627,29 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
           "repair or rebuild before compacting")
     val base = latestVersionNumber()
     // version-ladder snapshot, not the pointer (see latestCommittedVersion)
-    val commitV = latestCommittedVersion()
-    val d = (if (commitV > 0) readDescriptorAt(commitV) else None).getOrElse(pd)
-    def snap(): DataFrame = if (commitV > 0) readAt(commitV) else read()
-    val committedFiles =
-      (if (commitV > 0) snapshotFilesAt(commitV) else snapshotFiles())
-        .getOrElse(listDataFiles(None).toSeq)
+    val a = anchor(pd)
+    val d = a.descriptor
+    val committedFiles = a.files
     val target =
       if (buckets.nonEmpty) buckets
-      else snap().select(col("time_bucket").cast("long")).distinct()
+      else a.scan().select(col("time_bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq
-    claimInProgress(base, d, Some(committedFiles))
+    // compaction rewrites rows, never columns: the schema carries forward
+    claimInProgress(base, d, Some(committedFiles), a.schema)
     // One distributed pass: the scan reads the pinned (old) files and the
     // write creates new ones next to them — no staging table, no
     // self-overwrite cycle, because the old files outlive the job and are
     // retired only by the manifest swap below.
     val src = (if (buckets.nonEmpty)
-        snap().filter(col("time_bucket").isin(target: _*))
-      else snap())
+        a.scan().filter(col("time_bucket").isin(target: _*))
+      else a.scan())
       .select((d.dims :+ d.dataVar).map(col) :+ col("time_bucket"): _*)
     val fresh = writeBuckets(src, d)
     val targetDirs = target.map(b => s"data/time_bucket=$b/")
     val manifest = committedFiles
       .filterNot(f => targetDirs.exists(f.startsWith)) ++ fresh
     val committed = d.copy(updateInProgress = false)
-    commitAtBase(base, committed, Some(manifest))
+    commitAtBase(base, committed, Some(manifest), a.schema)
     committed
   }
 
@@ -628,6 +657,14 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * update's times into inserts (∩ existing) and appends (− existing),
     * run the update QC gates, rewrite affected buckets, append the rest,
     * two-phase-commit the descriptor.
+    *
+    * Planning happens on the driver over the time axis only
+    * ([[GriddedStore.planUpdate]]): the update's distinct times are
+    * collected once (bounded by [[UpdatePlanner.DefaultMaxAxis]]; a larger
+    * axis is refused), and when every one of them lies after the
+    * committed end the update is a pure append that reads no store data.
+    * Otherwise one scan of the anchored snapshot, pruned to the update's
+    * `[lo, hi]`, supplies the existing times to split against.
     */
   def update(updateDf: DataFrame, allowOverwrite: Boolean = true): DatasetDescriptor = {
     val pd = readDescriptor().getOrElse(
@@ -643,100 +680,32 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
           "way: the pointer still pins the last committed file list")
     val base = latestVersionNumber() // fixed claim base: see writeDescriptor doc
     // snapshot ANCHORED to the version ladder, never the pointer (see
-    // latestCommittedVersion): descriptor, data frame and file list all
-    // come from the same committed manifest
-    val commitV = latestCommittedVersion()
-    val d = (if (commitV > 0) readDescriptorAt(commitV) else None).getOrElse(pd)
-    def snap(): DataFrame = if (commitV > 0) readAt(commitV) else read()
+    // latestCommittedVersion): descriptor, data frame, file list and
+    // schema all come from the same committed manifest
+    val a = anchor(pd)
+    val d = a.descriptor
     val t = d.timeDim
+    def bucketOf(time: Long): Long = ChunkGrid.bucketOf(time, d.chunk.timeBucketUs)
     val p = prepared(updateDf, d).cache()
     try {
-      val existingTimes = snap().select(t).distinct()
-      val insertT = UpdatePlanner.insertTimes(p, existingTimes, t)
-      val appendT = UpdatePlanner.appendTimes(p, existingTimes, t)
-
-      // update_quality_check (`publish.py:604-652`)
-      val (dsStart, dsEnd) = d.dateRange.getOrElse(
-        throw new IllegalStateException("existing store has no committed date range"))
-      val stats = p.agg(min(t).as("lo"), max(t).as("hi"), count(lit(1)).as("n")).collect()(0)
-      if (stats.getLong(2) == 0L)
-        throw new IllegalArgumentException("empty update is an error") // no-op update
-      if (stats.getLong(0) < dsStart)
-        throw new IllegalArgumentException(
-          s"update contains times before dataset start $dsStart")
-      val inserts = insertT.limit(1).count() > 0
-      if (inserts && !allowOverwrite)
-        throw new IllegalStateException("inserts present but overwrite not allowed")
-      // The full append set must be ONE contiguous run starting adjacent
-      // to the committed end — otherwise a gapped append would commit a
-      // silent hole while dateRange claims coverage (`publish.py:641-648`
-      // bridge check + `:654-696` contiguity). Regular datasets require
-      // deltas of exactly cadenceUs; irregular ones declare
-      // cadenceBoundsUs and any delta in [lo, hi] is contiguous
-      // (`publish.py:677-685`). The region/violation list is tiny (time
-      // axis only).
-      val hasAppends = d.cadenceBoundsUs match {
-        case Some((loBound, hiBound)) =>
-          val appendStats = appendT
-            .agg(min(t).as("lo"), count(lit(1)).as("n")).collect()(0)
-          val any = appendStats.getLong(1) > 0
-          if (any) {
-            val viol = UpdatePlanner
-              .cadenceViolations(appendT, t, loBound, hiBound)
-              .orderBy(t).limit(3).collect()
-            if (viol.nonEmpty)
-              throw new IllegalArgumentException(
-                s"append deltas outside cadence bounds [$loBound,$hiBound]: " +
-                  viol.map(r => s"${r.getLong(0)} (delta ${r.getLong(1)})")
-                    .mkString(", "))
-            val bridge = appendStats.getLong(0) - dsEnd
-            if (bridge < loBound || bridge > hiBound)
-              throw new IllegalArgumentException(
-                s"append start ${appendStats.getLong(0)} is $bridge us past " +
-                  s"existing end $dsEnd, outside cadence bounds [$loBound,$hiBound]")
-          }
-          any
-        case None =>
-          // Exact-cadence datasets: EVERY append delta must equal
-          // cadenceUs — both gaps (delta > cadence) and OFF-GRID times
-          // (delta < cadence) are rejected. contiguousRegions alone
-          // splits only on delta > step, so a sub-cadence time would
-          // slip through it and commit an off-grid axis that wedges
-          // the next legitimate on-grid append.
-          val appendStats = appendT
-            .agg(min(t).as("lo"), count(lit(1)).as("n")).collect()(0)
-          val any = appendStats.getLong(1) > 0
-          if (any) {
-            val viol = UpdatePlanner
-              .cadenceViolations(appendT, t, d.cadenceUs, d.cadenceUs)
-              .orderBy(t).limit(3).collect()
-            if (viol.nonEmpty)
-              throw new IllegalArgumentException(
-                s"append deltas differ from cadence ${d.cadenceUs}: " +
-                  viol.map(r => s"${r.getLong(0)} (delta ${r.getLong(1)})")
-                    .mkString(", "))
-            if (appendStats.getLong(0) != dsEnd + d.cadenceUs)
-              throw new IllegalArgumentException(
-                s"append is not contiguous with existing end $dsEnd: starts at " +
-                  s"${appendStats.getLong(0)}, expected ${dsEnd + d.cadenceUs}")
-          }
-          any
-      }
+      val plan = GriddedStore.planUpdate(d, GriddedStore.collectAxis(p, t),
+        (lo, hi) => GriddedStore.collectAxis(a.scan()
+          .filter(col("time_bucket").between(bucketOf(lo), bucketOf(hi)) &&
+            col(t).between(lo, hi)), t),
+        allowOverwrite)
+      val (dsStart, dsEnd) = d.dateRange.get // planUpdate refused None
       // Everything below only ADDS files: replaced rows are retired by
-      // the manifest swap at commit, not deleted — so the append and
-      // survivor frames may lazily read the very buckets being rewritten
-      // (no staging table, no FILE_NOT_EXIST window), pinned readers are
-      // untouched, and a crash leaves only orphans for vacuum. Listing is
-      // confined to the update's own buckets.
-      val committedFiles =
-        (if (commitV > 0) snapshotFilesAt(commitV) else snapshotFiles())
-          .getOrElse(listDataFiles(None).toSeq)
-
-      claimInProgress(base, d, Some(committedFiles))
+      // the manifest swap at commit, not deleted — so the survivor frame
+      // may lazily read the very buckets being rewritten (no staging
+      // table, no FILE_NOT_EXIST window), pinned readers are untouched,
+      // and a crash leaves only orphans for vacuum. An update rewrites
+      // rows, never columns, so the anchor's schema carries forward.
+      claimInProgress(base, d, Some(a.files), a.schema)
 
       val fresh = scala.collection.mutable.ArrayBuffer.empty[String]
-      var insertBuckets: Seq[Long] = Nil
-      if (inserts) {
+      // one entry per affected bucket, computed from the planned times
+      val insertBuckets = plan.inserts.map(bucketOf).distinct
+      if (plan.inserts.nonEmpty) {
         // Region replace: for each affected bucket, merge surviving
         // existing rows with the update rows and write the merged bucket
         // as NEW files (the `region=` write, `publish.py:332-371`).
@@ -748,33 +717,111 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
         // bucket-confined on both sides; Spark broadcasts the update
         // keys when they fit and falls back to a shuffled join keyed on
         // the dims when a correction is genuinely bucket-sized.
-        val insertRows = p.join(broadcast(insertT), Seq(t), "left_semi")
-        insertBuckets = insertRows.select("time_bucket").distinct()
-          .collect().map(_.getLong(0)).toSeq // one entry per affected bucket
-        val survivors = snap()
+        val insertRows = p.filter(col(t).isin(plan.inserts: _*))
+        val survivors = a.scan()
           .filter(col("time_bucket").isin(insertBuckets: _*))
           .join(insertRows.select(d.dims.map(col): _*), d.dims, "left_anti")
           .select((d.dims :+ d.dataVar).map(col) :+ col("time_bucket"): _*)
         fresh ++= writeBuckets(survivors.unionByName(insertRows), d)
       }
-
-      if (hasAppends)
-        fresh ++= writeBuckets(p.join(broadcast(appendT), Seq(t), "left_semi"), d)
+      if (plan.appends.nonEmpty)
+        fresh ++= writeBuckets(p.filter(col(t).isin(plan.appends: _*)), d)
 
       // New manifest: committed files minus the replaced insert buckets,
       // plus exactly the files the two writes above created.
       val insertDirs = insertBuckets.map(b => s"data/time_bucket=$b/")
-      val manifest = committedFiles
+      val manifest = a.files
         .filterNot(f => insertDirs.exists(f.startsWith)) ++ fresh.toSeq
 
       val committed = d.copy(
-        dateRange = Some((math.min(dsStart, stats.getLong(0)),
-          math.max(dsEnd, stats.getLong(1)))),
+        dateRange = Some((dsStart, math.max(dsEnd, plan.hi))),
         updateInProgress = false,
         updatePreviousEndUs = Some(dsEnd),
-        updateIsAppendOnly = Some(!inserts))
-      commitAtBase(base, committed, Some(manifest))
+        updateIsAppendOnly = Some(plan.inserts.isEmpty))
+      commitAtBase(base, committed, Some(manifest), a.schema)
       committed
     } finally p.unpersist()
+  }
+}
+
+object GriddedStore {
+
+  /** An update's distinct times, ascending, split against the store's:
+    * `inserts` exist already (region rewrite), `appends` do not. */
+  final case class UpdatePlan(inserts: Seq[Long], appends: Seq[Long]) {
+    def hi: Long = (inserts ++ appends).max
+  }
+
+  /** Distinct non-null values of `key`, collected to the driver. The
+    * planner works on the time axis, which is small by construction
+    * (the reference holds it in memory as a coordinate array); an axis
+    * above `maxAxis` is cell data, not a time axis, and is refused
+    * loudly instead of being pulled onto the driver. */
+  def collectAxis(df: DataFrame, key: String,
+                  maxAxis: Long = UpdatePlanner.DefaultMaxAxis): Seq[Long] = {
+    val ax = df.where(col(key).isNotNull).select(col(key).cast("long")).distinct()
+      .limit(math.min(maxAxis + 1, Int.MaxValue.toLong).toInt)
+      .collect().map(_.getLong(0))
+    require(ax.length <= maxAxis,
+      s"distinct axis for '$key' has more than $maxAxis values — the " +
+        "update planner collects the time axis to the driver and is for " +
+        "time axes, not cell data")
+    ax.toSeq
+  }
+
+  /** The update planner (`prepare_update_times`, `publish.py:303-330`,
+    * plus `update_quality_check`, `publish.py:604-652`), over the
+    * driver-side time axis. `existingIn(lo, hi)` returns the store's
+    * distinct times in `[lo, hi]`; it is not called when every update
+    * time lies after the committed end (a pure append). Throws on an
+    * empty update, times before the dataset start, inserts when
+    * `allowOverwrite` is false, and an append run that is not one
+    * contiguous cadence-regular run adjacent to the committed end. */
+  def planUpdate(d: DatasetDescriptor, updateTimes: Seq[Long],
+                 existingIn: (Long, Long) => Seq[Long],
+                 allowOverwrite: Boolean = true): UpdatePlan = {
+    val (dsStart, dsEnd) = d.dateRange.getOrElse(
+      throw new IllegalStateException("existing store has no committed date range"))
+    if (updateTimes.isEmpty)
+      throw new IllegalArgumentException("empty update is an error") // no-op update
+    val times = updateTimes.distinct.sorted
+    if (times.head < dsStart)
+      throw new IllegalArgumentException(
+        s"update contains times before dataset start $dsStart")
+    val existing =
+      if (times.head > dsEnd) Set.empty[Long]
+      else existingIn(times.head, times.last).toSet
+    val (inserts, appends) = times.partition(existing)
+    if (inserts.nonEmpty && !allowOverwrite)
+      throw new IllegalStateException("inserts present but overwrite not allowed")
+    // The full append set must be ONE contiguous run starting adjacent
+    // to the committed end — otherwise a gapped append would commit a
+    // silent hole while dateRange claims coverage (`publish.py:641-648`
+    // bridge check + `:654-696` contiguity). Irregular datasets declare
+    // cadenceBoundsUs and any delta in [lo, hi] is contiguous
+    // (`publish.py:677-685`); regular ones are the bounds
+    // (cadenceUs, cadenceUs), so both gaps (delta > cadence) and OFF-GRID
+    // times (delta < cadence) are rejected — a sub-cadence time would
+    // otherwise commit an off-grid axis that wedges the next legitimate
+    // on-grid append.
+    if (appends.nonEmpty) {
+      val (loB, hiB) = d.cadenceBoundsUs.getOrElse((d.cadenceUs, d.cadenceUs))
+      def outside(delta: Long) = delta < loB || delta > hiB
+      val viol = appends.zip(appends.tail).collect {
+        case (prev, cur) if outside(cur - prev) => s"$cur (delta ${cur - prev})"
+      }.take(3)
+      if (viol.nonEmpty)
+        throw new IllegalArgumentException(d.cadenceBoundsUs.fold(
+          s"append deltas differ from cadence ${d.cadenceUs}: ")(_ =>
+          s"append deltas outside cadence bounds [$loB,$hiB]: ") + viol.mkString(", "))
+      val bridge = appends.head - dsEnd
+      if (outside(bridge))
+        throw new IllegalArgumentException(d.cadenceBoundsUs.fold(
+          s"append is not contiguous with existing end $dsEnd: starts at " +
+            s"${appends.head}, expected ${dsEnd + d.cadenceUs}")(_ =>
+          s"append start ${appends.head} is $bridge us past existing end " +
+            s"$dsEnd, outside cadence bounds [$loB,$hiB]"))
+    }
+    UpdatePlan(inserts, appends)
   }
 }

@@ -280,4 +280,17 @@ class BenchParseSpec extends AnyFunSuite {
       put(n, "{}")
     assert(Bench.latestBaseline(dir).endsWith("BENCH_r11.json"))
   }
+
+  test("benchRound: a blank or garbage round override falls back to the record scan") {
+    val dir = java.nio.file.Files.createTempDirectory("benchround").toString
+    for (n <- Seq("BENCH_r03.json", "BENCH_r07.json", "BENCH_FULL_r09.json"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, n), "{}")
+    // one past the newest driver record; FULL records are not counted
+    assert(Bench.benchRound(None, dir) == 8)
+    for (bad <- Seq("", "   ", "abc", "7x", "1.5"))
+      assert(Bench.benchRound(Some(bad), dir) == 8, s"override '$bad'")
+    assert(Bench.benchRound(Some(" 12 "), dir) == 12)
+    val empty = java.nio.file.Files.createTempDirectory("benchround0").toString
+    assert(Bench.benchRound(Some("garbage"), empty) == 1)
+  }
 }

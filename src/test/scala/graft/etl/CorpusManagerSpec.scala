@@ -516,6 +516,23 @@ class CorpusManagerSpec extends SparkSpec {
     intercept[IllegalArgumentException] { m.ingestInitial(docs(Nil)) }
   }
 
+  test("an input that changes between scans fails the reject count loudly") {
+    val m = new CorpusManager("cm_nondet", tmpDir("cmnd"), spark,
+      numBuckets = 4, minTokens = 2)
+    m.ingestInitial(docs(Seq((1L, mkText(1), "web"), (4L, mkText(4), "web"))))
+    // a source that yields each doc only the FIRST time it is scanned:
+    // the gates pin all three, the raw-input rescan counts none — the
+    // broken determinism contract a clamped count used to hide
+    val firstSight = CorpusManagerSpec.firstSight()
+    val shard = docs(Seq((201L, mkText(5), "web"), (202L, mkText(6), "web"),
+      (203L, mkText(9), "books")))
+      .filter(firstSight(col("doc_id")))
+    val e = intercept[IllegalStateException](m.ingestShard(shard))
+    assert(e.getMessage.contains("3 rows passed the ingest gates") &&
+      e.getMessage.contains("counts only 0"), e.getMessage)
+    assert(corpusIds(m) == Set(1L, 4L)) // nothing committed
+  }
+
   test("gopherGate rejects rule-violating docs at ingest; off by default") {
     // passes all four rules: 24 tokens, two stopwords, 4-7 char words,
     // max repetition 2 ≤ 24/8
@@ -846,4 +863,15 @@ class CorpusManagerSpec extends SparkSpec {
     assert(m2.ingestShard(docs(Seq(
       (50L, (0 until 12).map(i => s"zz$i").mkString(" "), "web")))).ingested == 1)
   }
+}
+
+object CorpusManagerSpec {
+  /** Nondeterministic filter, true the first time it sees each id in
+    * this JVM (local-mode executors share it) and false afterwards. */
+  def firstSight(): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val key = java.util.UUID.randomUUID().toString
+    org.apache.spark.sql.functions.udf((id: Long) => seen.add(s"$key/$id"))
+      .asNondeterministic()
+  }
+  private val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

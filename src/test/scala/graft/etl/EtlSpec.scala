@@ -168,6 +168,39 @@ class EtlSpec extends SparkSpec {
     assert(ok.parse(ok.normalize(raw)).isDefined)
   }
 
+  test("fused pre-QC: Wilson bounds equal missingFrequency's ci_lo/ci_hi bit for bit") {
+    val s = spark; import s.implicits._
+    val z = graft.qc.QualityChecks.Z_ALPHA_1E5
+    for ((x, n) <- Seq((0L, 1L), (1L, 1L), (0L, 37L), (37L, 37L), (3L, 37L),
+                       (1L, 3L), (100L, 1000L), (7L, 16200L))) {
+      val df = (0L until n).map(i => if (i < x) None else Some(i.toDouble)).toDF("v")
+        .withColumn("_g", lit(1))
+      val r = graft.qc.QualityChecks.missingFrequency(df, "_g", col("v").isNull)
+        .select("ci_lo", "ci_hi").collect()(0)
+      val (lo, hi) = graft.qc.QualityChecks.wilson(x, n, z)
+      def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+      assert(bits(lo) == bits(r.getDouble(0)) && bits(hi) == bits(r.getDouble(1)),
+        s"(x=$x, n=$n): driver ($lo, $hi) vs frame (${r.getDouble(0)}, ${r.getDouble(1)})")
+    }
+    // the fused pass keeps each check's message and order
+    val d = DatasetDescriptor("fused", "precip", Category.Observation,
+      Some(-9999.0), DAY_US, ChunkGrid(10 * DAY_US, 500))
+    def mgr(bounds: Option[(Double, Double)], exp: Option[Double]) =
+      new DatasetManager(d, tmpDir("fused-store"), tmpDir("fused-cat"), spark,
+        extremeBounds = bounds, expectedMissingFrequency = exp)
+    val cells = cube(10, 4, 4) // 160 cells, none missing, values 0..933
+    assert(intercept[IllegalArgumentException] {
+      mgr(Some((0.0, 50.0)), Some(0.5)).preParseQualityCheck(cells)
+    }.getMessage.contains("update contains values outside [0.0, 50.0]"))
+    assert(intercept[graft.qc.NanFrequencyMismatchException] {
+      mgr(Some((0.0, 1000.0)), Some(0.5)).preParseQualityCheck(cells)
+    }.getMessage.contains("expected missing frequency 0.500000 outside observed CI"))
+    assert(intercept[IllegalArgumentException] {
+      mgr(Some((0.0, 50.0)), Some(0.5)).preParseQualityCheck(cube(0, 2, 2))
+    }.getMessage.contains("update has no times"))
+    mgr(Some((0.0, 1000.0)), Some(0.01)).preParseQualityCheck(cells) // passes
+  }
+
   test("catalog collection extent widens, never narrows (metadata.py:527-551)") {
     val cat = new StacCatalog(tmpDir("cat"), spark)
     cat.upsertCollection("c", Array(-10.0, -5.0, 10.0, 5.0), (100L, 200L))

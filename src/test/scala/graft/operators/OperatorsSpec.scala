@@ -7,18 +7,6 @@ import org.apache.spark.sql.functions._
   * `utils/publish.py` / `utils/convenience.py`. */
 class OperatorsSpec extends SparkSpec {
 
-  test("insert/append split on a gapped update (publish.py:303-330)") {
-    val s = spark; import s.implicits._
-    val existing = (0L to 9L).toDF("t")
-    val update = Seq(5L, 6L, 10L, 11L, 13L).toDF("t") // 5,6 overlap; rest new
-    val ins = UpdatePlanner.insertTimes(update, existing, "t")
-      .orderBy("t").as[Long].collect()
-    val app = UpdatePlanner.appendTimes(update, existing, "t")
-      .orderBy("t").as[Long].collect()
-    assert(ins.sameElements(Array(5L, 6L)))
-    assert(app.sameElements(Array(10L, 11L, 13L)))
-  }
-
   test("contiguousRegions groups gapped times (publish.py:432-495)") {
     val s = spark; import s.implicits._
     // the fake_complex_update shape: islands with gaps
@@ -37,9 +25,6 @@ class OperatorsSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       UpdatePlanner.contiguousRegions(big, "t", 1L, maxAxis = 1000L).collect())
     assert(e.getMessage.contains("axis"))
-    val e2 = intercept[IllegalArgumentException](
-      UpdatePlanner.cadenceViolations(big, "t", 1L, 1L, maxAxis = 1000L).collect())
-    assert(e2.getMessage.contains("axis"))
     // same data under the default bound still works (it IS axis-sized)
     assert(UpdatePlanner.contiguousRegions(big, "t", 1L).count() == 1L)
   }

@@ -2,7 +2,10 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Initial/append/insert protocol — the system-test storyline of the
   * reference (`tests/system/test_chirps.py`): golden-value point equality
@@ -307,5 +310,165 @@ class GriddedStoreSpec extends SparkSpec {
       store.update(cube(1, 2, 2, startDay = 11)
         .unionByName(cube(1, 2, 2, startDay = 15)))
     }.getMessage.contains("outside cadence bounds"))
+  }
+
+  /** Spark jobs launched by `body` on this thread. Listener events are
+    * delivered in order, so once a marker job submitted after `body` has
+    * been seen, every job `body` launched has been seen too. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-end"), "marker job never reached the listener")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def planDesc(end: Long) = desc("plan").copy(cadenceUs = 1L,
+    dateRange = Some((0L, end)))
+
+  test("insert/append split on a gapped update (publish.py:303-330)") {
+    val existing = (0L to 9L)
+    val asked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def existingIn(lo: Long, hi: Long): Seq[Long] = {
+      asked += ((lo, hi)); existing.filter(t => t >= lo && t <= hi)
+    }
+    val plan = GriddedStore.planUpdate(planDesc(9L), Seq(11L, 5L, 10L, 6L, 12L),
+      existingIn)
+    assert(plan.inserts == Seq(5L, 6L) && plan.appends == Seq(10L, 11L, 12L))
+    assert(plan.hi == 12L)
+    assert(asked == Seq((5L, 12L))) // one lookup, confined to the update's span
+    // a gap inside the append run (12 missing) is refused
+    assert(intercept[IllegalArgumentException] {
+      GriddedStore.planUpdate(planDesc(9L), Seq(5L, 6L, 10L, 11L, 13L), existingIn)
+    }.getMessage.contains("differ from cadence"))
+    // inserts refused when overwrite is not allowed
+    intercept[IllegalStateException] {
+      GriddedStore.planUpdate(planDesc(9L), Seq(5L, 10L), existingIn,
+        allowOverwrite = false)
+    }
+  }
+
+  test("a pure append plans without looking up existing times") {
+    val plan = GriddedStore.planUpdate(planDesc(9L), Seq(11L, 10L),
+      (_, _) => fail("a pure append must not read the store"))
+    assert(plan.inserts.isEmpty && plan.appends == Seq(10L, 11L))
+    // and through the store: appending over a committed manifest whose
+    // pinned files are GONE still works, because nothing reads them
+    val root = tmpDir("store-pure-append")
+    val store = new GriddedStore(root, spark)
+    store.writeInitial(cube(10, 2, 2), desc("pa"))
+    val files = store.snapshotFiles().get
+    files.foreach(f => store.fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
+    val d2 = store.update(cube(2, 2, 2, startDay = 10))
+    assert(d2.dateRange.contains((0L, 11 * DAY_US)))
+    assert(d2.updateIsAppendOnly.contains(true))
+    assert(store.snapshotFiles().get.toSet.diff(files.toSet).nonEmpty)
+  }
+
+  test("the planner's driver-side bucket equals the layout's bucketExpr") {
+    val s = spark; import s.implicits._
+    val b = 10 * DAY_US
+    val ts = Seq(-2 * b - 1, -b, -1L, 0L, 1L, b - 1, b, 3 * b + 7)
+    val viaExpr = ts.toDF("time").select(ChunkGrid.bucketExpr("time", b))
+      .collect().map(_.getLong(0)).toSeq
+    assert(ts.map(ChunkGrid.bucketOf(_, b)) == viaExpr)
+    assert(viaExpr == Seq(-3L, -1L, -1L, 0L, 0L, 0L, 1L, 3L))
+  }
+
+  test("the planner's time axis is bounded: a cell-scale axis is refused") {
+    val big = spark.range(5000).select(col("id").as("t"))
+    val e = intercept[IllegalArgumentException](
+      GriddedStore.collectAxis(big, "t", maxAxis = 1000L))
+    assert(e.getMessage.contains("axis"))
+    // the same axis under the default bound is collected, distinct and
+    // null-free
+    val withNull = big.union(big).union(spark.range(1).select(lit(null).cast("long").as("t")))
+    assert(GriddedStore.collectAxis(withNull, "t").sorted == (0L until 5000L))
+  }
+
+  test("mixed update: inserts rewrite only their buckets, the rest appends") {
+    val root = tmpDir("store-mixed")
+    val store = new GriddedStore(root, spark)
+    store.writeInitial(cube(20, 4, 4), desc("mixed")) // buckets 0 and 1
+    val before = store.snapshotFiles().get
+    def inBucket(fs: Seq[String], b: Long) = fs.filter(_.startsWith(s"data/time_bucket=$b/"))
+    // k = 3 days at or before the committed end (day 19), m = 3 after it
+    val d2 = store.update(cube(6, 4, 4, startDay = 17, valueOffset = 5000.0))
+    assert(d2.updateIsAppendOnly.contains(false))
+    assert(d2.dateRange.contains((0L, 22 * DAY_US)))
+    assert(d2.updatePreviousEndUs.contains(19 * DAY_US))
+    val after = store.snapshotFiles().get
+    // bucket 0 untouched, bucket 1 (the inserts') fully replaced, bucket 2 new
+    assert(inBucket(after, 0) == inBucket(before, 0))
+    assert(inBucket(after, 1).nonEmpty && inBucket(after, 1).toSet.intersect(before.toSet).isEmpty)
+    assert(inBucket(after, 2).nonEmpty)
+    assert(store.read().count() == 23 * 16)
+    def point(day: Long) = store.read().where(col("time") === day * DAY_US &&
+      col("latitude") === -1.0 && col("longitude") === 10.0)
+      .select("precip").collect().map(_.getDouble(0)).toSeq
+    assert(point(5) == Seq(500.0))             // untouched bucket
+    assert(point(12) == Seq(1200.0))           // insert bucket's survivor
+    assert(point(18) == Seq(5000.0 + 100.0))   // inserted
+    assert(point(21) == Seq(5000.0 + 400.0))   // appended
+    // a time inside [dsStart, dsEnd] the store lacks is an append, and an
+    // append that does not start at the committed end is refused
+    val offGrid = cube(1, 4, 4, startDay = 18).withColumn("time", col("time") + lit(DAY_US / 2))
+    assert(intercept[IllegalArgumentException] {
+      store.update(cube(2, 4, 4, startDay = 17).unionByName(offGrid))
+    }.getMessage.contains("not contiguous"))
+    // the same lacking time next to real appends breaks the append run
+    assert(intercept[IllegalArgumentException] {
+      store.update(cube(2, 4, 4, startDay = 23).unionByName(offGrid))
+    }.getMessage.contains("differ from cadence"))
+    assert(store.read().count() == 23 * 16)
+  }
+
+  test("reads take the manifest schema: same as inference, no job to build the frame") {
+    val root = tmpDir("store-schema")
+    val store = new GriddedStore(root, spark)
+    store.writeInitial(cube(20, 2, 2), desc("sch"))
+    store.update(cube(2, 2, 2, startDay = 20))
+    val v = store.latestVersionNumber()
+    def inferred(files: Seq[String]) = spark.read.option("basePath", store.dataPath)
+      .parquet(files.map(f => s"$root/$f"): _*).schema
+    val expected = inferred(store.snapshotFiles().get)
+    var latest: org.apache.spark.sql.DataFrame = null
+    var atV: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { latest = store.read(); atV = store.readAt(v) } == 0)
+    assert(latest.schema == expected && atV.schema == expected)
+    assert(latest.schema("time_bucket").dataType == expected("time_bucket").dataType)
+    assert(latest.count() == 22 * 4)
+    assert(store.readAt(v - 2).schema == inferred(store.snapshotFilesAt(v - 2).get))
+    // a manifest without data_schema (written before the field) still
+    // reads, through inference
+    val json = ManifestIO.readPointerVerified(store.fs, store.descriptorPath)
+    val legacy = org.json4s.jackson.JsonMethods.compact(
+      org.json4s.jackson.JsonMethods.parse(json).removeField(_._1 == "data_schema"))
+    assert(!legacy.contains("data_schema"))
+    store.commits.swapPointer(store.descriptorPath,
+      ManifestIO.seal(legacy.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    assert(store.read().schema == expected)
+    assert(store.read().count() == 22 * 4)
+    // committed-empty: a zero-row frame with the recorded schema
+    val empty = tmpDir("store-schema-empty")
+    val es = new GriddedStore(empty, spark)
+    es.writeInitial(cube(2, 2, 2), desc("sche"))
+    es.writeDescriptor(es.readDescriptor().get, files = Some(Nil))
+    assert(es.read().count() == 0 && es.read().schema == expected)
   }
 }
