@@ -29,7 +29,7 @@ object GraftSession {
       // shuffle per round, but the files are deleted only when the
       // driver GCs the RDD references — with a large heap that can be
       // never, and 20 rounds over a 90M-edge graph fill local disk with
-      // dead spills (GraphScaleProbe 10M died on ENOSPC this way; a
+      // dead spills (`Probe scale graph` at 10M died on ENOSPC this way; a
       // long-lived cluster job hits the same wall on executor disks).
       // A 2-minute periodic GC keeps retired shuffle files bounded by
       // ~2 rounds' worth instead of the whole run.
@@ -40,7 +40,7 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     registerFunctions(spark)
     // Opt-in cluster availability posture for any entry point
-    // (probes, Verify, Bench): SPARK_GRAFT_RELIABLE=1 routes every
+    // (Probe, Verify, Bench): SPARK_GRAFT_RELIABLE=1 routes every
     // [[graft.operators.Materialize]] pin to durable checkpoints under
     // SPARK_GRAFT_CKPT_DIR (default /tmp/graft_ckpt) — the same knob a
     // real deployment sets programmatically with an HDFS/object-store

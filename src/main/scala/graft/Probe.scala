@@ -1,47 +1,204 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import java.nio.file.{Files, Paths}
 
-/** Probe: out-of-order widening + the timeout branch, through real
-  * streaming runs. */
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+import scala.collection.mutable
+
+/** The one diagnostic main, three subcommands:
+  *
+  *   runMain graft.Probe query <q>[,<q>…] [reps]     (reps default 2)
+  *   runMain graft.Probe plan <q>[,<q>…] [dir suffix]
+  *   runMain graft.Probe scale <scenario> [n] [mode]
+  *
+  *  - `query` runs `SparkEntry` queries over `SPARK_GRAFT_SF_DIR` in one
+  *    session and prints, per run, the wall time and the Spark job
+  *    breakdown: job count, summed job time, the call sites that took
+  *    it and the longest jobs. The first run is the cold one; the
+  *    bench's decision series is warm.
+  *  - `plan` writes each query's formatted physical plan to
+  *    `<dir>/<q>_<suffix>.txt` (the `plans/rNN/<q>_before.txt` /
+  *    `_after.txt` evidence files), or prints it with no `dir`. Plans,
+  *    not data, are the subject: point `SPARK_GRAFT_SF_DIR` at sf0.001.
+  *    Query construction side effects (artifact writes in the
+  *    pipeline/store queries) run at that scale, same as PlanAudit.
+  *  - `scale` runs one of the [[ScaleScenarios]] rehearsals, which
+  *    check a planted answer at a chosen size.
+  *
+  * Names are checked before any session is built. `SPARK_GRAFT_CPUS`
+  * sizes the session (default 32; `plan` always uses 8, so plan files
+  * stay comparable with the committed ones).
+  */
 object Probe {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
-    import spark.implicits._
-    val HOUR = 3600000000L
-    val MIN = 60000000L
-    val BASE = 1704067200000000L
-    val in = java.nio.file.Files.createTempDirectory("p-in").toString
-    val out = java.nio.file.Files.createTempDirectory("p-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("p-ck").toString
-    def drop(user: Long, times: Seq[Long], part: Int): Unit =
-      times.map(t => (user, t)).toDF("user_id", "us")
-        .write.mode("append").parquet(s"$in/p=$part")
-    def run(): Unit = {
-      val schema = Seq((1L, 1L)).toDF("user_id", "us").schema
-      val src = spark.readStream.schema(schema).parquet(s"$in/*")
-        .withColumn("ts", timestamp_micros(col("us")))
-        .withWatermark("ts", "2 hours")
-        .as[(Long, Long, java.sql.Timestamp)]
-      val q = graft.streaming.StatefulSessions
-        .sessionizeContinuous(src, gapUs = HOUR / 2)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    def show(tag: String): Unit = {
-      val rows = spark.read.parquet(out).collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-        .map(r => s"(u=${r.getLong(0)} ${(r.getLong(1) - BASE) / MIN}m..${(r.getLong(2) - BASE) / MIN}m n=${r.getLong(3)})")
-      println(s"PROBE $tag: ${if (rows.isEmpty) "NONE" else rows.mkString(" ")}")
-    }
-    drop(1L, Seq(BASE + 5 * MIN), 1)  // 10:05 first
-    run(); show("after 10:05 event")
-    drop(1L, Seq(BASE), 2)            // 10:00 arrives LATE (out of order)
-    run(); show("after late 10:00 event")
-    drop(2L, Seq(BASE + 9 * HOUR), 3) // user 2 advances watermark; user 1 silent
-    run(); show("after user-2 drop (user-1 timeout must fire)")
-    spark.stop()
+
+  sealed trait Command {
+    def cores: Int
+    def run(spark: SparkSession): Unit
   }
+
+  final case class Query(names: Seq[String], reps: Int, sfDir: String,
+                         cores: Int) extends Command {
+    def run(spark: SparkSession): Unit = query(spark, sfDir, names, reps)
+  }
+
+  final case class Plan(names: Seq[String], out: Option[(String, String)],
+                        sfDir: String) extends Command {
+    val cores = 8
+    def run(spark: SparkSession): Unit = plan(spark, sfDir, names, out)
+  }
+
+  final case class Scale(scenario: ScaleScenarios.Scenario, n: Int,
+                         mode: String, cores: Int) extends Command {
+    def run(spark: SparkSession): Unit = scenario.run(spark, n, mode)
+  }
+
+  private val Usage: String =
+    """usage: Probe query <q>[,<q>...] [reps]
+      |       Probe plan <q>[,<q>...] [dir suffix]
+      |       Probe scale <scenario> [n] [mode]""".stripMargin
+
+  /** The command `args` name, or an IllegalArgumentException naming what
+    * is wrong (and listing the valid names for an unknown one). Builds
+    * no session. */
+  def parse(args: Seq[String], env: Map[String, String] = sys.env): Command = {
+    val cores = env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+    def sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", throw
+      new IllegalArgumentException("set SPARK_GRAFT_SF_DIR to a test-data dir"))
+    def queries(list: String): Seq[String] = {
+      val qs = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val known = SparkEntry.queries.keySet
+      val unknown = qs.filterNot(known)
+      require(qs.nonEmpty && unknown.isEmpty,
+        s"unknown query ${unknown.mkString(",")}; valid: " +
+          known.toSeq.sorted.mkString(", "))
+      qs
+    }
+    def int(what: String, s: String): Int = s.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$what must be a positive integer, got $s"))
+    args match {
+      case Seq("query", qs, rest @ _*) if rest.size <= 1 =>
+        Query(queries(qs), rest.headOption.map(int("reps", _)).getOrElse(2),
+          sfDir, cores)
+      case Seq("plan", qs) => Plan(queries(qs), None, sfDir)
+      case Seq("plan", qs, dir, suffix) => Plan(queries(qs), Some((dir, suffix)), sfDir)
+      case Seq("scale", name, rest @ _*) if rest.size <= 2 =>
+        val sc = ScaleScenarios.all.find(_.name == name).getOrElse(
+          throw new IllegalArgumentException(s"unknown scenario $name; valid: " +
+            ScaleScenarios.all.map(_.name).mkString(", ")))
+        val mode = rest.lift(1)
+        require(mode.forall(sc.modes.contains),
+          if (sc.modes.isEmpty) s"scenario $name takes no mode"
+          else s"scenario $name takes mode ${sc.modes.mkString("|")}, got ${mode.get}")
+        Scale(sc, rest.headOption.map(int("n", _)).getOrElse(sc.defaultN),
+          mode.getOrElse(sc.modes.headOption.getOrElse("")), cores)
+      case _ => throw new IllegalArgumentException(Usage)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cmd = parse(args.toSeq)
+    val spark = GraftSession.local(cmd.cores)
+    spark.sparkContext.setLogLevel("ERROR")
+    try cmd.run(spark) finally spark.stop()
+  }
+
+  /** One timed run of one query and the jobs it started. */
+  final case class Run(query: String, rep: Int, seconds: Double,
+                       jobs: List[JobLog.Job])
+
+  def query(spark: SparkSession, sfDir: String, names: Seq[String],
+            reps: Int): Seq[Run] = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try for (q <- names; rep <- 1 to reps) yield {
+      log.reset()
+      val t0 = System.nanoTime()
+      SparkEntry.queries(q)(spark, sfDir).count()
+      val seconds = (System.nanoTime() - t0) / 1e9
+      // drain the async listener bus: wait until every started job has
+      // delivered its end event (bounded — a job leaked by a failed
+      // action must not hang the probe), instead of a racy fixed sleep
+      log.drain(5000L)
+      val run = Run(q, rep, seconds, log.snapshot)
+      report(run)
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      run
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  private def report(r: Run): Unit = {
+    val tag = s"rep${r.rep}"
+    println(f"PROFILE $tag ${r.query} total ${r.seconds}%.2fs, " +
+      f"${r.jobs.size} jobs, job-sum ${r.jobs.map(_.ms).sum / 1e3}%.2fs")
+    val bySite = r.jobs.groupBy(_.site).map { case (s, js) =>
+      (s, js.map(_.ms).sum, js.size) }.toSeq.sortBy(-_._2)
+    bySite.take(25).foreach { case (s, ms, n) =>
+      println(f"PROFILE $tag   ${ms / 1e3}%7.2fs  n=$n%-4d $s") }
+    r.jobs.sortBy(-_.ms).take(12).foreach { j =>
+      println(f"PROFILE $tag  job#${j.id}%-4d ${j.ms / 1e3}%6.2fs  " +
+        j.stageNames.mkString(" <- ")) }
+  }
+
+  def plan(spark: SparkSession, sfDir: String, names: Seq[String],
+           out: Option[(String, String)]): Unit = names.foreach { q =>
+    val txt = SparkEntry.queries(q)(spark, sfDir).queryExecution
+      .explainString(FormattedMode)
+    out match {
+      case Some((dir, suffix)) =>
+        val path = Paths.get(dir, s"${q}_$suffix.txt")
+        Files.createDirectories(path.getParent)
+        Files.writeString(path, txt)
+        println(s"wrote $path (${txt.length} chars)")
+      case None => println(s"== $q ==\n$txt")
+    }
+  }
+}
+
+/** Every Spark job's duration, call site and stages, for the run that
+  * the last [[reset]] opened. */
+final class JobLog extends SparkListener {
+  import JobLog.Job
+
+  // one lock guards both maps: the listener bus delivers events on its
+  // own thread, and a snapshot must not race a late onJobEnd
+  private val lock = new Object
+  private val starts = mutable.Map[Int, (Long, Job)]()
+  private val jobs = mutable.ArrayBuffer[Job]()
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    // the RESULT stage's name is the action's call site
+    // ("count at CorpusManager.scala:1024")
+    val infos = j.stageInfos.sortBy(_.stageId)
+    val job = Job(j.jobId, infos.lastOption.map(_.name).getOrElse("?"), 0L,
+      infos.map(s => s"${s.name}[${s.numTasks}]"))
+    lock.synchronized { starts(j.jobId) = (System.nanoTime(), job) }
+  }
+
+  override def onJobEnd(j: SparkListenerJobEnd): Unit = lock.synchronized {
+    starts.remove(j.jobId).foreach { case (t0, job) =>
+      jobs += job.copy(ms = (System.nanoTime() - t0) / 1000000L)
+    }
+  }
+
+  /** Opens a run: forgets finished AND still-open jobs, so a job leaked
+    * by an earlier run neither stalls [[drain]] nor lands in this run. */
+  def reset(): Unit = lock.synchronized { starts.clear(); jobs.clear() }
+
+  /** Waits at most `timeoutMs` for every started job to end; true when
+    * none is left open. */
+  def drain(timeoutMs: Long): Boolean = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    while (lock.synchronized(starts.nonEmpty) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    lock.synchronized(starts.isEmpty)
+  }
+
+  def snapshot: List[Job] = lock.synchronized(jobs.toList)
+}
+
+object JobLog {
+  final case class Job(id: Int, site: String, ms: Long, stageNames: Seq[String])
 }

@@ -78,7 +78,7 @@ class StacCatalog(val root: String, spark: SparkSession) {
           // Anti-starvation: uniform 20–80 ms polling is UNFAIR — the
           // winner of each handoff is whichever waiter happens to poll
           // first, so one publisher can lose hundreds of consecutive
-          // races (StacConcurrencyProbe, 32 writers × ~22 ms holds:
+          // races (32 writers × ~22 ms holds, StacConcurrencySpec's load:
           // p50 27 ms but max 27 s against the 60 s deadline — a
           // 64-publisher deployment would hit spurious timeouts). A
           // waiter past 10 s switches to 5–15 ms polls: its win

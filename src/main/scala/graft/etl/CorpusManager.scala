@@ -130,7 +130,7 @@ class VocabDriftException(msg: String) extends RuntimeException(msg)
   *     configured `embProbes` (shard side replicated ×P, corpus
   *     layout and exchange-free scan unchanged), so the miss rate
   *     stops WIDENING as `cellsFor` scales the cell count with the
-  *     corpus. MEASURED (CombinedScaleProbe): static 3 probes held
+  *     corpus. MEASURED (`Probe scale combined`): static 3 probes held
   *     99.8% planted cross recall at 2M docs / 1665 cells but fell
   *     to 98.8% at 4M / 3330 cells; the density policy holds the
   *     anchor. The multi-table LSH shape is the recall-guaranteed
@@ -206,7 +206,7 @@ class CorpusManager(
     // media-hash scheme this manager computes and persists: 1 = 63-bit
     // [[graft.multimodal.Multimodal.mediaHash]] (birthday-bounded —
     // ~one random merge per 10^13 pairs at radius 4, measured once at
-    // 4M docs by MediaScaleProbe), 2 = 252-bit
+    // 4M docs by `Probe scale media`), 2 = 252-bit
     // [[graft.multimodal.Multimodal.mediaHashWide]] (collision floor
     // ~10^-53: ZERO false merges at any corpus size — the 100-TB
     // choice). `mediaMaxHamming` is interpreted in the scheme's own
@@ -532,7 +532,7 @@ class CorpusManager(
     * counted so the pigeonhole clean-block requirement sizes itself:
     * at the classic combo=1 split the random-collision candidate
     * volume is n²·2^(−63/(r+1)) — invisible at 400k hashes, ~5·10⁹
-    * streamed candidate rows at 4M (measured by MediaScaleProbe) —
+    * streamed candidate rows at 4M (measured by `Probe scale media`) —
     * while combo [[graft.multimodal.Multimodal.comboFor]] keeps it
     * budget-bounded with the SAME verified pair set. */
   private[graft] def mediaIntraPairs(hashes: DataFrame): DataFrame = {
@@ -810,7 +810,7 @@ class CorpusManager(
     * corpus grows, because [[cellsFor]] scales the cell count with the
     * corpus: more cells → smaller cells → a near-dup pair is likelier
     * to straddle a boundary the shard doc's top-P probes never reach.
-    * MEASURED (CombinedScaleProbe): static embProbes=3 held 99.8%
+    * MEASURED (`Probe scale combined`): static embProbes=3 held 99.8%
     * planted cross recall at 2M docs (1665 cells) but fell to 98.8% at
     * 4M (3330 cells) — backwards for a recall-critical dedup gate. The
     * policy pins probe DENSITY instead of probe count: one probe per

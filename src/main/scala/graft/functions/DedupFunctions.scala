@@ -166,7 +166,6 @@ object DedupFunctions {
     // re-planning looked like overhead — and measured 2.3× SLOWER:
     // AQE's post-shuffle coalescing of the 32 tiny exchange partitions
     // is worth far more than its planning cost here.)
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     // The change count folds into the SAME job that materializes the
     // round (typed pass + accumulator) instead of a second count()
     // action — at graph scale each extra action is a full scheduling
@@ -183,7 +182,6 @@ object DedupFunctions {
       // tried to halve scheduling overhead: the doubled plan — six
       // joins + two aggregates — cost MORE in optimizer/AQE time than
       // it saved in job launches. Measured 5.6 s vs 4.3 s on q52.)
-      val t0 = System.nanoTime()
       acc.reset()
       val next = step(labels.withColumn("old", col("lbl")))
         .select(col("id").cast("long"), col("old").cast("long"),
@@ -203,9 +201,6 @@ object DedupFunctions {
       prevChanges = changes
       labels = next
       i += 1
-      if (dbg) System.err.println(
-        f"[cc] round $i ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          s"changes=$changes stalled=$stalled")
     }
     if (converged) labels
     else {
@@ -316,7 +311,6 @@ object DedupFunctions {
         .materialize()
       (out, acc.value.longValue)
     }
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     var (e, eCount) = matCount(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     var rounds = 0
@@ -327,7 +321,6 @@ object DedupFunctions {
     // here — both inputs are already src≠dst-filtered).
     if (eCount <= driverFinishEdges) return (driverComponents(e), rounds)
     while (!done && rounds < maxIter) {
-      val t0 = System.nanoTime()
       val (next, nextCount) = matCount(smallStar(largeStar(e)))
       if (nextCount <= driverFinishEdges)
         return (driverComponents(next), rounds + 1)
@@ -338,9 +331,6 @@ object DedupFunctions {
       e = next
       eCount = nextCount
       rounds += 1
-      if (dbg) System.err.println(
-        f"[star] round $rounds ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          s"edges=$nextCount done=$done")
     }
     require(done, s"starComponents did not converge in $maxIter rounds")
     // the fixed point is a star forest rooted at component minima:

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end corpus deduplication — the productized composition of the
   * oracle-checked pieces (q34 candidates, q52 clustering, rehearsed at
-  * 500k docs by [[graft.TextScaleProbe]]):
+  * 500k docs by `Probe scale text`):
   *
   *   minhash signatures → LSH band rows → candidate pairs from band
   *   collisions → estimated-Jaccard verify → connected components →
@@ -159,7 +159,7 @@ object DedupPipeline {
       // projections whose size arithmetic scales a generator's or a
       // binary media column's default width, so a multi-GB signature
       // table can estimate at single-digit MB and become a static
-      // broadcast build — collected to the driver (MediaScaleProbe at
+      // broadcast build — collected to the driver (`Probe scale media` at
       // 4M docs died on exactly that: 3.6M sigs ≈ 1.1 GB serialized vs
       // the 1 GB maxResultSize, invisible at 400k). AQE cannot rescue a
       // static BHJ (no shuffle stage ever materializes to re-measure),

@@ -651,7 +651,7 @@ object Multimodal {
     * the emit term, which is fine at 63 bits (fan-out ≤ 70) but wrong
     * at 252 bits where radius 16 + combo 2 means C(18,2)=153 block
     * rows per hash. `emitWeight` is MEASURED, not guessed:
-    * MediaScaleProbe's 4M-doc A/B ran the radius-16 wide self-join both
+    * `Probe scale media`'s 4M-doc A/B ran the radius-16 wide self-join both
     * ways on identical hashes — combo 1 (68M block rows + 4.8·10⁹
     * streamed candidates) 582 s, combo 2 (612M block rows + 4.6·10⁶
     * candidates) 480 s, identical pair sets — backing out ≈110 ns per
@@ -674,7 +674,7 @@ object Multimodal {
   //
   // The 63-bit hash's random-collision floor is the birthday bound
   // Σ₀ʳC(63,k)/2⁶³ — ~7·10⁻¹⁴ at radius 4, i.e. ~one false merge per
-  // 10¹³ pairs (MediaScaleProbe's 4M run landed one). A 252-bit hash
+  // 10¹³ pairs (`Probe scale media`'s 4M run landed one). A 252-bit hash
   // from the same DCT pushes that to ~10⁻⁵³: zero at any corpus size.
   // 252 = 4·63 keeps the repo's 63-bit long discipline (sign bits
   // clear, shifts never touch them).

@@ -40,7 +40,7 @@ object GraphOps {
     * executor disks must hold `checkpointEvery` rounds' worth of
     * shuffle output. Default 5 suits cluster-sized local disks; a
     * disk-constrained environment lowers `spark.graft.iterate
-    * .checkpointEvery` (GraphScaleProbe at 10M nodes needs 2 on a
+    * .checkpointEvery` (`Probe scale graph` at 10M nodes needs 2 on a
     * ~100 GB scratch disk — each LPA round shuffles ~15 GB there). */
   private val CheckpointEveryConf = "spark.graft.iterate.checkpointEvery"
   private def checkpointEvery(df: DataFrame): Int = {
@@ -73,7 +73,7 @@ object GraphOps {
         // iterative fold PRODUCES shuffle files far faster than timer
         // GC frees them (measured at 10M nodes: ~9 GB/min produced,
         // first natural full GC ~8 min in, ENOSPC 4 s before the
-        // cleanup landed — GraphScaleProbe, round-8 record). One GC per
+        // cleanup landed — `Probe scale graph`, round-8 record). One GC per
         // checkpoint window bounds live shuffle footprint to
         // CheckpointEvery rounds' worth at any graph size.
         System.gc()

@@ -65,7 +65,7 @@ object Materialize {
     * eventually GCs the RDD reference and the ContextCleaner follows up
     * — with a large driver heap that can be never, and a 20-round fold
     * over a 90M-edge graph accumulates every retired round's blocks on
-    * executor disks until ENOSPC (GraphScaleProbe 10M, round-8 record).
+    * executor disks until ENOSPC (`Probe scale graph` at 10M, round-8 record).
     * Safe once the SUPERSEDING checkpoint is materialized (apply is
     * eager): the retired blocks have no remaining consumer. No-op for
     * reliable-mode checkpoints (their files are on durable storage and

@@ -66,7 +66,7 @@ import org.apache.spark.sql.functions._
   * window partitions by doc (bounded by doc size); the candidate join
   * keys on single gram hashes but only PREFIX occurrences enter it —
   * the rare-first canonical order is what keeps high-DF grams out of
-  * most prefixes (see SetSimScaleProbe's df=N boilerplate header).
+  * most prefixes (see `Probe scale setsim`'s df=N boilerplate header).
   * Everything downstream of candidates is bounded by the candidate
   * count. No stage is quadratic in the corpus.
   */
@@ -97,7 +97,7 @@ object SetSimJoin {
     * gram count, which Heaps-law-grows with the corpus — at 8M synthetic
     * docs (~330M mostly-unique 3-grams) the per-partition build is
     * ~500 MB and the join dies with "Can't acquire ... to build hash
-    * relation" (SetSimScaleProbe@8M, round 8). Budget: half of one
+    * relation" (`Probe scale setsim` at 8M, round 8). Budget: half of one
     * task's slice of unified execution memory (`maxMemory ×
     * spark.memory.fraction / parallelism`), ~64 B per built row
     * (LongToUnsafeRowMap key + row + map overhead); callers fall back
@@ -140,7 +140,7 @@ object SetSimJoin {
     // input's ESTIMATED size can be bytes-of-source tiny (spark.range
     // synthetics, selective scans) while the actual gram/set frames are
     // corpus-sized — an estimate-driven broadcast of a corpus-sized
-    // table is a driver OOM at scale (SetSimScaleProbe@800k caught
+    // table is a driver OOM at scale (`Probe scale setsim` at 800k caught
     // exactly this). Small corpora keep the planner's broadcast freedom
     // (measured 0.9 s of needless exchanges at sf0.1 with unconditional
     // hints). Row count and duplicate-id check share ONE aggregate job
@@ -219,8 +219,7 @@ object SetSimJoin {
     *    candidate-bounded. The previous shape (candidate-build
     *    SHUFFLE_HASH chain) exchanged the corpus-sized set table TWICE
     *    plus the gram-carrying intermediate once per run (guide §2.3/
-    *    §3.1: broadcast the side that fits — A/B record in
-    *    OPTIMIZATION_r12.md).
+    *    §3.1: broadcast the side that fits).
     *  - big corpus + oversized candidate set (pathological corpora):
     *    the former shape unchanged — SHUFFLE_HASH with the
     *    candidate-bounded side as build; blocks estimate-driven

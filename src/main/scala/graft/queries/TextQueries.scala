@@ -569,7 +569,7 @@ object TextQueries {
     // The 252-bit WIDE perceptual hash through the same oracle
     // discipline as q153 — the billion-image regime where the 63-bit
     // hash's birthday bound starts merging unrelated pairs
-    // (MediaScaleProbe measured one at 4M docs; 252 bits pushes the
+    // (`Probe scale media` measured one at 4M docs; 252 bits pushes the
     // bound to ~10⁻⁵³). Image-only planted payloads (every doc a k×
     // pixel-duplicated group base, k from doc_id): box-average
     // identity ⇒ group hashes bit-identical ⇒ the oracle is the same

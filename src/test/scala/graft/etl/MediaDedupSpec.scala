@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{ScaleData, SparkSpec}
 import org.apache.spark.sql.DataFrame
 
 /** Perceptual media dedup at corpus ingest: near-identical images with
@@ -29,17 +29,9 @@ class MediaDedupSpec extends SparkSpec {
   // generator above is fine at the narrow radius 3 (distinct images > 3
   // apart) but its weak scrambler correlates nearby seeds' block grids,
   // which the 252-bit hash's radius-16 gate could read as a merge — the
-  // wide tests need the iid-block generator (same as MediaScaleProbe)
-  private def basePixW(seed: Int)(x: Int, y: Int): Int = {
-    var z = seed * 7919L + (x / 8) * 31L + y / 8
-    z = (z ^ (z >>> 33)) * 0xff51afd7ed558ccdL
-    z = (z ^ (z >>> 33)) * 0xc4ceb9fe1a85ec53L
-    z ^= z >>> 33
-    (((z & 0x7fffffffL) % 200).toInt + (x + y) % 16) % 255
-  }
-  private def imgW(seed: Int): Array[Byte] = p5(64, 64, basePixW(seed))
-  private def imgNearW(seed: Int): Array[Byte] = p5(64, 64, (x, y) =>
-    basePixW(seed)(x, y) + (if (x >= 20 && x < 24 && y >= 40 && y < 44) 10 else 0))
+  // wide tests need the iid-block generator (the `Probe scale media` one)
+  private def imgW(seed: Int): Array[Byte] = ScaleData.img(seed, patch = false)
+  private def imgNearW(seed: Int): Array[Byte] = ScaleData.img(seed, patch = true)
 
   private def text(seed: Int): String =
     (0 until 12).map(j => s"m${seed}x$j").mkString(" ")

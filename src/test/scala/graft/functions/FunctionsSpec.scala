@@ -55,8 +55,8 @@ class FunctionsSpec extends SparkSpec {
       (1000000000L + 572356L, 1000000000L + 268070L),
       (1000000000L + 997224L, 1000000000L + 336617L))
     val docs = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
-      Seq((2L * i, graft.CombinedScaleProbe.text(a, near = false)),
-        (2L * i + 1, graft.CombinedScaleProbe.text(b, near = false)))
+      Seq((2L * i, graft.ScaleData.text(a, near = false)),
+        (2L * i + 1, graft.ScaleData.text(b, near = false)))
     }.toDF("doc_id", "text")
     val sigs = Signatures.minhash(docs, "doc_id", "text", 3, 64)
       .orderBy("doc_id").collect().map(_.getSeq[Long](1).toArray)
