@@ -88,18 +88,31 @@ class DatasetManager(
 
   /** `post_parse_quality_check` (`publish.py:698-743`): read back a
     * sample of written cells and compare against the source update with
-    * tolerance 1e-4 (`TWENTY_MINUTES` budget replaced by a row budget). */
+    * tolerance 1e-4 (`TWENTY_MINUTES` budget replaced by a row budget),
+    * flagging drifted values, null-vs-value cells and cells never
+    * written ([[QualityChecks.valueCompare]]'s rule). Reads back only
+    * what the sample can match: the store pruned to the sampled times'
+    * buckets and times, streamed past the broadcast sample — the cost
+    * follows `checks`, not the store. */
   def postParseQualityCheck(update: DataFrame, checks: Int = 100): Unit = {
     // Deterministic uniform sample via top-k on a content hash:
     // TakeOrderedAndProject keeps `checks` rows per partition then
     // merges — O(N) scan, no full sort/shuffle, and (unlike
     // sample().limit(), which drains the first partitions) the winners
-    // are spread uniformly over the whole update.
-    val sample = update
-      .orderBy(xxhash64(descriptor.dims.map(col): _*))
+    // are spread uniformly over the whole update. Collected: at most
+    // `checks` rows, and the driver needs their times to prune.
+    val keys = descriptor.dims
+    val picked = update
+      .orderBy(xxhash64(keys.map(col): _*))
       .limit(checks)
-    val mismatches = QualityChecks.valueCompare(
-      sample, store.read(), descriptor.dims, descriptor.dataVar, 1e-4).count()
+      .select((keys :+ descriptor.dataVar).map(col): _*)
+    val rows = picked.collect()
+    val sample = spark.createDataFrame(java.util.Arrays.asList(rows: _*), picked.schema)
+    val t = keys.indexOf(descriptor.timeDim)
+    val times = rows.collect { case r if !r.isNullAt(t) =>
+      r.get(t).asInstanceOf[Number].longValue }
+    val mismatches = QualityChecks.sampleMismatches(
+      sample, store.readTimes(times.toSeq), keys, descriptor.dataVar, 1e-4)
     require(mismatches == 0, s"$mismatches written cells differ from source")
   }
 
@@ -121,9 +134,15 @@ class DatasetManager(
     Some(committed)
   }
 
+  /** `publish_metadata` (`publish.py:100-122`): the extent is the
+    * committed manifest's bbox and date range, so publishing reads no
+    * data; a manifest without a bbox (written before the field) falls
+    * back to one aggregate over the store. */
   def publishMetadata(d: DatasetDescriptor): Unit = {
     catalog.ensureRootCatalog("graft")
-    val (bbox, interval) = catalog.extent(store.read(), d.timeDim)
+    val (bbox, interval) = store.committedExtent()
+      .map { case (b, iv) => (b.toArray, iv) }
+      .getOrElse(catalog.extent(store.read(), d.timeDim))
     catalog.upsertCollection(d.name, bbox, interval)
     // the store's manifest version disambiguates commits whose extent
     // AND previous-end are identical (e.g. consecutive insert-only

@@ -53,6 +53,25 @@ object ChunkGrid {
   def bucketOf(t: Long, bucketUs: Long): Long = Math.floorDiv(t, bucketUs)
 }
 
+/** A spatial extent in STAC order (west, south, east, north) — what a
+  * store manifest records per commit, so publishing an extent reads no
+  * data (`update_stac_collection`'s stored extent, `metadata.py:527-551`). */
+final case class Bbox(west: Double, south: Double, east: Double, north: Double) {
+
+  /** Element-wise widening under Spark's `min`/`max` order (NaN above
+    * every number), so the union of two parts' aggregates equals the
+    * aggregate of the whole bit for bit. */
+  def union(o: Bbox): Bbox = Bbox(Bbox.lo(west, o.west), Bbox.lo(south, o.south),
+    Bbox.hi(east, o.east), Bbox.hi(north, o.north))
+
+  def toArray: Array[Double] = Array(west, south, east, north)
+}
+
+object Bbox {
+  private def lo(a: Double, b: Double): Double = if (java.lang.Double.compare(a, b) <= 0) a else b
+  private def hi(a: Double, b: Double): Double = if (java.lang.Double.compare(a, b) >= 0) a else b
+}
+
 /** The `.zmetadata`/attrs analog: everything the reference keeps in Zarr
   * attributes + encoding, as one JSON sidecar (`utils/metadata.py`).
   *

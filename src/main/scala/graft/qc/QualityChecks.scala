@@ -1,18 +1,22 @@
 package graft.qc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** `NanFrequencyMismatchError` analog (`utils/errors.py:1-15`): raised
   * when a dataset's observed missing-value frequency falls outside the
   * binomial confidence interval of its declared expectation. */
 class NanFrequencyMismatchException(msg: String) extends RuntimeException(msg)
 
-/** The reference's quality-check suite (SURVEY §2.12), re-expressed as
-  * declarative Spark aggregations so every check is a single distributed
-  * pass (the reference loops over 100 sampled cells driver-side;
-  * at 100 TB a full-scan aggregate on Spark is cheaper than its sampled
-  * python loop at GB scale).
+/** The reference's quality-check suite (SURVEY §2.12) as declarative
+  * Spark expressions. The per-group checks (missing frequency, extreme
+  * values) are one distributed aggregate over the update. The read-back
+  * keeps the reference's sampled shape (`publish.py:698-743` checks up
+  * to 100 cells): [[sampleMismatches]] broadcasts the collected sample
+  * and streams only the written cells it could match, so its cost
+  * follows the sample, not the store ("broadcast the sampled side",
+  * SURVEY §2).
   */
 object QualityChecks {
 
@@ -115,20 +119,52 @@ object QualityChecks {
     * crucially — that are ABSENT from the written data (`_found` false):
     * an inner join here would let a write that silently drops rows pass
     * verification, the exact failure a read-back gate exists to catch.
-    * Both-NaN counts as a match (Spark orders NaN above every number, so
-    * `abs(NaN - NaN) > tol` would otherwise flag byte-identical
-    * round-trips of NaN-coded missing cells). */
+    * See [[differs]] for the value rule. */
   def valueCompare(orig: DataFrame, written: DataFrame, keys: Seq[String],
                    valueCol: String, tolerance: Double): DataFrame = {
     val o = orig.select((keys.map(col) :+ col(valueCol).as("v_orig")): _*)
     val p = written.select((keys.map(col) :+ col(valueCol).as("v_written"))
       :+ lit(true).as("_found"): _*)
-    val bothNan = isnan(col("v_orig")) && isnan(col("v_written"))
     o.join(p, keys, "left")
-      .filter(
-        col("_found").isNull ||
-        (col("v_orig").isNull =!= col("v_written").isNull) ||
-        (!bothNan && abs(col("v_orig") - col("v_written")) > tolerance))
+      .filter(col("_found").isNull ||
+        differs(col("v_orig"), col("v_written"), tolerance))
       .drop("_found")
   }
+
+  /** `valueCompare(orig, written, ...).count()` for an `orig` small
+    * enough to collect (a QC sample), without ever building a hash
+    * table of `written`: the sample, numbered on the driver, is the
+    * broadcast side of an inner join that streams `written`, and the
+    * job returns one (sample row, differs) pair per match. A sample row
+    * with no match is a missing cell, exactly as the LEFT join counts
+    * it. Confine `written` to the sample's partitions first (the join
+    * cannot prune a scan). */
+  def sampleMismatches(orig: DataFrame, written: DataFrame, keys: Seq[String],
+                       valueCol: String, tolerance: Double): Long = {
+    val o = orig.select((keys.map(col) :+ col(valueCol).as("v_orig")): _*)
+    val rows = o.collect()
+    if (rows.isEmpty) return 0L
+    val numbered = o.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(r.toSeq :+ i.toLong) }: _*),
+      o.schema.add("_sid", LongType, nullable = false))
+    val pairs = written
+      .select((keys.map(col) :+ col(valueCol).as("v_written")): _*)
+      .join(broadcast(numbered), keys)
+      .select(col("_sid"),
+        coalesce(differs(col("v_orig"), col("v_written"), tolerance), lit(false)))
+      .collect()
+    val matched = pairs.iterator.map(_.getLong(0)).toSet.size
+    (rows.length - matched) + pairs.count(_.getBoolean(1))
+  }
+
+  /** A read-back pair that fails: null-ness disagrees, or the values are
+    * unequal and differ by more than `tolerance`. Exactly equal values
+    * match — Spark's `=` holds for NaN = NaN (the NaN-coded missing-cell
+    * round trip) and for identical ±Infinity, whose `abs(Inf - Inf)` is
+    * NaN, which Spark orders above every number and so above any
+    * tolerance. Null when both are null (no failure). */
+  private def differs(vOrig: Column, vWritten: Column, tolerance: Double): Column =
+    (vOrig.isNull =!= vWritten.isNull) ||
+      (!(vOrig === vWritten) && abs(vOrig - vWritten) > tolerance)
 }

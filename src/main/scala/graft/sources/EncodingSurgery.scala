@@ -56,8 +56,11 @@ object EncodingSurgery {
     val fresh = store.writeBuckets(rewritten, d)
     val committed = d.copy(updateInProgress = false)
     // `f` may change the coordinate's type: the commit infers the schema
-    // from the rewritten files rather than carrying the old one forward
-    store.commitAtBase(base, committed, Some(fresh))
+    // from the rewritten files rather than carrying the old one forward,
+    // and a rewritten latitude or longitude moves the bbox, so it is
+    // recomputed from the rewritten frame
+    store.commitAtBase(base, committed, Some(fresh),
+      bbox = GriddedStore.bboxOf(rewritten))
     committed
   }
 }

@@ -1,9 +1,9 @@
 package graft.sources
 
-import graft.model.{ChunkGrid, DatasetDescriptor}
+import graft.model.{Bbox, ChunkGrid, DatasetDescriptor}
 import graft.operators.UpdatePlanner
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -42,6 +42,10 @@ import java.nio.charset.StandardCharsets
   *  - reads and commits take the data schema from the manifest, so
   *    neither builds a frame nor commits through a parquet footer
   *    inference job.
+  *  - every data commit records the spatial bbox of what it pins, so the
+  *    STAC extent is the manifest's bbox and date range, not a scan: an
+  *    update only adds or replaces cells, so its bbox is the anchor's
+  *    widened by the update's (folded into the planning aggregate).
   *
   * Writes use a two-phase descriptor commit (`update_in_progress`,
   * `publish.py:152-180`): readers treat a store whose descriptor has
@@ -150,6 +154,10 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     /** The recorded data schema; None for manifests older than the field. */
     val schema: Option[StructType] = json.flatMap(extractSchema)
     def scan(): DataFrame = pinnedScan(json)
+    /** The recorded bbox; a manifest older than the field computes it
+      * from its data once, and the mutation's commit records it. */
+    lazy val bbox: Option[Bbox] =
+      json.flatMap(extractBbox).orElse(GriddedStore.bboxOf(scan()))
   }
 
   private[sources] def anchor(fallback: DatasetDescriptor): Anchor =
@@ -223,6 +231,25 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
         case _ => None
       }
 
+  /** Spatial bbox recorded by a committed data manifest. None for
+    * manifests older than the field, in-progress claims and explicit
+    * file-list commits through [[writeDescriptor]]. */
+  private def extractBbox(json: String): Option[Bbox] =
+    scala.util.Try(org.json4s.jackson.JsonMethods.parse(json) \ "bbox").toOption.collect {
+      case org.json4s.JArray(List(org.json4s.JDouble(w), org.json4s.JDouble(s),
+          org.json4s.JDouble(e), org.json4s.JDouble(n))) => Bbox(w, s, e, n)
+    }
+
+  /** The committed pointer's bbox and date range — the STAC extent as
+    * recorded by the commit, read without touching data. None when the
+    * manifest records no bbox (see [[extractBbox]]). */
+  def committedExtent(): Option[(Bbox, (Long, Long))] =
+    pointerJson().flatMap(j => for {
+      b <- extractBbox(j)
+      d <- parseDescriptor(j)
+      r <- d.dateRange
+    } yield (b, r))
+
   /** The data of one manifest (`None`: no manifest, i.e. legacy). Reads
     * exactly the pinned file list with the manifest-recorded schema, so
     * building the frame runs no footer-inference job; manifests older
@@ -290,15 +317,22 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * dropping the faster writer's files.
     *
     * `files` is the data-file list the new version pins; `None` carries
-    * the COMMITTED POINTER's list forward (not the latest claim's — an
-    * orphaned claim from a crashed commit has no committed standing). */
+    * the COMMITTED POINTER's list — and its bbox — forward (not the
+    * latest claim's — an orphaned claim from a crashed commit has no
+    * committed standing). An explicit list records no bbox: the
+    * extent falls back to a scan of the pinned data. */
   def writeDescriptor(d: DatasetDescriptor,
-                      files: Option[Seq[String]] = None): Unit =
-    writeDescriptorAsVersion(latestVersionNumber() + 1, d,
-      files.orElse(snapshotFiles()))
+                      files: Option[Seq[String]] = None): Unit = files match {
+    case Some(_) => writeDescriptorAsVersion(latestVersionNumber() + 1, d, files)
+    case None =>
+      val j = pointerJson()
+      writeDescriptorAsVersion(latestVersionNumber() + 1, d,
+        j.flatMap(extractFiles), bbox = j.flatMap(extractBbox))
+  }
 
   /** First phase of a data mutation: claim `base + 1` with the
-    * in-progress flag, carrying the committed file list forward. `base`
+    * in-progress flag, carrying the committed file list forward (no
+    * bbox: the extent is published from committed manifests). `base`
     * MUST be the `latestVersionNumber()` the mutation captured before
     * its guards ran — a concurrent mutation that claimed the same
     * number first throws ConcurrentModificationException HERE, before
@@ -309,11 +343,13 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     writeDescriptorAsVersion(base + 1, d.copy(updateInProgress = true),
       files.orElse(snapshotFiles()), schema)
 
-  /** Second phase: the committed manifest at `base + 2`. */
+  /** Second phase: the committed manifest at `base + 2`, recording the
+    * spatial `bbox` of the data it pins. */
   private[sources] def commitAtBase(base: Long, d: DatasetDescriptor,
                                     files: Option[Seq[String]],
-                                    schema: Option[StructType] = None): Unit =
-    writeDescriptorAsVersion(base + 2, d, files.orElse(snapshotFiles()), schema)
+                                    schema: Option[StructType] = None,
+                                    bbox: Option[Bbox] = None): Unit =
+    writeDescriptorAsVersion(base + 2, d, files.orElse(snapshotFiles()), schema, bbox)
 
   /** The commit body at a FIXED version — two writers that both read the
     * same latest version race to claim the same file here, and exactly
@@ -325,11 +361,14 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * commit reads no footer; when None, a non-empty pin derives it from
     * the pinned files (one inference job — writeInitial, surgery and
     * legacy anchors) and an empty pin carries the committed pointer's
-    * forward. */
+    * forward. `bbox` is recorded beside it when finite (JSON has no
+    * literal for NaN or ±Infinity; such a store's extent falls back to a
+    * scan). */
   private[sources] def writeDescriptorAsVersion(
       version: Long, d: DatasetDescriptor,
       files: Option[Seq[String]] = None,
-      schema: Option[StructType] = None): Unit = {
+      schema: Option[StructType] = None,
+      bbox: Option[Bbox] = None): Unit = {
     fs.mkdirs(versionsDir)
     // the version manifest = descriptor fields + the pinned file list +
     // the data schema (Spark DataType JSON — read back by every pinned
@@ -347,9 +386,11 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
         val base = jackson.JsonMethods.parse(d.toJson).asInstanceOf[JObject]
         val withFiles = base.obj :+
           ("files" -> (JArray(fl.sorted.map(JString(_)).toList): JValue))
+        val withSchema = schemaJson.fold(withFiles)(s => withFiles :+
+          ("data_schema" -> (JString(s): JValue)))
         jackson.JsonMethods.pretty(jackson.JsonMethods.render(JObject(
-          schemaJson.fold(withFiles)(s => withFiles :+
-            ("data_schema" -> (JString(s): JValue))))))
+          bbox.filter(_.toArray.forall(v => !v.isNaN && !v.isInfinite)).fold(withSchema)(b =>
+            withSchema :+ ("bbox" -> (JArray(b.toArray.toList.map(JDouble(_))): JValue))))))
       case None => d.toJson
     }
     // integrity trailer: a silently-corrupted manifest must fail its own
@@ -378,6 +419,20 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * vacuumed version fails on the missing files. Falls back to a
     * directory scan for pre-file-tracking (legacy) versions. */
   def readAt(v: Long): DataFrame = pinnedScan(readVersionJson(v))
+
+  /** [[read]] confined to the given times: pruned to their buckets
+    * (computed on the driver, [[ChunkGrid.bucketOf]]) and to `time IN
+    * times`, so a read-back of a few sampled cells opens only their
+    * buckets' files and skips row groups by the time statistics. */
+  def readTimes(times: Seq[Long]): DataFrame = {
+    val j = pointerJson()
+    val d = j.map(DatasetDescriptor.fromJson).getOrElse(
+      throw new IllegalStateException(s"no existing dataset at $root"))
+    val ts = times.distinct
+    pinnedScan(j).filter(
+      col("time_bucket").isin(ts.map(ChunkGrid.bucketOf(_, d.chunk.timeBucketUs)).distinct: _*) &&
+        col(d.timeDim).isin(ts: _*))
+  }
 
   /** Root-relative paths of the data files now on disk, confined to the
     * given buckets (all buckets when None). Mutations diff this
@@ -592,13 +647,15 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * retired by the swap and reclaimed by `vacuum`. */
   def writeInitial(df: DataFrame, d: DatasetDescriptor): DatasetDescriptor = {
     val p = prepared(df, d)
-    // One up-front aggregate gives both the emptiness guard and the
-    // dateRange stats (a single pass over the input instead of three:
+    // One up-front aggregate gives the emptiness guard, the dateRange
+    // stats and the bbox (a single pass over the input instead of three:
     // probe + write + agg). Empty initial data would brick the store
     // (descriptor committed, min/max undefined) — refuse pre-mutation.
-    val stats = p.agg(min(d.timeDim), max(d.timeDim), count(lit(1))).collect()(0)
+    val stats = p.agg(min(d.timeDim),
+      (max(d.timeDim) +: count(lit(1)) +: GriddedStore.bboxAggs): _*).collect()(0)
     if (stats.getLong(2) == 0L)
       throw new IllegalArgumentException("initial dataset is empty")
+    val bbox = GriddedStore.bboxAt(stats, 3)
     val base = latestVersionNumber()
     claimInProgress(base, d)
     val fresh = writeBuckets(p, d)
@@ -607,7 +664,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       updateInProgress = false,
       updateIsAppendOnly = None,
       updatePreviousEndUs = None)
-    commitAtBase(base, committed, Some(fresh))
+    commitAtBase(base, committed, Some(fresh), bbox = bbox)
     committed
   }
 
@@ -649,7 +706,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     val manifest = committedFiles
       .filterNot(f => targetDirs.exists(f.startsWith)) ++ fresh
     val committed = d.copy(updateInProgress = false)
-    commitAtBase(base, committed, Some(manifest), a.schema)
+    commitAtBase(base, committed, Some(manifest), a.schema, a.bbox)
     committed
   }
 
@@ -664,7 +721,9 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * axis is refused), and when every one of them lies after the
     * committed end the update is a pure append that reads no store data.
     * Otherwise one scan of the anchored snapshot, pruned to the update's
-    * `[lo, hi]`, supplies the existing times to split against.
+    * `[lo, hi]`, supplies the existing times to split against. The same
+    * aggregate that collects the times gives the update's bbox; the
+    * commit records the anchor's bbox widened by it.
     */
   def update(updateDf: DataFrame, allowOverwrite: Boolean = true): DatasetDescriptor = {
     val pd = readDescriptor().getOrElse(
@@ -688,7 +747,8 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     def bucketOf(time: Long): Long = ChunkGrid.bucketOf(time, d.chunk.timeBucketUs)
     val p = prepared(updateDf, d).cache()
     try {
-      val plan = GriddedStore.planUpdate(d, GriddedStore.collectAxis(p, t),
+      val (times, updateBbox) = GriddedStore.collectAxisExtent(p, t)
+      val plan = GriddedStore.planUpdate(d, times,
         (lo, hi) => GriddedStore.collectAxis(a.scan()
           .filter(col("time_bucket").between(bucketOf(lo), bucketOf(hi)) &&
             col(t).between(lo, hi)), t),
@@ -738,7 +798,10 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
         updateInProgress = false,
         updatePreviousEndUs = Some(dsEnd),
         updateIsAppendOnly = Some(plan.inserts.isEmpty))
-      commitAtBase(base, committed, Some(manifest), a.schema)
+      // exact: survivorship is cell-keyed, so every replaced cell's
+      // coordinates are also the update's
+      val bbox = (a.bbox ++ updateBbox).reduceOption(_ union _)
+      commitAtBase(base, committed, Some(manifest), a.schema, bbox)
       committed
     } finally p.unpersist()
   }
@@ -758,16 +821,49 @@ object GriddedStore {
     * above `maxAxis` is cell data, not a time axis, and is refused
     * loudly instead of being pulled onto the driver. */
   def collectAxis(df: DataFrame, key: String,
-                  maxAxis: Long = UpdatePlanner.DefaultMaxAxis): Seq[Long] = {
-    val ax = df.where(col(key).isNotNull).select(col(key).cast("long")).distinct()
-      .limit(math.min(maxAxis + 1, Int.MaxValue.toLong).toInt)
-      .collect().map(_.getLong(0))
+                  maxAxis: Long = UpdatePlanner.DefaultMaxAxis): Seq[Long] =
+    axisRows(df, key, Nil, maxAxis).map(_.getLong(0))
+
+  /** [[collectAxis]] plus the spatial bbox of the rows it covers (rows
+    * with a null key are never written and are left out), from the same
+    * aggregate: one row per time carrying that time's extent, folded on
+    * the driver. */
+  private[sources] def collectAxisExtent(
+      df: DataFrame, key: String,
+      maxAxis: Long = UpdatePlanner.DefaultMaxAxis): (Seq[Long], Option[Bbox]) = {
+    val rows = axisRows(df, key, bboxAggs, maxAxis)
+    (rows.map(_.getLong(0)), rows.flatMap(bboxAt(_, 1)).reduceOption(_ union _))
+  }
+
+  private def axisRows(df: DataFrame, key: String, aggs: Seq[Column],
+                       maxAxis: Long): Seq[Row] = {
+    val k = col(key).cast("long")
+    val nonNull = df.where(col(key).isNotNull)
+    val ax = (aggs match {
+      case Nil => nonNull.select(k).distinct()
+      case a +: more => nonNull.groupBy(k).agg(a, more: _*)
+    }).limit(math.min(maxAxis + 1, Int.MaxValue.toLong).toInt).collect()
     require(ax.length <= maxAxis,
       s"distinct axis for '$key' has more than $maxAxis values — the " +
         "update planner collects the time axis to the driver and is for " +
         "time axes, not cell data")
     ax.toSeq
   }
+
+  /** min/max of longitude and latitude in [[Bbox]] order, as doubles
+    * (every category's dims include both). */
+  private[sources] val bboxAggs: Seq[Column] = Seq(
+    min(col("longitude").cast("double")), min(col("latitude").cast("double")),
+    max(col("longitude").cast("double")), max(col("latitude").cast("double")))
+
+  /** The [[bboxAggs]] values at `i`; None when they are null (no row). */
+  private[sources] def bboxAt(r: Row, i: Int): Option[Bbox] =
+    if ((i until i + 4).exists(r.isNullAt)) None
+    else Some(Bbox(r.getDouble(i), r.getDouble(i + 1), r.getDouble(i + 2), r.getDouble(i + 3)))
+
+  /** The bbox of a frame: one aggregate; None for an empty frame. */
+  private[sources] def bboxOf(df: DataFrame): Option[Bbox] =
+    bboxAt(df.agg(bboxAggs.head, bboxAggs.tail: _*).collect()(0), 0)
 
   /** The update planner (`prepare_update_times`, `publish.py:303-330`,
     * plus `update_quality_check`, `publish.py:604-652`), over the

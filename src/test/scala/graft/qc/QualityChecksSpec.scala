@@ -122,4 +122,36 @@ class QualityChecksSpec extends SparkSpec {
     // round-trip)
     assert(bad.sameElements(Array(2L)))
   }
+
+  test("valueCompare: identical infinities match, any other pairing with one is flagged") {
+    val s = spark; import s.implicits._
+    val inf = Double.PositiveInfinity
+    val orig = Seq((1L, inf), (2L, inf), (3L, inf), (4L, Double.NaN), (5L, -inf))
+      .toDF("t", "v")
+    val written = Seq((1L, inf), (2L, -inf), (3L, 1.0), (4L, inf), (5L, -inf))
+      .toDF("t", "v")
+    val bad = QualityChecks.valueCompare(orig, written, Seq("t"), "v", 1e-4)
+      .select("t").orderBy("t").as[Long].collect()
+    // (+Inf, +Inf) and (-Inf, -Inf) pass; (+Inf, -Inf), (+Inf, 1.0) and
+    // (NaN, +Inf) are flagged
+    assert(bad.sameElements(Array(2L, 3L, 4L)))
+    assert(QualityChecks.sampleMismatches(orig, written, Seq("t"), "v", 1e-4) == 3L)
+  }
+
+  test("sampleMismatches counts what valueCompare counts: drift, null, dropped, duplicates") {
+    val s = spark; import s.implicits._
+    val orig = Seq[(Long, Option[Double])]((1L, Some(1.0)), (2L, Some(2.0)),
+      (3L, None), (4L, Some(4.0)), (5L, Some(Double.NaN)), (6L, None),
+      (7L, Some(7.0)), (7L, Some(7.0))).toDF("t", "v")
+    val written = Seq[(Long, Option[Double])]((1L, Some(1.00001)), (2L, Some(2.5)),
+      (3L, Some(3.0)), (5L, Some(Double.NaN)), (6L, None), (7L, Some(7.0)),
+      (7L, Some(7.5)), (8L, Some(8.0))).toDF("t", "v")
+    val full = QualityChecks.valueCompare(orig, written, Seq("t"), "v", 1e-4).count()
+    // t=2 drift, t=3 null vs value, t=4 dropped, t=7 twice sampled ×
+    // twice written with one drifted copy
+    assert(full == 5L)
+    assert(QualityChecks.sampleMismatches(orig, written, Seq("t"), "v", 1e-4) == full)
+    assert(QualityChecks.sampleMismatches(orig.filter(lit(false)), written,
+      Seq("t"), "v", 1e-4) == 0L)
+  }
 }
