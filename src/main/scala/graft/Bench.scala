@@ -1,9 +1,22 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+
 /** Benchmark main: times every SparkEntry query cold + warm (min-of-3)
   * at sf0.1 and a ×10 replicated tier, polices regressions against the
-  * previous round's committed record, and writes the full per-query
-  * JSON to `bench_out.json` + `BENCH_FULL_r{N}.json`.
+  * baseline record, and writes the full per-query [[Bench.Record]] as
+  * one JSON line to stdout and `bench_out.json`. A full run (no
+  * `SPARK_GRAFT_BENCH_ONLY`, ×10 tier on) also writes it to
+  * `BENCH_FULL_r<N+1>.json`, N the newest `BENCH_FULL_r<N>.json`, and
+  * never over an existing file. A compact summary line is printed last.
+  *
+  * The baseline is `SPARK_GRAFT_BENCH_BASELINE` when set, otherwise the
+  * newest `BENCH_FULL_r<N>.json` that reads as a record with at least
+  * one query; a baseline that does not read polices nothing and says
+  * so (`baseline_missing: true`).
   *
   * == MEASUREMENT DISCIPLINE (repo law, not session lore) ==
   *
@@ -12,12 +25,9 @@ package graft
   *    both the per-query timings and the hostScore calibration — the
   *    round-7 record carried a 42 s q134 cold sample for exactly this
   *    reason. One bench at a time, idle host.
-  *  - '''Delete trial BENCH_FULL files before the round ends.''' Any
-  *    manual `runMain graft.Bench` writes `BENCH_FULL_r{N}.json`
-  *    (N = max existing BENCH_r* + 1). If trial copies linger, the
-  *    driver's end-of-round bench baselines against the trial instead
-  *    of the previous round's committed record, and cross-round
-  *    policing degrades to same-day noise comparison.
+  *  - '''A full run is the next baseline.''' Its record becomes the
+  *    newest `BENCH_FULL_r<N>.json`, so the next run polices against
+  *    it; delete a trial record that should not be.
   *  - '''The warm (min-of-3) series is the signal; cold is a single
   *    sample.''' Host noise is multi-core, not single-thread: A/B runs
   *    of identical code flag non-overlapping "regression" sets at
@@ -45,12 +55,66 @@ package graft
   */
 object Bench {
 
+  /** One flagged slowdown. `expected` is the host-scaled previous time
+    * (absent in records from before host scaling). */
+  case class Regression(q: String, prev: Double, expected: Option[Double],
+                        now: Double)
+
+  /** One regression series of a tier. `host_scale` is the drift the
+    * threshold was scaled by (1.0 in records from before host scaling).
+    * `baseline_missing` means nothing was compared, so an empty
+    * `regressions` list is never mistaken for a clean result. */
+  case class Series(regressions: List[Regression], host_scale: Double = 1.0,
+                    baseline_missing: Boolean)
+
+  /** Host calibration: the sandwich's START and END samples, and the
+    * steal over the run. The `_end`, swing and steal fields date from
+    * round 9. */
+  case class Host(single_miters: Long, multi32_miters: Long,
+                  single_miters_end: Option[Long] = None,
+                  multi32_miters_end: Option[Long] = None,
+                  sandwich_swing: Option[Double] = None,
+                  steal_jiffies: Option[Long] = None,
+                  cpu_jiffies: Option[Long] = None,
+                  steal_suspect: Option[Boolean] = None)
+
+  /** One tier's numbers. Times are seconds; a failed query times −1, is
+    * listed in `failed`, and makes both totals None (JSON `null`).
+    * `policing` holds the series per kind, keyed by the prefix its keys
+    * carry in the record (see [[Thresholds]]); `factor` is the ×10
+    * tier's replication. */
+  case class Tier(factor: Option[Int] = None, total: Option[Double],
+                  queries: Map[String, Double],
+                  gates: Map[String, Double] = Map.empty,
+                  failed: List[String], warm_total: Option[Double],
+                  warm: Map[String, Double] = Map.empty,
+                  warm_gates: Map[String, Double] = Map.empty,
+                  policing: Map[String, Series] = Map.empty)
+
+  /** A bench record. In the JSON, tier 1's fields sit at the top level,
+    * its total under `value`, beside `metric`, `unit` and `ok`. */
+  case class Record(host: Host, sf: String, tier1: Tier,
+                    tier2: Option[Tier] = None,
+                    warm_estimator: Option[String] = None)
+
+  /** Regression series kinds (the key prefix) and the slowdown ratio
+    * that flags a query. Cold is a SINGLE sample per run, and round-7
+    * A/B runs showed ±30-50% swings on sub-second queries with zero
+    * code change, so it gets 1.5; warm is min-of-3 and stays at 1.25;
+    * lifecycle gates cost physical IO and state-store floor by design,
+    * so only a 2× blowup surfaces. */
+  private[graft] val Thresholds =
+    ListMap("" -> 1.5, "warm_" -> 1.25, "gate_" -> 2.0, "warm_gate_" -> 2.0)
+
+  // totals of a tier with failures are None and must stay JSON null
+  private implicit val formats: Formats = DefaultFormats.preservingEmptyValues
+
+  private def orNull(x: Option[Double]): JValue = x.fold[JValue](JNull)(JDouble(_))
+
   /** Queries whose per-execution cost is a full multi-batch streaming
     * run or store lifecycle (rerun-idempotent by design): reported
     * under `gates`/`warm_gates` instead of `queries`/`warm` so tier-1
-    * totals of plan-shaped queries stay readable. Parsing is unaffected
-    * — [[queryTimes]] is anchor-free, so cross-round policing still
-    * sees them in the cold/warm sections. */
+    * totals of plan-shaped queries stay readable. */
   private val GateQueries = Set(
     "q137_store_roundtrip", "q138_store_correction",
     "q139_store_vacuum", "q140_store_encrypted",
@@ -147,72 +211,56 @@ object Bench {
     fs.create(marker, true).close()
   }
 
-  /** Every `"qNN_name":<seconds>` pair in `text`. This is deliberately
-    * anchor-free: the driver's BENCH_r*.json keeps only the LAST ~3 kB of
-    * output in its `tail` field, so the head of the JSON line (and with it
-    * any `{"metric":` or even `"queries":{` anchor) may be truncated away
-    * mid-pair. Query names are the only keys shaped `q\d+_...` followed by
-    * a number — regression entries use `"q"/"prev"/"now"` keys and failed
-    * lists carry bare names with no colon, so neither can false-match. */
-  private[graft] def queryTimes(text: String): Map[String, Double] = {
-    val pair = """"(q\d+[A-Za-z0-9_]*)":(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)""".r
-    pair.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  private val PolicingKeys = Seq("regressions", "host_scale", "baseline_missing")
+
+  /** A tier's JSON fields: the case-class fields, then each regression
+    * series flattened under its kind prefix (`warm_regressions`,
+    * `gate_host_scale`, ...), the layout of every committed record. */
+  private def tierFields(t: Tier): List[JField] = {
+    val JObject(fields) = Extraction.decompose(t)
+    fields.filterNot(_._1 == "policing") ++
+      Thresholds.keys.flatMap(k => t.policing.get(k).toList.flatMap { s =>
+        val JObject(sf) = Extraction.decompose(s)
+        sf.map { case (n, v) => (k + n, v) }
+      })
   }
 
-  /** Split a bench dump into (tier-1 text, tier-2 text). A fragment is
-    * filed as tier 1 ONLY when it provably precedes the tier-2 section:
-    *  - `"tier2":{` present → everything before it is tier 1;
-    *  - else `"sf":` present → the record format is
-    *    `...,"sf":"<dir>"[,"tier2":{...}]}`, so text before `"sf":` is
-    *    tier 1 and text after is tier 2 (possibly empty);
-    *  - else `"metric":` present → the record HEAD survived and the
-    *    text ends before the tier-1 section does → all tier 1;
-    *  - else → an anchor-free fragment. The driver's ~3 kB tail keeps
-    *    the END of the output, and the record ends with the tier-2
-    *    object, so an anchor-free tail is the tier-2 remnant — filing
-    *    it as tier 1 is the round-6 bug (round 5's tail was exactly
-    *    this shape: its ×10 warm map got compared against tier-1 sf0.1
-    *    numbers). File it as tier 2, never tier 1. */
-  private[graft] def splitTiers(full: String): (String, String) = {
-    val i = full.indexOf("\"tier2\":{")
-    val s = full.indexOf("\"sf\":")
-    if (i >= 0) (full.substring(0, i), full.substring(i))
-    else if (s >= 0) (full.substring(0, s), full.substring(s))
-    else if (full.contains("\"metric\":")) (full, "")
-    else ("", full)
+  private def readTier(j: JValue): Tier =
+    j.extract[Tier].copy(policing = ListMap(Thresholds.keys.toSeq.collect {
+      case k if (j \ (k + "baseline_missing")) != JNothing =>
+        k -> JObject(PolicingKeys.map(n => n -> (j \ (k + n)))
+          .filter(_._2 != JNothing): _*).extract[Series]
+    }: _*))
+
+  /** The fields both the record and the compact line open with. */
+  private def head(r: Record): List[JField] = List(
+    "metric" -> JString("total"), "value" -> orNull(r.tier1.total),
+    "unit" -> JString("sec"), "ok" -> JBool(r.tier1.failed.isEmpty))
+
+  /** The record as one JSON line. */
+  private[graft] def writeRecord(r: Record): String = {
+    val t1 = tierFields(r.tier1).filterNot(f => f._1 == "factor" || f._1 == "total")
+    JsonMethods.compact(JObject(head(r) ++ List(
+      "warm_estimator" -> Extraction.decompose(r.warm_estimator),
+      "host" -> Extraction.decompose(r.host)) ++ t1 ++
+      List("sf" -> JString(r.sf)) ++
+      r.tier2.map(t => "tier2" -> JObject(tierFields(t)))))
   }
 
-  /** Scope a tier's text to its cold (`"queries"`) or warm map. Each
-    * tier's JSON is built cold-map-first, `"warm":{` after, so the
-    * marker cleanly separates them; a file from before the warm
-    * methodology has no marker and is all cold. A tail truncated to
-    * inside a tier still splits correctly WITHIN that tier: the cold
-    * remnant precedes `"warm":{` and the warm map follows it. (The
-    * cross-TIER misfiling risk lives in [[splitTiers]], not here.) */
-  private def warmSplit(tierText: String, warm: Boolean): String = {
-    val w = tierText.indexOf("\"warm\":{")
-    if (w < 0) { if (warm) "" else tierText }
-    else if (warm) tierText.substring(w)
-    else tierText.substring(0, w)
-  }
+  /** The record in `text`; None when it is not one. Fields added since
+    * round 6 default when absent, so every committed record reads. */
+  private[graft] def readRecord(text: String): Option[Record] =
+    scala.util.Try {
+      val j = JsonMethods.parse(text)
+      Record((j \ "host").extract[Host], (j \ "sf").extract[String],
+        readTier(j).copy(total = (j \ "value").extractOpt[Double]),
+        (j \ "tier2") match { case t: JObject => Some(readTier(t)); case _ => None },
+        (j \ "warm_estimator").extractOpt[String])
+    }.toOption
 
-  /** Previous round's per-query times, from a driver-written
-    * BENCH_r*.json (the one JSON line is embedded in its `tail` field,
-    * possibly truncated mid-JSON) or a plain bench_out.json.
-    * `section`: "" = tier-1 cold, "warm" = tier-1 second-run,
-    * "tier2" = ×10 cold, "tier2warm" = ×10 second-run. Empty map when
-    * absent/unparseable — callers must surface that as
-    * `baseline_missing`, never as a clean no-regressions result. */
-  private[graft] def baselineQueries(path: String,
-                                     section: String = ""): Map[String, Double] =
-    try {
-      val full = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8").replace("\\\"", "\"")
-      val (t1, t2) = splitTiers(full)
-      val tier = if (section.startsWith("tier2")) t2 else t1
-      queryTimes(warmSplit(tier, section.endsWith("warm")))
-    } catch { case _: Exception => Map.empty }
+  private[graft] def readRecordFile(path: String): Option[Record] =
+    scala.util.Try(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+      .toOption.flatMap(readRecord)
 
   /** Fixed-work xorshift throughput (million iterations/sec), single
     * thread and 32-way — a host calibration constant embedded in every
@@ -276,77 +324,36 @@ object Bench {
     sys.env.getOrElse("SPARK_GRAFT_REPO_DIR",
       sys.props.getOrElse("user.dir", "/root/repo"))
 
-  /** Latest USABLE bench record beside the repo — the previous round's
-    * numbers. `BENCH_FULL_r*.json` (the complete per-query record this
-    * bench writes each run, committed to the repo) is ALWAYS preferred
-    * over the driver's `BENCH_r*.json`, whose `tail` field keeps only
-    * the last ~3 kB of output — round 6's policing compared against a
-    * misfiled truncated tail and was noise. Within each family,
-    * candidates are probed newest-first and the first that actually
-    * parses to at least one per-query time wins (a compile-failure
-    * round leaves an rc=1 stub with zero pairs — the round-4 lesson).
-    * Falls back to the round-2 file so an env-less run still compares. */
-  private[graft] def latestBaseline(dir: String = repoDir): String = {
-    val d = new java.io.File(dir)
-    def newestFirst(re: String): Seq[String] =
-      Option(d.listFiles()).toSeq.flatten
-        .filter(_.getName.matches(re)).map(_.getPath).sorted.reverse
-    val full = newestFirst("BENCH_FULL_r\\d+\\.json")
-    val tails = newestFirst("BENCH_r\\d+\\.json")
-    (full ++ tails).find(p => baselineQueries(p).nonEmpty)
-      .orElse(tails.headOption)
-      .getOrElse(s"$dir/BENCH_r02.json")
-  }
+  private val FullRecordName = """BENCH_FULL_r(\d+)\.json""".r
 
-  /** The round number a full record is named for: the
-    * `SPARK_GRAFT_BENCH_ROUND` override when it holds an integer,
-    * otherwise one past the newest `BENCH_r*.json` in `dir`. A blank or
-    * garbage override falls back to that scan instead of crashing the
-    * bench after its whole run. */
-  private[graft] def benchRound(env: Option[String], dir: String): Int =
-    env.flatMap { e =>
-      val n = e.trim.toIntOption
-      if (n.isEmpty) System.err.println(s"SPARK_GRAFT_BENCH_ROUND='$e' is " +
-        "not an integer; naming the record from the BENCH_r*.json scan")
-      n
-    }.getOrElse(
-      1 + Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName)
-        .collect { case n if n.matches("BENCH_r\\d+\\.json") =>
-          n.stripPrefix("BENCH_r").stripSuffix(".json").toInt }
-        .foldLeft(0)(math.max))
+  /** (N, path) of every `BENCH_FULL_r<N>.json` in `dir`, newest first. */
+  private def fullRecords(dir: String): Seq[(Int, String)] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .flatMap(f => f.getName match {
+        case FullRecordName(n) => Some((n.toInt, f.getPath))
+        case _ => None
+      }).sortBy(-_._1)
 
-  /** Query names inside one `"key":[{"q":...},...]` regression section
-    * of a record fragment. Used by the compact summary line (names
-    * only, no numbers) — the full entries stay in the full record. */
-  private[graft] def regrSection(fragment: String, key: String): Seq[String] = {
-    val arr = (s""""$key":\\[(.*?)\\]""").r
-      .findFirstMatchIn(fragment).map(_.group(1)).getOrElse("")
-    """"q":"([^"]+)"""".r.findAllMatchIn(arr).map(_.group(1)).toSeq
-  }
+  /** The baseline: the newest `BENCH_FULL_r<N>.json` in `dir` that reads
+    * as a record with at least one query (a run that failed to compile
+    * or crashed early leaves none — the round-4 lesson). None when no
+    * record qualifies; the caller surfaces that as `baseline_missing`. */
+  private[graft] def latestBaseline(dir: String = repoDir): Option[String] =
+    fullRecords(dir).map(_._2)
+      .find(p => readRecordFile(p).exists(_.tier1.queries.nonEmpty))
 
-  /** A capped JSON name array + overflow count for the compact line:
-    * `"k":["a","b"],"k_more":3`. Caps keep the whole compact line under
-    * the driver's ~2 kB stdout tail window. */
-  private[graft] def cappedNames(key: String, names: Seq[String],
-                                 cap: Int = 8): String = {
-    val shown = names.take(cap).map("\"" + _ + "\"").mkString("[", ",", "]")
-    s""""$key":$shown,"${key}_more":${math.max(0, names.size - cap)}"""
-  }
+  /** The number the next full record is named for: one past the newest
+    * `BENCH_FULL_r<N>.json` in `dir`. */
+  private[graft] def benchRound(dir: String): Int =
+    fullRecords(dir).headOption.fold(0)(_._1) + 1
 
-  /** Host calibration recorded in a baseline file (`"single_miters":N`
-    * / `"multi32_miters":N`), for host-drift normalization in the
-    * regression math. None for records from before the host section. */
-  private[graft] def baselineHostMiters(path: String, key: String)
-      : Option[Long] =
-    try {
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      (s""""$key":(\\d+)""").r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-    } catch { case _: Exception => None }
-
-  private[graft] def baselineHostSingle(path: String): Option[Long] =
-    baselineHostMiters(path, "single_miters")
+  /** Writes `json` as the next full record in `dir` and returns its
+    * path. CREATE_NEW: an existing record is never clobbered (round-11
+    * verdict item 2: a post-round run once overwrote a committed one). */
+  private[graft] def writeFullRecord(dir: String, json: String): java.nio.file.Path =
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, f"BENCH_FULL_r${benchRound(dir)}%02d.json"),
+      json, java.nio.file.StandardOpenOption.CREATE_NEW)
 
   /** Host-drift scale for regression thresholds: expected
     * `now ≈ prev × prevMiters / nowMiters` (time ∝ 1/speed). Clamped to
@@ -361,32 +368,47 @@ object Bench {
       case _ => 1.0
     }
 
-  /** >25% per-query slowdowns vs a previous map, as a JSON fragment (and
-    * stderr callouts) — the bench polices its own regressions so a
-    * round-over-round diff never depends on a human reading two files.
-    * An empty baseline yields `"baseline_missing":true`, NOT a clean
+  /** Host drift vs the baseline host: the MAX of the single-thread and
+    * 32-way calibration ratios over both sandwich samples of this run,
+    * against the baseline's START sample. Single-thread captures
+    * clock-speed drift but NOT core availability: these VMs run under
+    * visible hypervisor steal (/proc/stat steal ≈ 68% of cumulative
+    * user time on the round-8 host), and a steal episode collapses
+    * 32-way throughput while the one-core score stays flat (r6→r8:
+    * single 481→441, multi32 13000→9830 — every local[32] query
+    * uniformly ~1.5-2× slower). Queries on local[32] are 32-thread
+    * work, so the multi ratio is the binding constraint; the max over
+    * both samples assumes the host at its measured slowest, and
+    * `steal_suspect` already marks the record when the samples
+    * disagree enough for that assumption to matter. 1.0 without a
+    * baseline. */
+  private[graft] def drift(prev: Option[Host], now: Host): Double =
+    prev.fold(1.0) { p =>
+      ((now.single_miters +: now.single_miters_end.toSeq)
+        .map(hostScale(Some(p.single_miters), _)) ++
+        (now.multi32_miters +: now.multi32_miters_end.toSeq)
+          .map(hostScale(Some(p.multi32_miters), _))).max
+    }
+
+  /** Per-query slowdowns vs a previous map, with stderr callouts — the
+    * bench polices its own regressions so a round-over-round diff never
+    * depends on a human reading two files. A query is flagged when
+    * `prev > 0.3 && now > prev × scale × threshold`: each prev is scaled
+    * by the host drift, so a uniformly slower (or faster) host no longer
+    * reads as a wall of regressions (or masks real ones), and the entry
+    * carries the expected (scaled) value so a reader can audit the math.
+    * An empty baseline yields `baseline_missing = true`, NOT a clean
     * `[]`: a clean empty list must always mean "compared and found
     * nothing", never "had nothing to compare against". */
-  /** `threshold`: the cold series is a SINGLE sample per round (one
-    * measured execution + GC timing luck), and round-7 A/B runs showed
-    * ±30-50% swings on sub-second queries with zero code change and
-    * non-repeating flag sets — so cold callers pass 1.5. The warm
-    * series is min-of-3 and stays at the tighter 1.25. */
   private[graft] def regressionJson(tag: String, prev: Map[String, Double],
                                     now: Seq[(String, Double, Boolean)],
-                                    keyPrefix: String = "",
                                     scale: Double = 1.0,
-                                    threshold: Double = 1.25): String = {
+                                    threshold: Double = 1.25): Series = {
     if (prev.isEmpty) {
       System.err.println(s"[bench$tag] baseline missing/unparseable — " +
         "regression policing DID NOT RUN this round")
-      return s""""${keyPrefix}regressions":[],"${keyPrefix}baseline_missing":true"""
+      return Series(Nil, scale, baseline_missing = true)
     }
-    // host-drift normalization: each prev is scaled by the recorded
-    // single-thread calibration ratio before the 1.25× threshold, so a
-    // uniformly slower (or faster) host no longer reads as a wall of
-    // regressions (or masks real ones). The emitted entry carries the
-    // expected (scaled) value so a reader can audit the math.
     val items = now.collect {
       case (name, t, true)
         if prev.get(name).exists(p => p > 0.3 && t > p * scale * threshold) =>
@@ -394,11 +416,93 @@ object Bench {
           System.err.println(
             f"[bench$tag] REGRESSION $name: $p%.2fs (expected ${p * scale}%.2fs" +
               f" at this host) -> $t%.2fs (${t / (p * scale)}%.2fx)")
-          s"""{"q":"$name","prev":$p,"expected":${p * scale},"now":$t}"""
-    }.mkString("[", ",", "]")
-    s""""${keyPrefix}regressions":$items,""" +
-      s""""${keyPrefix}host_scale":$scale,""" +
-      s""""${keyPrefix}baseline_missing":false"""
+          Regression(name, p, Some(p * scale), t)
+    }
+    Series(items.toList, scale, baseline_missing = false)
+  }
+
+  /** `t` with its four regression series computed against `baseline`.
+    * Plan queries and lifecycle gates are policed apart (round-8 verdict
+    * item 2: the gates' IO-bound variance buried the plan queries'
+    * trends two rounds running), each against the baseline's plan and
+    * gate times together, so a query that moved between the sub-maps
+    * still finds its previous time. */
+  private[graft] def police(t: Tier, baseline: Option[Tier], drift: Double,
+                            tag: String = ""): Tier =
+    t.copy(policing = Thresholds.map { case (kind, threshold) =>
+      val warm = kind.startsWith("warm")
+      val now = kind match {
+        case "" => t.queries
+        case "warm_" => t.warm
+        case "gate_" => t.gates
+        case _ => t.warm_gates
+      }
+      val prev = baseline.fold(Map.empty[String, Double])(b =>
+        if (warm) b.warm ++ b.warm_gates else b.queries ++ b.gates)
+      val label = if (kind.isEmpty) "" else ":" + kind.stripSuffix("_")
+      kind -> regressionJson(tag + label, prev,
+        now.toSeq.sortBy(_._1).map { case (q, v) => (q, v, !t.failed.contains(q)) },
+        drift, threshold)
+    })
+
+  /** One measured query: cold time, warm (min-of-3) time, and whether
+    * every run of it succeeded (failed runs time −1). */
+  private[graft] case class Row(name: String, cold: Double, warm: Double, ok: Boolean)
+
+  /** The tier of `rows` (in execution order), policed against `baseline`.
+    * The one assembly for sf0.1 and ×10. */
+  private[graft] def buildTier(rows: Seq[Row], baseline: Option[Tier],
+                               drift: Double, tag: String = "",
+                               factor: Option[Int] = None): Tier = {
+    val (gateRows, planRows) = rows.partition(r => GateQueries(r.name))
+    def times(rs: Seq[Row], f: Row => Double): Map[String, Double] =
+      ListMap(rs.map(r => r.name -> f(r)): _*)
+    val failed = rows.filterNot(_.ok).map(_.name).toList
+    // a tier with failures must not offer a comparable total: summing
+    // only the survivors would make a regression-to-failure read as a
+    // speedup against a clean run
+    def total(f: Row => Double) = if (failed.nonEmpty) None else Some(rows.map(f).sum)
+    police(Tier(factor, total(_.cold), times(planRows, _.cold),
+      times(gateRows, _.cold), failed, total(_.warm), times(planRows, _.warm),
+      times(gateRows, _.warm)), baseline, drift, tag)
+  }
+
+  /** The compact summary line: totals, counts and regression NAMES of
+    * `r`, with at most 8 names per list (the rest counted in `_more`);
+    * the per-query maps stay in the full record. */
+  private[graft] def compactLine(r: Record, fullRecord: String): String = {
+    def names(t: Option[Tier], kind: String): List[String] =
+      t.flatMap(_.policing.get(kind)).toList.flatMap(_.regressions.map(_.q))
+    def capped(key: String, ns: List[String]): List[JField] = List(
+      key -> JArray(ns.take(8).map(JString(_))),
+      s"${key}_more" -> JInt(math.max(0, ns.size - 8)))
+    val counts = for {
+      (prefix, t) <- List("" -> Some(r.tier1), "t2_" -> r.tier2)
+      kind <- Thresholds.keys
+    } yield {
+      val key = (prefix + kind).stripSuffix("_")
+      (if (key.isEmpty) "cold" else key) -> JInt(names(t, kind).size)
+    }
+    val t1 = r.tier1
+    val drift = t1.policing.get("").fold(1.0)(_.host_scale)
+    JsonMethods.compact(JObject(head(r) ++ List(
+      "compact" -> JBool(true),
+      "warm_estimator" -> Extraction.decompose(r.warm_estimator),
+      "warm_total" -> orNull(t1.warm_total)) ++
+      r.tier2.toList.flatMap(t => List(
+        "t2_total" -> orNull(t.total),
+        "t2_warm_total" -> orNull(t.warm_total))) ++
+      List(
+        "n_queries" -> JInt(t1.queries.size),
+        "n_gates" -> JInt(t1.gates.size),
+        "failed" -> Extraction.decompose(t1.failed),
+        "host_scale" -> JDouble(math.round(drift * 1e4) / 1e4),
+        "steal_suspect" -> JBool(r.host.steal_suspect.contains(true)),
+        "baseline_missing" -> JBool(t1.policing.get("warm_").forall(_.baseline_missing)),
+        "regr_counts" -> JObject(counts)) ++
+      capped("warm_regr_names", names(Some(t1), "warm_")) ++
+      capped("t2_warm_regr_names", names(r.tier2, "warm_")) ++
+      List("full_record" -> JString(fullRecord), "sf" -> JString(r.sf))))
   }
 
   def main(args: Array[String]): Unit = {
@@ -436,8 +540,7 @@ object Bench {
     }
     def measure(qs: Seq[(String, (org.apache.spark.sql.SparkSession, String)
         => org.apache.spark.sql.DataFrame)], dir: String, tag: String,
-        gcBetween: Boolean = false)
-        : Seq[(String, Double, Double, Boolean)] =
+        gcBetween: Boolean = false): Seq[Row] =
       qs.map { case (name, fn) =>
         // a failed query must be unmistakable in the recorded numbers: a
         // silent time-to-crash would read as a (fast) success and a round
@@ -509,11 +612,8 @@ object Bench {
         // 67 s → 89 s when GC'd). Compute-bound ×10 queries amortize
         // the recompile and keep the relief.
         if (gcBetween) System.gc()
-        (name, cold, warm, ok)
+        Row(name, cold, warm, ok)
       }
-    def mapJson(rs: Seq[(String, Double, Double, Boolean)], warm: Boolean) =
-      rs.map { case (k, c, w, _) => "\"" + k + "\":" + (if (warm) w else c) }
-        .mkString("{", ",", "}")
     // SANDWICH calibration (round-8 verdict item 1): one sample at run
     // START and one at END, plus the /proc/stat steal-jiffies delta
     // between them. A single mid-run sample cannot distinguish "this
@@ -542,8 +642,9 @@ object Bench {
     // BEFORE the tier-1 gates (execution-order note above); `sync`
     // first so tier-1's own dirty pages (checkpoint blocks, shuffle
     // files) are flushed outside the ×10 cold timers.
-    val tier2Data: Option[(Seq[(String, Double, Double, Boolean)], Int)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_TIER2", "1") == "0" || only.isDefined) None
+    val tier2On = sys.env.getOrElse("SPARK_GRAFT_TIER2", "1") != "0"
+    val tier2Data: Option[(Seq[Row], Int)] =
+      if (!tier2On || only.isDefined) None
       else {
         val factor = 10
         val t2dir = sys.env.getOrElse("SPARK_GRAFT_TIER2_DIR",
@@ -568,28 +669,6 @@ object Bench {
     // longer tax the ×10 cold series, and their own 2× threshold
     // absorbs following it
     val resultsGates = measure(gateSel, sfDir, "")
-    val results0 = resultsPlain ++ resultsGates
-    val results = results0.map { case (k, c, _, ok) => (k, c, ok) }
-    // lifecycle gate queries report in their own sub-maps (object
-    // scaladoc): cold emission order is queries-then-gates, both before
-    // the "warm":{ marker, so the anchor-free baseline parser files
-    // every pair into the right cold/warm section regardless of sub-map
-    val (gates0, plain0) = results0.partition(r => GateQueries.contains(r._1))
-    val qs = mapJson(plain0, warm = false)
-    val gateQs = mapJson(gates0, warm = false)
-    val warmQs = mapJson(plain0, warm = true)
-    val warmGateQs = mapJson(gates0, warm = true)
-    val failedSeq = results.collect { case (k, _, false) => k }
-    val failed = failedSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // a round with failures must not offer a comparable total: summing
-    // only the survivors would make a regression-to-failure read as a
-    // speedup against a clean round
-    val total =
-      if (failedSeq.nonEmpty) "null"
-      else results.collect { case (_, v, true) => v }.sum.toString
-    val warmTotal =
-      if (failedSeq.nonEmpty) "null"
-      else results0.collect { case (_, _, w, true) => w }.sum.toString
 
     // END-of-run calibration sample + steal counter: the sandwich. The
     // committed adjudication rule ("multi32 swings >20% between samples
@@ -603,182 +682,37 @@ object Bench {
       calibrationSwing(hostSingle, hostSingleEnd),
       calibrationSwing(hostMulti, hostMultiEnd))
     val stealSuspect = sandwichSwing > 0.20
-    val stealJson = (for (a <- stealStart; b <- stealEnd) yield
-      s""""steal_jiffies":${b._1 - a._1},"cpu_jiffies":${b._2 - a._2},""")
-      .getOrElse("")
-    val hostJson = s""""host":{"single_miters":$hostSingle,""" +
-      s""""multi32_miters":$hostMulti,""" +
-      s""""single_miters_end":$hostSingleEnd,""" +
-      s""""multi32_miters_end":$hostMultiEnd,""" +
-      // Locale.ROOT: under a comma-decimal default locale an f"%.4f"
-      // would emit "0,2500" — an invalid JSON bench record
-      s""""sandwich_swing":${String.format(java.util.Locale.ROOT,
-        "%.4f", Double.box(sandwichSwing))},$stealJson""" +
-      s""""steal_suspect":$stealSuspect}"""
+    val steal = for (a <- stealStart; b <- stealEnd) yield (b._1 - a._1, b._2 - a._2)
+    val host = Host(hostSingle, hostMulti, Some(hostSingleEnd), Some(hostMultiEnd),
+      Some(math.round(sandwichSwing * 1e4) / 1e4), steal.map(_._1),
+      steal.map(_._2), Some(stealSuspect))
     if (stealSuspect) System.err.println(
       f"[bench] STEAL SUSPECT: calibration sandwich swung ${sandwichSwing * 100}%.0f%%" +
         f" (single $hostSingle->$hostSingleEnd, multi32 $hostMulti->$hostMultiEnd)" +
         " — per-query flags in this record are not adjudicable")
 
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE",
-      latestBaseline())
-    // Host drift is the MAX of the single-thread and 32-way calibration
-    // ratios, over BOTH sandwich samples. Single-thread captures
-    // clock-speed drift but NOT core availability: these VMs run under
-    // visible hypervisor steal (/proc/stat steal ≈ 68% of cumulative
-    // user time on the round-8 host), and a steal episode collapses
-    // 32-way throughput while the one-core score stays flat (r6→r8:
-    // single 481→441, multi32 13000→9830 — every local[32] query
-    // uniformly ~1.5-2× slower). Queries on local[32] are 32-thread
-    // work, so the multi ratio is the binding constraint; the max over
-    // both samples assumes the host at its measured slowest, and
-    // `steal_suspect` already marks the record when the samples
-    // disagree enough for that assumption to matter.
-    val drift = Seq(
-      hostScale(baselineHostSingle(baselinePath), hostSingle),
-      hostScale(baselineHostSingle(baselinePath), hostSingleEnd),
-      hostScale(baselineHostMiters(baselinePath, "multi32_miters"), hostMulti),
-      hostScale(baselineHostMiters(baselinePath, "multi32_miters"), hostMultiEnd))
-      .max
-
-    // ---- regression callouts vs the previous round -----------------------
-    // Lifecycle gate queries are EXCLUDED from the plan-query regression
-    // series (round-8 verdict item 2: their cost is physical IO and
-    // state-store floor by design, and their variance buried the plan
-    // queries' trends two rounds running); they get their own series at
-    // a 2× threshold so a genuine blowup still surfaces.
-    def planOnly[T](rs: Seq[(String, T, Boolean)]) =
-      rs.filterNot(r => GateQueries.contains(r._1))
-    def gateOnly[T](rs: Seq[(String, T, Boolean)]) =
-      rs.filter(r => GateQueries.contains(r._1))
-    val warmNow = results0.map { case (k, _, w, ok) => (k, w, ok) }
-    val t1prev = baselineQueries(baselinePath)
-    val t1prevWarm = baselineQueries(baselinePath, "warm")
-    val regressions = regressionJson("", t1prev, planOnly(results),
-      scale = drift, threshold = 1.5)
-    val warmRegr = regressionJson(":warm", t1prevWarm, planOnly(warmNow),
-      "warm_", scale = drift)
-    val gateRegr = regressionJson(":gates", t1prev, gateOnly(results),
-      "gate_", scale = drift, threshold = 2.0)
-    val gateWarmRegr = regressionJson(":gates:warm", t1prevWarm,
-      gateOnly(warmNow), "warm_gate_", scale = drift, threshold = 2.0)
-
-    val tier2Json = tier2Data.map { case (t20, factor) =>
-      val t2 = t20.map { case (k, c, _, ok) => (k, c, ok) }
-      val (t2gates, t2plain) = t20.partition(r => GateQueries.contains(r._1))
-      val t2qs = mapJson(t2plain, warm = false)
-      val t2gateQs = mapJson(t2gates, warm = false)
-      val t2warm = mapJson(t2plain, warm = true)
-      val t2warmGateQs = mapJson(t2gates, warm = true)
-      val t2failed = t20.collect { case (k, _, _, false) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val t2total =
-        if (t20.exists(!_._4)) "null"
-        else t20.collect { case (_, v, _, true) => v }.sum.toString
-      val t2warmTotal =
-        if (t20.exists(!_._4)) "null"
-        else t20.collect { case (_, _, w, true) => w }.sum.toString
-      val t2prev = baselineQueries(baselinePath, "tier2")
-      val t2prevWarm = baselineQueries(baselinePath, "tier2warm")
-      val t2warmNow = t20.map { case (k, _, w, ok) => (k, w, ok) }
-      val t2regr = regressionJson(":tier2", t2prev, planOnly(t2),
-        scale = drift, threshold = 1.5)
-      // warm-vs-warm policing, once a warm baseline exists (files
-      // from before the warm methodology simply lack the section —
-      // that is a missing baseline and says so)
-      val t2warmRegr = regressionJson(":tier2:warm", t2prevWarm,
-        planOnly(t2warmNow), "warm_", scale = drift)
-      val t2gateRegr = regressionJson(":tier2:gates", t2prev, gateOnly(t2),
-        "gate_", scale = drift, threshold = 2.0)
-      val t2gateWarmRegr = regressionJson(":tier2:gates:warm", t2prevWarm,
-        gateOnly(t2warmNow), "warm_gate_", scale = drift, threshold = 2.0)
-      s""","tier2":{"factor":$factor,"total":$t2total,""" +
-        s""""queries":$t2qs,"gates":$t2gateQs,"failed":$t2failed,""" +
-        s""""warm_total":$t2warmTotal,"warm":$t2warm,""" +
-        s""""warm_gates":$t2warmGateQs,""" +
-        s"""$t2regr,$t2warmRegr,$t2gateRegr,$t2gateWarmRegr}"""
-    }.getOrElse("")
-
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""ok":${failedSeq.isEmpty},"warm_estimator":"min3",""" +
-      s"""$hostJson,""" +
-      s""""queries":$qs,"gates":$gateQs,"failed":$failed,""" +
-      s""""warm_total":$warmTotal,"warm":$warmQs,"warm_gates":$warmGateQs,""" +
-      s"""$regressions,$warmRegr,$gateRegr,$gateWarmRegr,""" +
-      s""""sf":"$sfDir"$tier2Json}"""
+    val baselinePath = sys.env.get("SPARK_GRAFT_BENCH_BASELINE").orElse(latestBaseline())
+    System.err.println(s"[bench] baseline: ${baselinePath.getOrElse("none")}")
+    val baseline = baselinePath.flatMap(readRecordFile)
+    val drift = Bench.drift(baseline.map(_.host), host)
+    val record = Record(host, sfDir,
+      buildTier(resultsPlain ++ resultsGates, baseline.map(_.tier1), drift),
+      tier2Data.map { case (rows, factor) =>
+        buildTier(rows, baseline.flatMap(_.tier2), drift, ":tier2", Some(factor))
+      },
+      Some("min3"))
+    val json = writeRecord(record)
     println(json)
-    // sbt routes program stdout through its [info] logger, which the
-    // driver's JSON extraction has failed to strip (BENCH_r01 recorded
-    // "parsed": null) — also land the line in a file it can read directly.
+    // sbt routes program stdout through its [info] logger — also land
+    // the line in a file a reader can take whole.
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
-    // The driver's BENCH_r*.json keeps only the last ~3 kB of output, so
-    // per-query history dies with each round (round 6's policing
-    // compared against a misfiled truncated tail). Persist the COMPLETE
-    // record as a committed repo file, named for the round the driver is
-    // about to stamp (max existing BENCH_r* + 1, overridable via
-    // SPARK_GRAFT_BENCH_ROUND); latestBaseline prefers these, making
-    // next round's comparison full-fidelity at both tiers.
-    var fullRecordName = "bench_out.json"
-    if (only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_TIER2", "1") != "0") {
-      val roundNo = benchRound(sys.env.get("SPARK_GRAFT_BENCH_ROUND"), repoDir)
-      // NEVER clobber an existing record (round-11 verdict item 2: the
-      // driver's post-round run silently overwrote the builder's
-      // committed end-of-round record). Suffixed names don't match
-      // latestBaseline's regex, so extra runs can't hijack next round's
-      // baseline either.
-      val path = Iterator.from(0)
-        .map(k => if (k == 0) f"$repoDir/BENCH_FULL_r$roundNo%02d.json"
-                  else f"$repoDir/BENCH_FULL_r$roundNo%02d_$k.json")
-        .find(p => !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-        .get
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
-      fullRecordName = new java.io.File(path).getName
-    }
-    // COMPACT summary line, printed LAST (round-11 verdict item 2): the
-    // driver keeps only the final ~2 kB of stdout, so the full record
-    // line above has had its head truncated away in EVERY round's
-    // BENCH_r*.json ("parsed": null since r01). This line carries the
-    // totals, counts and regression NAMES in well under 2 kB; the
-    // per-query maps stay in the (unchanged) full line, bench_out.json
-    // and BENCH_FULL_r{N}.json. Measurement methodology is untouched.
-    {
-      def names(frag: String, key: String) = regrSection(frag, key)
-      val t2frag = tier2Json
-      val regrCounts = Seq(
-        "cold" -> names(regressions, "regressions").size,
-        "warm" -> names(warmRegr, "warm_regressions").size,
-        "gate" -> names(gateRegr, "gate_regressions").size,
-        "warm_gate" -> names(gateWarmRegr, "warm_gate_regressions").size,
-        "t2" -> names(t2frag, "regressions").size,
-        "t2_warm" -> names(t2frag, "warm_regressions").size,
-        "t2_gate" -> names(t2frag, "gate_regressions").size,
-        "t2_warm_gate" -> names(t2frag, "warm_gate_regressions").size)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val t2totals = tier2Data.map { case (t20, _) =>
-        val t2t = if (t20.exists(!_._4)) "null"
-          else t20.collect { case (_, v, _, true) => v }.sum.toString
-        val t2w = if (t20.exists(!_._4)) "null"
-          else t20.collect { case (_, _, w, true) => w }.sum.toString
-        s""""t2_total":$t2t,"t2_warm_total":$t2w,"""
-      }.getOrElse("")
-      val baselineMissing = t1prevWarm.isEmpty
-      val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""ok":${failedSeq.isEmpty},"compact":true,""" +
-        s""""warm_estimator":"min3","warm_total":$warmTotal,""" +
-        s"""$t2totals"n_queries":${plain0.size},"n_gates":${gates0.size},""" +
-        s""""failed":$failed,""" +
-        s""""host_scale":${String.format(java.util.Locale.ROOT,
-          "%.4f", Double.box(drift))},""" +
-        s""""steal_suspect":$stealSuspect,""" +
-        s""""baseline_missing":$baselineMissing,""" +
-        s""""regr_counts":$regrCounts,""" +
-        cappedNames("warm_regr_names",
-          names(warmRegr, "warm_regressions")) + "," +
-        cappedNames("t2_warm_regr_names",
-          names(t2frag, "warm_regressions")) + "," +
-        s""""full_record":"$fullRecordName","sf":"$sfDir"}"""
-      println(compact)
-    }
+    val fullRecordName =
+      if (only.isEmpty && tier2On)
+        writeFullRecord(repoDir, json).getFileName.toString
+      else "bench_out.json"
+    // COMPACT summary line, printed LAST: a reader that keeps only the
+    // tail of stdout still gets the totals and regression names
+    println(compactLine(record, fullRecordName))
     spark.stop()
   }
 }

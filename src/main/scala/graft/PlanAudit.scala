@@ -1,6 +1,9 @@
 package graft
 
+import scala.collection.immutable.ListMap
 
+import org.json4s._
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 /** Whole-suite physical-plan audit: for every SparkEntry query, count
   * the plan nodes that cost at scale (exchanges, sorts, window ops,
@@ -27,6 +30,11 @@ package graft
   * data, are the subject).
   */
 object PlanAudit {
+
+  /** One query's executed-plan gauge, as `PLAN_GAUGE.json` records it. */
+  case class Gauge(codegen: Int, interp: Int)
+
+  private implicit val formats: Formats = DefaultFormats
 
   /** Compute operators worth flagging when they run interpreted. Scans,
     * exchanges and unions are excluded — they are not codegen
@@ -89,10 +97,10 @@ object PlanAudit {
           "codegen" -> cg,
           "interp" -> interp)
         rows ::= (name, m)
-        println(s"""{"q":"$name",${m.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k":$v""" }.mkString(",")}}""")
+        println(Serialization.write(ListMap("q" -> name) ++ m.toSeq.sortBy(_._1)))
       } catch {
-        case e: Exception => println(s"""{"q":"$name","error":"${e.getClass.getSimpleName}"}""")
+        case e: Exception => println(Serialization.write(
+          ListMap("q" -> name, "error" -> e.getClass.getSimpleName)))
       }
     }
     val worst = rows.sortBy(-_._2("exchanges")).take(8)
@@ -143,6 +151,11 @@ object PlanAudit {
     spark.stop()
   }
 
+  /** The gauge snapshot at `path`; empty when it does not read. */
+  private[graft] def readGauge(path: String): Map[String, Gauge] =
+    scala.util.Try(JsonMethods.parse(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(path))).extract[Map[String, Gauge]]).getOrElse(Map.empty)
+
   /** Regression FENCE over the per-query (codegen, interp) gauge
     * (round-11, verdict item 6): the committed snapshot
     * `PLAN_GAUGE.json` records every query's executed-plan codegen and
@@ -156,36 +169,36 @@ object PlanAudit {
     * makes the rationale reviewable. Shrinkage (more codegen) never
     * fails; regenerate at leisure. Queries that errored this run are
     * skipped (their absence is already loud in the per-query output).
-    * `SPARK_GRAFT_GAUGE_PATH` overrides the snapshot location (used by
-    * the fence's own deliberate-regression drill). */
+    * A missing snapshot only reports; a snapshot that does not read as
+    * at least one entry fails, so a reformatted or broken file can never
+    * switch the fence off. */
   private[graft] def gaugeFence(rows: List[(String, Map[String, Int])],
-      pathStr: String = sys.env.getOrElse(
-        "SPARK_GRAFT_GAUGE_PATH", "PLAN_GAUGE.json"),
+      pathStr: String = "PLAN_GAUGE.json",
       write: Boolean =
         sys.env.get("SPARK_GRAFT_GAUGE_WRITE").contains("1")): Unit = {
     val path = java.nio.file.Paths.get(pathStr)
-    val entry = "\"([^\"]+)\":\\{\"codegen\":(\\d+),\"interp\":(\\d+)\\}".r
-    val prev: Map[String, (Int, Int)] =
-      if (!java.nio.file.Files.exists(path)) Map.empty
-      else entry.findAllMatchIn(java.nio.file.Files.readString(path))
-        .map(m => m.group(1) -> (m.group(2).toInt, m.group(3).toInt)).toMap
-    val cur = rows.map { case (n, m) => n -> (m("codegen"), m("interp")) }
+    val cur = rows.map { case (n, m) => n -> Gauge(m("codegen"), m("interp")) }
       .sortBy(_._1)
     if (write) {
+      // one entry per line, sorted, so a snapshot diff reads per query
       java.nio.file.Files.writeString(path, cur
-        .map { case (n, (cg, ip)) =>
-          s""""$n":{"codegen":$cg,"interp":$ip}""" }
+        .map { case (n, g) => JsonMethods.compact(JString(n)) + ":" + Serialization.write(g) }
         .mkString("{\n", ",\n", "\n}\n"))
       println(s"AUDIT gauge snapshot written: $path (${cur.size} queries)")
       return
     }
-    if (prev.isEmpty) {
+    if (!java.nio.file.Files.exists(path)) {
       println(s"AUDIT gauge fence: no snapshot at $path — run with " +
         "SPARK_GRAFT_GAUGE_WRITE=1 to record one")
       return
     }
-    val grew = cur.collect { case (n, (_, ip))
-      if prev.get(n).exists(_._2 < ip) => s"$n interp ${prev(n)._2}->$ip" }
+    val prev = readGauge(pathStr)
+    assert(prev.nonEmpty, s"gauge snapshot $path does not read as any " +
+      "{\"<query>\": {\"codegen\": N, \"interp\": N}} entry — fix it or " +
+      "regenerate it with SPARK_GRAFT_GAUGE_WRITE=1")
+    val grew = cur.collect { case (n, g)
+      if prev.get(n).exists(_.interp < g.interp) =>
+        s"$n interp ${prev(n).interp}->${g.interp}" }
     val unrecorded = cur.collect { case (n, _) if !prev.contains(n) => n }
     assert(grew.isEmpty && unrecorded.isEmpty,
       "interp gauge regression — interpreted spans grew without a " +

@@ -1,86 +1,93 @@
 package graft
 
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench's round-over-round regression policing is only as good as
-  * its ability to read the PREVIOUS round's record — and the driver's
-  * BENCH_r*.json keeps just the last ~3 kB of output, truncating the
-  * JSON line's head mid-pair. These tests feed exactly that shape and
-  * assert the baseline still parses, and that an unparseable baseline
-  * is surfaced as `baseline_missing`, never as a clean `[]`. */
+  * its ability to read the baseline record. These tests read every
+  * committed `BENCH_FULL_r*.json` through the typed reader, replay the
+  * regression calls and host drift they recorded, and assert that an
+  * unreadable baseline is surfaced as `baseline_missing`, never as a
+  * clean `[]`. */
 class BenchParseSpec extends AnyFunSuite {
+  import Bench.{Host, Record, Regression, Row, Tier}
 
   private def write(content: String): String = {
-    val f = java.nio.file.Files.createTempFile("bench_tail", ".json")
+    val f = java.nio.file.Files.createTempFile("bench_record", ".json")
     java.nio.file.Files.writeString(f, content)
     f.toString
   }
 
-  test("queryTimes recovers pairs with no JSON anchors, skipping torn heads") {
-    val torn = """n_join":0.52,"q39_ann_lsh":0.67,"q52_dedup_components":4.88"""
-    val m = Bench.queryTimes(torn)
-    assert(m == Map("q39_ann_lsh" -> 0.67, "q52_dedup_components" -> 4.88))
+  private def committed(n: String): Record = {
+    val p = java.nio.file.Paths.get(Bench.repoDir, s"BENCH_FULL_r$n.json").toString
+    Bench.readRecordFile(p).getOrElse(fail(s"$p does not read as a bench record"))
   }
 
-  test("queryTimes ignores regression entries and failed lists") {
-    val text = """"queries":{"q25_qc":1.41},"failed":["q12_gaps"],""" +
-      """"regressions":[{"q":"q25_qc","prev":1.03,"now":1.41}]"""
-    assert(Bench.queryTimes(text) == Map("q25_qc" -> 1.41))
-  }
+  /** A clean record of `cold` times (warm = half), policed against nothing. */
+  private def record(cold: (String, Double)*): Record = Record(Host(500L, 12000L),
+    "/root/testdata/sf0.1", Bench.buildTier(cold.map { case (q, t) =>
+      Row(q, t, t / 2, ok = true) }, None, 1.0))
 
-  test("splitTiers files pairs to the right tier, with and without marker") {
-    val full = """"q01_a":1.0,"tier2":{"factor":10,"queries":{"q01_a":9.0}"""
-    val (t1, t2) = Bench.splitTiers(full)
-    assert(Bench.queryTimes(t1) == Map("q01_a" -> 1.0))
-    assert(Bench.queryTimes(t2) == Map("q01_a" -> 9.0))
-    // marker itself truncated away but factor survives -> all tier 2
-    val t2only = """2":{"factor":10,"total":37.6,"queries":{"q52_d":11.9}"""
-    val (a, b) = Bench.splitTiers(t2only)
-    assert(Bench.queryTimes(a).isEmpty && Bench.queryTimes(b) == Map("q52_d" -> 11.9))
-    // anchor-free fragment: could be the tier-2 remnant of a truncated
-    // tail (round 5's shape) — must NEVER be filed as tier 1
-    val anchorless = """"q07_x":0.3}"""
-    assert(Bench.splitTiers(anchorless) == ("", anchorless))
-    // the record head survived and neither "sf" nor the tier2 marker is
-    // present -> truncated mid-tier-1 -> provably all tier 1
-    val headOnly = """{"metric":"total","value":1.0,"queries":{"q07_x":0.3"""
-    assert(Bench.splitTiers(headOnly) == (headOnly, ""))
-    // "sf" separator present but no tier2 section (tier2 skipped):
-    // before-sf is tier 1, after-sf holds no query pairs
-    val sfOnly = """ess":{"q07_x":0.3},"sf":"/root/testdata/sf0.1"}"""
-    val (c, d) = Bench.splitTiers(sfOnly)
-    assert(Bench.queryTimes(c) == Map("q07_x" -> 0.3) && Bench.queryTimes(d).isEmpty)
-  }
-
-  test("round 5's actual truncated tail is never filed as tier 1") {
-    val r05 = "/root/repo/BENCH_r05.json"
-    assume(new java.io.File(r05).exists())
-    // the real r5 tail is an anchor-free tier-2 remnant (cold tail +
-    // full ×10 warm map). Round 6 filed it as tier 1 and compared sf0.1
-    // numbers against ×10 warm values; the fix refuses tier-1 filing
-    // without a provable anchor.
-    assert(Bench.baselineQueries(r05).isEmpty,
-      "tier-1 filing of an anchor-free fragment")
-    assert(Bench.baselineQueries(r05, "warm").isEmpty)
-    val t2w = Bench.baselineQueries(r05, "tier2warm")
-    assert(math.abs(t2w("q01_pricing_summary") - 0.229366762) < 1e-9)
-    assert(t2w.size >= 40, s"expected the full x10 warm map, got ${t2w.size}")
-    val t2c = Bench.baselineQueries(r05, "tier2")
-    assert(math.abs(t2c("q98_cdc_dedup") - 0.796208791) < 1e-9)
-  }
+  private def json(text: String): JValue = JsonMethods.parse(text)
 
   test("the committed BENCH_FULL_r06 record parses all four sections") {
-    val p = "/root/repo/BENCH_FULL_r06.json"
-    assume(new java.io.File(p).exists())
-    assert(Bench.baselineQueries(p).size == 143)
-    assert(Bench.baselineQueries(p, "warm").size == 143)
-    assert(Bench.baselineQueries(p, "tier2").size == 57)
-    assert(Bench.baselineQueries(p, "tier2warm").size == 57)
-    assert(math.abs(Bench.baselineQueries(p)("q100_ivf_pq") - 10.769776185) < 1e-9)
-    assert(Bench.baselineHostSingle(p).contains(481L))
+    val r = committed("06")
+    assert(r.tier1.queries.size == 143 && r.tier1.warm.size == 143)
+    assert(r.tier1.gates.isEmpty)
+    assert(r.tier2.get.queries.size == 57 && r.tier2.get.warm.size == 57)
+    assert(math.abs(r.tier1.queries("q100_ivf_pq") - 10.769776185) < 1e-9)
+    assert(r.host.single_miters == 481L)
     // the 32-way calibration (drift on stolen hosts collapses multi
     // throughput while single stays flat — the ratio the gate now uses)
-    assert(Bench.baselineHostMiters(p, "multi32_miters").contains(13000L))
+    assert(r.host.multi32_miters == 13000L)
+  }
+
+  test("every committed BENCH_FULL record reads, with the recorded section sizes") {
+    val names = Option(new java.io.File(Bench.repoDir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.matches("""BENCH_FULL_r.*\.json""")).sorted
+    assert(names.contains("BENCH_FULL_r06.json") && names.contains("BENCH_FULL_r13.json"),
+      names)
+    for (n <- names) committed(n.stripPrefix("BENCH_FULL_r").stripSuffix(".json"))
+    def sizes(n: String) = {
+      val r = committed(n)
+      val t2 = r.tier2.get
+      (r.tier1.queries.size, r.tier1.warm.size, r.tier1.gates.size,
+        t2.queries.size, t2.warm.size, t2.gates.size)
+    }
+    assert(sizes("08") == ((149, 149, 12, 60, 60, 0)))
+    assert(sizes("13") == ((145, 145, 21, 58, 58, 2)))
+  }
+
+  test("replayed policing reproduces every recorded regression series") {
+    // each later record was policed against the earlier one; other
+    // committed pairs were policed against files no longer kept
+    var replayed = 0
+    for ((a, b) <- Seq("06" -> "07", "09" -> "10", "11" -> "12",
+                       "12" -> "12_1", "12" -> "13")) {
+      val (prev, next) = (committed(a), committed(b))
+      for {
+        (tier, base) <- Seq(Some(next.tier1) -> Some(prev.tier1), next.tier2 -> prev.tier2)
+        t <- tier.toSeq
+        (kind, recorded) <- t.policing
+      } {
+        val again = Bench.police(t, base, recorded.host_scale).policing(kind)
+        assert(again.baseline_missing == recorded.baseline_missing, s"r$a->r$b '$kind'")
+        assert(again.regressions == recorded.regressions, s"r$a->r$b '$kind'")
+        replayed += recorded.regressions.size
+      }
+    }
+    assert(replayed > 20, s"only $replayed recorded regressions replayed")
+  }
+
+  test("replayed drift equals the recorded host_scale bit for bit") {
+    for ((a, b) <- Seq("06" -> "07", "11" -> "12", "12" -> "12_1", "12" -> "13")) {
+      val next = committed(b)
+      val d = Bench.drift(Some(committed(a).host), next.host)
+      val recorded = (next.tier1.policing.values ++
+        next.tier2.toSeq.flatMap(_.policing.values)).map(_.host_scale)
+      assert(recorded.nonEmpty && recorded.forall(_ == d), s"r$a->r$b: $d vs $recorded")
+    }
   }
 
   test("hostScale normalizes drift, clamps corruption, defaults to 1") {
@@ -98,92 +105,82 @@ class BenchParseSpec extends AnyFunSuite {
     val prev = Map("q01_a" -> 1.0)
     // 1.4s now vs 1.0s prev is a regression on an equal host...
     val flat = Bench.regressionJson("", prev, Seq(("q01_a", 1.4, true)))
-    assert(flat.contains("\"q\":\"q01_a\""))
+    assert(flat.regressions.map(_.q) == List("q01_a"))
     // ...but NOT when the baseline host was 1.5x faster (expected 1.5s)
     val scaled = Bench.regressionJson("", prev, Seq(("q01_a", 1.4, true)),
       scale = 1.5)
-    assert(!scaled.contains("\"q\":\"q01_a\""))
-    assert(scaled.contains("\"host_scale\":1.5"))
+    assert(scaled.regressions.isEmpty && scaled.host_scale == 1.5)
     // and a fast host SHRINKS the allowance: 1.0 now vs 1.0 prev at
     // scale 0.5 (host is 2x faster) IS a regression
     val fast = Bench.regressionJson("", prev, Seq(("q01_a", 1.0, true)),
       scale = 0.5)
-    assert(fast.contains("\"q\":\"q01_a\"") && fast.contains("\"expected\":0.5"))
+    assert(fast.regressions == List(Regression("q01_a", 1.0, Some(0.5), 1.0)))
   }
 
   test("cold callers widen the threshold; the warm default stays tight") {
     val prev = Map("q01_a" -> 1.0)
     // 1.4x: flagged at the default (warm) 1.25 threshold...
     assert(Bench.regressionJson("", prev, Seq(("q01_a", 1.4, true)))
-      .contains("\"q\":\"q01_a\""))
+      .regressions.nonEmpty)
     // ...but below the single-sample cold gate of 1.5
-    assert(!Bench.regressionJson("", prev, Seq(("q01_a", 1.4, true)),
-      threshold = 1.5).contains("\"q\":\"q01_a\""))
+    assert(Bench.regressionJson("", prev, Seq(("q01_a", 1.4, true)),
+      threshold = 1.5).regressions.isEmpty)
     assert(Bench.regressionJson("", prev, Seq(("q01_a", 1.6, true)),
-      threshold = 1.5).contains("\"q\":\"q01_a\""))
-  }
-
-  test("a driver-shaped truncated tail parses for both tiers") {
-    // the driver wraps the bench line in a JSON file whose `tail` field
-    // holds the escaped, head-truncated output
-    val tail = """ms\":0.34,\"q52_dedup_components\":4.88,\"q53_bm25\":0.78},""" +
-      """\"failed\":[],\"regressions\":[],\"baseline_missing\":false,""" +
-      """\"sf\":\"/root/testdata/sf0.1\",\"tier2\":{\"factor\":10,""" +
-      """\"total\":37.65,\"queries\":{\"q52_dedup_components\":11.98,""" +
-      """\"q80_shared_spans\":2.98},\"failed\":[],\"regressions\":[]}}"""
-    val path = write(s"""{"n": 3, "rc": 0, "tail": "$tail", "parsed": null}""")
-    assert(Bench.baselineQueries(path) ==
-      Map("q52_dedup_components" -> 4.88, "q53_bm25" -> 0.78))
-    assert(Bench.baselineQueries(path, "tier2") ==
-      Map("q52_dedup_components" -> 11.98, "q80_shared_spans" -> 2.98))
-  }
-
-  test("the actual BENCH_r03.json recovers q52 in both tiers") {
-    val r03 = "/root/repo/BENCH_r03.json"
-    assume(new java.io.File(r03).exists())
-    val t1 = Bench.baselineQueries(r03)
-    val t2 = Bench.baselineQueries(r03, "tier2")
-    // r03's tail is truncated mid-q38; everything after must survive
-    assert(math.abs(t1("q52_dedup_components") - 4.887165696) < 1e-9)
-    assert(t1.size >= 40, s"expected q38..q80 tier-1 entries, got ${t1.size}")
-    assert(math.abs(t2("q52_dedup_components") - 11.986504775) < 1e-9)
-    assert(t2.size == 15)
+      threshold = 1.5).regressions.nonEmpty)
+    assert(Bench.Thresholds ==
+      Map("" -> 1.5, "warm_" -> 1.25, "gate_" -> 2.0, "warm_gate_" -> 2.0))
   }
 
   test("warm sections parse separately per tier; pre-warm files are all cold") {
-    val full = """{"metric":"total","value":1.0,"queries":{"q01_a":1.5},""" +
-      """"failed":[],"warm_total":0.4,"warm":{"q01_a":0.4},"regressions":[],""" +
+    val full = """{"metric":"total","value":1.0,"host":{"single_miters":500,""" +
+      """"multi32_miters":12000},"queries":{"q01_a":1.5},"failed":[],""" +
+      """"warm_total":0.4,"warm":{"q01_a":0.4},"regressions":[],"sf":"d",""" +
       """"tier2":{"factor":10,"queries":{"q01_a":9.0},"failed":[],""" +
       """"warm_total":3.0,"warm":{"q01_a":3.0},"regressions":[]}}"""
-    val p = write(full)
-    assert(Bench.baselineQueries(p) == Map("q01_a" -> 1.5))
-    assert(Bench.baselineQueries(p, "warm") == Map("q01_a" -> 0.4))
-    assert(Bench.baselineQueries(p, "tier2") == Map("q01_a" -> 9.0))
-    assert(Bench.baselineQueries(p, "tier2warm") == Map("q01_a" -> 3.0))
-    // a file from before the warm methodology: cold parses, warm is
-    // MISSING (so the caller flags warm_baseline_missing, not clean []).
-    // The head anchor must survive for tier-1 filing — an anchor-free
-    // fragment is refused (see the round-5-tail test).
-    val old = write("""{"metric":"total","queries":{"q01_a":1.5},"failed":[]""")
-    assert(Bench.baselineQueries(old) == Map("q01_a" -> 1.5))
-    assert(Bench.baselineQueries(old, "warm").isEmpty)
+    val r = Bench.readRecord(full).get
+    assert(r.tier1.queries == Map("q01_a" -> 1.5) && r.tier1.warm == Map("q01_a" -> 0.4))
+    assert(r.tier2.get.queries == Map("q01_a" -> 9.0))
+    assert(r.tier2.get.warm == Map("q01_a" -> 3.0) && r.tier2.get.factor.contains(10))
+    // a record from before the warm methodology: cold parses, warm is
+    // MISSING (so policing flags warm_baseline_missing, not clean [])
+    val old = Bench.readRecord("""{"metric":"total","host":{"single_miters":500,""" +
+      """"multi32_miters":12000},"queries":{"q01_a":1.5},"failed":[],"sf":"d"}""").get
+    assert(old.tier1.queries == Map("q01_a" -> 1.5) && old.tier1.warm.isEmpty)
+    val p = Bench.police(record("q01_a" -> 1.0).tier1, Some(old.tier1), 1.0).policing
+    assert(!p("").baseline_missing && p("warm_").baseline_missing)
   }
 
   test("regressionJson keyPrefix names warm keys so tiers can coexist") {
-    val out = Bench.regressionJson(":warm", Map.empty,
-      Seq(("q01_a", 1.0, true)), "warm_")
-    assert(out.contains("\"warm_baseline_missing\":true"))
-    assert(out.contains("\"warm_regressions\":[]"))
+    // a baseline with cold times only: the warm series has nothing to
+    // compare, in both tiers, and its keys must not collide with cold's
+    val coldOnly = Tier(total = None, queries = Map("q01_a" -> 1.0),
+      failed = Nil, warm_total = None)
+    val rows = Seq(Row("q01_a", 1.0, 0.5, ok = true))
+    val r = Record(Host(500L, 12000L), "d", Bench.buildTier(rows, Some(coldOnly), 1.0),
+      Some(Bench.buildTier(rows, Some(coldOnly), 1.0, ":tier2", Some(10))))
+    val j = json(Bench.writeRecord(r))
+    for (t <- Seq(j, j \ "tier2")) {
+      assert((t \ "warm_baseline_missing") == JBool(true))
+      assert((t \ "warm_regressions") == JArray(Nil))
+      assert((t \ "baseline_missing") == JBool(false))
+      assert((t \ "gate_baseline_missing") == JBool(false))
+    }
   }
 
   test("empty baseline emits baseline_missing:true, never a clean []") {
     val out = Bench.regressionJson("", Map.empty, Seq(("q01_a", 1.0, true)))
-    assert(out.contains("\"baseline_missing\":true"))
+    assert(out.baseline_missing && out.regressions.isEmpty)
     val ok = Bench.regressionJson("",
       Map("q01_a" -> 0.5), Seq(("q01_a", 1.0, true)))
-    assert(ok.contains("\"baseline_missing\":false"))
-    assert(ok.contains(
-      "{\"q\":\"q01_a\",\"prev\":0.5,\"expected\":0.5,\"now\":1.0}"))
+    assert(!ok.baseline_missing)
+    assert(ok.regressions == List(Regression("q01_a", 0.5, Some(0.5), 1.0)))
+    // a baseline file that does not read as a record polices nothing
+    val garbage = Bench.readRecordFile(write("""{"metric":"total","queries":{"q01_a":1.5}"""))
+    assert(garbage.isEmpty)
+    val t = Bench.buildTier(Seq(Row("q01_a", 1.0, 1.0, ok = true)),
+      garbage.map(_.tier1), 1.0)
+    assert(t.policing.size == 4 &&
+      t.policing.values.forall(s => s.baseline_missing && s.regressions.isEmpty))
   }
 
   test("the round-9 sandwich record format parses; host miters = START sample") {
@@ -199,21 +196,36 @@ class BenchParseSpec extends AnyFunSuite {
       """"queries":{"q01_a":9.0},"gates":{"q137_store_roundtrip":19.0},""" +
       """"failed":[],"warm_total":3.0,"warm":{"q01_a":3.0},""" +
       """"warm_gates":{"q137_store_roundtrip":18.0},"regressions":[]}}"""
-    val p = write(full)
-    // gate queries file into the same cold/warm sections as plan queries
-    // (the anchor-free parser is sub-map-blind — by design)
-    assert(Bench.baselineQueries(p) ==
-      Map("q01_a" -> 1.5, "q137_store_roundtrip" -> 10.0))
-    assert(Bench.baselineQueries(p, "warm") ==
-      Map("q01_a" -> 0.4, "q137_store_roundtrip" -> 9.0))
-    assert(Bench.baselineQueries(p, "tier2") ==
-      Map("q01_a" -> 9.0, "q137_store_roundtrip" -> 19.0))
-    assert(Bench.baselineQueries(p, "tier2warm") ==
-      Map("q01_a" -> 3.0, "q137_store_roundtrip" -> 18.0))
-    // drift normalization must read the START calibration (first match),
-    // never the _end sample — the regex anchors on the exact key
-    assert(Bench.baselineHostSingle(p).contains(480L))
-    assert(Bench.baselineHostMiters(p, "multi32_miters").contains(12000L))
+    val r = Bench.readRecord(full).get
+    assert(r.tier1.total.contains(1.0) && r.warm_estimator.contains("min3"))
+    assert(r.tier1.gates == Map("q137_store_roundtrip" -> 10.0))
+    assert(r.tier1.warm_gates == Map("q137_store_roundtrip" -> 9.0))
+    assert(r.tier2.get.gates == Map("q137_store_roundtrip" -> 19.0))
+    assert(r.tier2.get.warm_gates == Map("q137_store_roundtrip" -> 18.0))
+    // gate times stay a baseline for the gate series
+    val now = record("q137_store_roundtrip" -> 25.0)
+    assert(Bench.police(now.tier1, Some(r.tier1), 1.0).policing("gate_")
+      .regressions.map(_.q) == List("q137_store_roundtrip"))
+    assert(r.host == Host(480L, 12000L, Some(475L), Some(9000L), Some(0.25),
+      Some(123456L), Some(999999L), Some(true)))
+    // drift normalization reads the baseline's START calibration, never
+    // the _end sample: a host equal to the START sample has no drift
+    assert(Bench.drift(Some(r.host), Host(480L, 12000L)) == 1.0)
+  }
+
+  test("a record with an escaped sf, a failed query and null totals survives write and read") {
+    val base = record("q01_a" -> 1.0, "q137_store_roundtrip" -> 1.0)
+    val rows = Seq(Row("q01_a", 2.0, 1.5, ok = true), Row("q02_b", -1.0, -1.0, ok = false),
+      Row("q137_store_roundtrip", 3.0, 2.5, ok = true))
+    val r = Record(Host(480L, 12000L, Some(470L), Some(11000L), Some(0.0833), None, None,
+      Some(false)), "/tmp/a\"b\\c", Bench.buildTier(rows, Some(base.tier1), 1.25),
+      Some(Bench.buildTier(rows, None, 1.25, ":tier2", Some(10))), Some("min3"))
+    assert(r.tier1.total.isEmpty && r.tier1.failed == List("q02_b"))
+    assert(r.tier1.policing("").regressions.map(_.q) == List("q01_a"))
+    val text = Bench.writeRecord(r)
+    assert((json(text) \ "value") == JNull && (json(text) \ "ok") == JBool(false))
+    assert((json(Bench.compactLine(r, "x")) \ "t2_total") == JNull)
+    assert(Bench.readRecord(text).contains(r))
   }
 
   test("steal sandwich: jiffy counters read and swing math classifies") {
@@ -236,61 +248,60 @@ class BenchParseSpec extends AnyFunSuite {
   }
 
   test("compact-line helpers: section names extract per key, caps hold") {
-    val frag = """"warm_regressions":[{"q":"q01_a","prev":1.0,"now":2.0},""" +
-      """{"q":"q02_b","prev":0.5,"now":0.9}],"warm_host_scale":1.0"""
-    assert(Bench.regrSection(frag, "warm_regressions") == Seq("q01_a", "q02_b"))
-    // the un-prefixed key must not match inside a prefixed one
-    val both = """"regressions":[{"q":"qc_cold","prev":1,"now":2}],""" +
-      """"warm_regressions":[{"q":"qw_warm","prev":1,"now":2}]"""
-    assert(Bench.regrSection(both, "regressions") == Seq("qc_cold"))
-    assert(Bench.regrSection(both, "warm_regressions") == Seq("qw_warm"))
-    assert(Bench.regrSection("", "regressions").isEmpty)
-    // caps: 8 shown, the rest counted — the compact line must stay well
-    // under the driver's ~2 kB stdout tail window
     val many = (1 to 30).map(i => f"q$i%02d_name")
-    val capped = Bench.cappedNames("warm_regr_names", many)
-    assert(capped.contains("\"warm_regr_names_more\":22"))
-    assert(capped.length < 300)
+    val base = record(("qc_cold" -> 1.0) +: many.map(_ -> 1.0): _*)
+    // qc_cold regresses cold only; the 30 others warm only
+    val rows = Row("qc_cold", 5.0, 0.5, ok = true) +: many.map(Row(_, 1.0, 5.0, ok = true))
+    val r = Record(Host(500L, 12000L), "d", Bench.buildTier(rows, Some(base.tier1), 1.0),
+      Some(Bench.buildTier(rows.take(2), Some(base.tier1), 1.0, ":tier2", Some(10))),
+      Some("min3"))
+    val line = Bench.compactLine(r, "BENCH_FULL_r14.json")
+    val c = json(line)
+    assert((c \ "regr_counts") == json(
+      """{"cold":1,"warm":30,"gate":0,"warm_gate":0,""" +
+        """"t2":1,"t2_warm":1,"t2_gate":0,"t2_warm_gate":0}"""))
+    assert((c \ "warm_regr_names") == JArray(many.take(8).map(JString(_)).toList))
+    assert((c \ "warm_regr_names_more") == JInt(22))
+    assert((c \ "t2_warm_regr_names") == JArray(List(JString("q01_name"))))
+    assert((c \ "t2_warm_regr_names_more") == JInt(0))
+    assert((c \ "n_queries") == JInt(31) && (c \ "baseline_missing") == JBool(false))
+    assert((c \ "t2_total") == JDouble(6.0) && (c \ "full_record") == JString("BENCH_FULL_r14.json"))
+    // the compact line stays small however many queries regress
+    assert(line.length < 1000, line)
   }
 
   test("latestBaseline picks the newest USABLE round file") {
     val dir = java.nio.file.Files.createTempDirectory("benchbase").toString
     def put(n: String, body: String) =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, n), body)
-    val withTimes = """{"tail":"{\"metric\":\"total\",\"queries\":{\"q01_a\":1.5}"}"""
-    put("BENCH_r02.json", withTimes)
-    put("BENCH_r03.json", withTimes)
-    put("BENCH_r10.json", withTimes)
-    assert(Bench.latestBaseline(dir).endsWith("BENCH_r10.json"))
-    // an rc=1 compile-failure stub (tail is a compile log, no query
-    // pairs) must be skipped, not chosen — the round-4 lesson
-    put("BENCH_r11.json", """{"n":11,"rc":1,"tail":"[error] does not compile"}""")
-    assert(Bench.latestBaseline(dir).endsWith("BENCH_r10.json"))
-    // a committed FULL record beats every truncated driver tail, even
-    // an older-round one (it carries the complete per-query history)
-    put("BENCH_FULL_r09.json",
-      """{"metric":"total","queries":{"q01_a":1.4},"failed":[]""")
-    assert(Bench.latestBaseline(dir).endsWith("BENCH_FULL_r09.json"))
-    // ...but an unusable FULL record (no pairs) falls back to the tails
-    put("BENCH_FULL_r09.json", "{}")
-    assert(Bench.latestBaseline(dir).endsWith("BENCH_r10.json"))
-    // if EVERY candidate is unusable, still return the newest tail
-    // (caller surfaces baseline_missing)
-    for (n <- Seq("BENCH_r02.json", "BENCH_r03.json", "BENCH_r10.json"))
-      put(n, "{}")
-    assert(Bench.latestBaseline(dir).endsWith("BENCH_r11.json"))
+    val usable = Bench.writeRecord(record("q01_a" -> 1.5))
+    // a driver tail file is never a baseline
+    put("BENCH_r20.json", usable)
+    assert(Bench.latestBaseline(dir).isEmpty)
+    put("BENCH_FULL_r09.json", usable)
+    put("BENCH_FULL_r99.json", usable)
+    assert(Bench.latestBaseline(dir).exists(_.endsWith("BENCH_FULL_r99.json")))
+    // newest by number, not by name
+    put("BENCH_FULL_r100.json", usable)
+    assert(Bench.latestBaseline(dir).exists(_.endsWith("BENCH_FULL_r100.json")))
+    // a newer record that does not read, or reads with no query (a
+    // run that failed to compile), is skipped — the round-4 lesson
+    put("BENCH_FULL_r101.json", "[error] does not compile")
+    put("BENCH_FULL_r102.json", Bench.writeRecord(record()))
+    // an extra run's suffixed record never becomes the baseline
+    put("BENCH_FULL_r100_1.json", usable)
+    assert(Bench.latestBaseline(dir).exists(_.endsWith("BENCH_FULL_r100.json")))
   }
 
-  test("benchRound: a blank or garbage round override falls back to the record scan") {
+  test("benchRound numbers one past the newest BENCH_FULL record, which is the next baseline") {
     val dir = java.nio.file.Files.createTempDirectory("benchround").toString
-    for (n <- Seq("BENCH_r03.json", "BENCH_r07.json", "BENCH_FULL_r09.json"))
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, n), "{}")
-    // one past the newest driver record; FULL records are not counted
-    assert(Bench.benchRound(None, dir) == 8)
-    for (bad <- Seq("", "   ", "abc", "7x", "1.5"))
-      assert(Bench.benchRound(Some(bad), dir) == 8, s"override '$bad'")
-    assert(Bench.benchRound(Some(" 12 "), dir) == 12)
-    val empty = java.nio.file.Files.createTempDirectory("benchround0").toString
-    assert(Bench.benchRound(Some("garbage"), empty) == 1)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "BENCH_r12.json"), "{}")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "BENCH_FULL_r13.json"),
+      Bench.writeRecord(record("q01_a" -> 1.0)))
+    assert(Bench.benchRound(dir) == 14)
+    val p = Bench.writeFullRecord(dir, Bench.writeRecord(record("q01_a" -> 2.0)))
+    assert(p.getFileName.toString == "BENCH_FULL_r14.json")
+    assert(Bench.latestBaseline(dir).contains(p.toString))
+    assert(Bench.benchRound(dir) == 15)
   }
 }

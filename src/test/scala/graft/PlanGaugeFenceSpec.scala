@@ -53,4 +53,38 @@ class PlanGaugeFenceSpec extends AnyFunSuite {
   test("no snapshot on disk: the fence reports, never blocks") {
     PlanAudit.gaugeFence(rows(("q1", 5, 2)), tmp(), write = false)
   }
+
+  test("the committed PLAN_GAUGE.json reads entry for entry and rewrites byte for byte") {
+    val committed = java.nio.file.Paths.get(Bench.repoDir, "PLAN_GAUGE.json")
+    val gauge = PlanAudit.readGauge(committed.toString)
+    assert(gauge.size > 100, s"${gauge.size} entries")
+    val again = rows(gauge.toSeq.map { case (n, g) => (n, g.codegen, g.interp) }: _*)
+    PlanAudit.gaugeFence(again, committed.toString, write = false)
+    val p = tmp()
+    PlanAudit.gaugeFence(again, p, write = true)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(p)) ==
+      java.nio.file.Files.readString(committed))
+  }
+
+  test("a reformatted snapshot still fences: pretty-printed interp growth fails") {
+    val p = tmp()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
+      "{\n  \"q1\": {\"codegen\": 5, \"interp\": 2},\n  \"q2\": {\"codegen\": 3, \"interp\": 0}\n}\n")
+    PlanAudit.gaugeFence(rows(("q1", 5, 2), ("q2", 3, 0)), p, write = false)
+    val e = intercept[AssertionError] {
+      PlanAudit.gaugeFence(rows(("q1", 5, 3), ("q2", 3, 0)), p, write = false)
+    }
+    assert(e.getMessage.contains("q1 interp 2->3"), e.getMessage)
+  }
+
+  test("a snapshot that does not read as any entry fails, never passes") {
+    for (body <- Seq("not json", "{}", """{"q1":{"codegen":"five"}}""")) {
+      val p = tmp()
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), body)
+      val e = intercept[AssertionError] {
+        PlanAudit.gaugeFence(rows(("q1", 5, 2)), p, write = false)
+      }
+      assert(e.getMessage.contains("does not read"), s"$body: ${e.getMessage}")
+    }
+  }
 }
