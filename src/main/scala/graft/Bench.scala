@@ -69,14 +69,16 @@ object Bench {
 
   /** Host calibration: the sandwich's START and END samples, and the
     * steal over the run. The `_end`, swing and steal fields date from
-    * round 9. */
+    * round 9; `cores` (the JVM's available processors) is absent from
+    * records written before it. */
   case class Host(single_miters: Long, multi32_miters: Long,
                   single_miters_end: Option[Long] = None,
                   multi32_miters_end: Option[Long] = None,
                   sandwich_swing: Option[Double] = None,
                   steal_jiffies: Option[Long] = None,
                   cpu_jiffies: Option[Long] = None,
-                  steal_suspect: Option[Boolean] = None)
+                  steal_suspect: Option[Boolean] = None,
+                  cores: Option[Int] = None)
 
   /** One tier's numbers. Times are seconds; a failed query times −1, is
     * listed in `failed`, and makes both totals None (JSON `null`).
@@ -381,13 +383,22 @@ object Bench {
     * both samples assumes the host at its measured slowest, and
     * `steal_suspect` already marks the record when the samples
     * disagree enough for that assumption to matter. 1.0 without a
-    * baseline. */
+    * baseline.
+    *
+    * The 32-way score also scales with the host's core count, so its
+    * ratio is used only when both records carry the same `cores` (or,
+    * as in every record before the field, neither does); across core
+    * counts — a 4-core run against a 32-core baseline would clamp at
+    * 3.0 and triple every threshold — the single-thread ratio alone
+    * measures the drift. */
   private[graft] def drift(prev: Option[Host], now: Host): Double =
     prev.fold(1.0) { p =>
+      val multi =
+        if (p.cores != now.cores) Nil
+        else (now.multi32_miters +: now.multi32_miters_end.toSeq)
+          .map(hostScale(Some(p.multi32_miters), _))
       ((now.single_miters +: now.single_miters_end.toSeq)
-        .map(hostScale(Some(p.single_miters), _)) ++
-        (now.multi32_miters +: now.multi32_miters_end.toSeq)
-          .map(hostScale(Some(p.multi32_miters), _))).max
+        .map(hostScale(Some(p.single_miters), _)) ++ multi).max
     }
 
   /** Per-query slowdowns vs a previous map, with stderr callouts — the
@@ -685,7 +696,8 @@ object Bench {
     val steal = for (a <- stealStart; b <- stealEnd) yield (b._1 - a._1, b._2 - a._2)
     val host = Host(hostSingle, hostMulti, Some(hostSingleEnd), Some(hostMultiEnd),
       Some(math.round(sandwichSwing * 1e4) / 1e4), steal.map(_._1),
-      steal.map(_._2), Some(stealSuspect))
+      steal.map(_._2), Some(stealSuspect),
+      Some(Runtime.getRuntime.availableProcessors()))
     if (stealSuspect) System.err.println(
       f"[bench] STEAL SUSPECT: calibration sandwich swung ${sandwichSwing * 100}%.0f%%" +
         f" (single $hostSingle->$hostSingleEnd, multi32 $hostMulti->$hostMultiEnd)" +

@@ -228,6 +228,8 @@ class CorpusManager(
   private def bandsDir(v: Long): String = s"$dedupPath/bands_v$v"
   private def bandsTable(v: Long): String = s"${name}_bands_v$v"
   private val bandKeys = Seq("band", "bk")
+  // a shard's md5(text), carried on its pin from the gate to the appends
+  private val HashCol = "_graft_md5"
   // The ANN artifacts (coarse-quantizer centroids + the (cell)-bucketed
   // corpus vector table) are VERSIONED together, keyed by the same
   // counter as the band table: compaction retrains the quantizer and
@@ -1046,43 +1048,6 @@ class CorpusManager(
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, Nil)
   }
 
-  /** Incremental ingest of one shard:
-    *
-    *   1. quality gate;
-    *   2. near-dup pairs vs corpus and within-shard
-    *      ([[DedupPipeline.runIncrementalAgainst]] — exchange-free
-    *      corpus band join, signatures read from the PINNED list) plus
-    *      exact-hash pairs (covers sub-ngram docs);
-    *   3. connected components over the pair graph; a shard doc is
-    *      dropped when its cluster touches the corpus (the canonical
-    *      copy is already ingested) or it is not its shard-only
-    *      cluster's minimum — so transitive chains (shard A ≈ shard B ≈
-    *      corpus C) collapse to the corpus copy;
-    *   4. vocabulary-drift gate (throws [[VocabDriftException]] BEFORE
-    *      any write when a known source's containment estimate falls
-    *      below `minVocabContainment`);
-    *   5. append survivors + their dedup artifacts, merge sketches, and
-    *      commit ONE manifest pinning all of them — the atomic commit
-    *      point. A crash before the commit leaves every appended file
-    *      reader-invisible (orphans for [[vacuum]]) and the corpus
-    *      byte-identical.
-    *
-    * Doc ids must be globally unique across shards (the reference's
-    * `key()` posture). Replay contract: a shard doc whose id is already
-    * in the corpus WITH THE SAME CONTENT is a replayed, committed doc
-    * (a streaming restart after a crash between the manifest commit and
-    * the checkpoint commit) — the batch re-ingests only the remainder,
-    * so a committed batch that had docs DROPPED as duplicates replays
-    * cleanly too: the dropped docs re-enter dedup, find their committed
-    * canonical (directly or through re-dropped chain members, which are
-    * all in the remainder with them), and drop again, yielding a
-    * zero-ingest report instead of wedging the stream. A crash BEFORE
-    * the manifest commit replays as a normal ingest, because nothing of
-    * the first attempt is visible. An id collision WITH DIFFERENT
-    * content throws — that is id reuse, and ingesting it would silently
-    * lose the new doc. Serialized behind the ingest lock
-    * ([[withIngestLock]]).
-    */
   /** Refuse a store whose persisted signatures/bands were computed
     * under a DIFFERENT scheme than this build computes: a shard's
     * new-scheme signatures band-join old-scheme corpus rows into
@@ -1132,66 +1097,139 @@ class CorpusManager(
     nIn - nAccepted
   }
 
+  /** Incremental ingest of one shard. The steps, as they run:
+    *
+    *   1. pin the gated shard (quality + contamination gates) together
+    *      with `md5(text)` — the one content hash, read by the overlap
+    *      check, both exact-edge sets and the hashes append; beside the
+    *      pin, the committed hashes, sigs and sketch scans resolve their
+    *      schemas, each scan built once per ingest;
+    *   2. count, concurrently: a rescan of the raw input (the
+    *      determinism check of [[rejectCount]]) and ONE aggregate of the
+    *      pinned shard against the committed hashes artifact — accepted
+    *      rows, shard ids already committed, and how many of those carry
+    *      different content (every committed doc has exactly one hash
+    *      row, so a shard all of whose ids are committed is a replay,
+    *      and a partial overlap re-ingests the remainder);
+    *   3. one MinHash pass over the pinned shard
+    *      ([[DedupPipeline.shardSignatures]]); exact-group members leave
+    *      the band rows after it, which are written as the bucketed
+    *      shard band table;
+    *   4. one candidate stage: corpus×shard (exchange-free against the
+    *      bucketed corpus band table) ∪ shard×shard band candidates,
+    *      pinned, counted and verified against the PINNED signatures
+    *      ([[DedupPipeline.runIncrementalAgainst]]); the verified pairs,
+    *      the exact-hash pairs (covering sub-ngram docs) and any
+    *      embedding/media pairs form the pair graph, which
+    *      [[DedupFunctions.connectedComponents]] pins and labels;
+    *   5. one window over the labels resolves the drops and the keepers
+    *      are pinned: a shard doc is dropped when its cluster holds a
+    *      non-shard (corpus) id — the canonical copy is already
+    *      ingested — or it is not its shard-only cluster's minimum, so
+    *      transitive chains (shard A ≈ shard B ≈ corpus C) collapse to
+    *      the corpus copy;
+    *   6. one pinned full-outer join of the committed sketch with the
+    *      keepers' sketch feeds the vocabulary-drift gate (throws
+    *      [[VocabDriftException]] BEFORE any write when a known source's
+    *      containment estimate falls below `minVocabContainment`) and,
+    *      later, the merged sketch write;
+    *   7. the docs, sigs, bands, sketch and hashes appends (plus vecs
+    *      and media when configured) and the keeper count run
+    *      concurrently ([[allOf]]); once every one has finished, ONE
+    *      manifest pinning all of them is committed — the atomic commit
+    *      point. A crash or a failed append before the commit leaves
+    *      every appended file reader-invisible (orphans for [[vacuum]])
+    *      and the corpus byte-identical.
+    *
+    * Doc ids must be globally unique across shards (the reference's
+    * `key()` posture). Replay contract: a shard doc whose id is already
+    * in the corpus WITH THE SAME CONTENT is a replayed, committed doc
+    * (a streaming restart after a crash between the manifest commit and
+    * the checkpoint commit) — the batch re-ingests only the remainder,
+    * so a committed batch that had docs DROPPED as duplicates replays
+    * cleanly too: the dropped docs re-enter dedup, find their committed
+    * canonical (directly or through re-dropped chain members, which are
+    * all in the remainder with them), and drop again, yielding a
+    * zero-ingest report instead of wedging the stream. A crash BEFORE
+    * the manifest commit replays as a normal ingest, because nothing of
+    * the first attempt is visible. An id collision WITH DIFFERENT
+    * content throws — that is id reuse, and ingesting it would silently
+    * lose the new doc. Serialized behind the ingest lock
+    * ([[withIngestLock]]).
+    */
   def ingestShard(newDocs: DataFrame): IngestReport = withIngestLock {
     require(hasExisting, s"corpus $name has no initial ingest at $root")
-    readManifest().foreach { m =>
-      requireCurrentSigScheme(m); requireCurrentMediaScheme(m)
-    }
+    val man = readManifest().get
+    requireCurrentSigScheme(man); requireCurrentMediaScheme(man)
+    val files = snapshotFiles()
     val (okQ, _) = qualityGate(newDocs)
     val (ok, _) = contaminationGate(okQ)
-    val shard = ok.pinned()
-    // |rej| = |in| − |ok| (both gates partition row-wise — see
-    // ingestInitial): one raw-input count + one pinned count instead of
-    // a full reject-side gate recompute per shard
-    lazy val nIn = newDocs.count()
-    lazy val nRej = rejectCount(nIn, shard.count())
-    val nInCorpus = shard.select(col(idCol)).distinct()
-      .join(corpus().select(col(idCol)), Seq(idCol), "left_semi").count()
-    if (nInCorpus > 0) {
-      // already-present ids must carry identical content (the pinned
-      // hash table makes this one shard-sized join — atomic commits
-      // guarantee every corpus doc has its hash row)
-      val mismatched = shard
-        .select(col(idCol), md5(col(textCol)).as("h_new"))
-        .join(hashesDf().withColumnRenamed("h", "h_committed"), Seq(idCol))
-        .filter(col("h_new") =!= col("h_committed")).count()
-      if (mismatched > 0) throw new IllegalArgumentException(
-        s"$mismatched shard doc ids already exist in corpus $name with " +
-          "DIFFERENT content — doc ids must be globally unique")
-      val remainder = shard
-        .join(corpus().select(col(idCol)), Seq(idCol), "left_anti")
-        .pinned()
-      if (remainder.isEmpty) {
-        IngestReport(nIn, nRej, nIn - nRej, 0, Nil)
-      } else ingestShardBody(newDocs, remainder, nIn, nRej)
-    } else ingestShardBody(newDocs, shard, nIn, nRej)
+    // the committed scans each infer their schema (a footer job) while
+    // the shard pins
+    val Seq(shard, committedH, committedSigs, committedSketch) = allOf(Seq(
+      () => ok.withColumn(HashCol, md5(col(textCol))).pinned(),
+      () => readPinned(files.map(_.hashes), hashesPath),
+      () => readPinned(files.map(_.sigs), sigsPath),
+      () => readPinned(files.map(_.sketch), sketchPath)))
+    // accepted rows × (committed ids, of which content-mismatched): the
+    // shard side of the inner join is the small, broadcastable one, so
+    // the corpus-sized hashes scan streams. Beside it, the raw-input
+    // rescan: |rej| = |in| − |ok| (both gates partition row-wise — see
+    // ingestInitial) instead of a full reject-side gate recompute. It
+    // runs after the pin, so an input that changes between its scans
+    // is caught by rejectCount.
+    val inCorpus = shard.select(col(idCol), col(HashCol))
+      .join(committedH.select(col(idCol), col("h").as("_hc")), Seq(idCol))
+    val Seq(Seq(nAccepted, nInCorpus, mismatched), Seq(nIn)) = allOf(Seq(
+      () => {
+        val r = shard.agg(count(lit(1)))
+          .crossJoin(inCorpus.agg(count(lit(1)),
+            count(when(col("_hc") =!= col(HashCol), lit(1)))))
+          .head()
+        Seq(r.getLong(0), r.getLong(1), r.getLong(2))
+      },
+      () => Seq(newDocs.count())))
+    val nRej = rejectCount(nIn, nAccepted)
+    if (mismatched > 0) throw new IllegalArgumentException(
+      s"$mismatched shard doc ids already exist in corpus $name with " +
+        "DIFFERENT content — doc ids must be globally unique")
+    val committed = Committed(files, committedH, committedSigs, committedSketch)
+    if (nInCorpus == 0) ingestShardBody(man, committed, shard, nIn, nRej)
+    else if (nInCorpus == nAccepted) IngestReport(nIn, nRej, nIn - nRej, 0, Nil)
+    else ingestShardBody(man, committed,
+      shard.join(committedH.select(col(idCol)), Seq(idCol), "left_anti").pinned(),
+      nIn, nRej)
   }
 
-  private def ingestShardBody(newDocs: DataFrame, shard: DataFrame,
-                              nIn: Long, nRej: Long): IngestReport = {
-    val man = readManifest().get
-    val corpusH = hashesDf()
+  /** The committed manifest's file lists and its hashes, sigs and
+    * sketch scans, as one shard ingest reads them. */
+  private case class Committed(files: Option[CorpusFiles], hashes: DataFrame,
+                               sigs: DataFrame, sketch: DataFrame)
 
+  /** Dedup, gate and append of a shard whose ids are all new. `shard`
+    * is pinned and carries its md5 in [[HashCol]]. */
+  private def ingestShardBody(man: CorpusManifest, committed: Committed,
+                              shard: DataFrame, nIn: Long, nRej: Long): IngestReport = {
     // -- pair graph: near-dup (MinHash/LSH) ∪ exact (md5) ---------------
+    val shardSigs =
+      DedupPipeline.shardSignatures(shard, idCol, textCol, p, Some(HashCol))
     val nearPairs = DedupPipeline.runIncrementalAgainst(
-      spark, shard, idCol, textCol, bandsTable(man.bandsVersion), sigsDf(),
-      s"${name}_shard_bands", s"$dedupPath/shard_bands", numBuckets, p,
+      spark, shard, shardSigs, idCol, textCol, bandsTable(man.bandsVersion),
+      committed.sigs, s"${name}_shard_bands", s"$dedupPath/shard_bands",
+      numBuckets, p,
       // exact-verify reads candidate docs' grams from the PINNED corpus
       corpusDocs = if (p.exactVerify) Some(corpus()) else None)
-    val shardH = shard.select(col(idCol), md5(col(textCol)).as("h")).pinned()
     def norm(a: Column, b: Column) =
       Seq(least(a, b).as("d1"), greatest(a, b).as("d2"))
-    val exactCross = shardH.as("s").join(corpusH.as("c"), col("s.h") === col("c.h"))
+    val exactCross = shard.as("s")
+      .join(committed.hashes.as("c"), col(s"s.$HashCol") === col("c.h"))
       .select(norm(col(s"s.$idCol"), col(s"c.$idCol")): _*)
-    // within-shard exact dups as STAR edges (keeper → member): same
-    // connected components as the all-pairs self-join, m−1 edges per
-    // m-duplicate group instead of m(m−1)/2 — a shard of identical
-    // boilerplate docs must not materialize a quadratic pair space
-    val exactIntra = shardH
-      .withColumn("keeper", min(col(idCol)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("h")))
-      .filter(col(idCol) =!= col("keeper"))
-      .select(col("keeper").as("d1"), col(idCol).as("d2"))
+    // within-shard exact dups are the signature pass's STAR edges
+    // (keeper → member): same connected components as the all-pairs
+    // self-join, m−1 edges per m-duplicate group instead of m(m−1)/2 —
+    // a shard of identical boilerplate docs must not materialize a
+    // quadratic pair space
+    val exactIntra = shardSigs.star
     // embedding near-dup edges join the SAME dup graph: cross pairs from
     // the (cell)-bucketed corpus vector table (exchange-free corpus
     // side), intra pairs from the shard-local LSH buckets. The shard
@@ -1223,33 +1261,34 @@ class CorpusManager(
       val (v, combo) = mediaBlocksState.get
       mediaCrossPairs(mh, v, combo).unionByName(mediaIntraPairs(mh))
     }
+    // duplicate edges are harmless to the components, which pin their
+    // input once — no distinct, no second pin here
     val pairs = (embEdges.toSeq ++ mediaEdges.toSeq).foldLeft(
         nearPairs.unionByName(exactCross).unionByName(exactIntra))(
         _ unionByName _)
-      .distinct().pinned()
 
-    // -- cluster and resolve drops (working set = the dup graph) --------
+    // -- cluster and resolve drops (working set = the dup graph): one
+    //    window over the labels marks a cluster tainted when it holds a
+    //    non-shard id, i.e. a committed doc
     val labels = DedupFunctions.connectedComponents(
       pairs.select(col("d1").as("src"), col("d2").as("dst")))
-    val shardIds = shard.select(col(idCol).as("id"))
-    val tainted = labels.join(shardIds, Seq("id"), "left_anti")
-      .select(col("lbl")).distinct() // clusters containing a corpus doc
-    val shardLabels = labels.join(shardIds, Seq("id"))
-    val drops = shardLabels.join(tainted, Seq("lbl"), "left_semi").select("id")
-      .unionByName(shardLabels.join(tainted, Seq("lbl"), "left_anti")
-        .filter(col("id") =!= col("lbl")).select("id"))
-      .distinct()
-    val keepers = shard.join(drops.withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti").pinned()
+    val drops = labels
+      .join(shard.select(col(idCol).as("id"), lit(true).as("_inShard")),
+        Seq("id"), "left")
+      .withColumn("_tainted", max(col("_inShard").isNull).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("lbl")))
+      .filter(col("_inShard").isNotNull &&
+        (col("_tainted") || col("id") =!= col("lbl")))
+      .select(col("id").as(idCol))
+    val keepers = shard.join(drops, Seq(idCol), "left_anti").pinned()
 
     // -- drift gate (before ANY write: a failed gate leaves the corpus
     //    byte-identical, matching DatasetManager's pre-parse posture —
-    //    and consumes no generation, leaves no orphans).
-    //    The keeper sketch is computed ONCE and feeds both the drift
-    //    compare and the post-commit merge — it is the most expensive
-    //    per-shard scan after dedup itself.
-    val keeperSketch = vocabSketch(keepers).pinned()
-    val drift = driftAgainstCorpus(keeperSketch)
+    //    and consumes no generation, leaves no orphans). The sketch
+    //    join is read and pinned ONCE: its rows with a keeper sketch
+    //    are the drift report, all of its rows the merged sketch.
+    val sketches = sketchJoin(committed.sketch, vocabSketch(keepers)).pinned()
+    val drift = driftOf(sketches)
     minVocabContainment.foreach { thr =>
       val bad = drift.filter(d => !d.novelSource && d.containmentEst < thr)
       if (bad.nonEmpty) throw new VocabDriftException(
@@ -1262,7 +1301,7 @@ class CorpusManager(
     //    (sketch: fresh only — replace semantics). Appends are
     //    job-atomic (output-committer staged), so a crash anywhere
     //    before the commit leaves only invisible orphans.
-    val prev = snapshotFiles().getOrElse(CorpusFiles(
+    val prev = committed.files.getOrElse(CorpusFiles(
       listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
       listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
       listDir(bandsDir(man.bandsVersion)).toSeq))
@@ -1282,35 +1321,37 @@ class CorpusManager(
       activeMediaBlocks -> listDir(activeMediaBlocks))
     def fresh(dir: String): Seq[String] = (listDir(dir) -- before(dir)).toSeq
 
-    keepers.write.mode("append").parquet(docsPath)
-    val (sigs, bands) = DedupPipeline.signatureTables(keepers, idCol, textCol, p)
-    sigs.write.mode("append").parquet(sigsPath)
-    BucketedSignatureStore.append(bands, bandsTable(man.bandsVersion),
-      numBuckets, bandKeys)
-    mergeSketches(keeperSketch)
-    keepers.select(col(idCol), md5(col(textCol)).as("h"))
-      .write.mode("append").parquet(hashesPath)
-    embCol.foreach { e =>
-      BucketedSignatureStore.append(
-        assignCells(keepers, e, readCentroids()), vecsTable(man.bandsVersion),
-        numBuckets, Seq("cell"))
-    }
-    mediaCol.foreach { _ =>
-      // one keeper decode pass feeds the pinned hash artifact AND the
-      // block-store append (blocks stay exchange-free for the next shard)
-      val keeperHashes = mediaHashesOf(keepers).pinned()
-      keeperHashes.write.mode("append").parquet(mediaPath)
-      graft.sources.MediaBlockStore.append(keeperHashes, mediaScheme,
-        mediaMaxHamming, mediaBlocksState.get._2,
-        mediaBlocksTable(liveMbV), numBuckets)
-    }
+    // the keepers' signatures are the shard pass's, not a second MinHash
+    val keeperSigs = shardSigs.sigs.join(keepers.select(idCol), Seq(idCol), "left_semi")
+    val appends: Seq[() => Unit] = Seq(
+      () => keepers.drop(HashCol).write.mode("append").parquet(docsPath),
+      () => keeperSigs.write.mode("append").parquet(sigsPath),
+      () => BucketedSignatureStore.append(DedupPipeline.bandRows(keeperSigs, idCol, p),
+        bandsTable(man.bandsVersion), numBuckets, bandKeys),
+      () => mergedSketch(sketches).write.mode("append").parquet(sketchPath),
+      () => keepers.select(col(idCol), col(HashCol).as("h"))
+        .write.mode("append").parquet(hashesPath)) ++
+      embCol.map { e => () =>
+        BucketedSignatureStore.append(
+          assignCells(keepers, e, readCentroids()), vecsTable(man.bandsVersion),
+          numBuckets, Seq("cell"))
+      } ++
+      mediaCol.map { _ => () =>
+        // one keeper decode pass feeds the pinned hash artifact AND the
+        // block-store append (blocks stay exchange-free for the next shard)
+        val keeperHashes = mediaHashesOf(keepers).pinned()
+        keeperHashes.write.mode("append").parquet(mediaPath)
+        graft.sources.MediaBlockStore.append(keeperHashes, mediaScheme,
+          mediaMaxHamming, mediaBlocksState.get._2,
+          mediaBlocksTable(liveMbV), numBuckets)
+      }
+    val nKept = allOf((() => keepers.count()) +: appends.map(a => () => { a(); 0L })).head
 
     val mediaBlocksPinned: Seq[String] =
       if (mediaCol.isEmpty) prev.mediaBlocks
       else if (liveMbV != man.mediaBlocksVersion)
         listDir(activeMediaBlocks).toSeq // regenerated + keeper appends
       else prev.mediaBlocks ++ fresh(activeMediaBlocks)
-    val nKept = keepers.count()
     commitManifest(man.nDocs + nKept, man.bandsVersion, CorpusFiles(
       prev.docs ++ fresh(docsPath), prev.sigs ++ fresh(sigsPath),
       prev.hashes ++ fresh(hashesPath), fresh(sketchPath),
@@ -1321,6 +1362,31 @@ class CorpusManager(
         if (mediaCol.isEmpty) man.mediaRadius else mediaMaxHamming.toLong,
       mediaCombo = mediaBlocksState.map(_._2.toLong).getOrElse(man.mediaCombo))
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, drift)
+  }
+
+  /** Run `tasks` concurrently, one pool thread each, and return their
+    * results in order. Every task runs to its end before this returns
+    * or throws: the first failure is rethrown (later ones attached as
+    * suppressed) only once all have finished, so nothing is still
+    * writing when the caller releases the ingest lock. Pool threads are
+    * created here, so they inherit the caller's Spark local properties
+    * (job group, description). */
+  private def allOf[T](tasks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    try {
+      val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = t()
+      }))
+      val results = futures.map(f => scala.util.Try(f.get()).recoverWith {
+        case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
+      })
+      val errors = results.collect { case scala.util.Failure(e) => e }
+      errors.headOption.foreach { first =>
+        errors.tail.foreach(first.addSuppressed)
+        throw first
+      }
+      results.map(_.get)
+    } finally pool.shutdown()
   }
 
   /** Streaming ingest (the corpus twin of
@@ -1695,11 +1761,17 @@ class CorpusManager(
     * rows that are k longs each, so the compare never leaves the
     * sketch table's scale regardless of corpus size. */
   def driftReport(shardDocs: DataFrame): Seq[SourceDrift] =
-    driftAgainstCorpus(vocabSketch(shardDocs))
+    driftOf(sketchJoin(sketchDf(), vocabSketch(shardDocs)))
 
-  private def driftAgainstCorpus(shardSketch: DataFrame): Seq[SourceDrift] = {
-    val corpusSk = sketchDf().select(col(sourceCol), col("minima").as("ma"))
-    val shardSk = shardSketch.select(col(sourceCol), col("minima").as("mb"))
+  /** Committed sketch rows (`ma`) full-outer-joined with a shard's
+    * (`mb`) on the source: one frame for both the drift report and the
+    * merged sketch. */
+  private def sketchJoin(corpusSketch: DataFrame, shardSketch: DataFrame): DataFrame =
+    corpusSketch.select(col(sourceCol), col("minima").as("ma"))
+      .join(shardSketch.select(col(sourceCol), col("minima").as("mb")),
+        Seq(sourceCol), "full_outer")
+
+  private def driftOf(sketches: DataFrame): Seq[SourceDrift] = {
     val xs = slice(array_sort(array_union(col("ma"), col("mb"))), 1, sketchK)
     val both = size(array_intersect(xs, array_intersect(col("ma"), col("mb"))))
       .cast("double")
@@ -1709,7 +1781,7 @@ class CorpusManager(
     // NPE the collect below. |X| = 0 only when both vocabularies are
     // empty; call that identical (jac 1, cont 1) rather than drifted.
     val shardInX = size(array_intersect(xs, col("mb")))
-    shardSk.join(corpusSk, Seq(sourceCol), "left")
+    sketches.filter(col("mb").isNotNull)
       .select(col(sourceCol),
         when(col("ma").isNull, lit(0.0))
           .when(size(xs) === 0, lit(1.0))
@@ -1725,24 +1797,18 @@ class CorpusManager(
       .toSeq
   }
 
-  /** Fold a shard's sketches into the stored ones: per source, the k
-    * smallest of the union (exact KMV merge); unseen sources enter
+  /** The shard's sketches folded into the stored ones: per source, the
+    * k smallest of the union (exact KMV merge); unseen sources enter
     * as-is. Written as NEW files next to the old generation (the next
     * manifest pins only the replacement) — the read side scans the
-    * pinned old files, which outlive this write, so the lazy
-    * read-rewrite cycle is safe without a checkpoint. */
-  private def mergeSketches(shardSk: DataFrame): Unit = {
-    val corpusSk = sketchDf()
-    corpusSk.select(col(sourceCol), col("minima").as("ma"))
-      .join(shardSk.select(col(sourceCol), col("minima").as("mb")),
-        Seq(sourceCol), "full_outer")
+    * pinned old files, which outlive this write. */
+  private def mergedSketch(sketches: DataFrame): DataFrame =
+    sketches
       .select(col(sourceCol),
         slice(array_sort(array_union(
             coalesce(col("ma"), array()), coalesce(col("mb"), array()))),
           1, sketchK).as("minima"))
       .coalesce(1)
-      .write.mode("append").parquet(sketchPath)
-  }
 }
 
 object CorpusManager {

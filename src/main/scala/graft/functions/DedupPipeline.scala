@@ -77,24 +77,31 @@ object DedupPipeline {
     * reference. */
   def signatureTables(docs: DataFrame, idCol: String, textCol: String,
                       p: Params): (DataFrame, DataFrame) = {
-    val sigs = Signatures.minhash(
+    val sigs = pinnedSignatures(docs, idCol, textCol, p)
+    (sigs, bandRows(sigs, idCol, p))
+  }
+
+  /** The pinned `(doc_id, sig)` half of [[signatureTables]]. */
+  def pinnedSignatures(docs: DataFrame, idCol: String, textCol: String,
+                       p: Params): DataFrame =
+    Signatures.minhash(
         docs.filter(TextFunctions.tokenCount(col(textCol)) >= p.ngram),
         idCol, textCol, p.ngram, p.perms, p.hasher)
       .materialize()
-    val bandRows = sigs
+      .select(col(idCol), col("sig"))
+
+  /** `(doc_id, band, bk)` LSH band rows of a signature frame. */
+  def bandRows(sigs: DataFrame, idCol: String, p: Params): DataFrame =
+    sigs
       .withColumn("bands", DedupFunctions.bandKeys(col("sig"), p.bands, p.rowsPerBand))
       .select(col(idCol), posexplode(col("bands")).as(Seq("band", "bk")))
-    (sigs.select(col(idCol), col("sig")), bandRows)
-  }
 
-  /** Distinct candidate pairs (normalized `d1 < d2`) from band
-    * collisions between `left` and `right` band-row frames, verified by
-    * estimated Jaccard against the signature frame. `selfJoin = true`
-    * halves the self-join's candidate space with an id inequality; the
-    * cross (shard-vs-corpus) case must NOT assume an id ordering
-    * between the two frames, so it matches `!=` and normalizes. */
   /** The LSH candidate stage alone: band-key equi-join of two band-row
-    * frames, normalized distinct (d1 < d2) pairs. Package-private so
+    * frames, normalized (d1 < d2) pairs, not yet distinct — callers
+    * union the stages they need and [[verifiedPairs]] dedups once. A
+    * SELF-join halves its candidate space with `a.id < b.id`; the cross
+    * (shard-vs-corpus) case must NOT assume an id ordering between the
+    * two frames, so it matches `!=` and normalizes. Package-private so
     * plan specs can assert its shape (the corpus side of an incremental
     * run scans bucketed and exchange-free) — inside [[verifiedPairs]]
     * the candidate frame is checkpointed to measure its size, so the
@@ -106,15 +113,8 @@ object DedupPipeline {
         col("a.band") === col("b.band") && col("a.bk") === col("b.bk") && idCond)
       .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("d1"),
         greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("d2"))
-      .distinct()
 
-  private def verifiedPairs(left: DataFrame, right: DataFrame,
-                            sigs: DataFrame, idCol: String,
-                            p: Params, selfJoin: Boolean,
-                            exactDocs: Option[(DataFrame, String)] = None): DataFrame = {
-    val idCond =
-      if (selfJoin) col(s"a.$idCol") < col(s"b.$idCol")
-      else col(s"a.$idCol") =!= col(s"b.$idCol")
+  private def selfCandidates(bands: DataFrame, idCol: String): DataFrame =
     // A SELF-joined band table is corpus-sized on BOTH sides by
     // construction — never a broadcast candidate, whatever the static
     // estimate claims (run()'s in-memory band frames descend from
@@ -124,9 +124,16 @@ object DedupPipeline {
     // scale; the corpus-vs-shard case keeps the planner's choice — its
     // sides are bucketed artifact SCANS with real file statistics, and
     // broadcasting the small shard side there is exactly right.
-    val (leftJ, rightJ) =
-      if (selfJoin) (left.hint("merge"), right) else (left, right)
-    val cand = candidatePairs(leftJ, rightJ, idCol, idCond)
+    candidatePairs(bands.hint("merge"), bands, idCol,
+      col(s"a.$idCol") < col(s"b.$idCol"))
+
+  /** The distinct pairs of `candidates`, verified by estimated Jaccard
+    * against the signature frame (or by exact n-gram Jaccard over
+    * `exactDocs`). The candidates are pinned and counted once. */
+  private def verifiedPairs(candidates: DataFrame, sigs: DataFrame, idCol: String,
+                            p: Params,
+                            exactDocs: Option[(DataFrame, String)] = None): DataFrame = {
+    val cand = candidates.distinct()
     if (p.exactVerify) {
       // exact n-gram-set Jaccard, candidate-bounded: gram-hash arrays
       // are built only for ids that appear in some candidate pair
@@ -194,13 +201,17 @@ object DedupPipeline {
     * yields 10⁶ edges, not 5·10¹¹. One hash-keyed window over (id, md5)
     * rows only (text never shuffles), no self-join. */
   def exactStarEdges(docs: DataFrame, idCol: String,
-                     textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("h")
-    docs.select(col(idCol), md5(col(textCol)).as("h"))
-      .withColumn("keeper", min(col(idCol)).over(w))
+                     textCol: String): DataFrame =
+    starEdges(docs.select(col(idCol), md5(col(textCol)).as("h")), idCol, "h")
+
+  /** [[exactStarEdges]] of docs that already carry their content hash
+    * in `hashCol`. */
+  def starEdges(docs: DataFrame, idCol: String, hashCol: String): DataFrame =
+    docs.select(col(idCol), col(hashCol))
+      .withColumn("keeper", min(col(idCol)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(hashCol)))
       .filter(col(idCol) =!= col("keeper"))
       .select(col("keeper").as("d1"), col(idCol).as("d2"))
-  }
 
   /** SimHash-family dup-graph edges with the equal-signature star
     * collapse — the q52 query shape AND the shape a SimHash production
@@ -265,10 +276,10 @@ object DedupPipeline {
     // would band-join into per-group cliques); members ride along as
     // star edges, which also covers sub-ngram docs
     val star = exactStarEdges(docs, idCol, textCol).materialize()
-    val (sigs, bandRows) =
+    val (sigs, bands) =
       signatureTables(exactReps(docs, idCol, textCol, star), idCol, textCol, p)
-    val banded = bandRows.materialize() // both join sides, one compute
-    val pairs = verifiedPairs(banded, banded, sigs, idCol, p, selfJoin = true,
+    val banded = bands.materialize() // both join sides, one compute
+    val pairs = verifiedPairs(selfCandidates(banded, idCol), sigs, idCol, p,
         exactDocs = if (p.exactVerify) Some((docs, textCol)) else None)
       .unionByName(star)
       .distinct()
@@ -320,10 +331,10 @@ object DedupPipeline {
               name: String, path: String, numBuckets: Int,
               p: Params = Params()): Unit = {
     val star = exactStarEdges(docs, idCol, textCol)
-    val (sigs, bandRows) =
+    val (sigs, bands) =
       signatureTables(exactReps(docs, idCol, textCol, star), idCol, textCol, p)
     sigs.write.mode("overwrite").parquet(s"$path/sigs")
-    BucketedSignatureStore.write(bandRows, s"${name}_bands", s"$path/bands",
+    BucketedSignatureStore.write(bands, s"${name}_bands", s"$path/bands",
       numBuckets, Seq("band", "bk"))
     // stamp the signature scheme beside the artifact — the standalone
     // twin of CorpusManifest.sigScheme: a later runIncremental under a
@@ -421,18 +432,48 @@ object DedupPipeline {
         "raw-KM era); if the operator KNOWS this artifact was actually " +
         "built under the current hasher, backfillSchemeStamp() records " +
         "that assertion without a corpus re-persist.")
-    runIncrementalAgainst(spark, newDocs, idCol, textCol, s"${name}_bands",
-      spark.read.parquet(s"$path/sigs"), s"${name}_shard_bands",
-      s"$path/shard_bands", numBuckets, p)
+    runIncrementalAgainst(spark, newDocs,
+      shardSignatures(newDocs, idCol, textCol, p), idCol, textCol,
+      s"${name}_bands", spark.read.parquet(s"$path/sigs"),
+      s"${name}_shard_bands", s"$path/shard_bands", numBuckets, p)
   }
+
+  /** A shard's one signature pass, shared by the incremental dedup and
+    * its caller: `sigs` holds the pinned `(doc_id, sig)` of EVERY shard
+    * doc with at least `ngram` tokens, exact-group members included,
+    * and `star` the shard's exact-content star edges (d1 group minimum
+    * → d2 member). Members are dropped from the band rows after the
+    * MinHash pass rather than before it, so a caller that keeps a subset
+    * of the shard (the keepers) reads its signatures off this frame
+    * instead of hashing its text again. */
+  case class ShardSignatures(sigs: DataFrame, star: DataFrame)
+
+  /** `docs`' [[ShardSignatures]]; `hashCol` names the column holding
+    * their md5 when they already carry it (the star edges then hash no
+    * text). */
+  def shardSignatures(docs: DataFrame, idCol: String, textCol: String,
+                      p: Params, hashCol: Option[String] = None): ShardSignatures =
+    ShardSignatures(pinnedSignatures(docs, idCol, textCol, p),
+      hashCol.fold(exactStarEdges(docs, idCol, textCol))(starEdges(docs, idCol, _)))
 
   /** [[runIncremental]] with the corpus side named explicitly — the
     * entry point for callers that resolve artifacts through a snapshot
     * manifest ([[graft.etl.CorpusManager]]): `corpusBandsTable` is the
     * LIVE band-table generation and `corpusSigs` the PINNED signature
     * scan, so a crashed writer's orphaned signatures can never verify a
-    * candidate pair. */
+    * candidate pair. `shard` is the shard's [[shardSignatures]], which
+    * the caller may reuse (the corpus manager appends its keepers'
+    * signatures from them).
+    *
+    * The corpus×shard and shard×shard band candidates are ONE frame:
+    * pinned, counted and verified once. The shard's band rows are still
+    * written as a bucketed table (`shardBandsTable`) first: bucketing is
+    * catalog metadata, and a `repartition(n, band, bk)` frame — pinned
+    * or not — loses its hash partitioning on Spark 4.1 and joins the
+    * corpus table through `Exchange hashpartitioning(band, bk, n)`,
+    * which is the corpus-sized shuffle this path exists to avoid. */
   def runIncrementalAgainst(spark: SparkSession, newDocs: DataFrame,
+                            shard: ShardSignatures,
                             idCol: String, textCol: String,
                             corpusBandsTable: String, corpusSigs: DataFrame,
                             shardBandsTable: String, shardBandsPath: String,
@@ -441,35 +482,29 @@ object DedupPipeline {
     require(!p.exactVerify || corpusDocs.nonEmpty,
       "exactVerify needs corpusDocs (the pinned corpus texts) — the " +
         "exact Jaccard decision reads candidate docs' grams, not sigs")
+    val ShardSignatures(shardSigs, shardStar) = shard
     // intra-shard exact groups collapse to reps (identical sigs would
     // self-join into cliques); members are the caller's exact edges
-    val shardStar = exactStarEdges(newDocs, idCol, textCol)
-    val shardReps = newDocs.join(shardStar.select(col("d2").as(idCol)),
+    val repSigs = shardSigs.join(shardStar.select(col("d2").as(idCol)),
       Seq(idCol), "left_anti")
-    val (shardSigs, shardBands) = signatureTables(shardReps, idCol, textCol, p)
-    BucketedSignatureStore.write(shardBands, shardBandsTable,
+    BucketedSignatureStore.write(bandRows(repSigs, idCol, p), shardBandsTable,
       shardBandsPath, numBuckets, Seq("band", "bk"))
     val corpusBands = BucketedSignatureStore.table(spark, corpusBandsTable)
     val shardB = BucketedSignatureStore.table(spark, shardBandsTable)
     // corpus signatures stay a LAZY parquet scan — materializing them
     // would cost corpus-sized memory per shard run; the verify joins
     // broadcast the (small) candidate side, so each scan streams the
-    // sig table without shuffling it. The shard's signatures are ALREADY
-    // pinned (signatureTables materializes the minhash frame;
-    // `shardSigs` is a projection of those blocks), so a second
-    // .materialize() here only block-manager-copied them — the exact
-    // double-pin the Packing guard exists for (removed round 12; the
-    // projection re-reads the pinned blocks per join side for free).
+    // sig table without shuffling it. The shard's signatures are
+    // already pinned.
     val allSigs = corpusSigs.unionByName(shardSigs)
     val exact =
       if (p.exactVerify)
         Some((corpusDocs.get.select(col(idCol), col(textCol))
           .unionByName(newDocs.select(col(idCol), col(textCol))), textCol))
       else None
-    verifiedPairs(corpusBands, shardB, allSigs, idCol, p, selfJoin = false,
-        exactDocs = exact)
-      .unionByName(verifiedPairs(shardB, shardB, allSigs, idCol, p,
-        selfJoin = true, exactDocs = exact))
-      .distinct()
+    val candidates = candidatePairs(corpusBands, shardB, idCol,
+        col(s"a.$idCol") =!= col(s"b.$idCol"))
+      .unionByName(selfCandidates(shardB, idCol))
+    verifiedPairs(candidates, allSigs, idCol, p, exact)
   }
 }

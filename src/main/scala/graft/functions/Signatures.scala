@@ -152,15 +152,38 @@ object Signatures {
     * would hash on one core. No-op when the input is already at least as
     * parallel as the session (the 100 TB case — real inputs come
     * pre-partitioned, and a blind repartition there would be a
-    * regression). The reshuffle moves only (id, text) rows. */
+    * regression). The reshuffle moves only (id, text) rows.
+    *
+    * Decided without running a Spark job. An exchange-free plan (a file
+    * scan, a pinned frame) knows its partition count from its RDD. A
+    * plan with an exchange or a subquery fixes its count only when it
+    * runs — `df.rdd` there executes every shuffle stage, and the
+    * consumer then runs them again — so it is judged by its size
+    * estimate: one that AQE could coalesce below `target` advisory-size
+    * partitions is spread, a larger one is left alone. */
   private[functions] def spread(df: DataFrame): DataFrame = {
     // a streaming Dataset has no .rdd (and micro-batch inputs arrive
     // pre-partitioned by the source) — pass it through untouched so the
     // signature pipeline composes with Structured Streaming
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    val thin = if (runsToPartition(df)) {
+      val advisory = df.sparkSession.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(advisory) * target
+    } else df.rdd.getNumPartitions < target
+    if (thin) df.repartition(target) else df
   }
+
+  /** True when `df`'s partition count is known only by running it: its
+    * physical plan holds an exchange or a subquery (an adaptive plan
+    * always does). */
+  private def runsToPartition(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.exists {
+      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => true
+      case _: org.apache.spark.sql.execution.exchange.Exchange => true
+      case p => p.subqueries.nonEmpty
+    }
 
   /** Distinct word n-gram shingles, in first-seen order. Tokenization is
     * `split(" ", -1)` — trailing empty tokens kept — to match both Spark

@@ -55,11 +55,21 @@ object Packing {
     // pinned frame under cheap narrow ops (Project/Filter — the q129
     // `base` shape) counts as materialized too: those re-evaluate per
     // read for free, and re-pinning them would block-manager-copy the
-    // data a second time (round-11 advice item).
+    // data a second time (round-11 advice item). Only a projection of
+    // columns (attributes, aliased or not) is free; one that computes
+    // (a tokenizer, a UDF) would re-run on both reads, so it is pinned.
+    def cheap(e: org.apache.spark.sql.catalyst.expressions.NamedExpression)
+        : Boolean = e match {
+      case _: org.apache.spark.sql.catalyst.expressions.Attribute => true
+      case org.apache.spark.sql.catalyst.expressions.Alias(
+        _: org.apache.spark.sql.catalyst.expressions.Attribute, _) => true
+      case _ => false
+    }
     def materialized(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
         : Boolean = p match {
       case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case prj: org.apache.spark.sql.catalyst.plans.logical.Project =>
+      case prj: org.apache.spark.sql.catalyst.plans.logical.Project
+          if prj.projectList.forall(cheap) =>
         materialized(prj.child)
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
         materialized(f.child)

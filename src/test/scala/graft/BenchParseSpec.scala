@@ -90,6 +90,23 @@ class BenchParseSpec extends AnyFunSuite {
     }
   }
 
+  test("a host with another core count drifts by the single-thread ratio alone") {
+    val r13 = committed("13").host
+    assert(r13.cores.isEmpty)
+    // a 4-core VM: single-thread speed equal to r13's, a 32-way score
+    // about a seventh of it — that ratio is the core count, not drift
+    val vm = Host(r13.single_miters, 1469L, Some(r13.single_miters), Some(1469L),
+      cores = Some(4))
+    assert(Bench.drift(Some(r13), vm) == 1.0)
+    assert(Bench.drift(Some(r13), vm.copy(cores = None)) == 3.0)
+    // the same core count on both sides compares the 32-way scores
+    val base = vm.copy(multi32_miters = 2938L, multi32_miters_end = None)
+    assert(Bench.drift(Some(base), vm) == 2.0)
+    assert(Bench.drift(Some(base), vm.copy(cores = Some(8))) == 1.0)
+    assert(Bench.readRecord(Bench.writeRecord(record().copy(host = vm))).map(_.host)
+      .contains(vm))
+  }
+
   test("hostScale normalizes drift, clamps corruption, defaults to 1") {
     assert(Bench.hostScale(Some(500L), 500L) == 1.0)
     // prev host 2x faster (1000 vs now 500): expect times 2x slower now

@@ -142,4 +142,26 @@ class OperatorsSpec extends SparkSpec {
       Packing.runningOffsets(df, "src", "id", "w", span = 0L)
     }
   }
+
+  test("packing reuses a pinned input under a column projection, pins a computing one") {
+    val s = spark; import s.implicits._
+    val base = (1L to 200L).map(i => (i, s"s${i % 3}", s"t$i")).toDF("id", "src", "t")
+      .localCheckpoint()
+    def rdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+    val baseRdd = rdds(base)
+    // renaming and reordering columns costs nothing to re-read: no new pin
+    val cheap = base.select(col("src").as("source"), col("id"), col("id").as("w"))
+    assert(rdds(Packing.runningOffsets(cheap, "source", "id", "w")) == baseRdd)
+    // a projection that computes is pinned once instead of re-running
+    // on each of the two reads
+    val computed = base.select(col("src"), col("id"), length(col("t")).as("w"))
+    val got = Packing.runningOffsets(computed, "src", "id", "w")
+    assert(!rdds(got).exists(baseRdd.contains), "a computing projection was not pinned")
+    val want = computed.withColumn("cum", sum("w").over(
+      org.apache.spark.sql.expressions.Window.partitionBy("src").orderBy("id")))
+    assert(got.select("id", "cum").exceptAll(want.select("id", "cum")).isEmpty)
+  }
 }
