@@ -107,16 +107,7 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
     * crashed writer's claim), pinned file count, committed date range.
     * Everything a `DESCRIBE HISTORY` needs to pick a `VERSION AS OF`. */
   private def historyTable(ident: Identifier, store: GriddedStore): Table = {
-    val f = fs(store.versionsDir)
-    val mtimes: Map[Long, Long] =
-      if (!f.exists(store.versionsDir)) Map.empty
-      else f.listStatus(store.versionsDir).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v") && n.endsWith(".json"))
-          Some(n.stripPrefix("v").stripSuffix(".json").toLong ->
-            st.getModificationTime)
-        else None
-      }.toMap
+    val mtimes = store.log.listClaims().toMap
     val rows = store.descriptorHistory().map { case (v, d) =>
       HistoryRow(v, mtimes.getOrElse(v, 0L) * 1000L, d.updateInProgress,
         store.snapshotFilesAt(v).map(_.size).getOrElse(-1),
@@ -156,20 +147,8 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
 
   /** `TIMESTAMP AS OF t` — newest manifest whose commit mtime <= t. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val store = storeFor(ident)
-    val vdir = store.versionsDir
-    val f = fs(vdir)
     val asOfMs = timestampMicros / 1000L
-    val versions =
-      if (!f.exists(vdir)) Array.empty[(Long, Long)]
-      else f.listStatus(vdir).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v") && n.endsWith(".json"))
-          Some(n.stripPrefix("v").stripSuffix(".json").toLong ->
-            st.getModificationTime)
-        else None
-      }
-    val eligible = versions.filter(_._2 <= asOfMs).map(_._1)
+    val eligible = storeFor(ident).log.listClaims().filter(_._2 <= asOfMs).map(_._1)
     if (eligible.isEmpty)
       throw new IllegalArgumentException(
         s"$ident has no manifest committed at or before timestamp " +

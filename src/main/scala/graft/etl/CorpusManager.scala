@@ -3,9 +3,13 @@ package graft.etl
 import graft.operators.Materialize
 
 import graft.functions.{DedupFunctions, DedupPipeline, TextFunctions}
-import graft.sources.BucketedSignatureStore
+import graft.sources.{BucketedSignatureStore, SnapshotLog}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{DefaultFormats, Extraction, Formats}
+import org.json4s.jackson.JsonMethods
 
 /** Shard-ingest outcome: input/reject/duplicate/ingested counts plus the
   * per-source vocabulary-drift rows (empty on initial ingest). */
@@ -33,7 +37,10 @@ case class SourceDrift(
   * `Params` match before band-joining against the persisted tables —
   * and `bandsVersion`, naming the live generation of the bucketed band
   * table (`bands_vN` dir / `<name>_bands_vN` catalog entry; compaction
-  * writes the next version and retires the old one). */
+  * writes the next version and retires the old one). `files` pins each
+  * artifact's file list (None: a pre-pinning manifest) and `schemas`
+  * the data schema of the docs, sigs, hashes, sketch and media files
+  * (Spark DataType JSON, keyed by the [[CorpusFiles]] field name). */
 case class CorpusManifest(
     name: String,
     generation: Long,
@@ -70,7 +77,9 @@ case class CorpusManifest(
     // block store yet: the next shard ingest builds v1.
     mediaBlocksVersion: Long = 0,
     mediaRadius: Long = -1,
-    mediaCombo: Long = 0)
+    mediaCombo: Long = 0,
+    files: Option[CorpusFiles] = None,
+    schemas: Map[String, String] = Map.empty)
 
 /** Root-relative data-file lists pinned by a committed manifest — the
   * corpus twin of [[graft.sources.GriddedStore]]'s snapshot manifests.
@@ -149,7 +158,10 @@ class VocabDriftException(msg: String) extends RuntimeException(msg)
   * window for a racing reader. Pinning is also a correctness guard, not
   * just hygiene: an orphaned signature/hash row from a crashed ingest
   * would otherwise make a future shard doc look like a duplicate of a
-  * doc that never committed, silently dropping it.
+  * doc that never committed, silently dropping it. The manifest's
+  * `schemas` field records the data schema of the docs, sigs, hashes,
+  * sketch and media files each commit writes, so a committed scan is
+  * built without a footer-inference job.
   *
   * The band table is the one dir-scanned artifact (its exchange-free
   * join property lives in catalog bucket metadata, which pins no file
@@ -256,75 +268,38 @@ class CorpusManager(
   private def centsPath(v: Long): String = s"${annDir(v)}/centroids"
   private def vecsTable(v: Long): String = s"${name}_vecs_v$v"
 
-  private def fs = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Commit primitives behind the lock / generation-claim / pointer-swap
-    * machinery, selected by an open-time capability check: object-store
-    * schemes without a configured [[graft.sources.ConditionalStore]] are
+  /** The generation ladder `_gens/gNNNNNN.json` and the pointer
+    * `_corpus.json`, with the commit primitives behind the lock,
+    * selected by an open-time capability check: object-store schemes
+    * without a configured [[graft.sources.ConditionalStore]] are
     * rejected at construction (see [[graft.sources.CommitProtocol]]) so
     * the exactly-one-ingest guarantee can't silently degrade. */
-  private val commits: graft.sources.CommitProtocol =
-    graft.sources.CommitProtocol.forStore(
-      new org.apache.hadoop.fs.Path(root),
-      spark.sparkContext.hadoopConfiguration)
-
-  private def manifestPath = new org.apache.hadoop.fs.Path(root, "_corpus.json")
-  private def gensDir = new org.apache.hadoop.fs.Path(root, "_gens")
+  private val log = new SnapshotLog(spark, root, "_gens", "g", "_corpus.json")
+  private def fs = log.fs
 
   /** Existence = a COMMITTED manifest, not data files: a crashed initial
     * ingest (docs written, manifest not) re-routes to ingestInitial,
     * whose overwrite replaces the partial output. */
-  def hasExisting: Boolean = fs.exists(manifestPath)
+  def hasExisting: Boolean = log.hasPointer
 
-  private def readJsonFile(path: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(path)) None
-    else Some(graft.sources.ManifestIO.readVerified(fs, path))
-
-  def readManifest(): Option[CorpusManifest] =
-    // the SWAPPED pointer reads raw + retried (ManifestIO doc): a crc
-    // sidecar cannot swap atomically with its data file, and emulated
-    // rename-overwrite has a transient no-pointer window
-    (if (!fs.exists(manifestPath)) None
-     else Some(graft.sources.ManifestIO.readPointerVerified(fs, manifestPath)))
-      .map(parseManifest)
+  def readManifest(): Option[CorpusManifest] = log.readPointer().map(parseManifest)
 
   /** Manifest as committed at `generation` (from the claim directory) —
     * metadata time travel; [[vacuum]] bounds how far back the pinned
     * files remain readable. None for never-claimed or orphaned-empty
     * generation numbers. */
   def readManifestAt(generation: Long): Option[CorpusManifest] =
-    readJsonFile(new org.apache.hadoop.fs.Path(gensDir, f"g$generation%06d.json"))
-      .flatMap(txt => scala.util.Try(parseManifest(txt)).toOption)
+    log.readClaim(generation).flatMap(txt => scala.util.Try(parseManifest(txt)).toOption)
 
+  /** Absent fields take their defaults: manifests older than a field
+    * read as written before it. */
   private def parseManifest(txt: String): CorpusManifest = {
-    import org.json4s._
     implicit val fmt: Formats = DefaultFormats
-    jackson.JsonMethods.parse(txt).extract[CorpusManifest]
+    JsonMethods.parse(txt).extract[CorpusManifest]
   }
 
   /** The artifact file lists pinned by the LATEST committed manifest. */
-  def snapshotFiles(): Option[CorpusFiles] =
-    readJsonFile(manifestPath).flatMap(extractFiles)
-
-  private def snapshotFilesAt(generation: Long): Option[CorpusFiles] =
-    readJsonFile(new org.apache.hadoop.fs.Path(gensDir, f"g$generation%06d.json"))
-      .flatMap(extractFiles)
-
-  private def extractFiles(txt: String): Option[CorpusFiles] = {
-    import org.json4s._
-    implicit val fmt: Formats = DefaultFormats
-    scala.util.Try(jackson.JsonMethods.parse(txt) \ "files")
-      .toOption.collect { case o: JObject =>
-        // manifests older than the embedding/media artifacts carry no
-        // "vecs"/"media"/"mediaBlocks" lists
-        val withDefaults = Seq("vecs", "media", "mediaBlocks").foldLeft(o) { (j, k) =>
-          if ((j \ k) == JNothing) JObject(j.obj :+ (k -> (JArray(Nil): JValue)))
-          else j
-        }
-        withDefaults.extract[CorpusFiles]
-      }
-  }
+  def snapshotFiles(): Option[CorpusFiles] = readManifest().flatMap(_.files)
 
   /** Serialize every mutating operation behind a CREATE-EXCLUSIVE
     * `_ingest.lock`: a concurrent ingest fails fast BEFORE touching any
@@ -339,7 +314,7 @@ class CorpusManager(
   private def withIngestLock[T](f: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(root, "_ingest.lock")
     fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-    try commits.putIfAbsent(lock, Array.emptyByteArray)
+    try log.commits.putIfAbsent(lock, Array.emptyByteArray)
     catch {
       case e: java.util.ConcurrentModificationException =>
         throw new java.util.ConcurrentModificationException(
@@ -397,121 +372,50 @@ class CorpusManager(
     }
   }
 
-  /** Atomic generation commit, the [[graft.sources.GriddedStore]]
-    * two-layer pattern: (1) `putIfAbsent` claim of
-    * `_gens/gNNNNNN.json` (a second line of defense under the ingest
-    * lock); (2) pointer publish via `swapPointer`, so
-    * a committed manifest always exists (no delete-then-rename crash
-    * window). Both primitives come from the open-time-checked
-    * [[graft.sources.CommitProtocol]]. The next generation comes from the CLAIM DIRECTORY
-    * listing, not the pointer — a crash between claim and rename must
-    * skip the orphaned number, not wedge on it forever. The manifest
-    * carries the pinned artifact file lists: this swap IS the whole
-    * ingest's commit point. */
-  private def commitManifest(nDocsTotal: Long, bandsVersion: Long,
-                             files: CorpusFiles,
-                             sigScheme: Long = p.hasher.scheme,
-                             mediaSchemeStamp: Long = mediaScheme.toLong,
-                             mediaBlocksVersion: Long = 0,
-                             mediaRadius: Long = -1,
-                             mediaCombo: Long = 0): CorpusManifest = {
-    val claimed =
-      if (!fs.exists(gensDir)) 0L
-      else fs.listStatus(gensDir).map(_.getPath.getName)
-        .collect { case n if n.matches("g\\d+\\.json") =>
-          n.stripPrefix("g").stripSuffix(".json").toLong }
-        .foldLeft(0L)(math.max)
-    val parentGen = readManifest().map(_.generation).getOrElse(0L)
-    val gen = math.max(claimed, parentGen) + 1
-    // parent = the COMMITTED predecessor: vacuum walks this chain to
-    // find the genuinely committed snapshots (a claim number alone can
-    // be a crashed commit's orphan, which no reader was ever pinned to)
-    val m = CorpusManifest(name, gen, nDocsTotal,
-      p.ngram, p.perms, p.bands, p.minEstJaccard, numBuckets, bandsVersion,
-      parentGen, sigScheme, mediaSchemeStamp,
-      mediaBlocksVersion, mediaRadius, mediaCombo)
-    import org.json4s._
-    def arr(xs: Seq[String]): JValue = JArray(xs.sorted.map(JString(_)).toList)
-    val json = jackson.JsonMethods.pretty(jackson.JsonMethods.render(JObject(
-      "name" -> JString(m.name), "generation" -> JLong(m.generation),
-      "nDocs" -> JLong(m.nDocs), "ngram" -> JInt(m.ngram),
-      "perms" -> JInt(m.perms), "bands" -> JInt(m.bands),
-      "minEstJaccard" -> JDouble(m.minEstJaccard),
-      "numBuckets" -> JInt(m.numBuckets),
-      "bandsVersion" -> JLong(m.bandsVersion),
-      "parent" -> JLong(m.parent),
-      "sigScheme" -> JLong(m.sigScheme),
-      "mediaScheme" -> JLong(m.mediaScheme),
-      "mediaBlocksVersion" -> JLong(m.mediaBlocksVersion),
-      "mediaRadius" -> JLong(m.mediaRadius),
-      "mediaCombo" -> JLong(m.mediaCombo),
-      "files" -> JObject(
-        "docs" -> arr(files.docs), "sigs" -> arr(files.sigs),
-        "hashes" -> arr(files.hashes), "sketch" -> arr(files.sketch),
-        "bands" -> arr(files.bands), "vecs" -> arr(files.vecs),
-        "media" -> arr(files.media),
-        "mediaBlocks" -> arr(files.mediaBlocks)))))
-    val bytes = graft.sources.ManifestIO.seal(
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    fs.mkdirs(gensDir)
-    try commits.putIfAbsent(
-      new org.apache.hadoop.fs.Path(gensDir, f"g$gen%06d.json"), bytes)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        throw new java.util.ConcurrentModificationException(
-          s"corpus generation $gen at $root was claimed by another writer", e)
-    }
-    commits.swapPointer(manifestPath, bytes)
+  /** Commit `next` — the manifest this operation read, copied with what
+    * it changed — as the next generation: the two-layer commit of
+    * [[SnapshotLog]], so this swap IS the operation's commit point. The
+    * number comes from the CLAIM LADDER, not the pointer (a crash
+    * between claim and swap must skip the orphaned number, not wedge on
+    * it), and `parent` is the generation `next` was copied from — the
+    * COMMITTED predecessor [[vacuum]] walks (a claim number alone can be
+    * a crashed commit's orphan, which no reader was ever pinned to). */
+  private def commitManifest(next: CorpusManifest): CorpusManifest = {
+    val m = next.copy(generation = math.max(log.latest(), next.generation) + 1,
+      parent = next.generation,
+      files = next.files.map(f => CorpusFiles(f.docs.sorted, f.sigs.sorted,
+        f.hashes.sorted, f.sketch.sorted, f.bands.sorted, f.vecs.sorted,
+        f.media.sorted, f.mediaBlocks.sorted)))
+    log.commit(m.generation,
+      JsonMethods.pretty(JsonMethods.render(Extraction.decompose(m)(DefaultFormats))))
     m
   }
 
-  /** Root-relative paths of the non-hidden files now in `dir` —
-    * mutations diff this before/after a write to learn which files the
-    * write created (O(files in the artifact dir): the manifest-
-    * maintenance cost every file-pinning format pays at commit). */
-  private def listDir(dir: String): Set[String] = {
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(dp)) Set.empty
-    else {
-      val rootPrefix =
-        fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString + "/"
-      fs.listStatus(dp).collect {
-        case st if st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") =>
-          val q = fs.makeQualified(st.getPath).toString
-          require(q.startsWith(rootPrefix), s"$q not under $rootPrefix")
-          q.stripPrefix(rootPrefix)
-      }.toSet
-    }
-  }
+  private def listDir(dir: String): Set[String] = log.listFiles(new Path(dir))
 
-  /** Scan of a pinned file list. A pinned-but-EMPTY list means "this
-    * artifact is committed empty": the directory is read for its SCHEMA
-    * only and every row filtered out — falling back to a full dir scan
-    * there would make a crashed ingest's orphan files reader-visible,
-    * the exact phantom-visibility hole pinning exists to close. Only a
-    * manifest with no list at all (pre-pinning legacy) dir-scans. */
-  private def readPinned(pin: Option[Seq[String]], dir: String): DataFrame =
-    pin match {
-      case Some(fl) if fl.nonEmpty =>
-        spark.read.parquet(fl.map(f => s"$root/$f"): _*)
-      case Some(_) => spark.read.parquet(dir).where(lit(false))
-      case None => spark.read.parquet(dir)
-    }
+  /** A pinned parquet artifact: its `schemas` key (its [[CorpusFiles]]
+    * field name), its directory, and its file list. */
+  private case class Artifact(key: String, dir: String, pin: CorpusFiles => Seq[String])
+  private val Docs = Artifact("docs", docsPath, _.docs)
+  private val Sigs = Artifact("sigs", sigsPath, _.sigs)
+  private val Hashes = Artifact("hashes", hashesPath, _.hashes)
+  private val Sketch = Artifact("sketch", sketchPath, _.sketch)
+  private val Media = Artifact("media", mediaPath, _.media)
+
+  /** `a` as of `man` (None: no manifest): its pinned files read with the
+    * recorded schema ([[SnapshotLog.scan]]). */
+  private def scan(a: Artifact, man: Option[CorpusManifest]): DataFrame =
+    log.scan(man.flatMap(_.files).map(a.pin),
+      man.flatMap(_.schemas.get(a.key)).map(DataType.fromJson(_).asInstanceOf[StructType]),
+      a.dir)
+
+  /** The `schemas` entry of a frame written to an artifact. */
+  private def schemaOf(df: DataFrame): String = SnapshotLog.writtenSchema(df).json
 
   /** The canonical deduplicated corpus, as of the latest committed
     * manifest — uncommitted / crashed-writer / retired files are
     * invisible. */
-  def corpus(): DataFrame = readPinned(snapshotFiles().map(_.docs), docsPath)
-
-  private def sigsDf(): DataFrame =
-    readPinned(snapshotFiles().map(_.sigs), sigsPath)
-  private def hashesDf(): DataFrame =
-    readPinned(snapshotFiles().map(_.hashes), hashesPath)
-  private def sketchDf(): DataFrame =
-    readPinned(snapshotFiles().map(_.sketch), sketchPath)
-  private def mediaDf(): DataFrame =
-    readPinned(snapshotFiles().map(_.media), mediaPath)
+  def corpus(): DataFrame = scan(Docs, readManifest())
 
   // ---- perceptual media dedup signal ------------------------------------
 
@@ -588,7 +492,7 @@ class CorpusManager(
     * stamps the returned pair; a crash in between leaves an unpinned
     * extra version the next run overwrites. */
   private def ensureMediaBlocks(man: CorpusManifest): (Long, Int) = {
-    val hashes = mediaDf()
+    val hashes = scan(Media, Some(man))
     val want = desiredMediaCombo(hashes.count())
     val stampsMatch = man.mediaBlocksVersion > 0 &&
       man.mediaRadius == mediaMaxHamming.toLong &&
@@ -633,7 +537,7 @@ class CorpusManager(
     graft.sources.MediaBlockStore
       .crossPairs(corpusB, shardB, mediaScheme, mediaMaxHamming)
       .pinned()
-      .join(mediaDf().select(col("id").as("aid")), Seq("aid"), "left_semi")
+      .join(scan(Media, readManifest()).select(col("id").as("aid")), Seq("aid"), "left_semi")
       .select(least(col("aid"), col("bid")).as("d1"),
         greatest(col("aid"), col("bid")).as("d2"))
       .distinct()
@@ -892,7 +796,8 @@ class CorpusManager(
     // reorder barrier that keeps it above (measured: pushdown happens
     // without it), and the pair set it materializes is dup-graph-sized.
     embVerifiedPairs(shardAssigned).pinned()
-      .join(hashesDf().select(col(idCol).as("cid_")), Seq("cid_"), "left_semi")
+      .join(scan(Hashes, readManifest()).select(col(idCol).as("cid_")), Seq("cid_"),
+        "left_semi")
       .select(least(col("cid_"), col("sid_")).as("d1"),
         greatest(col("cid_"), col("sid_")).as("d2"))
       .distinct()
@@ -996,16 +901,21 @@ class CorpusManager(
           .select(col("id").as(idCol))
         tk.join(drops, Seq(idCol), "left_anti")
       }
-    keepers.write.mode("overwrite").parquet(docsPath)
+    // every artifact's schema is the frame's it is written from
+    val schemas = Map.newBuilder[String, String]
+    def write(a: Artifact, df: DataFrame): Unit = {
+      df.write.mode("overwrite").parquet(a.dir)
+      schemas += a.key -> schemaOf(df)
+    }
+    write(Docs, keepers)
     // re-read: 3 derived passes scan parquet, not the dedup DAG
-    val kept = spark.read.parquet(docsPath)
+    val kept = spark.read.schema(SnapshotLog.writtenSchema(keepers)).parquet(docsPath)
     val (sigs, bands) = DedupPipeline.signatureTables(kept, idCol, textCol, p)
-    sigs.write.mode("overwrite").parquet(sigsPath)
+    write(Sigs, sigs)
     BucketedSignatureStore.write(bands, bandsTable(1), bandsDir(1),
       numBuckets, bandKeys)
-    kept.select(col(idCol), md5(col(textCol)).as("h"))
-      .write.mode("overwrite").parquet(hashesPath)
-    vocabSketch(kept).write.mode("overwrite").parquet(sketchPath)
+    write(Hashes, kept.select(col(idCol), md5(col(textCol)).as("h")))
+    write(Sketch, vocabSketch(kept))
     // the vector twin of the band table: train the coarse quantizer on
     // the final keepers, persist its centroids, and write the corpus
     // vectors (cell)-bucketed so shard candidate joins plan
@@ -1021,8 +931,9 @@ class CorpusManager(
     // parquet — the one decode pass stays the only decode pass)
     val (mbV, mbCombo) = mediaCol match {
       case Some(_) =>
-        mediaHashesOf(kept).write.mode("overwrite").parquet(mediaPath)
-        val hashes = spark.read.parquet(mediaPath)
+        val written = mediaHashesOf(kept)
+        write(Media, written)
+        val hashes = spark.read.schema(SnapshotLog.writtenSchema(written)).parquet(mediaPath)
         val combo = desiredMediaCombo(hashes.count())
         writeMediaBlocks(hashes, 1, combo)
         (1L, combo.toLong)
@@ -1037,14 +948,17 @@ class CorpusManager(
     // measured in OPTIMIZATION_r11.md)
     val (nIn, nKept) = (docs.count(), kept.count())
     val nRej = rejectCount(nIn, accepted.count())
-    commitManifest(nKept, 1, CorpusFiles(
-      listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
-      listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
-      listDir(bandsDir(1)).toSeq, listDir(vecsPath(1)).toSeq,
-      listDir(mediaPath).toSeq, listDir(mediaBlocksDir(1)).toSeq),
-      mediaBlocksVersion = mbV,
+    commitManifest(CorpusManifest(name, 0, nKept, p.ngram, p.perms, p.bands,
+      p.minEstJaccard, numBuckets, bandsVersion = 1, sigScheme = p.hasher.scheme,
+      mediaScheme = mediaScheme.toLong, mediaBlocksVersion = mbV,
       mediaRadius = if (mbV > 0) mediaMaxHamming.toLong else -1L,
-      mediaCombo = mbCombo)
+      mediaCombo = mbCombo,
+      files = Some(CorpusFiles(
+        listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
+        listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
+        listDir(bandsDir(1)).toSeq, listDir(vecsPath(1)).toSeq,
+        listDir(mediaPath).toSeq, listDir(mediaBlocksDir(1)).toSeq)),
+      schemas = schemas.result()))
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, Nil)
   }
 
@@ -1102,8 +1016,9 @@ class CorpusManager(
     *   1. pin the gated shard (quality + contamination gates) together
     *      with `md5(text)` — the one content hash, read by the overlap
     *      check, both exact-edge sets and the hashes append; beside the
-    *      pin, the committed hashes, sigs and sketch scans resolve their
-    *      schemas, each scan built once per ingest;
+    *      pin, the committed hashes, sigs and sketch scans list their
+    *      files, each scan built once per ingest with the schema the
+    *      manifest records (a legacy manifest's scans infer theirs);
     *   2. count, concurrently: a rescan of the raw input (the
     *      determinism check of [[rejectCount]]) and ONE aggregate of the
     *      pinned shard against the committed hashes artifact — accepted
@@ -1161,16 +1076,14 @@ class CorpusManager(
     require(hasExisting, s"corpus $name has no initial ingest at $root")
     val man = readManifest().get
     requireCurrentSigScheme(man); requireCurrentMediaScheme(man)
-    val files = snapshotFiles()
     val (okQ, _) = qualityGate(newDocs)
     val (ok, _) = contaminationGate(okQ)
-    // the committed scans each infer their schema (a footer job) while
-    // the shard pins
+    // the committed scans list their pinned files while the shard pins
     val Seq(shard, committedH, committedSigs, committedSketch) = allOf(Seq(
       () => ok.withColumn(HashCol, md5(col(textCol))).pinned(),
-      () => readPinned(files.map(_.hashes), hashesPath),
-      () => readPinned(files.map(_.sigs), sigsPath),
-      () => readPinned(files.map(_.sketch), sketchPath)))
+      () => scan(Hashes, Some(man)), () => scan(Sigs, Some(man)),
+      () => scan(Sketch, Some(man))))
+    val committed = Committed(committedH, committedSigs, committedSketch)
     // accepted rows × (committed ids, of which content-mismatched): the
     // shard side of the inner join is the small, broadcastable one, so
     // the corpus-sized hashes scan streams. Beside it, the raw-input
@@ -1193,7 +1106,6 @@ class CorpusManager(
     if (mismatched > 0) throw new IllegalArgumentException(
       s"$mismatched shard doc ids already exist in corpus $name with " +
         "DIFFERENT content — doc ids must be globally unique")
-    val committed = Committed(files, committedH, committedSigs, committedSketch)
     if (nInCorpus == 0) ingestShardBody(man, committed, shard, nIn, nRej)
     else if (nInCorpus == nAccepted) IngestReport(nIn, nRej, nIn - nRej, 0, Nil)
     else ingestShardBody(man, committed,
@@ -1201,10 +1113,9 @@ class CorpusManager(
       nIn, nRej)
   }
 
-  /** The committed manifest's file lists and its hashes, sigs and
-    * sketch scans, as one shard ingest reads them. */
-  private case class Committed(files: Option[CorpusFiles], hashes: DataFrame,
-                               sigs: DataFrame, sketch: DataFrame)
+  /** The committed hashes, sigs and sketch scans, as one shard ingest
+    * reads them. */
+  private case class Committed(hashes: DataFrame, sigs: DataFrame, sketch: DataFrame)
 
   /** Dedup, gate and append of a shard whose ids are all new. `shard`
     * is pinned and carries its md5 in [[HashCol]]. */
@@ -1218,7 +1129,7 @@ class CorpusManager(
       committed.sigs, s"${name}_shard_bands", s"$dedupPath/shard_bands",
       numBuckets, p,
       // exact-verify reads candidate docs' grams from the PINNED corpus
-      corpusDocs = if (p.exactVerify) Some(corpus()) else None)
+      corpusDocs = if (p.exactVerify) Some(scan(Docs, Some(man))) else None)
     def norm(a: Column, b: Column) =
       Seq(least(a, b).as("d1"), greatest(a, b).as("d2"))
     val exactCross = shard.as("s")
@@ -1301,7 +1212,7 @@ class CorpusManager(
     //    (sketch: fresh only — replace semantics). Appends are
     //    job-atomic (output-committer staged), so a crash anywhere
     //    before the commit leaves only invisible orphans.
-    val prev = committed.files.getOrElse(CorpusFiles(
+    val prev = man.files.getOrElse(CorpusFiles(
       listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
       listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
       listDir(bandsDir(man.bandsVersion)).toSeq))
@@ -1323,23 +1234,35 @@ class CorpusManager(
 
     // the keepers' signatures are the shard pass's, not a second MinHash
     val keeperSigs = shardSigs.sigs.join(keepers.select(idCol), Seq(idCol), "left_semi")
-    val appends: Seq[() => Unit] = Seq(
-      () => keepers.drop(HashCol).write.mode("append").parquet(docsPath),
-      () => keeperSigs.write.mode("append").parquet(sigsPath),
+    val keeperMedia = mediaCol.map(_ => mediaHashesOf(keepers))
+    val written = Seq(Docs -> keepers.drop(HashCol), Sigs -> keeperSigs,
+      Hashes -> keepers.select(col(idCol), col(HashCol).as("h")))
+    val merged = mergedSketch(sketches)
+    // an appended artifact keeps its recorded schema while the append
+    // writes the same one (otherwise its scans infer, as before the
+    // field); a legacy manifest's hashes and sigs take the schemas their
+    // committed scans inferred. The sketch pin is fresh: its schema is
+    // the merged frame's.
+    val held = if (man.schemas.nonEmpty) man.schemas
+      else Map(Hashes.key -> committed.hashes.schema.json, Sigs.key -> committed.sigs.schema.json)
+    val schemas = (written ++ keeperMedia.map(Media -> _)).flatMap { case (a, df) =>
+      held.get(a.key).filter(_ == schemaOf(df)).map(a.key -> _)
+    }.toMap + (Sketch.key -> schemaOf(merged))
+    val appends: Seq[() => Unit] = written.map { case (a, df) =>
+      () => df.write.mode("append").parquet(a.dir)
+    } ++ Seq(
       () => BucketedSignatureStore.append(DedupPipeline.bandRows(keeperSigs, idCol, p),
         bandsTable(man.bandsVersion), numBuckets, bandKeys),
-      () => mergedSketch(sketches).write.mode("append").parquet(sketchPath),
-      () => keepers.select(col(idCol), col(HashCol).as("h"))
-        .write.mode("append").parquet(hashesPath)) ++
+      () => merged.write.mode("append").parquet(sketchPath)) ++
       embCol.map { e => () =>
         BucketedSignatureStore.append(
           assignCells(keepers, e, readCentroids()), vecsTable(man.bandsVersion),
           numBuckets, Seq("cell"))
       } ++
-      mediaCol.map { _ => () =>
+      keeperMedia.map { mh => () =>
         // one keeper decode pass feeds the pinned hash artifact AND the
         // block-store append (blocks stay exchange-free for the next shard)
-        val keeperHashes = mediaHashesOf(keepers).pinned()
+        val keeperHashes = mh.pinned()
         keeperHashes.write.mode("append").parquet(mediaPath)
         graft.sources.MediaBlockStore.append(keeperHashes, mediaScheme,
           mediaMaxHamming, mediaBlocksState.get._2,
@@ -1352,15 +1275,17 @@ class CorpusManager(
       else if (liveMbV != man.mediaBlocksVersion)
         listDir(activeMediaBlocks).toSeq // regenerated + keeper appends
       else prev.mediaBlocks ++ fresh(activeMediaBlocks)
-    commitManifest(man.nDocs + nKept, man.bandsVersion, CorpusFiles(
-      prev.docs ++ fresh(docsPath), prev.sigs ++ fresh(sigsPath),
-      prev.hashes ++ fresh(hashesPath), fresh(sketchPath),
-      prev.bands ++ fresh(activeBands), prev.vecs ++ fresh(activeVecs),
-      prev.media ++ fresh(mediaPath), mediaBlocksPinned),
+    commitManifest(man.copy(nDocs = man.nDocs + nKept,
       mediaBlocksVersion = if (mediaCol.isEmpty) man.mediaBlocksVersion else liveMbV,
       mediaRadius =
         if (mediaCol.isEmpty) man.mediaRadius else mediaMaxHamming.toLong,
-      mediaCombo = mediaBlocksState.map(_._2.toLong).getOrElse(man.mediaCombo))
+      mediaCombo = mediaBlocksState.map(_._2.toLong).getOrElse(man.mediaCombo),
+      files = Some(CorpusFiles(
+        prev.docs ++ fresh(docsPath), prev.sigs ++ fresh(sigsPath),
+        prev.hashes ++ fresh(hashesPath), fresh(sketchPath),
+        prev.bands ++ fresh(activeBands), prev.vecs ++ fresh(activeVecs),
+        prev.media ++ fresh(mediaPath), mediaBlocksPinned)),
+      schemas = schemas))
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, drift)
   }
 
@@ -1440,15 +1365,19 @@ class CorpusManager(
     requireCurrentMediaScheme(man) // ...and media-hash rows, into mediaPath
     val n = if (partitions > 0) partitions
       else spark.sparkContext.defaultParallelism
-    def rewrite(df: DataFrame, dir: String, parts: Int): Seq[String] = {
-      val before = listDir(dir)
-      df.repartition(parts).write.mode("append").parquet(dir)
-      (listDir(dir) -- before).toSeq
+    // a rewritten artifact's files all carry its scan's schema
+    val schemas = Map.newBuilder[String, String] ++= man.schemas
+    def rewrite(a: Artifact, parts: Int): Seq[String] = {
+      val df = scan(a, Some(man))
+      val before = listDir(a.dir)
+      df.repartition(parts).write.mode("append").parquet(a.dir)
+      schemas += a.key -> schemaOf(df)
+      (listDir(a.dir) -- before).toSeq
     }
-    val newDocs = rewrite(corpus(), docsPath, n)
-    val newSigs = rewrite(sigsDf(), sigsPath, n)
-    val newHashes = rewrite(hashesDf(), hashesPath, n)
-    val newSketch = rewrite(sketchDf(), sketchPath, 1) // k longs × sources
+    val newDocs = rewrite(Docs, n)
+    val newSigs = rewrite(Sigs, n)
+    val newHashes = rewrite(Hashes, n)
+    val newSketch = rewrite(Sketch, 1) // k longs × sources
     val v2 = man.bandsVersion + 1
     // The band table is dir-scanned (its join property lives in catalog
     // bucket metadata, not a pinned list), so crashed-ingest orphan rows
@@ -1459,7 +1388,7 @@ class CorpusManager(
     // orphans at the one moment the table is rewritten anyway.
     BucketedSignatureStore.write(
       BucketedSignatureStore.table(spark, bandsTable(man.bandsVersion))
-        .join(sigsDf().select(idCol), Seq(idCol), "left_semi"),
+        .join(scan(Sigs, Some(man)).select(idCol), Seq(idCol), "left_semi"),
       bandsTable(v2), bandsDir(v2), numBuckets, bandKeys)
     // Retrain the coarse quantizer on the full compacted corpus: shard
     // appends assign with the centroids trained at INITIAL ingest, so as
@@ -1473,7 +1402,7 @@ class CorpusManager(
     // files (and the matching centroid sidecar) untouched.
     val newVecs = embCol match {
       case Some(e) =>
-        val prevVecs = snapshotFiles().map(_.vecs)
+        val prevVecs = man.files.map(_.vecs)
           .getOrElse(listDir(vecsPath(man.bandsVersion)).toSeq)
         require(prevVecs.nonEmpty, s"corpus $name has no vector artifact " +
           "— it was ingested without embCol; embedding dedup needs a " +
@@ -1484,11 +1413,11 @@ class CorpusManager(
           assignCells(cur, e, trainQuantizer(cur, e, v2)),
           vecsTable(v2), vecsPath(v2), numBuckets, Seq("cell"))
         listDir(vecsPath(v2)).toSeq
-      case None => snapshotFiles().map(_.vecs).getOrElse(Nil)
+      case None => man.files.map(_.vecs).getOrElse(Nil)
     }
     val newMedia = mediaCol match {
-      case Some(_) => rewrite(mediaDf(), mediaPath, 1) // 16 B/doc table
-      case None => snapshotFiles().map(_.media).getOrElse(Nil)
+      case Some(_) => rewrite(Media, 1) // 16 B/doc table
+      case None => man.files.map(_.media).getOrElse(Nil)
     }
     // media BLOCK store: regenerate from the PINNED hashes as the next
     // version — re-sizes combo to the compacted corpus and, like the
@@ -1496,19 +1425,21 @@ class CorpusManager(
     // the one moment the table is rewritten anyway
     val (mbV2, mbRadius2, mbCombo2, mbFiles) = mediaCol match {
       case Some(_) =>
-        val hashes = mediaDf()
+        val hashes = scan(Media, Some(man))
         val v = man.mediaBlocksVersion + 1
         val combo = desiredMediaCombo(hashes.count())
         writeMediaBlocks(hashes, v, combo)
         (v, mediaMaxHamming.toLong, combo.toLong,
           listDir(mediaBlocksDir(v)).toSeq)
       case None => (man.mediaBlocksVersion, man.mediaRadius, man.mediaCombo,
-        snapshotFiles().map(_.mediaBlocks).getOrElse(Nil))
+        man.files.map(_.mediaBlocks).getOrElse(Nil))
     }
-    commitManifest(man.nDocs, v2, CorpusFiles(
-      newDocs, newSigs, newHashes, newSketch, listDir(bandsDir(v2)).toSeq,
-      newVecs, newMedia, mbFiles),
-      mediaBlocksVersion = mbV2, mediaRadius = mbRadius2, mediaCombo = mbCombo2)
+    commitManifest(man.copy(bandsVersion = v2,
+      mediaBlocksVersion = mbV2, mediaRadius = mbRadius2, mediaCombo = mbCombo2,
+      files = Some(CorpusFiles(
+        newDocs, newSigs, newHashes, newSketch, listDir(bandsDir(v2)).toSeq,
+        newVecs, newMedia, mbFiles)),
+      schemas = schemas.result()))
   }
 
   /** One-shot migration for stores created BEFORE the versioned ANN
@@ -1537,11 +1468,11 @@ class CorpusManager(
     val e = embCol.getOrElse(throw new IllegalArgumentException(
       s"corpus $name: migrateAnnLayout needs embCol configured"))
     val man = readManifest().get
-    val files = snapshotFiles().get
+    val files = man.files.get
     require(files.vecs.isEmpty,
       s"corpus $name already pins ${files.vecs.size} vector files " +
         s"(ann/v${man.bandsVersion}) — nothing to migrate")
-    val cur = corpus()
+    val cur = scan(Docs, Some(man))
     require(cur.columns.contains(e),
       s"corpus $name docs carry no '$e' column — the embedding source " +
         "is absent, so there is nothing to build the ANN artifact from")
@@ -1550,14 +1481,11 @@ class CorpusManager(
     BucketedSignatureStore.write(
       assignCells(vecs, e, trainQuantizer(vecs, e, v)),
       vecsTable(v), vecsPath(v), numBuckets, Seq("cell"))
-    // the quantizer is scheme-independent; carry the store's signature
-    // and media schemes (and block-store stamps) through so this
+    // the quantizer is scheme-independent; the store's signature and
+    // media schemes (and block-store stamps) carry through, so this
     // migration cannot mask a pending
     // migrateSignatureScheme()/migrateMediaScheme()
-    commitManifest(man.nDocs, v,
-      files.copy(vecs = listDir(vecsPath(v)).toSeq), man.sigScheme,
-      man.mediaScheme, man.mediaBlocksVersion, man.mediaRadius,
-      man.mediaCombo)
+    commitManifest(man.copy(files = Some(files.copy(vecs = listDir(vecsPath(v)).toSeq))))
   }
 
   /** Recompute the signature/band artifacts under the CURRENT
@@ -1579,8 +1507,8 @@ class CorpusManager(
     val cur = p.hasher.scheme
     require(man.sigScheme != cur,
       s"corpus $name is already at signature scheme $cur — nothing to migrate")
-    val files = snapshotFiles().get
-    val kept = corpus()
+    val files = man.files.get
+    val kept = scan(Docs, Some(man))
     val beforeSigs = listDir(sigsPath)
     val (sigs, bands) = DedupPipeline.signatureTables(kept, idCol, textCol, p)
     sigs.write.mode("append").parquet(sigsPath)
@@ -1599,13 +1527,12 @@ class CorpusManager(
       case _ => files.vecs
     }
     // media hashes (and their block store) are signature-scheme-
-    // independent: carry the store's media stamps through (this
+    // independent: the store's media stamps carry through (this
     // migration must not silently restamp them)
-    commitManifest(man.nDocs, v2, files.copy(
-      sigs = newSigs, bands = listDir(bandsDir(v2)).toSeq, vecs = newVecs),
-      mediaSchemeStamp = man.mediaScheme,
-      mediaBlocksVersion = man.mediaBlocksVersion,
-      mediaRadius = man.mediaRadius, mediaCombo = man.mediaCombo)
+    commitManifest(man.copy(bandsVersion = v2, sigScheme = cur,
+      files = Some(files.copy(
+        sigs = newSigs, bands = listDir(bandsDir(v2)).toSeq, vecs = newVecs)),
+      schemas = man.schemas + (Sigs.key -> schemaOf(sigs))))
   }
 
   /** Recompute the media-hash artifact under the CONFIGURED
@@ -1632,27 +1559,29 @@ class CorpusManager(
     val man = readManifest().get
     require(man.mediaScheme != mediaScheme,
       s"corpus $name is already at media scheme $mediaScheme — nothing to migrate")
-    val files = snapshotFiles().get
-    val cur = corpus()
+    val files = man.files.get
+    val cur = scan(Docs, Some(man))
     require(cur.columns.contains(mc),
       s"corpus $name docs carry no '$mc' column — the media source is " +
         "absent, so there is nothing to rehash")
     val before = listDir(mediaPath)
-    mediaHashesOf(cur).write.mode("append").parquet(mediaPath)
+    val hashes = mediaHashesOf(cur)
+    hashes.write.mode("append").parquet(mediaPath)
     val newMedia = (listDir(mediaPath) -- before).toSeq
+    val mediaSchema = SnapshotLog.writtenSchema(hashes)
     // the block store is scheme-keyed derived data: rebuild it from the
     // fresh-scheme hashes as the next version, so the very next shard
     // ingest joins the new layout instead of regenerating lazily
-    val newHashes = spark.read.parquet(newMedia.map(f => s"$root/$f"): _*)
+    val newHashes = log.scan(Some(newMedia), Some(mediaSchema), mediaPath)
     val mbV = man.mediaBlocksVersion + 1
     val mbCombo = desiredMediaCombo(newHashes.count())
     writeMediaBlocks(newHashes, mbV, mbCombo)
-    commitManifest(man.nDocs, man.bandsVersion,
-      files.copy(media = newMedia,
-        mediaBlocks = listDir(mediaBlocksDir(mbV)).toSeq),
-      man.sigScheme,
+    commitManifest(man.copy(mediaScheme = mediaScheme.toLong,
       mediaBlocksVersion = mbV, mediaRadius = mediaMaxHamming.toLong,
-      mediaCombo = mbCombo.toLong)
+      mediaCombo = mbCombo.toLong,
+      files = Some(files.copy(media = newMedia,
+        mediaBlocks = listDir(mediaBlocksDir(mbV)).toSeq)),
+      schemas = man.schemas + (Media.key -> mediaSchema.json)))
   }
 
   /** Delete artifact files not referenced by the newest `retainLast`
@@ -1674,25 +1603,20 @@ class CorpusManager(
     val chain = Iterator.iterate(Option(man))(_.flatMap(m =>
         if (m.parent < 1) None else readManifestAt(m.parent)))
       .takeWhile(_.isDefined).flatten.take(retainLast).toSeq
-    val retained = chain.map(_.generation).flatMap(snapshotFilesAt)
+    val retained = chain.flatMap(_.files)
     if (retained.isEmpty) throw new IllegalStateException(
       s"no retained manifest pins file lists (legacy store at $root); " +
         "vacuum would treat every artifact file as an orphan")
     val referenced = retained
       .flatMap(f => f.docs ++ f.sigs ++ f.hashes ++ f.sketch ++ f.bands ++
         f.vecs ++ f.media ++ f.mediaBlocks).toSet
-    val dedupP = new org.apache.hadoop.fs.Path(dedupPath)
-    val bandVersions =
-      if (!fs.exists(dedupP)) Nil
-      else fs.listStatus(dedupP).map(_.getPath.getName)
-        .collect { case d if d.matches("bands_v\\d+") =>
-          d.stripPrefix("bands_v").toLong }.toSeq
-    val annP = new org.apache.hadoop.fs.Path(s"$root/ann")
-    val annVersions =
-      if (!fs.exists(annP)) Nil
-      else fs.listStatus(annP).map(_.getPath.getName)
-        .collect { case d if d.matches("v\\d+") =>
-          d.stripPrefix("v").toLong }.toSeq
+    // the versions `<dir>/<prefix>N` on disk
+    def versions(dir: String, prefix: String): Seq[Long] =
+      if (!fs.exists(new Path(dir))) Nil
+      else fs.listStatus(new Path(dir)).map(_.getPath.getName)
+        .collect { case d if d.matches(s"$prefix\\d+") => d.stripPrefix(prefix).toLong }.toSeq
+    val bandVersions = versions(dedupPath, "bands_v")
+    val annVersions = versions(s"$root/ann", "v")
     // every media-SCHEME dir participates, not just the configured
     // scheme's: after a migrateMediaScheme the old scheme's unpinned
     // files are exactly the orphans vacuum exists to reclaim
@@ -1703,12 +1627,7 @@ class CorpusManager(
     // media block-store versions participate like band versions: stale
     // layouts (regenerations, compactions, scheme migrations) are
     // retired once no retained manifest pins their files
-    val mbP = new org.apache.hadoop.fs.Path(s"$root/media_blocks")
-    val mbVersions =
-      if (!fs.exists(mbP)) Nil
-      else fs.listStatus(mbP).map(_.getPath.getName)
-        .collect { case d if d.matches("v\\d+") =>
-          d.stripPrefix("v").toLong }.toSeq
+    val mbVersions = versions(s"$root/media_blocks", "v")
     // vector files participate like every other artifact (crashed shard
     // ingests leave orphan vector rows; compaction leaves whole stale
     // versions); the centroid sidecars are NOT file-tracked — they live
@@ -1761,7 +1680,7 @@ class CorpusManager(
     * rows that are k longs each, so the compare never leaves the
     * sketch table's scale regardless of corpus size. */
   def driftReport(shardDocs: DataFrame): Seq[SourceDrift] =
-    driftOf(sketchJoin(sketchDf(), vocabSketch(shardDocs)))
+    driftOf(sketchJoin(scan(Sketch, readManifest()), vocabSketch(shardDocs)))
 
   /** Committed sketch rows (`ma`) full-outer-joined with a shard's
     * (`mb`) on the source: one frame for both the drift report and the

@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.operators.Materialize.Pinning
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication primitives: exact (content hash), MinHash+LSH banding,
@@ -103,19 +103,26 @@ object DedupFunctions {
                           propagationRounds: Int = 12,
                           stallSwitch: Boolean = true,
                           driverFinishEdges: Long = 1000000L): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
     val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .materialize()
-    val eN = raw.count()
     // A dup graph at or under `driverFinishEdges` edges (default 10⁶ —
     // 16 MB of pairs, a LongMap of ≤ 2·10⁶ entries) is finished with
-    // ONE collect + union-find: the iterative machinery below exists
-    // for graphs that do NOT fit on the driver, and running it on one
-    // that does pays tens of scheduling round-trips to move megabytes.
-    // Same principle as Spark's broadcast-join threshold — driver-sized
-    // data earns a driver algorithm, with an explicit, configurable
-    // bound. Set 0 to force the distributed path (the equivalence
-    // specs do).
-    if (eN <= driverFinishEdges) return driverComponents(raw)
+    // ONE bounded collect + union-find: the iterative machinery below
+    // exists for graphs that do NOT fit on the driver, and running it on
+    // one that does pays tens of scheduling round-trips to move
+    // megabytes. Same principle as Spark's broadcast-join threshold —
+    // driver-sized data earns a driver algorithm, with an explicit,
+    // configurable bound. The collect stops one edge past the bound, so
+    // it both decides the path and is the union-find's input; one task
+    // reads the pin's partitions in turn, so it is one job whatever the
+    // pin's partitioning. Set 0 to force the distributed path (the
+    // equivalence specs do).
+    val head = raw.coalesce(1).limit(math.min(driverFinishEdges, Int.MaxValue - 1L).toInt + 1)
+      .as[(Long, Long)].collect()
+    if (head.length <= driverFinishEdges) return driverComponents(spark, head)
+    val eN = raw.count()
     val undFull = raw
       .unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))
     // Partition the LOOP by the dup graph's own size, not the session
@@ -172,8 +179,6 @@ object DedupFunctions {
     // round-trip, and the loop used to pay two per iteration. Spark
     // applies action-stage accumulator updates exactly once per task,
     // so retries cannot inflate the count.
-    val spark = edges.sparkSession
-    import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("cc_changes")
     var prevChanges = Long.MaxValue
     var stalled = 0
@@ -226,11 +231,8 @@ object DedupFunctions {
     * minimum — the same labels the distributed loops converge to.
     * Self-loops register their endpoint (it appears in the output
     * labeled with itself), matching the iterative paths. */
-  private[functions] def driverComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def driverComponents(spark: SparkSession, pairs: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].collect()
     val parent = new scala.collection.mutable.LongMap[Long](
       math.max(16, pairs.length * 2))
     def find(x: Long): Long = {
@@ -319,11 +321,12 @@ object DedupFunctions {
     // driver bound, one union-find finishes what would otherwise be
     // several more scheduling-floor rounds (self-loop handling is moot
     // here — both inputs are already src≠dst-filtered).
-    if (eCount <= driverFinishEdges) return (driverComponents(e), rounds)
+    if (eCount <= driverFinishEdges)
+      return (driverComponents(spark, e.as[(Long, Long)].collect()), rounds)
     while (!done && rounds < maxIter) {
       val (next, nextCount) = matCount(smallStar(largeStar(e)))
       if (nextCount <= driverFinishEdges)
-        return (driverComponents(next), rounds + 1)
+        return (driverComponents(spark, next.as[(Long, Long)].collect()), rounds + 1)
       // fixed point = identical edge sets. Both are DISTINCT lists, so
       // equal counts + next⊆e ⟹ equality — one anti-join per round
       // instead of the two of a symmetric exceptAll pair.

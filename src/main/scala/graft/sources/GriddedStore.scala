@@ -7,8 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import java.nio.charset.StandardCharsets
-
 /** Chunk-aligned, incrementally-updatable parquet store for tall gridded
   * data — the Spark-native analog of the reference's Zarr write paths
   * (`utils/publish.py:240-397`) and `StoreInterface` (`utils/store.py`).
@@ -63,39 +61,25 @@ import java.nio.charset.StandardCharsets
   */
 class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
 
-  private val hadoopPath = new Path(root)
-  private[sources] def fs: FileSystem =
-    hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The manifest ladder and pointer, and the commit primitives,
+    * selected by a capability check AT OPEN: schemes without atomic
+    * exclusive-create + atomic rename (s3a and friends) are rejected
+    * here unless a [[ConditionalStore]] commit mode is configured — the
+    * MVCC guarantees must fail loudly, never silently degrade to
+    * copy+delete "renames" (see [[CommitProtocol]]). */
+  private[graft] val log =
+    new SnapshotLog(spark, root, "_versions", "v", "_descriptor.json")
+  private[sources] def fs: FileSystem = log.fs
+  private[sources] def commits: CommitProtocol = log.commits
 
-  /** Commit primitives, selected by a capability check AT OPEN: schemes
-    * without atomic exclusive-create + atomic rename (s3a and friends)
-    * are rejected here unless a [[ConditionalStore]] commit mode is
-    * configured — the MVCC guarantees must fail loudly, never silently
-    * degrade to copy+delete "renames" (see [[CommitProtocol]]). */
-  private[sources] val commits: CommitProtocol =
-    CommitProtocol.forStore(hadoopPath, spark.sparkContext.hadoopConfiguration)
-
-  def descriptorPath = new Path(root, "_descriptor.json")
+  def descriptorPath: Path = log.pointer
   def dataPath: String = s"$root/data"
 
   /** `store.has_existing` (`utils/store.py`). */
-  def hasExisting: Boolean = fs.exists(descriptorPath)
+  def hasExisting: Boolean = log.hasPointer
 
   def readDescriptor(): Option[DatasetDescriptor] =
-    pointerJson().map(DatasetDescriptor.fromJson)
-
-  private def pointerJson(): Option[String] =
-    // the SWAPPED pointer reads raw + retried (ManifestIO doc): a crc
-    // sidecar cannot swap atomically with its data file, and emulated
-    // rename-overwrite has a transient no-pointer window. The
-    // existence probe itself is gap-tolerant: absent pointer + present
-    // version history = a reader inside that window, not a fresh store.
-    if (hasExisting) Some(ManifestIO.readPointerVerified(fs, descriptorPath))
-    else if (fs.exists(versionsDir)) {
-      Thread.sleep(50)
-      if (hasExisting) Some(ManifestIO.readPointerVerified(fs, descriptorPath))
-      else None
-    } else None
+    log.readPointer().map(DatasetDescriptor.fromJson)
 
   /** Data-file list pinned by the COMMITTED pointer. Reads resolve
     * through the pointer, not the claim listing: a crashed commit's
@@ -103,20 +87,14 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * `read()` — the pointer swap is atomic, so this is always a whole
     * committed manifest. */
   def snapshotFiles(): Option[Seq[String]] =
-    pointerJson().flatMap(extractFiles)
+    log.readPointer().flatMap(extractFiles)
 
   // ---- versioned descriptor manifest ------------------------------------
 
-  def versionsDir = new Path(root, "_versions")
-  private def versionPath(v: Long) = new Path(versionsDir, f"v$v%06d.json")
+  def versionsDir: Path = log.claims
 
   /** Highest committed manifest version (0 for a fresh store). */
-  def latestVersionNumber(): Long =
-    if (!fs.exists(versionsDir)) 0L
-    else fs.listStatus(versionsDir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong
-      }.foldLeft(0L)(math.max)
+  def latestVersionNumber(): Long = log.latest()
 
   /** Newest manifest version whose descriptor is COMMITTED
     * (updateInProgress = false) — the writer-side snapshot anchor.
@@ -133,7 +111,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
   /** [[latestCommittedVersion]] with its manifest bytes, read once. */
   private def latestCommitted(): Option[(Long, String)] =
     (latestVersionNumber() to 1L by -1L).iterator
-      .map(v => v -> readVersionJson(v))
+      .map(v => v -> log.readClaim(v))
       .collectFirst { case (v, Some(j)) if parseDescriptor(j).exists(!_.updateInProgress) =>
         v -> j }
 
@@ -161,7 +139,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
   }
 
   private[sources] def anchor(fallback: DatasetDescriptor): Anchor =
-    new Anchor(latestCommitted().map(_._2).orElse(pointerJson()), fallback)
+    new Anchor(latestCommitted().map(_._2).orElse(log.readPointer()), fallback)
 
   /** Recover from a crashed writer: re-point the committed pointer at
     * the latest COMMITTED manifest, clearing a stuck in-progress flag.
@@ -184,12 +162,9 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       throw new IllegalStateException(
         s"store at $root has no committed manifest to repair to " +
           "(crashed during its initial write?); rebuild with writeInitial")
-    // re-publish the committed manifest verbatim (same sealed bytes the
-    // pointer received at that commit — file list and schema included)
-    val json = ManifestIO.readVerified(fs, versionPath(v))
-    commits.swapPointer(descriptorPath,
-      ManifestIO.seal(json.getBytes(StandardCharsets.UTF_8)))
-    DatasetDescriptor.fromJson(json)
+    // re-publish the committed manifest verbatim (file list and schema
+    // included)
+    DatasetDescriptor.fromJson(log.republish(v))
   }
 
   /** Descriptor as of manifest version `v` — metadata time travel (the
@@ -197,17 +172,13 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * for the same need). None for a zero-byte/partial claim left by a
     * crashed commit. */
   def readDescriptorAt(v: Long): Option[DatasetDescriptor] =
-    readVersionJson(v).flatMap(parseDescriptor)
-
-  private def readVersionJson(v: Long): Option[String] =
-    if (!fs.exists(versionPath(v))) None
-    else Some(ManifestIO.readVerified(fs, versionPath(v)))
+    log.readClaim(v).flatMap(parseDescriptor)
 
   /** Root-relative data-file list pinned by manifest version `v`. None
     * for versions written before file tracking (legacy), a fresh store,
     * or an unparseable crashed-commit claim. */
   def snapshotFilesAt(v: Long): Option[Seq[String]] =
-    readVersionJson(v).flatMap(extractFiles)
+    log.readClaim(v).flatMap(extractFiles)
 
   private def extractFiles(json: String): Option[Seq[String]] =
     scala.util.Try(org.json4s.jackson.JsonMethods.parse(json) \ "files")
@@ -244,68 +215,25 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * recorded by the commit, read without touching data. None when the
     * manifest records no bbox (see [[extractBbox]]). */
   def committedExtent(): Option[(Bbox, (Long, Long))] =
-    pointerJson().flatMap(j => for {
+    log.readPointer().flatMap(j => for {
       b <- extractBbox(j)
       d <- parseDescriptor(j)
       r <- d.dateRange
     } yield (b, r))
 
-  /** The data of one manifest (`None`: no manifest, i.e. legacy). Reads
-    * exactly the pinned file list with the manifest-recorded schema, so
-    * building the frame runs no footer-inference job; manifests older
-    * than the schema field fall back to inference. */
-  private def pinnedScan(json: Option[String]): DataFrame = {
-    val schema = json.flatMap(extractSchema)
-    json.flatMap(extractFiles) match {
-      case Some(files) if files.nonEmpty =>
-        val reader = spark.read.option("basePath", dataPath)
-        schema.fold(reader)(reader.schema).parquet(files.map(f => s"$root/$f"): _*)
-      case Some(_) =>
-        // A manifest that pins an EMPTY list means "committed empty":
-        // a zero-row frame with the MANIFEST-RECORDED schema — falling
-        // through to a dir scan would make crashed-writer orphans and
-        // retired files reader-visible (the phantom-visibility hole the
-        // pinning exists to close), and dir schema inference dies the
-        // moment vacuum reclaims the orphans.
-        schema match {
-          case Some(s) =>
-            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s)
-          case None =>
-            // pre-schema-field manifest: directory schema inference is
-            // the only source left (fails once vacuum has emptied data/ —
-            // such stores re-commit once to gain the schema field)
-            spark.read.parquet(dataPath).filter(lit(false))
-        }
-      case None => spark.read.parquet(dataPath) // legacy, pre-file-tracking
-    }
-  }
+  /** The data of one manifest (`None`: no manifest, i.e. legacy), read
+    * through [[SnapshotLog.scan]] with the manifest-recorded schema. */
+  private def pinnedScan(json: Option[String]): DataFrame =
+    log.scan(json.flatMap(extractFiles), json.flatMap(extractSchema), dataPath,
+      basePath = Some(dataPath))
 
   /** All manifest versions, ascending. */
   def descriptorHistory(): Seq[(Long, DatasetDescriptor)] =
     (1L to latestVersionNumber()).flatMap(v => readDescriptorAt(v).map(v -> _))
 
-  /** Versioned atomic descriptor commit. Two layers:
-    *
-    *  1. The next manifest version is claimed with
-    *     [[CommitProtocol.putIfAbsent]] on `_versions/vNNNNNN.json` —
-    *     exactly one creator wins, so two concurrent writers cannot both
-    *     commit: the loser gets a ConcurrentModificationException before
-    *     touching the pointer. This is the optimistic-concurrency guard
-    *     the single-file descriptor lacked (reference gets it from the
-    *     IPNS pointer swap).
-    *  2. The committed pointer `_descriptor.json` is then published via
-    *     [[CommitProtocol.swapPointer]] (rename-with-OVERWRITE on
-    *     HDFS-like stores; whole-object PUT in conditional mode) — NOT
-    *     delete-then-rename, which had a crash window where no
-    *     descriptor existed at all: a half-written store would then look
-    *     fresh (`hasExisting=false`) and `DatasetManager.parse` would
-    *     route to `writeInitial` and silently clobber data, defeating
-    *     the `updateInProgress` two-phase protection.
-    *
-    * Both primitives are selected by the open-time capability check
-    * (see the `commits` field): the guarantees hold on every filesystem
-    * a store can be OPENED on, because schemes that can't deliver them
-    * are rejected at construction.
+  /** Versioned atomic descriptor commit: the next manifest version is
+    * claimed and the pointer `_descriptor.json` swapped to it, the
+    * two-layer commit of [[SnapshotLog]].
     *
     * The metadata-only update path (`store.write_metadata_only`,
     * `store.py:702-717`). DATA mutations must NOT use this: they claim
@@ -325,7 +253,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
                       files: Option[Seq[String]] = None): Unit = files match {
     case Some(_) => writeDescriptorAsVersion(latestVersionNumber() + 1, d, files)
     case None =>
-      val j = pointerJson()
+      val j = log.readPointer()
       writeDescriptorAsVersion(latestVersionNumber() + 1, d,
         j.flatMap(extractFiles), bbox = j.flatMap(extractBbox))
   }
@@ -369,7 +297,6 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       files: Option[Seq[String]] = None,
       schema: Option[StructType] = None,
       bbox: Option[Bbox] = None): Unit = {
-    fs.mkdirs(versionsDir)
     // the version manifest = descriptor fields + the pinned file list +
     // the data schema (Spark DataType JSON — read back by every pinned
     // scan, and by the committed-empty path, which must not depend on
@@ -382,7 +309,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
           if (fl.nonEmpty) scala.util.Try(
             spark.read.option("basePath", dataPath)
               .parquet(fl.map(f => s"$root/$f"): _*).schema.json).toOption
-          else pointerJson().flatMap(extractSchema).map(_.json))
+          else log.readPointer().flatMap(extractSchema).map(_.json))
         val base = jackson.JsonMethods.parse(d.toJson).asInstanceOf[JObject]
         val withFiles = base.obj :+
           ("files" -> (JArray(fl.sorted.map(JString(_)).toList): JValue))
@@ -393,16 +320,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
             withSchema :+ ("bbox" -> (JArray(b.toArray.toList.map(JDouble(_))): JValue))))))
       case None => d.toJson
     }
-    // integrity trailer: a silently-corrupted manifest must fail its own
-    // digest at read, like the reference's self-verifying CIDs
-    val bytes = ManifestIO.seal(json.getBytes(StandardCharsets.UTF_8))
-    try commits.putIfAbsent(versionPath(version), bytes) // the commit claim
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        throw new java.util.ConcurrentModificationException(
-          s"manifest version $version at $root was claimed by another writer", e)
-    }
-    commits.swapPointer(descriptorPath, bytes)
+    log.commit(version, json)
   }
 
   /** Lazy scan of the store as of the COMMITTED POINTER — reads exactly
@@ -412,20 +330,20 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * Partition pruning applies to any time_bucket / time predicates
     * stacked on top (`basePath` keeps the directory-partition column
     * live on an explicit file list). */
-  def read(): DataFrame = pinnedScan(pointerJson())
+  def read(): DataFrame = pinnedScan(log.readPointer())
 
   /** The store as of manifest version `v` — data time travel. Valid
     * while `v` is inside the `vacuum` retention window; reading a
     * vacuumed version fails on the missing files. Falls back to a
     * directory scan for pre-file-tracking (legacy) versions. */
-  def readAt(v: Long): DataFrame = pinnedScan(readVersionJson(v))
+  def readAt(v: Long): DataFrame = pinnedScan(log.readClaim(v))
 
   /** [[read]] confined to the given times: pruned to their buckets
     * (computed on the driver, [[ChunkGrid.bucketOf]]) and to `time IN
     * times`, so a read-back of a few sampled cells opens only their
     * buckets' files and skips row groups by the time statistics. */
   def readTimes(times: Seq[Long]): DataFrame = {
-    val j = pointerJson()
+    val j = log.readPointer()
     val d = j.map(DatasetDescriptor.fromJson).getOrElse(
       throw new IllegalStateException(s"no existing dataset at $root"))
     val ts = times.distinct
@@ -447,16 +365,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
         if (!fs.exists(dataP)) Nil
         else fs.listStatus(dataP).filter(_.isDirectory).map(_.getPath).toSeq
     }
-    val rootPrefix = fs.makeQualified(hadoopPath).toString + "/"
-    dirs.filter(fs.exists).flatMap { dir =>
-      fs.listStatus(dir).collect {
-        case st if st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") =>
-          val q = fs.makeQualified(st.getPath).toString
-          require(q.startsWith(rootPrefix), s"$q not under $rootPrefix")
-          q.stripPrefix(rootPrefix)
-      }
-    }.toSet
+    dirs.flatMap(log.listFiles).toSet
   }
 
   /** Delete data files not referenced by the newest `retainLast`

@@ -369,6 +369,71 @@ class CorpusManagerSpec extends SparkSpec {
     }
   }
 
+  test("the manifest records each artifact's footer schema; one without the field " +
+      "still reads and regains it") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val s = spark; import s.implicits._
+    val root = tmpDir("cmschemas")
+    val m = new CorpusManager("cm_schemas", root, spark,
+      numBuckets = 4, minTokens = 2)
+    try {
+      m.ingestInitial(docs(Seq(
+        (1L, mkText(1), "web"), (2L, mkText(2), "web"), (3L, mkText(3), "web"))))
+      val fsys = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val ptr = new org.apache.hadoop.fs.Path(root, "_corpus.json")
+      def pointer(): JObject = JsonMethods.parse(
+        graft.sources.ManifestIO.readVerified(fsys, ptr)).asInstanceOf[JObject]
+      // the keys manifests carried before the field, plus `schemas`
+      assert(pointer().obj.map(_._1) == Seq("name", "generation", "nDocs", "ngram",
+        "perms", "bands", "minEstJaccard", "numBuckets", "bandsVersion", "parent",
+        "sigScheme", "mediaScheme", "mediaBlocksVersion", "mediaRadius",
+        "mediaCombo", "files", "schemas"))
+      assert((pointer() \ "files").asInstanceOf[JObject].obj.map(_._1) == Seq("docs",
+        "sigs", "hashes", "sketch", "bands", "vecs", "media", "mediaBlocks"))
+      // every recorded schema is the footer schema of the files it pins
+      def recorded(): Set[String] = {
+        val man = m.readManifest().get
+        val files = man.files.get
+        val pins = Map("docs" -> files.docs, "sigs" -> files.sigs,
+          "hashes" -> files.hashes, "sketch" -> files.sketch)
+        man.schemas.foreach { case (k, json) =>
+          assert(org.apache.spark.sql.types.DataType.fromJson(json) ==
+            spark.read.parquet(pins(k).map(f => s"$root/$f"): _*).schema, k)
+        }
+        man.schemas.keySet
+      }
+      val all = Set("docs", "sigs", "hashes", "sketch")
+      assert(recorded() == all)
+      // doctor the pointer to a manifest written before the field
+      val legacy = JObject(pointer().obj.filterNot(_._1 == "schemas"))
+      val out = fsys.create(ptr, true)
+      try out.write(graft.sources.ManifestIO.seal(
+        JsonMethods.pretty(JsonMethods.render(legacy)).getBytes("UTF-8")))
+      finally out.close()
+      assert(m.readManifest().get.schemas.isEmpty)
+      assert(corpusIds(m) == Set(1L, 2L, 3L))
+      val r = m.ingestShard(docs(Seq((10L, near(mkText(1)), "web"),
+        (11L, mkText(9), "web"))))
+      assert(r.ingested == 1 && r.duplicates == 1, r.toString)
+      // the shard's commit records the schemas of what its scans read;
+      // the docs schema returns with the next full rewrite
+      assert(recorded() == Set("sigs", "hashes", "sketch"))
+      m.compactArtifacts(partitions = 2)
+      assert(recorded() == all)
+      assert(corpusIds(m) == Set(1L, 2L, 3L, 11L))
+      // a shard with other docs columns drops the docs entry: the corpus
+      // scan infers, as before the field
+      m.ingestShard(Seq((20L, mkText(20), "web", "en")).toDF("doc_id", "text", "source", "lang"))
+      assert(recorded() == all - "docs")
+      assert(corpusIds(m) == Set(1L, 2L, 3L, 11L, 20L))
+    } finally {
+      Seq("cm_schemas_bands_v1", "cm_schemas_bands_v2", "cm_schemas_shard_bands")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("hasher choice stamps the scheme; switching hashers routes through migration") {
     val s = spark; import s.implicits._
     val root = tmpDir("cmxxh")

@@ -372,6 +372,19 @@ class FunctionsSpec extends SparkSpec {
       .connectedComponents(edges, driverFinishEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotDist == expected)
+    // at the driver bound the driver finisher runs; one edge past it the
+    // distributed loop does — both must label exactly as the other path
+    val bound = edges.count()
+    val past = edges.union(Seq((4L, 5L)).toDF("src", "dst"))
+    for (g <- Seq(edges, past)) {
+      val atBound = DedupFunctions.connectedComponents(g, driverFinishEdges = bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = DedupFunctions.connectedComponents(g, driverFinishEdges = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val drv = DedupFunctions.connectedComponents(g, driverFinishEdges = Long.MaxValue)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(atBound == dist && dist == drv, s"${g.count()} edges at bound $bound")
+    }
     // A propagation budget too small for the chain's diameter must NOT
     // return a half-propagated labeling: the star fallback takes over
     // and still produces the correct components.

@@ -6,7 +6,11 @@
 # than at the next bench or audit run. A staged change to the corpus
 # manager or the dedup pipeline runs the shard-ingest cost fence (its
 # job and SQL-execution bounds, artifact parity and failed-append
-# checks). Install with:
+# checks). A staged change to the snapshot-manifest protocol (the
+# snapshot log, the gridded store, the manifest envelope, the commit
+# primitives) or to the grid catalog runs the append cost fence, the
+# commit-protocol spec and the shard-ingest cost fence: both versioned
+# stores commit through that code. Install with:
 #   ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # Skips the sbt startup when nothing it checks is staged.
 staged=$(git diff --cached --name-only)
@@ -33,6 +37,15 @@ if echo "$staged" | grep -q -E '(^|/)(etl/CorpusManager|functions/Dedup[^/]*)\.s
       >/tmp/precommit_fence.log 2>&1 || {
     echo "[pre-commit] SHARD-INGEST FENCE FAILED - commit blocked. tail of log:"
     tail -20 /tmp/precommit_fence.log
+    exit 1
+  }
+fi
+if echo "$staged" | grep -q -E '(^|/)(sources/(SnapshotLog|GriddedStore|ManifestIO|CommitProtocol)|catalog/GridCatalog)\.scala$'; then
+  echo "[pre-commit] staged snapshot-log code -> append, commit-protocol and shard-ingest fences"
+  sbt -batch "testOnly graft.etl.AppendCostFenceSpec graft.sources.CommitProtocolSpec graft.etl.ShardIngestCostFenceSpec" \
+      >/tmp/precommit_log.log 2>&1 || {
+    echo "[pre-commit] SNAPSHOT-LOG FENCES FAILED - commit blocked. tail of log:"
+    tail -20 /tmp/precommit_log.log
     exit 1
   }
 fi
