@@ -2,7 +2,7 @@ package graft.catalog
 
 import java.util
 
-import graft.sources.GriddedStore
+import graft.sources.{GridManifest, GriddedStore}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
@@ -99,7 +99,8 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
       filesTable(base, storeFor(base))
     } else {
       val store = storeFor(ident)
-      snapshotTable(ident, store, store.snapshotFiles())
+      snapshotTable(ident, store, store.manifest().getOrElse(
+        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)))
     }
 
   /** One row per manifest version: commit time (file mtime — the atomic
@@ -107,11 +108,12 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
     * crashed writer's claim), pinned file count, committed date range.
     * Everything a `DESCRIBE HISTORY` needs to pick a `VERSION AS OF`. */
   private def historyTable(ident: Identifier, store: GriddedStore): Table = {
-    val mtimes = store.log.listClaims().toMap
-    val rows = store.descriptorHistory().map { case (v, d) =>
-      HistoryRow(v, mtimes.getOrElse(v, 0L) * 1000L, d.updateInProgress,
-        store.snapshotFilesAt(v).map(_.size).getOrElse(-1),
-        d.dateRange.map(_._1), d.dateRange.map(_._2))
+    val rows = store.log.listClaims().sorted.flatMap { case (v, mtime) =>
+      store.manifestAt(v).map { m =>
+        val d = m.descriptor
+        HistoryRow(v, mtime * 1000L, d.updateInProgress, m.files.map(_.size).getOrElse(-1),
+          d.dateRange.map(_._1), d.dateRange.map(_._2))
+      }
     }
     new HistoryMetaTable(s"$ident$$history", rows)
   }
@@ -139,10 +141,10 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
       case _: NumberFormatException => throw new IllegalArgumentException(
         s"GridCatalog versions are manifest numbers, got '$version'")
     }
-    val files = store.snapshotFilesAt(v).getOrElse(
+    val m = store.manifestAt(v).filter(_.files.isDefined).getOrElse(
       throw new IllegalArgumentException(
         s"$ident has no committed manifest at version $v"))
-    snapshotTable(ident, store, Some(files))
+    snapshotTable(ident, store, m)
   }
 
   /** `TIMESTAMP AS OF t` — newest manifest whose commit mtime <= t. */
@@ -156,22 +158,16 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
     loadTable(ident, eligible.max.toString)
   }
 
+  /** The files `m` pins (committed empty: none, a zero-row table; a
+    * legacy pre-file-tracking manifest: a directory scan), read with its
+    * recorded schema, so resolving the table infers nothing. */
   private def snapshotTable(ident: Identifier, store: GriddedStore,
-                            files: Option[Seq[String]]): Table = {
+                            m: GridManifest): Table = {
     val opts = new CaseInsensitiveStringMap(
       java.util.Map.of("basePath", store.dataPath))
-    files match {
-      case Some(fl) if fl.nonEmpty =>
-        new SnapshotTable(ident.toString, ParquetTable(ident.toString, spark,
-          opts, fl.map(fp => s"${store.root}/$fp"), None,
-          classOf[ParquetFileFormat]))
-      case Some(_) => // committed empty: zero-row, manifest schema
-        new SnapshotTable(ident.toString, ParquetTable(ident.toString, spark,
-          opts, Nil, Some(store.read().schema), classOf[ParquetFileFormat]))
-      case None => // legacy pre-file-tracking store: directory scan
-        new SnapshotTable(ident.toString, ParquetTable(ident.toString, spark,
-          opts, Seq(store.dataPath), None, classOf[ParquetFileFormat]))
-    }
+    val paths = m.files.fold(Seq(store.dataPath))(_.map(fp => s"${store.root}/$fp"))
+    new SnapshotTable(ident.toString, ParquetTable(ident.toString, spark,
+      opts, paths, m.dataSchema, classOf[ParquetFileFormat]))
   }
 
   private def unsupported(what: String): Nothing =

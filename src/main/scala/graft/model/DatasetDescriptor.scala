@@ -73,7 +73,8 @@ object Bbox {
 }
 
 /** The `.zmetadata`/attrs analog: everything the reference keeps in Zarr
-  * attributes + encoding, as one JSON sidecar (`utils/metadata.py`).
+  * attributes + encoding (`utils/metadata.py`). A store keeps it in its
+  * manifest, [[graft.sources.GridManifest]], which owns the JSON form.
   *
   * Times are epoch microseconds. `dateRange` is the committed watermark
   * pair (`date range` attr, `metadata.py:749-777`); `updateInProgress` is
@@ -99,26 +100,6 @@ case class DatasetDescriptor(
 
   def dims: Seq[String] = category.dims
   def timeDim: String = category.timeDim
-
-  def toJson: String = {
-    val fields: List[(String, JValue)] = List(
-      "name" -> JString(name),
-      "data_var" -> JString(dataVar),
-      "category" -> JString(category.name),
-      "missing_value" -> missingValue.map(JDouble(_)).getOrElse(JNull),
-      "cadence_us" -> JLong(cadenceUs),
-      "time_bucket_us" -> JLong(chunk.timeBucketUs),
-      "max_records_per_file" -> JLong(chunk.maxRecordsPerFile),
-      "attrs" -> JObject(attrs.toList.map { case (k, v) => k -> (JString(v): JValue) }),
-      "date_range" -> dateRange.map { case (a, b) =>
-        JArray(List(JLong(a), JLong(b))) }.getOrElse(JNull),
-      "update_in_progress" -> JBool(updateInProgress),
-      "update_previous_end_us" -> updatePreviousEndUs.map(JLong(_)).getOrElse(JNull),
-      "update_is_append_only" -> updateIsAppendOnly.map(JBool(_)).getOrElse(JNull),
-      "cadence_bounds_us" -> cadenceBoundsUs.map { case (a, b) =>
-        JArray(List(JLong(a), JLong(b))) }.getOrElse(JNull))
-    JsonMethods.pretty(JsonMethods.render(JObject(fields)))
-  }
 }
 
 object DatasetDescriptor {
@@ -133,48 +114,5 @@ object DatasetDescriptor {
     case s: Seq[_] => JsonMethods.compact(JsonMethods.render(
       JArray(s.toList.map(x => JString(String.valueOf(x)): JValue))))
     case other => String.valueOf(other)
-  }
-
-  def fromJson(json: String): DatasetDescriptor = {
-    val j = JsonMethods.parse(json)
-    def str(k: String) = (j \ k) match { case JString(s) => s; case x => x.values.toString }
-    def lng(k: String) = (j \ k) match {
-      case JInt(i) => i.toLong; case JLong(l) => l
-      case x => x.values.toString.toLong
-    }
-    def optD(k: String) = (j \ k) match {
-      case JDouble(d) => Some(d); case JInt(i) => Some(i.toDouble)
-      case JDecimal(d) => Some(d.toDouble); case _ => None
-    }
-    DatasetDescriptor(
-      name = str("name"),
-      dataVar = str("data_var"),
-      category = Category.fromName(str("category")),
-      missingValue = optD("missing_value"),
-      cadenceUs = lng("cadence_us"),
-      chunk = ChunkGrid(lng("time_bucket_us"), lng("max_records_per_file")),
-      attrs = (j \ "attrs") match {
-        case JObject(fs) => fs.map { case (k, v) => k -> v.values.toString }.toMap
-        case _ => Map.empty
-      },
-      dateRange = (j \ "date_range") match {
-        case JArray(List(a, b)) =>
-          Some((a.values.toString.toLong, b.values.toString.toLong))
-        case _ => None
-      },
-      updateInProgress = (j \ "update_in_progress") match {
-        case JBool(b) => b; case _ => false
-      },
-      updatePreviousEndUs = (j \ "update_previous_end_us") match {
-        case JInt(i) => Some(i.toLong); case JLong(l) => Some(l); case _ => None
-      },
-      updateIsAppendOnly = (j \ "update_is_append_only") match {
-        case JBool(b) => Some(b); case _ => None
-      },
-      cadenceBoundsUs = (j \ "cadence_bounds_us") match {
-        case JArray(List(a, b)) =>
-          Some((a.values.toString.toLong, b.values.toString.toLong))
-        case _ => None
-      })
   }
 }

@@ -20,13 +20,13 @@ object EncodingSurgery {
 
   def rewriteCoordinate(store: GriddedStore, coord: String,
                         f: Column => Column): DatasetDescriptor = {
-    val pd = store.readDescriptor().getOrElse(
+    val pm = store.manifest().getOrElse(
       throw new IllegalStateException("no dataset to modify"))
-    if (pd.updateInProgress)
+    if (pm.descriptor.updateInProgress)
       throw new IllegalStateException(
         "store has an update in progress (crashed writer?); repair first")
 
-    // fixed-base two-phase claim (see GriddedStore.writeDescriptor): a
+    // fixed-base two-phase commit (see GriddedStore.commitAt): a
     // concurrent mutation collides on the claim file and exactly one
     // wins. Snapshot BOTH the data and the descriptor from the version
     // ladder, not the (possibly lagging) pointer — a surgery racing a
@@ -34,7 +34,7 @@ object EncodingSurgery {
     // the pre-update metadata (e.g. a stale dateRange). Same anchoring
     // as update()/compact() (see GriddedStore.latestCommittedVersion).
     val base = store.latestVersionNumber()
-    val a = store.anchor(pd)
+    val a = store.anchor(base, pm)
     val d = a.descriptor
     require(coord != d.dataVar,
       s"refusing to modify data variable ${d.dataVar}") // metadata.py:858-866
@@ -46,7 +46,7 @@ object EncodingSurgery {
       s"refusing to rewrite the time dimension ${d.timeDim}; " +
         "use update()/rebuild for time-axis changes")
     val rewritten = a.scan().withColumn(coord, f(col(coord)))
-    store.claimInProgress(base, d, Some(a.files), a.schema)
+    store.commitAt(base + 1, a.claim)
     // A full-store rewrite under the manifest protocol: write the
     // rewritten rows as NEW files next to the old ones (via writeBuckets,
     // so the surgered store keeps the sorted row-group min/max skipping
@@ -55,12 +55,12 @@ object EncodingSurgery {
     // the old manifest — and the old files are retired by vacuum().
     val fresh = store.writeBuckets(rewritten, d)
     val committed = d.copy(updateInProgress = false)
-    // `f` may change the coordinate's type: the commit infers the schema
-    // from the rewritten files rather than carrying the old one forward,
-    // and a rewritten latitude or longitude moves the bbox, so it is
-    // recomputed from the rewritten frame
-    store.commitAtBase(base, committed, Some(fresh),
-      bbox = GriddedStore.bboxOf(rewritten))
+    // `f` may change the coordinate's type: the commit records no schema,
+    // so commitAt infers it from the rewritten files rather than carrying
+    // the old one forward, and a rewritten latitude or longitude moves
+    // the bbox, so it is recomputed from the rewritten frame
+    store.commitAt(base + 2,
+      GridManifest(committed, Some(fresh), bbox = GriddedStore.bboxOf(rewritten)))
     committed
   }
 }

@@ -5,7 +5,6 @@ import graft.operators.UpdatePlanner
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Chunk-aligned, incrementally-updatable parquet store for tall gridded
   * data — the Spark-native analog of the reference's Zarr write paths
@@ -13,7 +12,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout:
   * {{{
-  *   <root>/_descriptor.json        committed metadata (the .zmetadata analog)
+  *   <root>/_versions/vNNNNNN.json  one claimed manifest per version
+  *   <root>/_descriptor.json        the pointer: the committed manifest
   *   <root>/data/time_bucket=N/...  directory-partitioned parquet
   * }}}
   *
@@ -45,6 +45,8 @@ import org.apache.spark.sql.types.StructType
   *    update only adds or replaces cells, so its bbox is the anchor's
   *    widened by the update's (folded into the planning aggregate).
   *
+  * A manifest ([[GridManifest]]) is the descriptor (the .zmetadata
+  * analog) plus the version's pinned files, data schema and bbox.
   * Writes use a two-phase descriptor commit (`update_in_progress`,
   * `publish.py:152-180`): readers treat a store whose descriptor has
   * `updateInProgress=true` as mid-update.
@@ -78,16 +80,41 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
   /** `store.has_existing` (`utils/store.py`). */
   def hasExisting: Boolean = log.hasPointer
 
-  def readDescriptor(): Option[DatasetDescriptor] =
-    log.readPointer().map(DatasetDescriptor.fromJson)
+  /** The committed manifest. Reads resolve through the pointer, not the
+    * claim listing: a crashed commit's zero-byte/partial claim file must
+    * never redirect or brick `read()` — the pointer swap is atomic, so
+    * this is always a whole committed manifest. */
+  def manifest(): Option[GridManifest] = log.readPointer().map(GridManifest.parse)
 
-  /** Data-file list pinned by the COMMITTED pointer. Reads resolve
-    * through the pointer, not the claim listing: a crashed commit's
-    * zero-byte/partial claim file must never redirect or brick
-    * `read()` — the pointer swap is atomic, so this is always a whole
-    * committed manifest. */
-  def snapshotFiles(): Option[Seq[String]] =
-    log.readPointer().flatMap(extractFiles)
+  /** Manifest version `v` — metadata and data time travel (the
+    * IPNS-pointer-history analog; the reference walks item `prev` links
+    * for the same need). None when `v` was never claimed and for a
+    * zero-byte/partial claim left by a crashed commit; a claim that
+    * fails its digest throws. */
+  def manifestAt(v: Long): Option[GridManifest] =
+    log.readClaim(v).flatMap(j => scala.util.Try(GridManifest.parse(j)).toOption)
+
+  def readDescriptor(): Option[DatasetDescriptor] = manifest().map(_.descriptor)
+
+  /** Data-file list pinned by the COMMITTED pointer. */
+  def snapshotFiles(): Option[Seq[String]] = manifest().flatMap(_.files)
+
+  def readDescriptorAt(v: Long): Option[DatasetDescriptor] = manifestAt(v).map(_.descriptor)
+
+  /** Root-relative data-file list pinned by manifest version `v`. None
+    * for versions written before file tracking (legacy), a fresh store,
+    * or an unparseable crashed-commit claim. */
+  def snapshotFilesAt(v: Long): Option[Seq[String]] = manifestAt(v).flatMap(_.files)
+
+  /** The committed pointer's bbox and date range — the STAC extent as
+    * recorded by the commit, read without touching data. None when the
+    * manifest records no bbox (see [[GridManifest]]). */
+  def committedExtent(): Option[(Bbox, (Long, Long))] =
+    manifest().flatMap(m => for (b <- m.bbox; r <- m.descriptor.dateRange) yield (b, r))
+
+  /** All manifest versions, ascending. */
+  def descriptorHistory(): Seq[(Long, DatasetDescriptor)] =
+    (1L to latestVersionNumber()).flatMap(v => readDescriptorAt(v).map(v -> _))
 
   // ---- versioned descriptor manifest ------------------------------------
 
@@ -106,40 +133,36 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * anchor to this instead; readers keep the cheap pointer. 0 when no
     * committed version exists (fresh store or legacy layout). */
   private[sources] def latestCommittedVersion(): Long =
-    latestCommitted().fold(0L)(_._1)
+    committedAtOrBelow(latestVersionNumber()).fold(0L)(_._1)
 
-  /** [[latestCommittedVersion]] with its manifest bytes, read once. */
-  private def latestCommitted(): Option[(Long, String)] =
-    (latestVersionNumber() to 1L by -1L).iterator
-      .map(v => v -> log.readClaim(v))
-      .collectFirst { case (v, Some(j)) if parseDescriptor(j).exists(!_.updateInProgress) =>
-        v -> j }
+  /** The newest committed claim numbered `v` or lower, with its manifest. */
+  private def committedAtOrBelow(v: Long): Option[(Long, GridManifest)] =
+    (v to 1L by -1L).iterator.map(n => n -> manifestAt(n))
+      .collectFirst { case (n, Some(m)) if !m.descriptor.updateInProgress => n -> m }
 
-  private def parseDescriptor(json: String): Option[DatasetDescriptor] =
-    scala.util.Try(DatasetDescriptor.fromJson(json)).toOption
-
-  /** The writer-side snapshot of a mutation: ONE committed manifest —
-    * the latest committed version, or the pointer when none exists
-    * (legacy layout) — from which descriptor, file list, data schema and
-    * data scan all come. `fallback` is the descriptor used when that
-    * manifest carries none (the pointer's). */
-  private[sources] final class Anchor(json: Option[String], fallback: DatasetDescriptor) {
-    val descriptor: DatasetDescriptor = json.flatMap(parseDescriptor).getOrElse(fallback)
+  /** The writer-side snapshot of a mutation: ONE committed manifest,
+    * from which descriptor, file list, data schema and data scan all
+    * come. Its commits are copies of [[manifest]]. */
+  private[sources] final class Anchor(val manifest: GridManifest) {
+    def descriptor: DatasetDescriptor = manifest.descriptor
     /** The pinned file list; a legacy manifest pins none, so the data
       * directory's listing stands in. */
-    lazy val files: Seq[String] =
-      json.flatMap(extractFiles).getOrElse(listDataFiles(None).toSeq)
-    /** The recorded data schema; None for manifests older than the field. */
-    val schema: Option[StructType] = json.flatMap(extractSchema)
-    def scan(): DataFrame = pinnedScan(json)
+    lazy val files: Seq[String] = manifest.files.getOrElse(listDataFiles(None).toSeq)
+    def scan(): DataFrame = pinnedScan(Some(manifest))
     /** The recorded bbox; a manifest older than the field computes it
       * from its data once, and the mutation's commit records it. */
-    lazy val bbox: Option[Bbox] =
-      json.flatMap(extractBbox).orElse(GriddedStore.bboxOf(scan()))
+    lazy val bbox: Option[Bbox] = manifest.bbox.orElse(GriddedStore.bboxOf(scan()))
+    /** The mutation's first phase, claimed at `base + 1` before any data
+      * write: the same pin, schema and bbox under the in-progress flag. */
+    def claim: GridManifest = manifest.inProgress.copy(files = Some(files))
   }
 
-  private[sources] def anchor(fallback: DatasetDescriptor): Anchor =
-    new Anchor(latestCommitted().map(_._2).orElse(log.readPointer()), fallback)
+  /** The anchor of a mutation that captured `base` (the
+    * `latestVersionNumber()` it claims above): the newest committed claim
+    * at or below `base` (see [[latestCommittedVersion]]), else the
+    * `pointer` (legacy layout). */
+  private[sources] def anchor(base: Long, pointer: GridManifest): Anchor =
+    new Anchor(committedAtOrBelow(base).fold(pointer)(_._2))
 
   /** Recover from a crashed writer: re-point the committed pointer at
     * the latest COMMITTED manifest, clearing a stuck in-progress flag.
@@ -164,164 +187,53 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
           "(crashed during its initial write?); rebuild with writeInitial")
     // re-publish the committed manifest verbatim (file list and schema
     // included)
-    DatasetDescriptor.fromJson(log.republish(v))
+    GridManifest.parse(log.republish(v)).descriptor
   }
-
-  /** Descriptor as of manifest version `v` — metadata time travel (the
-    * IPNS-pointer-history analog; the reference walks item `prev` links
-    * for the same need). None for a zero-byte/partial claim left by a
-    * crashed commit. */
-  def readDescriptorAt(v: Long): Option[DatasetDescriptor] =
-    log.readClaim(v).flatMap(parseDescriptor)
-
-  /** Root-relative data-file list pinned by manifest version `v`. None
-    * for versions written before file tracking (legacy), a fresh store,
-    * or an unparseable crashed-commit claim. */
-  def snapshotFilesAt(v: Long): Option[Seq[String]] =
-    log.readClaim(v).flatMap(extractFiles)
-
-  private def extractFiles(json: String): Option[Seq[String]] =
-    scala.util.Try(org.json4s.jackson.JsonMethods.parse(json) \ "files")
-      .toOption.flatMap {
-        case org.json4s.JArray(xs) =>
-          Some(xs.collect { case org.json4s.JString(s) => s })
-        case _ => None
-      }
-
-  /** Data schema recorded by the manifest (Spark DataType JSON) — the
-    * committed-empty read path builds its zero-row frame from THIS, so
-    * an empty-pin store stays readable after vacuum reclaims every
-    * unpinned file under data/ (directory schema inference has nothing
-    * left to infer from). None for manifests older than the field. */
-  private def extractSchema(json: String): Option[StructType] =
-    scala.util.Try(org.json4s.jackson.JsonMethods.parse(json) \ "data_schema")
-      .toOption.flatMap {
-        case org.json4s.JString(s) => scala.util.Try(
-          org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[StructType]).toOption
-        case _ => None
-      }
-
-  /** Spatial bbox recorded by a committed data manifest. None for
-    * manifests older than the field, in-progress claims and explicit
-    * file-list commits through [[writeDescriptor]]. */
-  private def extractBbox(json: String): Option[Bbox] =
-    scala.util.Try(org.json4s.jackson.JsonMethods.parse(json) \ "bbox").toOption.collect {
-      case org.json4s.JArray(List(org.json4s.JDouble(w), org.json4s.JDouble(s),
-          org.json4s.JDouble(e), org.json4s.JDouble(n))) => Bbox(w, s, e, n)
-    }
-
-  /** The committed pointer's bbox and date range — the STAC extent as
-    * recorded by the commit, read without touching data. None when the
-    * manifest records no bbox (see [[extractBbox]]). */
-  def committedExtent(): Option[(Bbox, (Long, Long))] =
-    log.readPointer().flatMap(j => for {
-      b <- extractBbox(j)
-      d <- parseDescriptor(j)
-      r <- d.dateRange
-    } yield (b, r))
 
   /** The data of one manifest (`None`: no manifest, i.e. legacy), read
     * through [[SnapshotLog.scan]] with the manifest-recorded schema. */
-  private def pinnedScan(json: Option[String]): DataFrame =
-    log.scan(json.flatMap(extractFiles), json.flatMap(extractSchema), dataPath,
-      basePath = Some(dataPath))
+  private def pinnedScan(m: Option[GridManifest]): DataFrame =
+    log.scan(m.flatMap(_.files), m.flatMap(_.dataSchema), dataPath, basePath = Some(dataPath))
 
-  /** All manifest versions, ascending. */
-  def descriptorHistory(): Seq[(Long, DatasetDescriptor)] =
-    (1L to latestVersionNumber()).flatMap(v => readDescriptorAt(v).map(v -> _))
-
-  /** Versioned atomic descriptor commit: the next manifest version is
-    * claimed and the pointer `_descriptor.json` swapped to it, the
-    * two-layer commit of [[SnapshotLog]].
+  /** Metadata-only commit (`store.write_metadata_only`,
+    * `store.py:702-717`): the next version after the ladder's newest
+    * pins the COMMITTED POINTER's files, schema and bbox under
+    * descriptor `d` (not the latest claim's — an orphaned claim from a
+    * crashed commit has no committed standing). An explicit `files`
+    * list keeps the pointer's schema and records no bbox: the extent
+    * falls back to a scan of the pinned data.
     *
-    * The metadata-only update path (`store.write_metadata_only`,
-    * `store.py:702-717`). DATA mutations must NOT use this: they claim
-    * FIXED version numbers captured at mutation start
-    * (`claimInProgress`/`commitAtBase`), so two interleaved mutations
-    * collide on the same claim file and exactly one wins — recomputing
-    * `latest` at commit time here would let the slower writer commit a
-    * manifest built from its stale file-list snapshot, silently
-    * dropping the faster writer's files.
-    *
-    * `files` is the data-file list the new version pins; `None` carries
-    * the COMMITTED POINTER's list — and its bbox — forward (not the
-    * latest claim's — an orphaned claim from a crashed commit has no
-    * committed standing). An explicit list records no bbox: the
-    * extent falls back to a scan of the pinned data. */
+    * DATA mutations must NOT use this: they claim FIXED version numbers
+    * captured at mutation start ([[commitAt]] `base + 1`, `base + 2`),
+    * so two interleaved mutations collide on the same claim file and
+    * exactly one wins — numbering at commit time here would let the
+    * slower writer commit a manifest built from its stale file-list
+    * snapshot, silently dropping the faster writer's files. */
   def writeDescriptor(d: DatasetDescriptor,
-                      files: Option[Seq[String]] = None): Unit = files match {
-    case Some(_) => writeDescriptorAsVersion(latestVersionNumber() + 1, d, files)
-    case None =>
-      val j = log.readPointer()
-      writeDescriptorAsVersion(latestVersionNumber() + 1, d,
-        j.flatMap(extractFiles), bbox = j.flatMap(extractBbox))
+                      files: Option[Seq[String]] = None): Unit = {
+    val pointer = manifest().getOrElse(GridManifest(d)).copy(descriptor = d)
+    commitAt(latestVersionNumber() + 1,
+      files.fold(pointer)(fl => pointer.copy(files = Some(fl), bbox = None)))
   }
 
-  /** First phase of a data mutation: claim `base + 1` with the
-    * in-progress flag, carrying the committed file list forward (no
-    * bbox: the extent is published from committed manifests). `base`
-    * MUST be the `latestVersionNumber()` the mutation captured before
-    * its guards ran — a concurrent mutation that claimed the same
-    * number first throws ConcurrentModificationException HERE, before
-    * any data write. */
-  private[sources] def claimInProgress(base: Long, d: DatasetDescriptor,
-                                       files: Option[Seq[String]] = None,
-                                       schema: Option[StructType] = None): Unit =
-    writeDescriptorAsVersion(base + 1, d.copy(updateInProgress = true),
-      files.orElse(snapshotFiles()), schema)
-
-  /** Second phase: the committed manifest at `base + 2`, recording the
-    * spatial `bbox` of the data it pins. */
-  private[sources] def commitAtBase(base: Long, d: DatasetDescriptor,
-                                    files: Option[Seq[String]],
-                                    schema: Option[StructType] = None,
-                                    bbox: Option[Bbox] = None): Unit =
-    writeDescriptorAsVersion(base + 2, d, files.orElse(snapshotFiles()), schema, bbox)
-
-  /** The commit body at a FIXED version — two writers that both read the
-    * same latest version race to claim the same file here, and exactly
-    * one wins. Exposed package-private so the race is testable without a
-    * second process.
+  /** The one commit: claim version `v` with `next` and swap the pointer
+    * to it, the two-layer commit of [[SnapshotLog]]. A mutation claims
+    * `base + 1` (its anchor's [[Anchor.claim]]) before writing data and
+    * commits at `base + 2`; two writers that captured the same base
+    * race to claim the same file, and the loser gets
+    * ConcurrentModificationException before touching the pointer.
     *
-    * `schema` is the data schema the manifest records. Mutations that
-    * keep the columns (update, compact) pass their anchor's, so the
-    * commit reads no footer; when None, a non-empty pin derives it from
-    * the pinned files (one inference job — writeInitial, surgery and
-    * legacy anchors) and an empty pin carries the committed pointer's
-    * forward. `bbox` is recorded beside it when finite (JSON has no
-    * literal for NaN or ±Infinity; such a store's extent falls back to a
-    * scan). */
-  private[sources] def writeDescriptorAsVersion(
-      version: Long, d: DatasetDescriptor,
-      files: Option[Seq[String]] = None,
-      schema: Option[StructType] = None,
-      bbox: Option[Bbox] = None): Unit = {
-    // the version manifest = descriptor fields + the pinned file list +
-    // the data schema (Spark DataType JSON — read back by every pinned
-    // scan, and by the committed-empty path, which must not depend on
-    // data/ still containing inferable files); DatasetDescriptor.fromJson
-    // ignores the extra fields on read-back.
-    val json = files match {
-      case Some(fl) =>
-        import org.json4s._
-        val schemaJson: Option[String] = schema.map(_.json).orElse(
-          if (fl.nonEmpty) scala.util.Try(
-            spark.read.option("basePath", dataPath)
-              .parquet(fl.map(f => s"$root/$f"): _*).schema.json).toOption
-          else log.readPointer().flatMap(extractSchema).map(_.json))
-        val base = jackson.JsonMethods.parse(d.toJson).asInstanceOf[JObject]
-        val withFiles = base.obj :+
-          ("files" -> (JArray(fl.sorted.map(JString(_)).toList): JValue))
-        val withSchema = schemaJson.fold(withFiles)(s => withFiles :+
-          ("data_schema" -> (JString(s): JValue)))
-        jackson.JsonMethods.pretty(jackson.JsonMethods.render(JObject(
-          bbox.filter(_.toArray.forall(v => !v.isNaN && !v.isInfinite)).fold(withSchema)(b =>
-            withSchema :+ ("bbox" -> (JArray(b.toArray.toList.map(JDouble(_))): JValue))))))
-      case None => d.toJson
-    }
-    log.commit(version, json)
-  }
+    * The file list is written sorted and a non-finite bbox is dropped.
+    * A non-empty pin without a recorded schema derives it from the
+    * pinned files: one footer-inference job (writeInitial, surgery and
+    * legacy anchors); every other commit copies its anchor's. */
+  private[sources] def commitAt(v: Long, next: GridManifest): Unit =
+    log.commit(v, next.copy(
+      files = next.files.map(_.sorted),
+      dataSchema = next.dataSchema.orElse(next.files.filter(_.nonEmpty).flatMap(fl =>
+        scala.util.Try(spark.read.option("basePath", dataPath)
+          .parquet(fl.map(f => s"$root/$f"): _*).schema).toOption)),
+      bbox = next.bbox.filter(_.toArray.forall(x => !x.isNaN && !x.isInfinite))).json)
 
   /** Lazy scan of the store as of the COMMITTED POINTER — reads exactly
     * the pinned file list, so uncommitted / crashed-writer / retired
@@ -330,24 +242,24 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * Partition pruning applies to any time_bucket / time predicates
     * stacked on top (`basePath` keeps the directory-partition column
     * live on an explicit file list). */
-  def read(): DataFrame = pinnedScan(log.readPointer())
+  def read(): DataFrame = pinnedScan(manifest())
 
   /** The store as of manifest version `v` — data time travel. Valid
     * while `v` is inside the `vacuum` retention window; reading a
     * vacuumed version fails on the missing files. Falls back to a
     * directory scan for pre-file-tracking (legacy) versions. */
-  def readAt(v: Long): DataFrame = pinnedScan(log.readClaim(v))
+  def readAt(v: Long): DataFrame = pinnedScan(manifestAt(v))
 
   /** [[read]] confined to the given times: pruned to their buckets
     * (computed on the driver, [[ChunkGrid.bucketOf]]) and to `time IN
     * times`, so a read-back of a few sampled cells opens only their
     * buckets' files and skips row groups by the time statistics. */
   def readTimes(times: Seq[Long]): DataFrame = {
-    val j = log.readPointer()
-    val d = j.map(DatasetDescriptor.fromJson).getOrElse(
+    val m = manifest().getOrElse(
       throw new IllegalStateException(s"no existing dataset at $root"))
+    val d = m.descriptor
     val ts = times.distinct
-    pinnedScan(j).filter(
+    pinnedScan(Some(m)).filter(
       col("time_bucket").isin(ts.map(ChunkGrid.bucketOf(_, d.chunk.timeBucketUs)).distinct: _*) &&
         col(d.timeDim).isin(ts: _*))
   }
@@ -392,14 +304,14 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * succeeds means the real run would have, too). */
   def vacuum(retainLast: Int, dryRun: Boolean): Seq[String] = {
     require(retainLast >= 1, "must retain at least the latest version")
-    val d = readDescriptor().getOrElse(
+    val pm = manifest().getOrElse(
       throw new IllegalStateException(s"no existing dataset at $root"))
-    if (d.updateInProgress)
+    if (pm.descriptor.updateInProgress)
       throw new IllegalStateException(
         s"store at $root has an update in progress; vacuum would delete " +
           "its in-flight files")
     val fence = latestVersionNumber()
-    val pointerFiles = snapshotFiles().getOrElse(
+    val pointerFiles = pm.files.getOrElse(
       throw new IllegalStateException(
         s"committed manifest records no file list (legacy store); " +
           "vacuum would treat every data file as an orphan"))
@@ -442,23 +354,19 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * consumer. */
   def changes(fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"changes($fromV, $toV): fromV must be <= toV")
-    def pinned(v: Long): Set[String] = snapshotFilesAt(v).getOrElse(
-      throw new IllegalArgumentException(
-        s"manifest v$v at $root pins no file list (legacy or never " +
-          "committed); the commit diff is undefined")).toSet
-    val from = pinned(fromV)
-    val to = pinned(toV)
-    def tagged(files: Seq[String], tag: String): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(spark.read.option("basePath", dataPath)
-        .parquet(files.map(f => s"$root/$f"): _*)
-        .withColumn("_change_type", lit(tag)))
-    val parts = tagged((to -- from).toSeq.sorted, "insert").toSeq ++
-      tagged((from -- to).toSeq.sorted, "delete")
-    parts.reduceOption(_ unionByName _).getOrElse {
-      // identical pins: empty frame with the data schema + change column
-      read().filter(lit(false)).withColumn("_change_type", lit(""))
-    }
+    def pinned(v: Long): (GridManifest, Set[String]) =
+      manifestAt(v).flatMap(m => m.files.map(m -> _.toSet)).getOrElse(
+        throw new IllegalArgumentException(
+          s"manifest v$v at $root pins no file list (legacy or never " +
+            "committed); the commit diff is undefined"))
+    val (fromM, from) = pinned(fromV)
+    val (toM, to) = pinned(toV)
+    // each side reads with its own version's recorded schema: building
+    // the diff infers nothing, and an empty side is a zero-row frame
+    def tagged(m: GridManifest, files: Set[String], tag: String): DataFrame =
+      log.scan(Some(files.toSeq.sorted), m.dataSchema, dataPath, basePath = Some(dataPath))
+        .withColumn("_change_type", lit(tag))
+    tagged(toM, to -- from, "insert").unionByName(tagged(fromM, from -- to, "delete"))
   }
 
   /** Row-level NET changes between two versions: [[changes]] with the
@@ -566,14 +474,15 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       throw new IllegalArgumentException("initial dataset is empty")
     val bbox = GriddedStore.bboxAt(stats, 3)
     val base = latestVersionNumber()
-    claimInProgress(base, d)
+    // a rebuild's claim keeps the pointer's pin: readers stay on it
+    commitAt(base + 1, manifest().fold(GridManifest(d))(_.copy(descriptor = d)).inProgress)
     val fresh = writeBuckets(p, d)
     val committed = d.copy(
       dateRange = Some((stats.getLong(0), stats.getLong(1))),
       updateInProgress = false,
       updateIsAppendOnly = None,
       updatePreviousEndUs = None)
-    commitAtBase(base, committed, Some(fresh), bbox = bbox)
+    commitAt(base + 2, GridManifest(committed, Some(fresh), bbox = bbox))
     committed
   }
 
@@ -583,25 +492,24 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * reference's rechunk-alignment concern, SURVEY §4 "rechunk-alignment
     * regression") without touching untargeted buckets. */
   def compact(buckets: Seq[Long] = Nil): DatasetDescriptor = {
-    val pd = readDescriptor().getOrElse(
+    val pm = manifest().getOrElse(
       throw new IllegalStateException(s"no existing dataset at $root"))
     // compact must not launder a crashed writer's flag into a "clean"
     // store — it's a mutation path like update()/surgery.
-    if (pd.updateInProgress)
+    if (pm.descriptor.updateInProgress)
       throw new IllegalStateException(
         s"store at $root has an update in progress (crashed writer?); " +
           "repair or rebuild before compacting")
     val base = latestVersionNumber()
     // version-ladder snapshot, not the pointer (see latestCommittedVersion)
-    val a = anchor(pd)
+    val a = anchor(base, pm)
     val d = a.descriptor
-    val committedFiles = a.files
     val target =
       if (buckets.nonEmpty) buckets
       else a.scan().select(col("time_bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq
     // compaction rewrites rows, never columns: the schema carries forward
-    claimInProgress(base, d, Some(committedFiles), a.schema)
+    commitAt(base + 1, a.claim)
     // One distributed pass: the scan reads the pinned (old) files and the
     // write creates new ones next to them — no staging table, no
     // self-overwrite cycle, because the old files outlive the job and are
@@ -612,10 +520,9 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       .select((d.dims :+ d.dataVar).map(col) :+ col("time_bucket"): _*)
     val fresh = writeBuckets(src, d)
     val targetDirs = target.map(b => s"data/time_bucket=$b/")
-    val manifest = committedFiles
-      .filterNot(f => targetDirs.exists(f.startsWith)) ++ fresh
+    val pinned = a.files.filterNot(f => targetDirs.exists(f.startsWith)) ++ fresh
     val committed = d.copy(updateInProgress = false)
-    commitAtBase(base, committed, Some(manifest), a.schema, a.bbox)
+    commitAt(base + 2, a.manifest.copy(descriptor = committed, files = Some(pinned), bbox = a.bbox))
     committed
   }
 
@@ -635,22 +542,22 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * commit records the anchor's bbox widened by it.
     */
   def update(updateDf: DataFrame, allowOverwrite: Boolean = true): DatasetDescriptor = {
-    val pd = readDescriptor().getOrElse(
+    val pm = manifest().getOrElse(
       throw new IllegalStateException(s"no existing dataset at $root"))
     // A crashed writer leaves updateInProgress=true; refuse to stack a new
     // update on a half-written store (the reader-visible face of the
     // two-phase flag, `publish.py:152-180`).
-    if (pd.updateInProgress)
+    if (pm.descriptor.updateInProgress)
       throw new IllegalStateException(
         s"store at $root has an update in progress — either a LIVE " +
           "concurrent writer (retry shortly) or a crashed one (the flag " +
           "never clears; repair or rebuild). Reads are unaffected either " +
           "way: the pointer still pins the last committed file list")
-    val base = latestVersionNumber() // fixed claim base: see writeDescriptor doc
+    val base = latestVersionNumber() // fixed claim base: see commitAt
     // snapshot ANCHORED to the version ladder, never the pointer (see
     // latestCommittedVersion): descriptor, data frame, file list and
     // schema all come from the same committed manifest
-    val a = anchor(pd)
+    val a = anchor(base, pm)
     val d = a.descriptor
     val t = d.timeDim
     def bucketOf(time: Long): Long = ChunkGrid.bucketOf(time, d.chunk.timeBucketUs)
@@ -669,7 +576,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       // table, no FILE_NOT_EXIST window), pinned readers are untouched,
       // and a crash leaves only orphans for vacuum. An update rewrites
       // rows, never columns, so the anchor's schema carries forward.
-      claimInProgress(base, d, Some(a.files), a.schema)
+      commitAt(base + 1, a.claim)
 
       val fresh = scala.collection.mutable.ArrayBuffer.empty[String]
       // one entry per affected bucket, computed from the planned times
@@ -699,8 +606,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       // New manifest: committed files minus the replaced insert buckets,
       // plus exactly the files the two writes above created.
       val insertDirs = insertBuckets.map(b => s"data/time_bucket=$b/")
-      val manifest = a.files
-        .filterNot(f => insertDirs.exists(f.startsWith)) ++ fresh.toSeq
+      val pinned = a.files.filterNot(f => insertDirs.exists(f.startsWith)) ++ fresh.toSeq
 
       val committed = d.copy(
         dateRange = Some((dsStart, math.max(dsEnd, plan.hi))),
@@ -710,7 +616,7 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
       // exact: survivorship is cell-keyed, so every replaced cell's
       // coordinates are also the update's
       val bbox = (a.bbox ++ updateBbox).reduceOption(_ union _)
-      commitAtBase(base, committed, Some(manifest), a.schema, bbox)
+      commitAt(base + 2, a.manifest.copy(descriptor = committed, files = Some(pinned), bbox = bbox))
       committed
     } finally p.unpersist()
   }

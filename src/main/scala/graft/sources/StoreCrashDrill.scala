@@ -9,11 +9,11 @@ import org.apache.hadoop.fs.Path
   *
   * The simulated crash is byte-faithful to the real failure mode
   * (reference analog: the stuck `update_in_progress` flag of
-  * `utils/publish.py:152-180`): `claimInProgress` has already claimed
-  * version `base+1` and swapped the pointer to the in-progress
-  * descriptor, some data files of the doomed attempt may already be on
-  * disk, and `commitAtBase` never ran — exactly where update()/compact()
-  * die if the JVM is killed mid-write.
+  * `utils/publish.py:152-180`): the first-phase `commitAt` has already
+  * claimed version `base+1` and swapped the pointer to the in-progress
+  * manifest, some data files of the doomed attempt may already be on
+  * disk, and the second-phase `commitAt(base+2, ...)` never ran —
+  * exactly where update()/compact() die if the JVM is killed mid-write.
   *
   * `private[graft]` on purpose (the reference keeps its failure drills
   * in tests, `tests/system/test_chirps.py`): these methods wedge a
@@ -27,11 +27,11 @@ object StoreCrashDrill {
     * see the last committed pin, and `repair()` is the documented way
     * out. Requires a clean committed store (like a real mutation). */
   private[graft] def claimWithoutCommit(store: GriddedStore): Unit = {
-    val pd = store.readDescriptor().getOrElse(throw new IllegalStateException(
+    val pm = store.manifest().getOrElse(throw new IllegalStateException(
       s"no existing dataset at ${store.root}"))
-    require(!pd.updateInProgress,
+    require(!pm.descriptor.updateInProgress,
       "store already carries an in-progress flag — nothing to simulate")
-    store.claimInProgress(store.latestVersionNumber(), pd)
+    store.commitAt(store.latestVersionNumber() + 1, pm.inProgress)
   }
 
   /** Stage an orphan data file, as the crashed writer's half-finished

@@ -66,6 +66,12 @@ class GridCatalogSpec extends SparkSpec {
       s"SELECT sum(precip) FROM grid2.ds TIMESTAMP AS OF '$ts'")
       .collect()(0).getDouble(0)
     assert(byTime == old)
+    // resolving an old version takes its recorded schema: no job
+    var resolved: org.apache.spark.sql.types.StructType = null
+    assert(jobsLaunchedBy {
+      resolved = spark.sql(s"SELECT * FROM grid2.ds VERSION AS OF $v1").schema
+    } == 0)
+    assert(resolved == store.readAt(v1).schema)
   }
 
   test("DML refuses loudly; missing tables and versions error") {
@@ -123,6 +129,13 @@ class GridCatalogSpec extends SparkSpec {
       Seq(true, false, true, false))
     assert(rows.last.getInt(2) == store.snapshotFiles().get.size)
     assert(rows.last.getLong(3) == 4 * DAY_US)
+    // every row is its version's manifest: descriptor and pin (the
+    // initial claim of a fresh store pins nothing and has no range yet)
+    assert(rows.toSeq.map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2),
+        Option(r.get(3)).map(_.asInstanceOf[Long]))) ==
+      store.descriptorHistory().map { case (v, d) =>
+        (v, d.updateInProgress, store.snapshotFilesAt(v).fold(-1)(_.size),
+          d.dateRange.map(_._2)) })
     // commit times are the manifest mtimes: non-decreasing, non-zero
     val ts = spark.sql(
       "SELECT unix_micros(committed_at) FROM grid4.`h$history` ORDER BY version")

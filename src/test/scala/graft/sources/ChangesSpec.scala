@@ -34,6 +34,8 @@ class ChangesSpec extends SparkSpec {
     // correction: day 7 (bucket 1, days 5-9) rewritten
     store.update(cube(1, 2, 2, startDay = 7, valueOffset = 5000.0))
     val vCorr = store.latestVersionNumber()
+    // each side reads with its version's recorded schema: no inference job
+    assert(jobsLaunchedBy(store.changes(vApp, vCorr)) == 0)
     val corrDiff = store.changes(vApp, vCorr).cache()
     // deletes = the whole old bucket-1 generation (file granularity);
     // inserts = the merged rewrite of that bucket; both bucket-bounded

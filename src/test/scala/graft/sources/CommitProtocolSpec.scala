@@ -106,13 +106,13 @@ class CommitProtocolSpec extends SparkSpec {
       val dir = tmpDir("mocks3-race")
       val store = new GriddedStore(s"mocks3://$dir", spark)
       val d = desc("race")
-      store.writeDescriptorAsVersion(1, d, Some(Nil))
+      store.commitAt(1, GridManifest(d, files = Some(Nil)))
       // Even though the shim filesystem's create(overwrite=false) is NOT
       // exclusive (see the hazard test), the conditional store's
       // If-None-Match semantics make the second claim of version 1 lose
       // loudly, before it can touch the pointer.
       val ex = intercept[ConcurrentModificationException] {
-        store.writeDescriptorAsVersion(1, d.copy(name = "race-loser"), Some(Nil))
+        store.commitAt(1, GridManifest(d.copy(name = "race-loser"), files = Some(Nil)))
       }
       assert(ex.getMessage.contains("claimed by another writer"))
       assert(store.readDescriptor().exists(_.name == "race"))
@@ -160,7 +160,7 @@ class CommitProtocolSpec extends SparkSpec {
     // rewrite the pointer as a bare pre-digest JSON file
     java.nio.file.Files.write(
       java.nio.file.Paths.get(root, "_descriptor.json"),
-      d.toJson.getBytes("UTF-8"))
+      GridManifest(d).json.getBytes("UTF-8"))
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(root, "._descriptor.json.crc"))
     assert(store.readDescriptor().exists(_.name == "legacy"))

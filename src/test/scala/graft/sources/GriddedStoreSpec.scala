@@ -2,10 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
 
 /** Initial/append/insert protocol — the system-test storyline of the
   * reference (`tests/system/test_chirps.py`): golden-value point equality
@@ -122,7 +119,18 @@ class GriddedStoreSpec extends SparkSpec {
     val d = desc("rt").copy(attrs = Map("units" -> "mm", "source" -> "x"),
       dateRange = Some((1L, 2L)), updateIsAppendOnly = Some(true),
       updatePreviousEndUs = Some(7L), cadenceBoundsUs = Some((3L, 9L)))
-    assert(DatasetDescriptor.fromJson(d.toJson) == d)
+    assert(GridManifest.parse(GridManifest(d).json).descriptor == d)
+    // every optional field unset, then every one set
+    val bare = desc("rt-bare").copy(missingValue = None)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "time BIGINT, latitude DOUBLE, longitude DOUBLE, precip DOUBLE, time_bucket INT")
+    val full = GridManifest(d.copy(updateInProgress = true),
+      Some(Seq("data/time_bucket=0/a.parquet", "data/time_bucket=1/b.parquet")),
+      Some(schema), Some(graft.model.Bbox(17.3, -35.05, 17.6, -34.85)))
+    for (m <- Seq(GridManifest(bare), GridManifest(bare, files = Some(Nil)), full))
+      assert(GridManifest.parse(m.json) == m)
+    // an unset field is omitted, not written as null
+    assert(!GridManifest(bare).json.contains("null"))
   }
 
   test("versioned manifest: history, time travel, concurrent-writer guard") {
@@ -142,9 +150,9 @@ class GriddedStoreSpec extends SparkSpec {
     // concurrent writers: both read latest=4, both try to commit v5 —
     // the second claim must lose with ConcurrentModificationException
     val next = store.latestVersionNumber() + 1
-    store.writeDescriptorAsVersion(next, store.readDescriptor().get)
+    store.commitAt(next, GridManifest(store.readDescriptor().get))
     intercept[java.util.ConcurrentModificationException] {
-      store.writeDescriptorAsVersion(next, store.readDescriptor().get)
+      store.commitAt(next, GridManifest(store.readDescriptor().get))
     }
   }
 
@@ -270,7 +278,7 @@ class GriddedStoreSpec extends SparkSpec {
     val base = store.latestVersionNumber() // writer B's captured base
     store.update(cube(2, 2, 2, startDay = 10, valueOffset = 100.0)) // writer A
     intercept[java.util.ConcurrentModificationException] {
-      store.claimInProgress(base, d) // B's first phase — must lose
+      store.commitAt(base + 1, GridManifest(d).inProgress) // B's first phase — must lose
     }
     assert(store.read().count() == 12 * 4) // A's rows intact
   }
@@ -310,32 +318,6 @@ class GriddedStoreSpec extends SparkSpec {
       store.update(cube(1, 2, 2, startDay = 11)
         .unionByName(cube(1, 2, 2, startDay = 15)))
     }.getMessage.contains("outside cadence bounds"))
-  }
-
-  /** Spark jobs launched by `body` on this thread. Listener events are
-    * delivered in order, so once a marker job submitted after `body` has
-    * been seen, every job `body` launched has been seen too. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$group-end"), "marker job never reached the listener")
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def planDesc(end: Long) = desc("plan").copy(cadenceUs = 1L,

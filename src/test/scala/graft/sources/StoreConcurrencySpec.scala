@@ -129,8 +129,7 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(!store.repair().updateInProgress)
     // simulate a crash mid-mutation: claim swaps the pointer to an
     // in-progress manifest, then the writer dies before committing
-    store.claimInProgress(store.latestVersionNumber(),
-      store.readDescriptor().get)
+    store.commitAt(store.latestVersionNumber() + 1, store.manifest().get.inProgress)
     assert(store.readDescriptor().exists(_.updateInProgress))
     intercept[IllegalStateException] {
       store.update(cube(1, 1, 1, startDay = 2, valueOffset = 42.0))

@@ -7,10 +7,11 @@
 # manager or the dedup pipeline runs the shard-ingest cost fence (its
 # job and SQL-execution bounds, artifact parity and failed-append
 # checks). A staged change to the snapshot-manifest protocol (the
-# snapshot log, the gridded store, the manifest envelope, the commit
-# primitives) or to the grid catalog runs the append cost fence, the
-# commit-protocol spec and the shard-ingest cost fence: both versioned
-# stores commit through that code. Install with:
+# snapshot log, the gridded store, its manifest and descriptor, encoding
+# surgery, the manifest envelope, the commit primitives) or to the grid
+# catalog runs the append cost fence, the commit-protocol spec, the
+# manifest-extent spec, the grid-catalog spec and the shard-ingest cost
+# fence: both versioned stores commit through that code. Install with:
 #   ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # Skips the sbt startup when nothing it checks is staged.
 staged=$(git diff --cached --name-only)
@@ -40,9 +41,9 @@ if echo "$staged" | grep -q -E '(^|/)(etl/CorpusManager|functions/Dedup[^/]*)\.s
     exit 1
   }
 fi
-if echo "$staged" | grep -q -E '(^|/)(sources/(SnapshotLog|GriddedStore|ManifestIO|CommitProtocol)|catalog/GridCatalog)\.scala$'; then
-  echo "[pre-commit] staged snapshot-log code -> append, commit-protocol and shard-ingest fences"
-  sbt -batch "testOnly graft.etl.AppendCostFenceSpec graft.sources.CommitProtocolSpec graft.etl.ShardIngestCostFenceSpec" \
+if echo "$staged" | grep -q -E '(^|/)(sources/(SnapshotLog|GriddedStore|GridManifest|EncodingSurgery|ManifestIO|CommitProtocol)|model/DatasetDescriptor|catalog/GridCatalog)\.scala$'; then
+  echo "[pre-commit] staged snapshot-log code -> append, commit-protocol, extent, catalog and shard-ingest specs"
+  sbt -batch "testOnly graft.etl.AppendCostFenceSpec graft.sources.CommitProtocolSpec graft.sources.ManifestExtentSpec graft.catalog.GridCatalogSpec graft.etl.ShardIngestCostFenceSpec" \
       >/tmp/precommit_log.log 2>&1 || {
     echo "[pre-commit] SNAPSHOT-LOG FENCES FAILED - commit blocked. tail of log:"
     tail -20 /tmp/precommit_log.log
