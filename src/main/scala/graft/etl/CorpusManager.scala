@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.operators.Materialize
+import graft.operators.{Concurrent, Materialize}
 
 import graft.functions.{DedupFunctions, DedupPipeline, TextFunctions}
 import graft.sources.{BucketedSignatureStore, SnapshotLog}
@@ -1050,7 +1050,7 @@ class CorpusManager(
     *      later, the merged sketch write;
     *   7. the docs, sigs, bands, sketch and hashes appends (plus vecs
     *      and media when configured) and the keeper count run
-    *      concurrently ([[allOf]]); once every one has finished, ONE
+    *      concurrently ([[Concurrent.allOf]]); once every one has finished, ONE
     *      manifest pinning all of them is committed — the atomic commit
     *      point. A crash or a failed append before the commit leaves
     *      every appended file reader-invisible (orphans for [[vacuum]])
@@ -1079,7 +1079,7 @@ class CorpusManager(
     val (okQ, _) = qualityGate(newDocs)
     val (ok, _) = contaminationGate(okQ)
     // the committed scans list their pinned files while the shard pins
-    val Seq(shard, committedH, committedSigs, committedSketch) = allOf(Seq(
+    val Seq(shard, committedH, committedSigs, committedSketch) = Concurrent.allOf(Seq(
       () => ok.withColumn(HashCol, md5(col(textCol))).pinned(),
       () => scan(Hashes, Some(man)), () => scan(Sigs, Some(man)),
       () => scan(Sketch, Some(man))))
@@ -1093,7 +1093,7 @@ class CorpusManager(
     // is caught by rejectCount.
     val inCorpus = shard.select(col(idCol), col(HashCol))
       .join(committedH.select(col(idCol), col("h").as("_hc")), Seq(idCol))
-    val Seq(Seq(nAccepted, nInCorpus, mismatched), Seq(nIn)) = allOf(Seq(
+    val Seq(Seq(nAccepted, nInCorpus, mismatched), Seq(nIn)) = Concurrent.allOf(Seq(
       () => {
         val r = shard.agg(count(lit(1)))
           .crossJoin(inCorpus.agg(count(lit(1)),
@@ -1268,7 +1268,7 @@ class CorpusManager(
           mediaMaxHamming, mediaBlocksState.get._2,
           mediaBlocksTable(liveMbV), numBuckets)
       }
-    val nKept = allOf((() => keepers.count()) +: appends.map(a => () => { a(); 0L })).head
+    val nKept = Concurrent.allOf((() => keepers.count()) +: appends.map(a => () => { a(); 0L })).head
 
     val mediaBlocksPinned: Seq[String] =
       if (mediaCol.isEmpty) prev.mediaBlocks
@@ -1287,31 +1287,6 @@ class CorpusManager(
         prev.media ++ fresh(mediaPath), mediaBlocksPinned)),
       schemas = schemas))
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, drift)
-  }
-
-  /** Run `tasks` concurrently, one pool thread each, and return their
-    * results in order. Every task runs to its end before this returns
-    * or throws: the first failure is rethrown (later ones attached as
-    * suppressed) only once all have finished, so nothing is still
-    * writing when the caller releases the ingest lock. Pool threads are
-    * created here, so they inherit the caller's Spark local properties
-    * (job group, description). */
-  private def allOf[T](tasks: Seq[() => T]): Seq[T] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-    try {
-      val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
-        def call(): T = t()
-      }))
-      val results = futures.map(f => scala.util.Try(f.get()).recoverWith {
-        case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
-      })
-      val errors = results.collect { case scala.util.Failure(e) => e }
-      errors.headOption.foreach { first =>
-        errors.tail.foreach(first.addSuppressed)
-        throw first
-      }
-      results.map(_.get)
-    } finally pool.shutdown()
   }
 
   /** Streaming ingest (the corpus twin of

@@ -55,12 +55,12 @@ object EncodingSurgery {
     // the old manifest — and the old files are retired by vacuum().
     val fresh = store.writeBuckets(rewritten, d)
     val committed = d.copy(updateInProgress = false)
-    // `f` may change the coordinate's type: the commit records no schema,
-    // so commitAt infers it from the rewritten files rather than carrying
-    // the old one forward, and a rewritten latitude or longitude moves
-    // the bbox, so it is recomputed from the rewritten frame
-    store.commitAt(base + 2,
-      GridManifest(committed, Some(fresh), bbox = GriddedStore.bboxOf(rewritten)))
+    // `f` may change the coordinate's type: the commit records the
+    // rewritten frame's schema rather than carrying the old one forward,
+    // and a rewritten latitude or longitude moves the bbox, so it is
+    // recomputed from the rewritten frame
+    store.commitAt(base + 2, GridManifest(committed, Some(fresh),
+      store.pinSchema(rewritten, fresh), GriddedStore.bboxOf(rewritten)))
     committed
   }
 }

@@ -5,6 +5,7 @@ import graft.operators.UpdatePlanner
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Chunk-aligned, incrementally-updatable parquet store for tall gridded
   * data — the Spark-native analog of the reference's Zarr write paths
@@ -31,19 +32,23 @@ import org.apache.spark.sql.functions._
   *    with an existing-rows merge) — the analog of Zarr `region=` writes
   *    (`publish.py:332-371`); appends just add files/partitions.
   *  - all driver-side logic touches only the distinct time axis and the
-  *    descriptor; cell data never reaches the driver. An update collects
-  *    its own distinct times to the driver (bounded by
-  *    [[UpdatePlanner.DefaultMaxAxis]], refused above it) and plans the
-  *    insert/append split there, like the reference's in-memory time
-  *    coordinate (`prepare_update_times`, `publish.py:303-330`); a pure
-  *    append (every time after the committed end) reads no store data.
-  *  - reads and commits take the data schema from the manifest, so
-  *    neither builds a frame nor commits through a parquet footer
+  *    descriptor; cell data never reaches the driver. A write plans from
+  *    the update's [[UpdateProfile]]: one aggregate grouped by time
+  *    (bounded by [[UpdatePlanner.DefaultMaxAxis]] times, refused above
+  *    it) that `DatasetManager.parse` takes once over its pinned update
+  *    and shares with its pre-parse checks. From it an update plans the
+  *    insert/append split on the driver, like the reference's in-memory
+  *    time coordinate (`prepare_update_times`, `publish.py:303-330`), and
+  *    an initial write takes its date range and bbox; a pure append
+  *    (every time after the committed end) reads no store data.
+  *  - reads and commits take the data schema from the manifest, and the
+  *    writes that replace every file record the schema of the frame they
+  *    wrote, so none builds a frame or commits through a parquet footer
   *    inference job.
   *  - every data commit records the spatial bbox of what it pins, so the
   *    STAC extent is the manifest's bbox and date range, not a scan: an
   *    update only adds or replaces cells, so its bbox is the anchor's
-  *    widened by the update's (folded into the planning aggregate).
+  *    widened by the update's profile.
   *
   * A manifest ([[GridManifest]]) is the descriptor (the .zmetadata
   * analog) plus the version's pinned files, data schema and bbox.
@@ -225,8 +230,9 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     *
     * The file list is written sorted and a non-finite bbox is dropped.
     * A non-empty pin without a recorded schema derives it from the
-    * pinned files: one footer-inference job (writeInitial, surgery and
-    * legacy anchors); every other commit copies its anchor's. */
+    * pinned files: one footer-inference job (a legacy anchor's, or a pin
+    * of only the null bucket); initial writes and surgery record
+    * [[pinSchema]], every other commit copies its anchor's. */
   private[sources] def commitAt(v: Long, next: GridManifest): Unit =
     log.commit(v, next.copy(
       files = next.files.map(_.sorted),
@@ -462,28 +468,50 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * leave a mid-crash store pointing at deleted files) and the final
     * manifest pins only the fresh files; a superseded generation is
     * retired by the swap and reclaimed by `vacuum`. */
-  def writeInitial(df: DataFrame, d: DatasetDescriptor): DatasetDescriptor = {
-    val p = prepared(df, d)
-    // One up-front aggregate gives the emptiness guard, the dateRange
-    // stats and the bbox (a single pass over the input instead of three:
-    // probe + write + agg). Empty initial data would brick the store
-    // (descriptor committed, min/max undefined) — refuse pre-mutation.
-    val stats = p.agg(min(d.timeDim),
-      (max(d.timeDim) +: count(lit(1)) +: GriddedStore.bboxAggs): _*).collect()(0)
-    if (stats.getLong(2) == 0L)
+  def writeInitial(df: DataFrame, d: DatasetDescriptor): DatasetDescriptor =
+    writeInitial(df, d, UpdateProfile.of(df, d))
+
+  /** [[writeInitial]] of a profiled frame: the profile gives the
+    * emptiness guard, the date range and the bbox, so the data is read
+    * once more, by the write (and, like an update, an axis above
+    * [[UpdatePlanner.DefaultMaxAxis]] times is refused by the profile).
+    * Empty initial data would brick the store (descriptor committed,
+    * date range undefined) — refused pre-mutation. */
+  private[graft] def writeInitial(df: DataFrame, d: DatasetDescriptor,
+                                  profile: UpdateProfile): DatasetDescriptor = {
+    if (profile.rows == 0L)
       throw new IllegalArgumentException("initial dataset is empty")
-    val bbox = GriddedStore.bboxAt(stats, 3)
+    val range = profile.dateRange.getOrElse(
+      throw new IllegalArgumentException("initial dataset has no times"))
+    val p = prepared(df, d)
     val base = latestVersionNumber()
     // a rebuild's claim keeps the pointer's pin: readers stay on it
     commitAt(base + 1, manifest().fold(GridManifest(d))(_.copy(descriptor = d)).inProgress)
     val fresh = writeBuckets(p, d)
     val committed = d.copy(
-      dateRange = Some((stats.getLong(0), stats.getLong(1))),
+      dateRange = Some(range),
       updateInProgress = false,
       updateIsAppendOnly = None,
       updatePreviousEndUs = None)
-    commitAt(base + 2, GridManifest(committed, Some(fresh), bbox = bbox))
+    commitAt(base + 2, GridManifest(committed, Some(fresh), pinSchema(p, fresh), profile.bboxAll))
     committed
+  }
+
+  /** The schema a scan of `files`, written from `written` by
+    * [[writeBuckets]], would infer from their footers and paths: the
+    * written columns as [[SnapshotLog.writtenSchema]] records them, then
+    * `time_bucket` typed by Spark's partition-value rule — IntegerType
+    * when every bucket directory of the pin holds an Int, LongType
+    * otherwise. None when the pin names no bucket value (it is empty, or
+    * holds only the null bucket); [[commitAt]] then infers. */
+  private[sources] def pinSchema(written: DataFrame, files: Seq[String]): Option[StructType] = {
+    val buckets = files.flatMap(_.split('/').collectFirst {
+      case dir if dir.startsWith("time_bucket=") => dir.stripPrefix("time_bucket=")
+    }).flatMap(_.toLongOption)
+    Option.when(buckets.nonEmpty)(StructType(
+      SnapshotLog.writtenSchema(written).filterNot(_.name == "time_bucket") :+
+        StructField("time_bucket",
+          if (buckets.forall(_.isValidInt)) IntegerType else LongType)))
   }
 
   /** Small-file compaction: rewrite the given time buckets (default all)
@@ -532,16 +560,22 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     * two-phase-commit the descriptor.
     *
     * Planning happens on the driver over the time axis only
-    * ([[GriddedStore.planUpdate]]): the update's distinct times are
-    * collected once (bounded by [[UpdatePlanner.DefaultMaxAxis]]; a larger
-    * axis is refused), and when every one of them lies after the
-    * committed end the update is a pure append that reads no store data.
-    * Otherwise one scan of the anchored snapshot, pruned to the update's
-    * `[lo, hi]`, supplies the existing times to split against. The same
-    * aggregate that collects the times gives the update's bbox; the
-    * commit records the anchor's bbox widened by it.
+    * ([[GriddedStore.planUpdate]]): the update is pinned for the call
+    * and profiled once ([[UpdateProfile]]: its distinct times, bounded by
+    * [[UpdatePlanner.DefaultMaxAxis]], a larger axis refused), and when
+    * every time lies after the committed end the update is a pure append
+    * that reads no store data. Otherwise one scan of the anchored
+    * snapshot, pruned to the update's `[lo, hi]`, supplies the existing
+    * times to split against. The profile also gives the update's bbox;
+    * the commit records the anchor's bbox widened by it.
     */
-  def update(updateDf: DataFrame, allowOverwrite: Boolean = true): DatasetDescriptor = {
+  def update(updateDf: DataFrame, allowOverwrite: Boolean = true): DatasetDescriptor =
+    update(updateDf, allowOverwrite, None)
+
+  /** [[update]] of a frame the caller has already pinned and profiled
+    * (`profiled`), or — None — one this call pins and profiles itself. */
+  private[graft] def update(updateDf: DataFrame, allowOverwrite: Boolean,
+                            profiled: Option[UpdateProfile]): DatasetDescriptor = {
     val pm = manifest().getOrElse(
       throw new IllegalStateException(s"no existing dataset at $root"))
     // A crashed writer leaves updateInProgress=true; refuse to stack a new
@@ -561,10 +595,11 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
     val d = a.descriptor
     val t = d.timeDim
     def bucketOf(time: Long): Long = ChunkGrid.bucketOf(time, d.chunk.timeBucketUs)
-    val p = prepared(updateDf, d).cache()
+    val p = prepared(updateDf, d)
+    if (profiled.isEmpty) p.cache()
     try {
-      val (times, updateBbox) = GriddedStore.collectAxisExtent(p, t)
-      val plan = GriddedStore.planUpdate(d, times,
+      val profile = profiled.getOrElse(UpdateProfile.of(p, d))
+      val plan = GriddedStore.planUpdate(d, profile.times,
         (lo, hi) => GriddedStore.collectAxis(a.scan()
           .filter(col("time_bucket").between(bucketOf(lo), bucketOf(hi)) &&
             col(t).between(lo, hi)), t),
@@ -615,10 +650,10 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
         updateIsAppendOnly = Some(plan.inserts.isEmpty))
       // exact: survivorship is cell-keyed, so every replaced cell's
       // coordinates are also the update's
-      val bbox = (a.bbox ++ updateBbox).reduceOption(_ union _)
+      val bbox = (a.bbox ++ profile.bbox).reduceOption(_ union _)
       commitAt(base + 2, a.manifest.copy(descriptor = committed, files = Some(pinned), bbox = bbox))
       committed
-    } finally p.unpersist()
+    } finally if (profiled.isEmpty) p.unpersist()
   }
 }
 
@@ -636,34 +671,19 @@ object GriddedStore {
     * above `maxAxis` is cell data, not a time axis, and is refused
     * loudly instead of being pulled onto the driver. */
   def collectAxis(df: DataFrame, key: String,
-                  maxAxis: Long = UpdatePlanner.DefaultMaxAxis): Seq[Long] =
-    axisRows(df, key, Nil, maxAxis).map(_.getLong(0))
-
-  /** [[collectAxis]] plus the spatial bbox of the rows it covers (rows
-    * with a null key are never written and are left out), from the same
-    * aggregate: one row per time carrying that time's extent, folded on
-    * the driver. */
-  private[sources] def collectAxisExtent(
-      df: DataFrame, key: String,
-      maxAxis: Long = UpdatePlanner.DefaultMaxAxis): (Seq[Long], Option[Bbox]) = {
-    val rows = axisRows(df, key, bboxAggs, maxAxis)
-    (rows.map(_.getLong(0)), rows.flatMap(bboxAt(_, 1)).reduceOption(_ union _))
+                  maxAxis: Long = UpdatePlanner.DefaultMaxAxis): Seq[Long] = {
+    val ax = df.where(col(key).isNotNull).select(col(key).cast("long")).distinct()
+      .limit(math.min(maxAxis + 1, Int.MaxValue.toLong).toInt).collect()
+    requireAxis(ax.length, key, maxAxis)
+    ax.toSeq.map(_.getLong(0))
   }
 
-  private def axisRows(df: DataFrame, key: String, aggs: Seq[Column],
-                       maxAxis: Long): Seq[Row] = {
-    val k = col(key).cast("long")
-    val nonNull = df.where(col(key).isNotNull)
-    val ax = (aggs match {
-      case Nil => nonNull.select(k).distinct()
-      case a +: more => nonNull.groupBy(k).agg(a, more: _*)
-    }).limit(math.min(maxAxis + 1, Int.MaxValue.toLong).toInt).collect()
-    require(ax.length <= maxAxis,
+  /** Refuses an axis of `n` > `maxAxis` distinct values. */
+  private[sources] def requireAxis(n: Int, key: String, maxAxis: Long): Unit =
+    require(n <= maxAxis,
       s"distinct axis for '$key' has more than $maxAxis values — the " +
         "update planner collects the time axis to the driver and is for " +
         "time axes, not cell data")
-    ax.toSeq
-  }
 
   /** min/max of longitude and latitude in [[Bbox]] order, as doubles
     * (every category's dims include both). */

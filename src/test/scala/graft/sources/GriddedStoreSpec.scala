@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, IntegerType, LongType}
 
 /** Initial/append/insert protocol — the system-test storyline of the
   * reference (`tests/system/test_chirps.py`): golden-value point equality
@@ -452,5 +453,25 @@ class GriddedStoreSpec extends SparkSpec {
     es.writeInitial(cube(2, 2, 2), desc("sche"))
     es.writeDescriptor(es.readDescriptor().get, files = Some(Nil))
     assert(es.read().count() == 0 && es.read().schema == expected)
+  }
+
+  test("initial writes and surgery record the inferred schema: Int buckets, and Long past the Int range") {
+    def inferred(store: GriddedStore) = spark.read.option("basePath", store.dataPath)
+      .parquet(store.snapshotFiles().get.map(f => s"${store.root}/$f"): _*).schema
+    // a 1 us bucket puts every day after the epoch past Int.MaxValue
+    for ((bucketUs, bucketType) <- Seq(10 * DAY_US -> IntegerType, 1L -> LongType)) {
+      val store = new GriddedStore(tmpDir("store-schema-rule"), spark)
+      store.writeInitial(cube(3, 2, 2), desc("rule").copy(chunk = ChunkGrid(bucketUs, 200)))
+      val recorded = store.manifest().get.dataSchema
+      assert(recorded.contains(inferred(store)), s"$recorded")
+      assert(recorded.get("time_bucket").dataType == bucketType)
+      // a surgery that retypes a coordinate records the new type
+      EncodingSurgery.rewriteCoordinate(store, "latitude", _.cast("float"))
+      val after = store.manifest().get.dataSchema
+      assert(after.contains(inferred(store)), s"$after")
+      assert(after.get("latitude").dataType == FloatType)
+      assert(after.get("time_bucket").dataType == bucketType)
+      assert(store.read().count() == 3 * 4)
+    }
   }
 }

@@ -4,14 +4,19 @@
 # BENCH_FULL_*.json or PLAN_GAUGE.json must still read through the
 # typed readers, so a hand edit that breaks one is caught here rather
 # than at the next bench or audit run. A staged change to the corpus
-# manager or the dedup pipeline runs the shard-ingest cost fence (its
-# job and SQL-execution bounds, artifact parity and failed-append
-# checks). A staged change to the snapshot-manifest protocol (the
-# snapshot log, the gridded store, its manifest and descriptor, encoding
-# surgery, the manifest envelope, the commit primitives) or to the grid
-# catalog runs the append cost fence, the commit-protocol spec, the
-# manifest-extent spec, the grid-catalog spec and the shard-ingest cost
-# fence: both versioned stores commit through that code. Install with:
+# manager, the dedup pipeline or the concurrency helper runs the
+# shard-ingest cost fence (its job and SQL-execution bounds, artifact
+# parity and failed-append checks). A staged change to the
+# snapshot-manifest protocol (the snapshot log, the gridded store, its
+# manifest and descriptor, encoding surgery, the manifest envelope, the
+# commit primitives) or to the grid catalog runs the append cost fence,
+# the commit-protocol spec, the manifest-extent spec, the grid-catalog
+# spec and the shard-ingest cost fence: both versioned stores commit
+# through that code. A staged change to the dataset manager, the
+# quality checks or the update profile runs the append cost fence, the
+# post-parse read-back spec and the parse parity spec: parse pins,
+# profiles, samples and reads back its update through that code.
+# Install with:
 #   ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # Skips the sbt startup when nothing it checks is staged.
 staged=$(git diff --cached --name-only)
@@ -32,7 +37,7 @@ if echo "$staged" | grep -q -E '(^|/)(BENCH_FULL_.*\.json|PLAN_GAUGE\.json)$'; t
     exit 1
   }
 fi
-if echo "$staged" | grep -q -E '(^|/)(etl/CorpusManager|functions/Dedup[^/]*)\.scala$'; then
+if echo "$staged" | grep -q -E '(^|/)(etl/CorpusManager|functions/Dedup[^/]*|operators/Concurrent)\.scala$'; then
   echo "[pre-commit] staged corpus/dedup code -> shard-ingest cost fence"
   sbt -batch "testOnly graft.etl.ShardIngestCostFenceSpec" \
       >/tmp/precommit_fence.log 2>&1 || {
@@ -47,6 +52,15 @@ if echo "$staged" | grep -q -E '(^|/)(sources/(SnapshotLog|GriddedStore|GridMani
       >/tmp/precommit_log.log 2>&1 || {
     echo "[pre-commit] SNAPSHOT-LOG FENCES FAILED - commit blocked. tail of log:"
     tail -20 /tmp/precommit_log.log
+    exit 1
+  }
+fi
+if echo "$staged" | grep -q -E '(^|/)(etl/DatasetManager|qc/QualityChecks|sources/UpdateProfile)\.scala$'; then
+  echo "[pre-commit] staged parse/QC code -> append fence, read-back and parse parity specs"
+  sbt -batch "testOnly graft.etl.AppendCostFenceSpec graft.etl.PostParseQcSpec graft.etl.ParseProfileSpec" \
+      >/tmp/precommit_parse.log 2>&1 || {
+    echo "[pre-commit] PARSE FENCES FAILED - commit blocked. tail of log:"
+    tail -20 /tmp/precommit_parse.log
     exit 1
   }
 fi
