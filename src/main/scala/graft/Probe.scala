@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler._
+import graft.obs.JobLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
-import scala.collection.mutable
 
 /** The one diagnostic main, three subcommands:
   *
@@ -106,28 +105,22 @@ object Probe {
 
   /** One timed run of one query and the jobs it started. */
   final case class Run(query: String, rep: Int, seconds: Double,
-                       jobs: List[JobLog.Job])
+                       jobs: Seq[JobLog.Job])
 
   def query(spark: SparkSession, sfDir: String, names: Seq[String],
-            reps: Int): Seq[Run] = {
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
-    try for (q <- names; rep <- 1 to reps) yield {
-      log.reset()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, sfDir).count()
-      val seconds = (System.nanoTime() - t0) / 1e9
-      // drain the async listener bus: wait until every started job has
-      // delivered its end event (bounded — a job leaked by a failed
-      // action must not hang the probe), instead of a racy fixed sleep
-      log.drain(5000L)
-      val run = Run(q, rep, seconds, log.snapshot)
+            reps: Int): Seq[Run] =
+    for (q <- names; rep <- 1 to reps) yield {
+      val (seconds, jobs) = JobLog.measure(spark) {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(q)(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val run = Run(q, rep, seconds, jobs)
       report(run)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       run
-    } finally spark.sparkContext.removeSparkListener(log)
-  }
+    }
 
   private def report(r: Run): Unit = {
     val tag = s"rep${r.rep}"
@@ -139,7 +132,7 @@ object Probe {
       println(f"PROFILE $tag   ${ms / 1e3}%7.2fs  n=$n%-4d $s") }
     r.jobs.sortBy(-_.ms).take(12).foreach { j =>
       println(f"PROFILE $tag  job#${j.id}%-4d ${j.ms / 1e3}%6.2fs  " +
-        j.stageNames.mkString(" <- ")) }
+        j.stages.map { case (s, n) => s"$s[$n]" }.mkString(" <- ")) }
   }
 
   def plan(spark: SparkSession, sfDir: String, names: Seq[String],
@@ -155,50 +148,4 @@ object Probe {
       case None => println(s"== $q ==\n$txt")
     }
   }
-}
-
-/** Every Spark job's duration, call site and stages, for the run that
-  * the last [[reset]] opened. */
-final class JobLog extends SparkListener {
-  import JobLog.Job
-
-  // one lock guards both maps: the listener bus delivers events on its
-  // own thread, and a snapshot must not race a late onJobEnd
-  private val lock = new Object
-  private val starts = mutable.Map[Int, (Long, Job)]()
-  private val jobs = mutable.ArrayBuffer[Job]()
-
-  override def onJobStart(j: SparkListenerJobStart): Unit = {
-    // the RESULT stage's name is the action's call site
-    // ("count at CorpusManager.scala:1024")
-    val infos = j.stageInfos.sortBy(_.stageId)
-    val job = Job(j.jobId, infos.lastOption.map(_.name).getOrElse("?"), 0L,
-      infos.map(s => s"${s.name}[${s.numTasks}]"))
-    lock.synchronized { starts(j.jobId) = (System.nanoTime(), job) }
-  }
-
-  override def onJobEnd(j: SparkListenerJobEnd): Unit = lock.synchronized {
-    starts.remove(j.jobId).foreach { case (t0, job) =>
-      jobs += job.copy(ms = (System.nanoTime() - t0) / 1000000L)
-    }
-  }
-
-  /** Opens a run: forgets finished AND still-open jobs, so a job leaked
-    * by an earlier run neither stalls [[drain]] nor lands in this run. */
-  def reset(): Unit = lock.synchronized { starts.clear(); jobs.clear() }
-
-  /** Waits at most `timeoutMs` for every started job to end; true when
-    * none is left open. */
-  def drain(timeoutMs: Long): Boolean = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    while (lock.synchronized(starts.nonEmpty) && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    lock.synchronized(starts.isEmpty)
-  }
-
-  def snapshot: List[Job] = lock.synchronized(jobs.toList)
-}
-
-object JobLog {
-  final case class Job(id: Int, site: String, ms: Long, stageNames: Seq[String])
 }

@@ -1649,22 +1649,19 @@ class CorpusManager(
     doomed
   }
 
-  /** Per-source drift of a shard against the stored corpus sketches.
-    * X = k minima of the union sketch; Jaccard ≈ |X∩A∩B|/|X|,
-    * containment(B⊆A) ≈ |X∩A∩B|/|X∩B| — all O(k) array intrinsics on
-    * rows that are k longs each, so the compare never leaves the
-    * sketch table's scale regardless of corpus size. */
-  def driftReport(shardDocs: DataFrame): Seq[SourceDrift] =
-    driftOf(sketchJoin(scan(Sketch, readManifest()), vocabSketch(shardDocs)))
-
   /** Committed sketch rows (`ma`) full-outer-joined with a shard's
-    * (`mb`) on the source: one frame for both the drift report and the
+    * (`mb`) on the source: one frame for both the drift gate and the
     * merged sketch. */
   private def sketchJoin(corpusSketch: DataFrame, shardSketch: DataFrame): DataFrame =
     corpusSketch.select(col(sourceCol), col("minima").as("ma"))
       .join(shardSketch.select(col(sourceCol), col("minima").as("mb")),
         Seq(sourceCol), "full_outer")
 
+  /** Per-source drift of a shard against the stored corpus sketches.
+    * X = k minima of the union sketch; Jaccard ≈ |X∩A∩B|/|X|,
+    * containment(B⊆A) ≈ |X∩A∩B|/|X∩B| — all O(k) array intrinsics on
+    * rows that are k longs each, so the compare never leaves the
+    * sketch table's scale regardless of corpus size. */
   private def driftOf(sketches: DataFrame): Seq[SourceDrift] = {
     val xs = slice(array_sort(array_union(col("ma"), col("mb"))), 1, sketchK)
     val both = size(array_intersect(xs, array_intersect(col("ma"), col("mb"))))

@@ -1,8 +1,5 @@
 package graft.model
 
-import org.json4s._
-import org.json4s.jackson.JsonMethods
-
 /** Dataset category → fixed standard dimension order, mirroring the
   * reference's `set_key_dims` (`utils/transform.py:707-744`; category enum
   * `utils/attributes.py:223-233`). In the tall layout each dim is a key
@@ -100,19 +97,4 @@ case class DatasetDescriptor(
 
   def dims: Seq[String] = category.dims
   def timeDim: String = category.timeDim
-}
-
-object DatasetDescriptor {
-
-  /** Attribute sanitization, per `utils/metadata.py:820-833`: nested
-    * structures are JSON-stringified, null becomes "". */
-  def sanitizeAttr(v: Any): String = v match {
-    case null => ""
-    case m: Map[_, _] =>
-      JsonMethods.compact(JsonMethods.render(
-        JObject(m.toList.map { case (k, x) => k.toString -> (JString(String.valueOf(x)): JValue) })))
-    case s: Seq[_] => JsonMethods.compact(JsonMethods.render(
-      JArray(s.toList.map(x => JString(String.valueOf(x)): JValue))))
-    case other => String.valueOf(other)
-  }
 }

@@ -2,11 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.obs.JobLog
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.streaming.Trigger
 
 /** The `graft.Probe` subcommands on sf0.001, its argument checks, and
-  * the job log behind `Probe query`. */
+  * the job recorder behind `Probe query` and the cost fences. */
 class ProbeSpec extends SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
@@ -60,21 +61,62 @@ class ProbeSpec extends SparkSpec {
     assert(dir.getMessage.contains("SPARK_GRAFT_SF_DIR"), dir.getMessage)
   }
 
-  test("job log: reset forgets a leaked start, so drain returns at once") {
-    val log = new JobLog
-    log.onJobStart(SparkListenerJobStart(7, 0L, Seq.empty))
-    assert(!log.drain(100L), "an open job must hold the drain")
-    log.reset()
-    assert(log.snapshot.isEmpty)
-    val t0 = System.nanoTime()
-    assert(log.drain(5000L))
-    assert(System.nanoTime() - t0 < 1000000000L, "drain waited on a forgotten job")
-    // the leaked job's late end lands in no run
-    log.onJobEnd(SparkListenerJobEnd(7, 0L, JobSucceeded))
-    assert(log.snapshot.isEmpty)
-    log.onJobStart(SparkListenerJobStart(8, 0L, Seq.empty))
-    log.onJobEnd(SparkListenerJobEnd(8, 0L, JobSucceeded))
-    assert(log.snapshot.map(_.id) == List(8))
-    assert(log.drain(0L))
+  /** The task count of each recorded job's stages. */
+  private def tasks(jobs: Seq[JobLog.Job]): Seq[Seq[Int]] = jobs.map(_.stages.map(_._2))
+
+  test("recorder: a job started on another thread outside the scope is not counted") {
+    val sc = spark.sparkContext
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => { go.await(); sc.parallelize(1 to 6, 3).count() })
+    other.start()
+    val (_, jobs) = JobLog.measure(spark) {
+      go.countDown()
+      other.join()
+      sc.parallelize(1 to 4, 2).count()
+    }
+    assert(tasks(jobs) == Seq(Seq(2)), jobs)
+    assert(jobs.head.site.startsWith("count at ProbeSpec.scala"), jobs.head.site)
+    assert(jobs.head.endMs.exists(_ >= jobs.head.startMs))
+  }
+
+  test("recorder: a nested measure counts for the enclosing one, its marker job does not") {
+    val sc = spark.sparkContext
+    val ((_, inner), outer) = JobLog.measure(spark) {
+      sc.parallelize(1 to 4, 1).count()
+      JobLog.measure(spark)(sc.parallelize(1 to 4, 2).count())
+    }
+    assert(tasks(inner) == Seq(Seq(2)))
+    assert(tasks(outer) == Seq(Seq(1), Seq(2)))
+  }
+
+  test("recorder: a streaming query started in the scope has its jobs counted") {
+    val s = spark
+    import s.implicits._
+    val (in, out, ckpt) = (tmpDir("rec-in"), tmpDir("rec-out"), tmpDir("rec-ckpt"))
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$in/p=1")
+    val schema = Seq((0L, "")).toDF("id", "v").schema
+    // the stream thread runs its batches under a job group of its own
+    val (_, jobs) = JobLog.measure(spark) {
+      spark.readStream.schema(schema).parquet(s"$in/*").writeStream
+        .format("parquet").option("path", out).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    assert(jobs.nonEmpty, "the streaming query's jobs were not counted")
+    assert(spark.read.parquet(out).count() == 2)
+  }
+
+  test("recorder: measure restores the caller's scope after body throws") {
+    val sc = spark.sparkContext
+    val (_, jobs) = JobLog.measure(spark) {
+      val scope = sc.getLocalProperty(JobLog.ScopeProp)
+      intercept[IllegalStateException](JobLog.measure(spark) {
+        sc.parallelize(1 to 4, 2).count()
+        throw new IllegalStateException("body failed")
+      })
+      assert(sc.getLocalProperty(JobLog.ScopeProp) == scope)
+      sc.parallelize(1 to 6, 3).count()
+    }
+    assert(sc.getLocalProperty(JobLog.ScopeProp) == null)
+    assert(tasks(jobs) == Seq(Seq(2), Seq(3)))
   }
 }

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** Shared session + synthetic cube fixtures (the analog of the
   * reference's `tests/unit/conftest.py` fake datasets). */
@@ -29,30 +26,4 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Spark jobs launched by `body` on this thread. Listener events are
-    * delivered in order, so once a marker job submitted after `body` has
-    * been seen, every job `body` launched has been seen too. */
-  def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$group-end"), "marker job never reached the listener")
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
 }

@@ -2,6 +2,7 @@ package graft.catalog
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
+import graft.obs.JobLog
 import graft.sources.GriddedStore
 import org.apache.spark.sql.functions._
 
@@ -68,9 +69,9 @@ class GridCatalogSpec extends SparkSpec {
     assert(byTime == old)
     // resolving an old version takes its recorded schema: no job
     var resolved: org.apache.spark.sql.types.StructType = null
-    assert(jobsLaunchedBy {
+    assert(JobLog.measure(spark) {
       resolved = spark.sql(s"SELECT * FROM grid2.ds VERSION AS OF $v1").schema
-    } == 0)
+    }._2.size == 0)
     assert(resolved == store.readAt(v1).schema)
   }
 

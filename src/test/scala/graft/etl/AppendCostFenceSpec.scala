@@ -2,15 +2,12 @@ package graft.etl
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import graft.obs.JobLog
 import org.apache.spark.sql.DataFrame
-
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** An append costs O(update), not O(store): the same 1-day append is
   * parsed onto a 5-day and a 15-day store, and the whole parse, its
-  * post-parse read-back and its STAC publish are priced by a listener
+  * post-parse read-back and its STAC publish are priced by [[JobLog]]
   * (Spark jobs and task input records). A full-store read creeping back
   * into either step makes the two stores' counts differ. */
 class AppendCostFenceSpec extends SparkSpec {
@@ -18,49 +15,12 @@ class AppendCostFenceSpec extends SparkSpec {
   private val d = DatasetDescriptor("fence", "precip", Category.Observation,
     None, DAY_US, ChunkGrid(10 * DAY_US, 100000))
 
-  /** Spark jobs and task input records launched by `body` on this thread
-    * (async broadcast jobs and the pool threads of a concurrent step
-    * inherit its job group). A nested call prices its part under a group
-    * that extends the enclosing one, so the enclosing call counts it too.
-    * Listener events are delivered in order, so once a marker job
-    * submitted after `body` has been seen, every task `body` ran has been
-    * seen too. */
+  /** Spark jobs and task input records of `body`. A nested call's jobs
+    * count for the enclosing call too (its scope nests in the caller's),
+    * so the whole parse counts its read-back and publish. */
   private def cost(body: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val outer = Option(sc.getLocalProperty("spark.jobGroup.id"))
-    val id = java.util.UUID.randomUUID()
-    val group = outer.fold(s"fence-$id")(g => s"$g/$id")
-    val marker = s"marker-$id"
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new AtomicInteger
-    val records = new AtomicLong
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(g) if g == group || g.startsWith(s"$group/") =>
-            jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
-          case Some(`marker`) => markerSeen = true
-          case _ =>
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "priced")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job never reached the listener")
-      (jobs.get, records.get)
-    } finally {
-      sc.removeSparkListener(listener)
-      outer.foreach(sc.setJobGroup(_, "priced"))
-    }
+    val (_, jobs) = JobLog.measure(spark)(body)
+    (jobs.size, jobs.map(_.recordsRead).sum)
   }
 
   /** A manager whose parse prices its read-back and its publish. */

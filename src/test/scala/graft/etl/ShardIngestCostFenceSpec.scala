@@ -2,15 +2,12 @@ package graft.etl
 
 import graft.SparkSpec
 import graft.functions.DedupPipeline
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.obs.JobLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, md5}
 
-import java.util.concurrent.ConcurrentHashMap
-import scala.jdk.CollectionConverters._
-
 /** A shard ingest runs each dedup stage once: its Spark jobs, SQL
-  * executions and serial steps are priced by a listener, bounded, and
+  * executions and serial steps are priced by [[JobLog]], bounded, and
   * the same for the 2nd and the 5th shard of equal size. The committed
   * artifacts equal what the committed docs recompute to, and a failed
   * append leaves the corpus, the generation and the lock as they were. */
@@ -25,55 +22,17 @@ class ShardIngestCostFenceSpec extends SparkSpec {
     override def toString: String = s"Cost($jobs jobs, $executions executions, $steps steps)"
   }
 
-  /** The [[Cost]] of `body` on this thread and the threads it starts
-    * (they inherit its job group, as AQE's async jobs do). Listener
-    * events are delivered in order, so once a marker job submitted
-    * after `body` has been seen, every job `body` ran has been seen. */
+  /** The [[Cost]] of `body` and the threads it starts. A job that
+    * has not ended closes no step. */
   private def cost(body: => Unit): Cost = {
-    val sc = spark.sparkContext
-    val group = s"shard-fence-${java.util.UUID.randomUUID()}"
-    // job id -> (execution key, start ms, end ms)
-    val jobs = new ConcurrentHashMap[Int, (String, Long, Long)]()
-    val unscoped = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
-        prop("spark.jobGroup.id") match {
-          case Some(`group`) =>
-            val exec = prop("spark.sql.execution.root.id")
-              .orElse(prop("spark.sql.execution.id"))
-              .getOrElse {
-                unscoped.add(e.stageInfos.lastOption.fold("?")(_.name))
-                s"job-${e.jobId}"
-              }
-            jobs.put(e.jobId, (exec, e.time, Long.MaxValue))
-          case Some(g) if g == s"$group-end" => markerSeen = true
-          case _ =>
-        }
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        Option(jobs.get(e.jobId)).foreach { case (x, s, _) =>
-          jobs.put(e.jobId, (x, s, e.time))
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "priced")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job never reached the listener")
-      val runs = jobs.values.asScala.toSeq.groupBy(_._1).values
-        .map(js => (js.map(_._2).min, js.map(_._3).max)).toSeq.sortBy(_._1)
-      val steps = runs.foldLeft((0, Long.MinValue)) { case ((n, end), (s, e)) =>
-        if (s > end) (n + 1, e) else (n, math.max(end, e))
-      }._1
-      Cost(jobs.size, runs.size, steps, unscoped.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+    val (_, jobs) = JobLog.measure(spark)(body)
+    val runs = jobs.groupBy(j => j.execution.getOrElse(s"job-${j.id}")).values
+      .map(js => (js.map(_.startMs).min, js.map(_.endMs.getOrElse(Long.MaxValue)).max))
+      .toSeq.sortBy(_._1)
+    val steps = runs.foldLeft((0, Long.MinValue)) { case ((n, end), (s, e)) =>
+      if (s > end) (n + 1, e) else (n, math.max(end, e))
+    }._1
+    Cost(jobs.size, runs.size, steps, jobs.filter(_.execution.isEmpty).map(_.site))
   }
 
   /** 12 words drawn from a 1,000-word vocabulary by a hash of (i, j):

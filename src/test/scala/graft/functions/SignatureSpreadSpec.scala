@@ -1,45 +1,15 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.obs.JobLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** `Signatures.spread` decides whether to repartition a signature
   * pass's input without running it: over a plan with an exchange, the
   * old partition count query executed every shuffle stage once just to
   * read a number, and the signature pass then ran them again. */
 class SignatureSpreadSpec extends SparkSpec {
-
-  /** Spark jobs started while `body` runs on this thread; a marker job
-    * submitted after it bounds the listener's delivery. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"spread-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-end" => markerSeen = true
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "spread")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job never reached the listener")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def docs: DataFrame = {
     val s = spark
@@ -56,13 +26,13 @@ class SignatureSpreadSpec extends SparkSpec {
     // an aggregate puts a shuffle (and an adaptive plan) under the input
     val shuffled = docs.groupBy("doc_id").agg(first("text").as("text"))
     assert(shuffled.queryExecution.executedPlan.toString.contains("Exchange"))
-    val (spreadOut, jobs) = jobsOf(Signatures.spread(shuffled))
-    assert(jobs == 0, s"spread ran $jobs Spark jobs over an exchange")
+    val (spreadOut, jobs) = JobLog.measure(spark)(Signatures.spread(shuffled))
+    assert(jobs.size == 0, s"spread ran ${jobs.size} Spark jobs over an exchange")
     assert(spreadOut.count() == 300)
     // a pinned single-partition input is spread, also without a job
     val pinned = docs.coalesce(1).localCheckpoint()
-    val (spreadPinned, pinnedJobs) = jobsOf(Signatures.spread(pinned))
-    assert(pinnedJobs == 0)
+    val (spreadPinned, pinnedJobs) = JobLog.measure(spark)(Signatures.spread(pinned))
+    assert(pinnedJobs.size == 0)
     assert(spreadPinned.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     val want = sigs(pinned)
     assert(want.size == 300)

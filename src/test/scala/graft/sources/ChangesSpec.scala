@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
+import graft.obs.JobLog
 import org.apache.spark.sql.functions._
 
 /** The commit-diff change feed: appends diff to exactly their new rows,
@@ -35,7 +36,7 @@ class ChangesSpec extends SparkSpec {
     store.update(cube(1, 2, 2, startDay = 7, valueOffset = 5000.0))
     val vCorr = store.latestVersionNumber()
     // each side reads with its version's recorded schema: no inference job
-    assert(jobsLaunchedBy(store.changes(vApp, vCorr)) == 0)
+    assert(JobLog.measure(spark)(store.changes(vApp, vCorr))._2.size == 0)
     val corrDiff = store.changes(vApp, vCorr).cache()
     // deletes = the whole old bucket-1 generation (file granularity);
     // inserts = the merged rewrite of that bucket; both bucket-bounded

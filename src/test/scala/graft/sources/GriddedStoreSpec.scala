@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
+import graft.obs.JobLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType, LongType}
 
@@ -432,7 +433,7 @@ class GriddedStoreSpec extends SparkSpec {
     val expected = inferred(store.snapshotFiles().get)
     var latest: org.apache.spark.sql.DataFrame = null
     var atV: org.apache.spark.sql.DataFrame = null
-    assert(jobsLaunchedBy { latest = store.read(); atV = store.readAt(v) } == 0)
+    assert(JobLog.measure(spark) { latest = store.read(); atV = store.readAt(v) }._2.size == 0)
     assert(latest.schema == expected && atV.schema == expected)
     assert(latest.schema("time_bucket").dataType == expected("time_bucket").dataType)
     assert(latest.count() == 22 * 4)

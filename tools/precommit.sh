@@ -15,7 +15,11 @@
 # through that code. A staged change to the dataset manager, the
 # quality checks or the update profile runs the append cost fence, the
 # post-parse read-back spec and the parse parity spec: parse pins,
-# profiles, samples and reads back its update through that code.
+# profiles, samples and reads back its update through that code. A
+# staged change to the job recorder (graft/obs/) or to the probe main
+# runs the probe spec and the three fences that price by counting Spark
+# jobs: the append cost fence, the shard-ingest cost fence and the
+# signature-spread spec.
 # Install with:
 #   ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # Skips the sbt startup when nothing it checks is staged.
@@ -61,6 +65,15 @@ if echo "$staged" | grep -q -E '(^|/)(etl/DatasetManager|qc/QualityChecks|source
       >/tmp/precommit_parse.log 2>&1 || {
     echo "[pre-commit] PARSE FENCES FAILED - commit blocked. tail of log:"
     tail -20 /tmp/precommit_parse.log
+    exit 1
+  }
+fi
+if echo "$staged" | grep -q -E '(^|/)graft/(obs/.*|Probe\.scala)$'; then
+  echo "[pre-commit] staged job recorder -> probe spec and job-count fences"
+  sbt -batch "testOnly graft.ProbeSpec graft.etl.AppendCostFenceSpec graft.etl.ShardIngestCostFenceSpec graft.functions.SignatureSpreadSpec" \
+      >/tmp/precommit_obs.log 2>&1 || {
+    echo "[pre-commit] JOB-RECORDER FENCES FAILED - commit blocked. tail of log:"
+    tail -20 /tmp/precommit_obs.log
     exit 1
   }
 fi
