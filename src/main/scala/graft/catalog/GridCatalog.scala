@@ -5,13 +5,15 @@ import java.util
 import graft.sources.{GridManifest, GriddedStore}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** DSv2 `TableCatalog` over a warehouse of [[GriddedStore]]s — the SQL
   * face of the MVCC store (the reference's equivalent surface is "open
@@ -111,11 +113,11 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
     val rows = store.log.listClaims().sorted.flatMap { case (v, mtime) =>
       store.manifestAt(v).map { m =>
         val d = m.descriptor
-        HistoryRow(v, mtime * 1000L, d.updateInProgress, m.files.map(_.size).getOrElse(-1),
-          d.dateRange.map(_._1), d.dateRange.map(_._2))
+        InternalRow(v, mtime * 1000L, d.updateInProgress, m.files.map(_.size).getOrElse(-1),
+          d.dateRange.map(r => Long.box(r._1)).orNull, d.dateRange.map(r => Long.box(r._2)).orNull)
       }
     }
-    new HistoryMetaTable(s"$ident$$history", rows)
+    new MetaTable(s"$ident$$history", GridCatalog.HistorySchema, rows)
   }
 
   /** One row per data file the COMMITTED pointer pins: root-relative
@@ -129,9 +131,9 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
     val rows = pinned.sorted.map { rel =>
       val st = f.getFileStatus(new Path(store.root, rel))
       val bucket = rel match { case Bucket(b) => b.toLong; case _ => -1L }
-      FileRow(rel, bucket, st.getLen, st.getModificationTime * 1000L)
+      InternalRow(UTF8String.fromString(rel), bucket, st.getLen, st.getModificationTime * 1000L)
     }
-    new FilesMetaTable(s"$ident$$files", rows)
+    new MetaTable(s"$ident$$files", GridCatalog.FilesSchema, rows)
   }
 
   /** `VERSION AS OF v` — the pinned list of manifest version `v`. */
@@ -228,121 +230,50 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
     unsupported("DROP NAMESPACE")
 }
 
-/** One manifest version's history row (plain serializable fields; the
-  * partition reader builds InternalRows executor-side). */
-case class HistoryRow(version: Long, committedAtUs: Long,
-                      updateInProgress: Boolean, nFiles: Int,
-                      dateStartUs: Option[Long], dateEndUs: Option[Long])
-
-/** In-memory DSv2 table serving the `$history` rows — version-count
-  * sized, one partition. */
-private[catalog] class HistoryMetaTable(ident: String, rows: Seq[HistoryRow])
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-  override def name(): String = ident
-  override def schema(): StructType = HistoryMetaTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new HistoryScan(rows)
-    }
-}
-
-private[catalog] object HistoryMetaTable {
-  import org.apache.spark.sql.types._
-  val Schema: StructType = StructType(Seq(
+object GridCatalog {
+  /** `$history`: one row per manifest version. */
+  val HistorySchema: StructType = StructType(Seq(
     StructField("version", LongType, nullable = false),
     StructField("committed_at", TimestampType, nullable = false),
     StructField("update_in_progress", BooleanType, nullable = false),
     StructField("n_files", IntegerType, nullable = false),
     StructField("date_start_us", LongType, nullable = true),
     StructField("date_end_us", LongType, nullable = true)))
-}
 
-private[catalog] case class HistoryPartition(rows: Seq[HistoryRow])
-  extends org.apache.spark.sql.connector.read.InputPartition
-
-private[catalog] class HistoryScan(rows: Seq[HistoryRow])
-    extends org.apache.spark.sql.connector.read.Scan
-    with org.apache.spark.sql.connector.read.Batch {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.read._
-  override def readSchema(): org.apache.spark.sql.types.StructType =
-    HistoryMetaTable.Schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(HistoryPartition(rows))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private val it = p.asInstanceOf[HistoryPartition].rows.iterator
-          private var cur: HistoryRow = _
-          override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-          override def get(): InternalRow =
-            InternalRow(cur.version, cur.committedAtUs, cur.updateInProgress,
-              cur.nFiles, cur.dateStartUs.map(Long.box).orNull,
-              cur.dateEndUs.map(Long.box).orNull)
-          override def close(): Unit = ()
-        }
-    }
-}
-
-/** One pinned data file's `$files` row. */
-case class FileRow(path: String, timeBucket: Long, sizeBytes: Long,
-                   modifiedAtUs: Long)
-
-/** In-memory DSv2 table serving the `$files` rows — pin-list sized. */
-private[catalog] class FilesMetaTable(ident: String, rows: Seq[FileRow])
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-  override def name(): String = ident
-  override def schema(): StructType = FilesMetaTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new FilesScan(rows)
-    }
-}
-
-private[catalog] object FilesMetaTable {
-  import org.apache.spark.sql.types._
-  val Schema: StructType = StructType(Seq(
+  /** `$files`: one row per pinned data file. */
+  val FilesSchema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("time_bucket", LongType, nullable = false),
     StructField("size_bytes", LongType, nullable = false),
     StructField("modified_at", TimestampType, nullable = false)))
 }
 
-private[catalog] case class FilesPartition(rows: Seq[FileRow])
-  extends org.apache.spark.sql.connector.read.InputPartition
-
-private[catalog] class FilesScan(rows: Seq[FileRow])
-    extends org.apache.spark.sql.connector.read.Scan
-    with org.apache.spark.sql.connector.read.Batch {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.read._
-  override def readSchema(): org.apache.spark.sql.types.StructType =
-    FilesMetaTable.Schema
+/** In-memory DSv2 table serving a metadata table's rows (`$history`,
+  * `$files`) — metadata-sized, one partition. */
+private[catalog] class MetaTable(ident: String, rowSchema: StructType, rows: Seq[InternalRow])
+    extends Table with SupportsRead with ScanBuilder with Scan with Batch {
+  override def name(): String = ident
+  override def schema(): StructType = rowSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = this
+  override def build(): Scan = this
+  override def readSchema(): StructType = rowSchema
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(FilesPartition(rows))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private val it = p.asInstanceOf[FilesPartition].rows.iterator
-          private var cur: FileRow = _
-          override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-          override def get(): InternalRow = InternalRow(
-            org.apache.spark.unsafe.types.UTF8String.fromString(cur.path),
-            cur.timeBucket, cur.sizeBytes, cur.modifiedAtUs)
-          override def close(): Unit = ()
-        }
+  override def planInputPartitions(): Array[InputPartition] = Array(MetaPartition(rows))
+  override def createReaderFactory(): PartitionReaderFactory = MetaReaderFactory
+}
+
+private[catalog] case class MetaPartition(rows: Seq[InternalRow]) extends InputPartition
+
+private[catalog] object MetaReaderFactory extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val it = p.asInstanceOf[MetaPartition].rows.iterator
+      private var cur: InternalRow = _
+      override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
+      override def get(): InternalRow = cur
+      override def close(): Unit = ()
     }
 }
 

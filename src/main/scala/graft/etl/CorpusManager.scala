@@ -40,7 +40,10 @@ case class SourceDrift(
   * writes the next version and retires the old one). `files` pins each
   * artifact's file list (None: a pre-pinning manifest) and `schemas`
   * the data schema of the docs, sigs, hashes, sketch and media files
-  * (Spark DataType JSON, keyed by the [[CorpusFiles]] field name). */
+  * (Spark DataType JSON, keyed by the [[CorpusFiles]] field name).
+  * Which artifacts exist, where each lives at a manifest, and which are
+  * versioned with a catalog table is decided in one place: the artifact
+  * registry of [[CorpusManager]] (`Artifacts`). */
 case class CorpusManifest(
     name: String,
     generation: Long,
@@ -85,7 +88,10 @@ case class CorpusManifest(
   * corpus twin of [[graft.sources.GriddedStore]]'s snapshot manifests.
   * `sketch` pins ONLY the live sketch rows (each ingest's merge replaces
   * the table; the superseded files stay on disk for pinned readers until
-  * vacuum); the other lists are cumulative across ingests. */
+  * vacuum); the other lists are cumulative across ingests. The fields
+  * are the wire format (written in this order; a manifest from before
+  * `vecs`, `media` or `mediaBlocks` reads them as empty); the manager
+  * reads and writes them only by key, through its artifact registry. */
 case class CorpusFiles(
     docs: Seq[String],
     sigs: Seq[String],
@@ -94,7 +100,23 @@ case class CorpusFiles(
     bands: Seq[String],
     vecs: Seq[String] = Nil,
     media: Seq[String] = Nil,
-    mediaBlocks: Seq[String] = Nil)
+    mediaBlocks: Seq[String] = Nil) {
+
+  /** Each list by its `files` key, in the written order. */
+  def byKey: collection.immutable.ListMap[String, Seq[String]] =
+    collection.immutable.ListMap.from(productElementNames.zip(
+      productIterator.map(_.asInstanceOf[Seq[String]])))
+
+  /** These lists with the given keys' replaced. */
+  def updated(lists: (String, Seq[String])*): CorpusFiles = CorpusFiles(byKey ++ lists)
+}
+
+object CorpusFiles {
+  /** The lists `list(key)`, one per field. */
+  def apply(list: String => Seq[String]): CorpusFiles = CorpusFiles(list("docs"),
+    list("sigs"), list("hashes"), list("sketch"), list("bands"), list("vecs"),
+    list("media"), list("mediaBlocks"))
+}
 
 /** A shard's vocabulary diverged below the configured containment
   * floor — the documents-side analog of
@@ -257,7 +279,7 @@ class CorpusManager(
     * single-schema — a migration appends new-scheme files beside the
     * old dir and pinned readers of either scheme stay consistent. */
   def mediaPath: String = mediaPathFor(mediaScheme)
-  private def mediaPathFor(s: Int): String =
+  private def mediaPathFor(s: Long): String =
     if (s == 1) s"$root/media_hashes" else s"$root/media_hashes_s$s"
   // the persisted media BLOCK store (the media twin of the band table):
   // versioned on its own counter — a (radius, combo) change regenerates
@@ -383,9 +405,7 @@ class CorpusManager(
   private def commitManifest(next: CorpusManifest): CorpusManifest = {
     val m = next.copy(generation = math.max(log.latest(), next.generation) + 1,
       parent = next.generation,
-      files = next.files.map(f => CorpusFiles(f.docs.sorted, f.sigs.sorted,
-        f.hashes.sorted, f.sketch.sorted, f.bands.sorted, f.vecs.sorted,
-        f.media.sorted, f.mediaBlocks.sorted)))
+      files = next.files.map(f => CorpusFiles(f.byKey(_).sorted)))
     log.commit(m.generation,
       JsonMethods.pretty(JsonMethods.render(Extraction.decompose(m)(DefaultFormats))))
     m
@@ -393,21 +413,74 @@ class CorpusManager(
 
   private def listDir(dir: String): Set[String] = log.listFiles(new Path(dir))
 
-  /** A pinned parquet artifact: its `schemas` key (its [[CorpusFiles]]
-    * field name), its directory, and its file list. */
-  private case class Artifact(key: String, dir: String, pin: CorpusFiles => Seq[String])
-  private val Docs = Artifact("docs", docsPath, _.docs)
-  private val Sigs = Artifact("sigs", sigsPath, _.sigs)
-  private val Hashes = Artifact("hashes", hashesPath, _.hashes)
-  private val Sketch = Artifact("sketch", sketchPath, _.sketch)
-  private val Media = Artifact("media", mediaPath, _.media)
+  /** The versions `N` of the directories `<dir>/<prefix>N` on disk. */
+  private def versionsIn(dir: String, prefix: String): Seq[Long] =
+    if (!fs.exists(new Path(dir))) Nil
+    else fs.listStatus(new Path(dir)).map(_.getPath.getName)
+      .collect { case d if d.matches(s"$prefix\\d+") => d.stripPrefix(prefix).toLong }.toSeq
 
-  /** `a` as of `man` (None: no manifest): its pinned files read with the
-    * recorded schema ([[SnapshotLog.scan]]). */
-  private def scan(a: Artifact, man: Option[CorpusManifest]): DataFrame =
-    log.scan(man.flatMap(_.files).map(a.pin),
-      man.flatMap(_.schemas.get(a.key)).map(DataType.fromJson(_).asInstanceOf[StructType]),
-      a.dir)
+  /** A pinned artifact: its `files`/`schemas` key (its [[CorpusFiles]]
+    * field name), the directory of its version `v`, the version a
+    * manifest pins (0: an unversioned artifact), the versions on disk,
+    * and — for an artifact versioned with a catalog table — what a
+    * retired version takes with it. */
+  private case class Artifact(key: String, dirAt: Long => String,
+                              version: CorpusManifest => Long = _ => 0L,
+                              onDisk: () => Seq[Long] = () => Seq(0L),
+                              retired: Option[Retired] = None) {
+    def dir(m: CorpusManifest): String = dirAt(version(m))
+  }
+  /** The directory (removed recursively) and catalog table of a retired
+    * version `v`. */
+  private case class Retired(dir: Long => String, table: Long => String)
+
+  private val Docs = Artifact("docs", _ => docsPath)
+  private val Sigs = Artifact("sigs", _ => sigsPath)
+  private val Hashes = Artifact("hashes", _ => hashesPath)
+  private val Sketch = Artifact("sketch", _ => sketchPath)
+  private val Bands = Artifact("bands", bandsDir, _.bandsVersion,
+    () => versionsIn(dedupPath, "bands_v"), Some(Retired(bandsDir, bandsTable)))
+  // the centroid sidecar is not file-tracked: it lives and dies with
+  // its version's ann dir
+  private val Vecs = Artifact("vecs", vecsPath, _.bandsVersion,
+    () => versionsIn(s"$root/ann", "v"), Some(Retired(annDir, vecsTable)))
+  // every scheme's dir is on disk, not just the configured one's: after
+  // a migrateMediaScheme the old scheme's unpinned files are orphans
+  private val Media = Artifact("media", mediaPathFor, _.mediaScheme,
+    () => 1L +: versionsIn(root, "media_hashes_s"))
+  // versioned on its own counter, see ensureMediaBlocks
+  private val MediaBlocks = Artifact("mediaBlocks", mediaBlocksDir, _.mediaBlocksVersion,
+    () => versionsIn(s"$root/media_blocks", "v"),
+    Some(Retired(mediaBlocksDir, mediaBlocksTable)))
+  /** The artifact registry: every artifact a corpus manifest pins, in
+    * its `files` key order. */
+  private val Artifacts = Seq(Docs, Sigs, Hashes, Sketch, Bands, Vecs, Media, MediaBlocks)
+
+  /** One list per artifact, `pin(a)`, taken in registry order. */
+  private def corpusFiles(pin: Artifact => Seq[String]): CorpusFiles =
+    CorpusFiles(Artifacts.map(a => a.key -> pin(a)).toMap)
+
+  /** Every file in `a`'s directory at `m`. */
+  private def listing(m: CorpusManifest, a: Artifact): Seq[String] = listDir(a.dir(m)).toSeq
+
+  /** The lists `m` pins; a pre-pinning manifest's are its artifact
+    * directories' listings. */
+  private def pinnedBy(m: CorpusManifest): CorpusFiles =
+    m.files.getOrElse(corpusFiles(listing(m, _)))
+
+  /** The files `write` adds to `a`'s directory at `m`. */
+  private def added(m: CorpusManifest, a: Artifact)(write: => Unit): Seq[String] = {
+    val before = listDir(a.dir(m))
+    write
+    (listDir(a.dir(m)) -- before).toSeq
+  }
+
+  /** `a` as of `man`: its pinned files read with the recorded schema
+    * ([[SnapshotLog.scan]]). */
+  private def scan(a: Artifact, man: CorpusManifest): DataFrame =
+    log.scan(man.files.map(_.byKey(a.key)),
+      man.schemas.get(a.key).map(DataType.fromJson(_).asInstanceOf[StructType]),
+      a.dir(man))
 
   /** The `schemas` entry of a frame written to an artifact. */
   private def schemaOf(df: DataFrame): String = SnapshotLog.writtenSchema(df).json
@@ -415,7 +488,8 @@ class CorpusManager(
   /** The canonical deduplicated corpus, as of the latest committed
     * manifest — uncommitted / crashed-writer / retired files are
     * invisible. */
-  def corpus(): DataFrame = scan(Docs, readManifest())
+  def corpus(): DataFrame =
+    readManifest().fold(spark.read.parquet(docsPath))(scan(Docs, _))
 
   // ---- perceptual media dedup signal ------------------------------------
 
@@ -492,7 +566,7 @@ class CorpusManager(
     * stamps the returned pair; a crash in between leaves an unpinned
     * extra version the next run overwrites. */
   private def ensureMediaBlocks(man: CorpusManifest): (Long, Int) = {
-    val hashes = scan(Media, Some(man))
+    val hashes = scan(Media, man)
     val want = desiredMediaCombo(hashes.count())
     val stampsMatch = man.mediaBlocksVersion > 0 &&
       man.mediaRadius == mediaMaxHamming.toLong &&
@@ -537,7 +611,7 @@ class CorpusManager(
     graft.sources.MediaBlockStore
       .crossPairs(corpusB, shardB, mediaScheme, mediaMaxHamming)
       .pinned()
-      .join(scan(Media, readManifest()).select(col("id").as("aid")), Seq("aid"), "left_semi")
+      .join(scan(Media, readManifest().get).select(col("id").as("aid")), Seq("aid"), "left_semi")
       .select(least(col("aid"), col("bid")).as("d1"),
         greatest(col("aid"), col("bid")).as("d2"))
       .distinct()
@@ -796,7 +870,7 @@ class CorpusManager(
     // reorder barrier that keeps it above (measured: pushdown happens
     // without it), and the pair set it materializes is dup-graph-sized.
     embVerifiedPairs(shardAssigned).pinned()
-      .join(scan(Hashes, readManifest()).select(col(idCol).as("cid_")), Seq("cid_"),
+      .join(scan(Hashes, readManifest().get).select(col(idCol).as("cid_")), Seq("cid_"),
         "left_semi")
       .select(least(col("cid_"), col("sid_")).as("d1"),
         greatest(col("cid_"), col("sid_")).as("d2"))
@@ -901,10 +975,14 @@ class CorpusManager(
           .select(col("id").as(idCol))
         tk.join(drops, Seq(idCol), "left_anti")
       }
-    // every artifact's schema is the frame's it is written from
+    // generation 1 writes every versioned artifact as its v1, and every
+    // artifact's schema is the frame's it is written from
+    val gen1 = CorpusManifest(name, 0, 0, p.ngram, p.perms, p.bands,
+      p.minEstJaccard, numBuckets, bandsVersion = 1, sigScheme = p.hasher.scheme,
+      mediaScheme = mediaScheme.toLong)
     val schemas = Map.newBuilder[String, String]
     def write(a: Artifact, df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(a.dir)
+      df.write.mode("overwrite").parquet(a.dir(gen1))
       schemas += a.key -> schemaOf(df)
     }
     write(Docs, keepers)
@@ -929,15 +1007,14 @@ class CorpusManager(
     // their block rows bucketed ONCE so every shard's cross join scans
     // the corpus side exchange-free (hashes re-read from the just-written
     // parquet — the one decode pass stays the only decode pass)
-    val (mbV, mbCombo) = mediaCol match {
-      case Some(_) =>
-        val written = mediaHashesOf(kept)
-        write(Media, written)
-        val hashes = spark.read.schema(SnapshotLog.writtenSchema(written)).parquet(mediaPath)
-        val combo = desiredMediaCombo(hashes.count())
-        writeMediaBlocks(hashes, 1, combo)
-        (1L, combo.toLong)
-      case None => (0L, 0L)
+    val man = mediaCol.fold(gen1) { _ =>
+      val written = mediaHashesOf(kept)
+      write(Media, written)
+      val hashes = spark.read.schema(SnapshotLog.writtenSchema(written)).parquet(mediaPath)
+      val combo = desiredMediaCombo(hashes.count())
+      writeMediaBlocks(hashes, 1, combo)
+      gen1.copy(mediaBlocksVersion = 1, mediaRadius = mediaMaxHamming.toLong,
+        mediaCombo = combo.toLong)
     }
     // nRej by set arithmetic, not a reject-side recompute: both gates
     // PARTITION their input row-wise (qualityGate's ok/!ok filters,
@@ -948,17 +1025,8 @@ class CorpusManager(
     // measured in OPTIMIZATION_r11.md)
     val (nIn, nKept) = (docs.count(), kept.count())
     val nRej = rejectCount(nIn, accepted.count())
-    commitManifest(CorpusManifest(name, 0, nKept, p.ngram, p.perms, p.bands,
-      p.minEstJaccard, numBuckets, bandsVersion = 1, sigScheme = p.hasher.scheme,
-      mediaScheme = mediaScheme.toLong, mediaBlocksVersion = mbV,
-      mediaRadius = if (mbV > 0) mediaMaxHamming.toLong else -1L,
-      mediaCombo = mbCombo,
-      files = Some(CorpusFiles(
-        listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
-        listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
-        listDir(bandsDir(1)).toSeq, listDir(vecsPath(1)).toSeq,
-        listDir(mediaPath).toSeq, listDir(mediaBlocksDir(1)).toSeq)),
-      schemas = schemas.result()))
+    commitManifest(man.copy(nDocs = nKept,
+      files = Some(corpusFiles(listing(man, _))), schemas = schemas.result()))
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, Nil)
   }
 
@@ -1081,8 +1149,8 @@ class CorpusManager(
     // the committed scans list their pinned files while the shard pins
     val Seq(shard, committedH, committedSigs, committedSketch) = Concurrent.allOf(Seq(
       () => ok.withColumn(HashCol, md5(col(textCol))).pinned(),
-      () => scan(Hashes, Some(man)), () => scan(Sigs, Some(man)),
-      () => scan(Sketch, Some(man))))
+      () => scan(Hashes, man), () => scan(Sigs, man),
+      () => scan(Sketch, man)))
     val committed = Committed(committedH, committedSigs, committedSketch)
     // accepted rows × (committed ids, of which content-mismatched): the
     // shard side of the inner join is the small, broadcastable one, so
@@ -1129,7 +1197,7 @@ class CorpusManager(
       committed.sigs, s"${name}_shard_bands", s"$dedupPath/shard_bands",
       numBuckets, p,
       // exact-verify reads candidate docs' grams from the PINNED corpus
-      corpusDocs = if (p.exactVerify) Some(scan(Docs, Some(man))) else None)
+      corpusDocs = if (p.exactVerify) Some(scan(Docs, man)) else None)
     def norm(a: Column, b: Column) =
       Seq(least(a, b).as("d1"), greatest(a, b).as("d2"))
     val exactCross = shard.as("s")
@@ -1209,28 +1277,21 @@ class CorpusManager(
 
     // -- append every artifact, then commit ONE manifest pinning the
     //    union of the previous lists and each write's fresh files
-    //    (sketch: fresh only — replace semantics). Appends are
+    //    (sketch: fresh only — replace semantics; a regenerated media
+    //    block store: its whole version dir). Appends are
     //    job-atomic (output-committer staged), so a crash anywhere
     //    before the commit leaves only invisible orphans.
-    val prev = man.files.getOrElse(CorpusFiles(
-      listDir(docsPath).toSeq, listDir(sigsPath).toSeq,
-      listDir(hashesPath).toSeq, listDir(sketchPath).toSeq,
-      listDir(bandsDir(man.bandsVersion)).toSeq))
-    val activeBands = bandsDir(man.bandsVersion)
-    val activeVecs = vecsPath(man.bandsVersion)
-    // the LIVE block-store version: ensureMediaBlocks may have
-    // regenerated it (its files already on disk here — `fresh` below
-    // then sees only the keeper appends, and the regenerated pin is
-    // taken as the dir listing at commit time)
-    val liveMbV = mediaBlocksState.map(_._1).getOrElse(man.mediaBlocksVersion)
-    val activeMediaBlocks = mediaBlocksDir(liveMbV)
-    val before = Map(
-      docsPath -> listDir(docsPath), sigsPath -> listDir(sigsPath),
-      hashesPath -> listDir(hashesPath), sketchPath -> listDir(sketchPath),
-      activeBands -> listDir(activeBands), activeVecs -> listDir(activeVecs),
-      mediaPath -> listDir(mediaPath),
-      activeMediaBlocks -> listDir(activeMediaBlocks))
-    def fresh(dir: String): Seq[String] = (listDir(dir) -- before(dir)).toSeq
+    val prev = pinnedBy(man)
+    // the manifest this ingest commits, with the LIVE block-store stamps:
+    // ensureMediaBlocks may have regenerated the store (its files
+    // already on disk here, so `fresh` below sees only the keeper appends)
+    val next = mediaBlocksState.fold(man) { case (v, combo) =>
+      man.copy(mediaBlocksVersion = v, mediaRadius = mediaMaxHamming.toLong,
+        mediaCombo = combo.toLong)
+    }
+    val liveMbV = next.mediaBlocksVersion
+    val before = Artifacts.map(a => a -> listDir(a.dir(next))).toMap
+    def fresh(a: Artifact): Seq[String] = (listDir(a.dir(next)) -- before(a)).toSeq
 
     // the keepers' signatures are the shard pass's, not a second MinHash
     val keeperSigs = shardSigs.sigs.join(keepers.select(idCol), Seq(idCol), "left_semi")
@@ -1249,7 +1310,7 @@ class CorpusManager(
       held.get(a.key).filter(_ == schemaOf(df)).map(a.key -> _)
     }.toMap + (Sketch.key -> schemaOf(merged))
     val appends: Seq[() => Unit] = written.map { case (a, df) =>
-      () => df.write.mode("append").parquet(a.dir)
+      () => df.write.mode("append").parquet(a.dir(next))
     } ++ Seq(
       () => BucketedSignatureStore.append(DedupPipeline.bandRows(keeperSigs, idCol, p),
         bandsTable(man.bandsVersion), numBuckets, bandKeys),
@@ -1270,22 +1331,13 @@ class CorpusManager(
       }
     val nKept = Concurrent.allOf((() => keepers.count()) +: appends.map(a => () => { a(); 0L })).head
 
-    val mediaBlocksPinned: Seq[String] =
-      if (mediaCol.isEmpty) prev.mediaBlocks
-      else if (liveMbV != man.mediaBlocksVersion)
-        listDir(activeMediaBlocks).toSeq // regenerated + keeper appends
-      else prev.mediaBlocks ++ fresh(activeMediaBlocks)
-    commitManifest(man.copy(nDocs = man.nDocs + nKept,
-      mediaBlocksVersion = if (mediaCol.isEmpty) man.mediaBlocksVersion else liveMbV,
-      mediaRadius =
-        if (mediaCol.isEmpty) man.mediaRadius else mediaMaxHamming.toLong,
-      mediaCombo = mediaBlocksState.map(_._2.toLong).getOrElse(man.mediaCombo),
-      files = Some(CorpusFiles(
-        prev.docs ++ fresh(docsPath), prev.sigs ++ fresh(sigsPath),
-        prev.hashes ++ fresh(hashesPath), fresh(sketchPath),
-        prev.bands ++ fresh(activeBands), prev.vecs ++ fresh(activeVecs),
-        prev.media ++ fresh(mediaPath), mediaBlocksPinned)),
-      schemas = schemas))
+    commitManifest(next.copy(nDocs = man.nDocs + nKept, schemas = schemas,
+      files = Some(corpusFiles {
+        case Sketch => fresh(Sketch)
+        case MediaBlocks if mediaCol.isEmpty => prev.byKey(MediaBlocks.key)
+        case MediaBlocks if liveMbV != man.mediaBlocksVersion => listing(next, MediaBlocks)
+        case a => prev.byKey(a.key) ++ fresh(a)
+      })))
     IngestReport(nIn, nRej, nIn - nRej - nKept, nKept, drift)
   }
 
@@ -1340,19 +1392,17 @@ class CorpusManager(
     requireCurrentMediaScheme(man) // ...and media-hash rows, into mediaPath
     val n = if (partitions > 0) partitions
       else spark.sparkContext.defaultParallelism
+    val files = pinnedBy(man)
     // a rewritten artifact's files all carry its scan's schema
     val schemas = Map.newBuilder[String, String] ++= man.schemas
-    def rewrite(a: Artifact, parts: Int): Seq[String] = {
-      val df = scan(a, Some(man))
-      val before = listDir(a.dir)
-      df.repartition(parts).write.mode("append").parquet(a.dir)
+    def rewrite(a: Artifact, parts: Int): (String, Seq[String]) = {
+      val df = scan(a, man)
       schemas += a.key -> schemaOf(df)
-      (listDir(a.dir) -- before).toSeq
+      a.key -> added(man, a)(df.repartition(parts).write.mode("append").parquet(a.dir(man)))
     }
-    val newDocs = rewrite(Docs, n)
-    val newSigs = rewrite(Sigs, n)
-    val newHashes = rewrite(Hashes, n)
-    val newSketch = rewrite(Sketch, 1) // k longs × sources
+    // the sketch is k longs × sources, the media hashes 16 B/doc
+    val rewritten = Seq(rewrite(Docs, n), rewrite(Sigs, n), rewrite(Hashes, n),
+      rewrite(Sketch, 1)) ++ mediaCol.map(_ => rewrite(Media, 1))
     val v2 = man.bandsVersion + 1
     // The band table is dir-scanned (its join property lives in catalog
     // bucket metadata, not a pinned list), so crashed-ingest orphan rows
@@ -1363,7 +1413,7 @@ class CorpusManager(
     // orphans at the one moment the table is rewritten anyway.
     BucketedSignatureStore.write(
       BucketedSignatureStore.table(spark, bandsTable(man.bandsVersion))
-        .join(scan(Sigs, Some(man)).select(idCol), Seq(idCol), "left_semi"),
+        .join(scan(Sigs, man).select(idCol), Seq(idCol), "left_semi"),
       bandsTable(v2), bandsDir(v2), numBuckets, bandKeys)
     // Retrain the coarse quantizer on the full compacted corpus: shard
     // appends assign with the centroids trained at INITIAL ingest, so as
@@ -1375,45 +1425,32 @@ class CorpusManager(
     // the reassignment ride the same pass, versioned v(N+1) beside the
     // band table; readers pinned to older manifests keep their ann/v(N)
     // files (and the matching centroid sidecar) untouched.
-    val newVecs = embCol match {
-      case Some(e) =>
-        val prevVecs = man.files.map(_.vecs)
-          .getOrElse(listDir(vecsPath(man.bandsVersion)).toSeq)
-        require(prevVecs.nonEmpty, s"corpus $name has no vector artifact " +
-          "— it was ingested without embCol; embedding dedup needs a " +
-          "re-ingest, not a config flip on an existing store")
-        val cur = spark.read.parquet(prevVecs.map(f => s"$root/$f"): _*)
-          .select(col(idCol), col(e))
-        BucketedSignatureStore.write(
-          assignCells(cur, e, trainQuantizer(cur, e, v2)),
-          vecsTable(v2), vecsPath(v2), numBuckets, Seq("cell"))
-        listDir(vecsPath(v2)).toSeq
-      case None => man.files.map(_.vecs).getOrElse(Nil)
-    }
-    val newMedia = mediaCol match {
-      case Some(_) => rewrite(Media, 1) // 16 B/doc table
-      case None => man.files.map(_.media).getOrElse(Nil)
+    embCol.foreach { e =>
+      require(files.vecs.nonEmpty, s"corpus $name has no vector artifact " +
+        "— it was ingested without embCol; embedding dedup needs a " +
+        "re-ingest, not a config flip on an existing store")
+      val cur = spark.read.parquet(files.vecs.map(f => s"$root/$f"): _*)
+        .select(col(idCol), col(e))
+      BucketedSignatureStore.write(
+        assignCells(cur, e, trainQuantizer(cur, e, v2)),
+        vecsTable(v2), vecsPath(v2), numBuckets, Seq("cell"))
     }
     // media BLOCK store: regenerate from the PINNED hashes as the next
     // version — re-sizes combo to the compacted corpus and, like the
     // band semi-join above, sheds crashed-ingest orphan block rows at
     // the one moment the table is rewritten anyway
-    val (mbV2, mbRadius2, mbCombo2, mbFiles) = mediaCol match {
-      case Some(_) =>
-        val hashes = scan(Media, Some(man))
-        val v = man.mediaBlocksVersion + 1
-        val combo = desiredMediaCombo(hashes.count())
-        writeMediaBlocks(hashes, v, combo)
-        (v, mediaMaxHamming.toLong, combo.toLong,
-          listDir(mediaBlocksDir(v)).toSeq)
-      case None => (man.mediaBlocksVersion, man.mediaRadius, man.mediaCombo,
-        man.files.map(_.mediaBlocks).getOrElse(Nil))
+    val next = mediaCol.fold(man.copy(bandsVersion = v2)) { _ =>
+      val hashes = scan(Media, man)
+      val v = man.mediaBlocksVersion + 1
+      val combo = desiredMediaCombo(hashes.count())
+      writeMediaBlocks(hashes, v, combo)
+      man.copy(bandsVersion = v2, mediaBlocksVersion = v,
+        mediaRadius = mediaMaxHamming.toLong, mediaCombo = combo.toLong)
     }
-    commitManifest(man.copy(bandsVersion = v2,
-      mediaBlocksVersion = mbV2, mediaRadius = mbRadius2, mediaCombo = mbCombo2,
-      files = Some(CorpusFiles(
-        newDocs, newSigs, newHashes, newSketch, listDir(bandsDir(v2)).toSeq,
-        newVecs, newMedia, mbFiles)),
+    // a regenerated versioned artifact pins its whole new version dir
+    val regenerated = (Seq(Bands) ++ embCol.map(_ => Vecs) ++ mediaCol.map(_ => MediaBlocks))
+      .map(a => a.key -> listing(next, a))
+    commitManifest(next.copy(files = Some(files.updated(rewritten ++ regenerated: _*)),
       schemas = schemas.result()))
   }
 
@@ -1447,7 +1484,7 @@ class CorpusManager(
     require(files.vecs.isEmpty,
       s"corpus $name already pins ${files.vecs.size} vector files " +
         s"(ann/v${man.bandsVersion}) — nothing to migrate")
-    val cur = scan(Docs, Some(man))
+    val cur = scan(Docs, man)
     require(cur.columns.contains(e),
       s"corpus $name docs carry no '$e' column — the embedding source " +
         "is absent, so there is nothing to build the ANN artifact from")
@@ -1460,7 +1497,7 @@ class CorpusManager(
     // media schemes (and block-store stamps) carry through, so this
     // migration cannot mask a pending
     // migrateSignatureScheme()/migrateMediaScheme()
-    commitManifest(man.copy(files = Some(files.copy(vecs = listDir(vecsPath(v)).toSeq))))
+    commitManifest(man.copy(files = Some(files.updated(Vecs.key -> listing(man, Vecs)))))
   }
 
   /** Recompute the signature/band artifacts under the CURRENT
@@ -1483,30 +1520,27 @@ class CorpusManager(
     require(man.sigScheme != cur,
       s"corpus $name is already at signature scheme $cur — nothing to migrate")
     val files = man.files.get
-    val kept = scan(Docs, Some(man))
-    val beforeSigs = listDir(sigsPath)
+    val kept = scan(Docs, man)
     val (sigs, bands) = DedupPipeline.signatureTables(kept, idCol, textCol, p)
-    sigs.write.mode("append").parquet(sigsPath)
-    val newSigs = (listDir(sigsPath) -- beforeSigs).toSeq
-    val v2 = man.bandsVersion + 1
-    BucketedSignatureStore.write(bands, bandsTable(v2), bandsDir(v2),
-      numBuckets, bandKeys)
-    val newVecs = embCol match {
-      case Some(e) if files.vecs.nonEmpty =>
-        val curVecs = spark.read.parquet(files.vecs.map(f => s"$root/$f"): _*)
-          .select(col(idCol), col(e))
-        BucketedSignatureStore.write(
-          assignCells(curVecs, e, trainQuantizer(curVecs, e, v2)),
-          vecsTable(v2), vecsPath(v2), numBuckets, Seq("cell"))
-        listDir(vecsPath(v2)).toSeq
-      case _ => files.vecs
-    }
+    val newSigs = added(man, Sigs)(sigs.write.mode("append").parquet(sigsPath))
     // media hashes (and their block store) are signature-scheme-
     // independent: the store's media stamps carry through (this
     // migration must not silently restamp them)
-    commitManifest(man.copy(bandsVersion = v2, sigScheme = cur,
-      files = Some(files.copy(
-        sigs = newSigs, bands = listDir(bandsDir(v2)).toSeq, vecs = newVecs)),
+    val next = man.copy(bandsVersion = man.bandsVersion + 1, sigScheme = cur)
+    val v2 = next.bandsVersion
+    BucketedSignatureStore.write(bands, bandsTable(v2), bandsDir(v2),
+      numBuckets, bandKeys)
+    val newVecs = embCol.filter(_ => files.vecs.nonEmpty).map { e =>
+      val curVecs = spark.read.parquet(files.vecs.map(f => s"$root/$f"): _*)
+        .select(col(idCol), col(e))
+      BucketedSignatureStore.write(
+        assignCells(curVecs, e, trainQuantizer(curVecs, e, v2)),
+        vecsTable(v2), vecsPath(v2), numBuckets, Seq("cell"))
+      Vecs.key -> listing(next, Vecs)
+    }
+    commitManifest(next.copy(
+      files = Some(files.updated(Seq(Sigs.key -> newSigs, Bands.key -> listing(next, Bands)) ++
+        newVecs: _*)),
       schemas = man.schemas + (Sigs.key -> schemaOf(sigs))))
   }
 
@@ -1535,38 +1569,36 @@ class CorpusManager(
     require(man.mediaScheme != mediaScheme,
       s"corpus $name is already at media scheme $mediaScheme — nothing to migrate")
     val files = man.files.get
-    val cur = scan(Docs, Some(man))
+    val cur = scan(Docs, man)
     require(cur.columns.contains(mc),
       s"corpus $name docs carry no '$mc' column — the media source is " +
         "absent, so there is nothing to rehash")
-    val before = listDir(mediaPath)
-    val hashes = mediaHashesOf(cur)
-    hashes.write.mode("append").parquet(mediaPath)
-    val newMedia = (listDir(mediaPath) -- before).toSeq
-    val mediaSchema = SnapshotLog.writtenSchema(hashes)
     // the block store is scheme-keyed derived data: rebuild it from the
     // fresh-scheme hashes as the next version, so the very next shard
     // ingest joins the new layout instead of regenerating lazily
+    val next = man.copy(mediaScheme = mediaScheme.toLong,
+      mediaBlocksVersion = man.mediaBlocksVersion + 1, mediaRadius = mediaMaxHamming.toLong)
+    val hashes = mediaHashesOf(cur)
+    val newMedia = added(next, Media)(hashes.write.mode("append").parquet(mediaPath))
+    val mediaSchema = SnapshotLog.writtenSchema(hashes)
     val newHashes = log.scan(Some(newMedia), Some(mediaSchema), mediaPath)
-    val mbV = man.mediaBlocksVersion + 1
     val mbCombo = desiredMediaCombo(newHashes.count())
-    writeMediaBlocks(newHashes, mbV, mbCombo)
-    commitManifest(man.copy(mediaScheme = mediaScheme.toLong,
-      mediaBlocksVersion = mbV, mediaRadius = mediaMaxHamming.toLong,
-      mediaCombo = mbCombo.toLong,
-      files = Some(files.copy(media = newMedia,
-        mediaBlocks = listDir(mediaBlocksDir(mbV)).toSeq)),
+    writeMediaBlocks(newHashes, next.mediaBlocksVersion, mbCombo)
+    commitManifest(next.copy(mediaCombo = mbCombo.toLong,
+      files = Some(files.updated(Media.key -> newMedia,
+        MediaBlocks.key -> listing(next, MediaBlocks))),
       schemas = man.schemas + (Media.key -> mediaSchema.json)))
   }
 
   /** Delete artifact files not referenced by the newest `retainLast`
     * COMMITTED manifests — crashed-ingest orphans, superseded sketch
-    * generations, pre-compaction files — and drop band-table versions
-    * no retained manifest uses (dir + catalog entry). The retained set
-    * walks the manifests' `parent` chain from the committed pointer, so
-    * an orphaned generation CLAIM (a crashed commit that never swapped
-    * the pointer — a gen number no reader was ever pinned to) neither
-    * consumes a retention slot nor keeps its own dead files alive.
+    * generations, pre-compaction files — and retire the band, vector
+    * and media-block versions no retained manifest uses (dir + catalog
+    * entry). The retained set walks the manifests' `parent` chain from
+    * the committed pointer, so an orphaned generation CLAIM (a crashed
+    * commit that never swapped the pointer — a gen number no reader was
+    * ever pinned to) neither consumes a retention slot nor keeps its
+    * own dead files alive.
     * Returns the root-relative deleted file paths. Reading at manifests
     * older than the retained window is forfeited. Serialized behind the
     * ingest lock: a live writer's freshly appended, not-yet-committed
@@ -1582,70 +1614,28 @@ class CorpusManager(
     if (retained.isEmpty) throw new IllegalStateException(
       s"no retained manifest pins file lists (legacy store at $root); " +
         "vacuum would treat every artifact file as an orphan")
-    val referenced = retained
-      .flatMap(f => f.docs ++ f.sigs ++ f.hashes ++ f.sketch ++ f.bands ++
-        f.vecs ++ f.media ++ f.mediaBlocks).toSet
-    // the versions `<dir>/<prefix>N` on disk
-    def versions(dir: String, prefix: String): Seq[Long] =
-      if (!fs.exists(new Path(dir))) Nil
-      else fs.listStatus(new Path(dir)).map(_.getPath.getName)
-        .collect { case d if d.matches(s"$prefix\\d+") => d.stripPrefix(prefix).toLong }.toSeq
-    val bandVersions = versions(dedupPath, "bands_v")
-    val annVersions = versions(s"$root/ann", "v")
-    // every media-SCHEME dir participates, not just the configured
-    // scheme's: after a migrateMediaScheme the old scheme's unpinned
-    // files are exactly the orphans vacuum exists to reclaim
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val mediaDirs = fs.listStatus(rootP).map(_.getPath.getName)
-      .collect { case d if d.matches("media_hashes(_s\\d+)?") => s"$root/$d" }
-      .toSeq
-    // media block-store versions participate like band versions: stale
-    // layouts (regenerations, compactions, scheme migrations) are
-    // retired once no retained manifest pins their files
-    val mbVersions = versions(s"$root/media_blocks", "v")
-    // vector files participate like every other artifact (crashed shard
-    // ingests leave orphan vector rows; compaction leaves whole stale
-    // versions); the centroid sidecars are NOT file-tracked — they live
-    // and die with their version dir below
-    val all = listDir(docsPath) ++ listDir(sigsPath) ++ listDir(hashesPath) ++
-      listDir(sketchPath) ++ bandVersions.flatMap(v => listDir(bandsDir(v))) ++
-      annVersions.flatMap(v => listDir(vecsPath(v))) ++
-      mediaDirs.flatMap(listDir) ++
-      mbVersions.flatMap(v => listDir(mediaBlocksDir(v)))
-    val doomed = (all -- referenced).toSeq.sorted
+    val referenced = retained.flatMap(_.byKey.values.flatten).toSet
+    // every version of every artifact on disk participates: crashed
+    // ingests leave orphan files in the live versions, compactions,
+    // regenerations and scheme migrations leave whole stale ones
+    val onDisk = Artifacts.map(a => a -> a.onDisk()).toMap
+    val all = Artifacts.flatMap(a => onDisk(a).flatMap(v => listDir(a.dirAt(v))))
+    val doomed = (all.toSet -- referenced).toSeq.sorted
     doomed.foreach(f =>
       fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-    // retire band-table versions with no surviving files (dir +
+    // retire a versioned artifact's versions left with no files (dir +
     // catalog) — but NEVER the live version: a legitimately-empty
     // active band table (empty bootstrap corpus) must survive for the
     // next ingest's append to target
-    bandVersions.filterNot(_ == man.bandsVersion)
-      .filterNot(v => listDir(bandsDir(v)).nonEmpty).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(bandsDir(v)), true)
-        spark.sql(s"DROP TABLE IF EXISTS ${bandsTable(v)}")
-      }
-    // same for ann versions: an emptied vector dir means no retained
-    // manifest pins this quantizer generation — its centroid sidecar
-    // goes with it
-    annVersions.filterNot(_ == man.bandsVersion)
-      .filterNot(v => listDir(vecsPath(v)).nonEmpty).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(annDir(v)), true)
-        spark.sql(s"DROP TABLE IF EXISTS ${vecsTable(v)}")
-      }
-    // ...and media block versions, keyed on their OWN live counter
-    mbVersions.filterNot(_ == man.mediaBlocksVersion)
-      .filterNot(v => listDir(mediaBlocksDir(v)).nonEmpty).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(mediaBlocksDir(v)), true)
-        spark.sql(s"DROP TABLE IF EXISTS ${mediaBlocksTable(v)}")
-      }
-    // the active tables may have lost orphan files — drop cached indexes
-    if (spark.catalog.tableExists(bandsTable(man.bandsVersion)))
-      spark.catalog.refreshTable(bandsTable(man.bandsVersion))
-    if (spark.catalog.tableExists(vecsTable(man.bandsVersion)))
-      spark.catalog.refreshTable(vecsTable(man.bandsVersion))
-    if (man.mediaBlocksVersion > 0 &&
-        spark.catalog.tableExists(mediaBlocksTable(man.mediaBlocksVersion)))
-      spark.catalog.refreshTable(mediaBlocksTable(man.mediaBlocksVersion))
+    for (a <- Artifacts; r <- a.retired; v <- onDisk(a)
+         if v != a.version(man) && listDir(a.dirAt(v)).isEmpty) {
+      fs.delete(new Path(r.dir(v)), true)
+      spark.sql(s"DROP TABLE IF EXISTS ${r.table(v)}")
+    }
+    // the live tables may have lost orphan files — drop cached indexes
+    for (a <- Artifacts; r <- a.retired; t = r.table(a.version(man))
+         if spark.catalog.tableExists(t))
+      spark.catalog.refreshTable(t)
     doomed
   }
 

@@ -434,6 +434,62 @@ class CorpusManagerSpec extends SparkSpec {
     }
   }
 
+  test("a manifest from before the vecs, media and mediaBlocks keys reads, vacuums, " +
+      "ingests and is rewritten with all eight keys") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val root = tmpDir("cmoldkeys")
+    val m = new CorpusManager("cm_oldkeys", root, spark,
+      numBuckets = 4, minTokens = 2)
+    try {
+      m.ingestInitial(docs(Seq(
+        (1L, mkText(1), "web"), (2L, mkText(2), "web"), (3L, mkText(3), "web"))))
+      val fsys = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val ptr = new org.apache.hadoop.fs.Path(root, "_corpus.json")
+      def pointer(): JObject = JsonMethods.parse(
+        graft.sources.ManifestIO.readVerified(fsys, ptr)).asInstanceOf[JObject]
+      def fileKeys(): Seq[String] = (pointer() \ "files").asInstanceOf[JObject].obj.map(_._1)
+      val pinned = m.snapshotFiles().get
+      // doctor the pointer to a manifest written before the three keys
+      val dropped = Set("vecs", "media", "mediaBlocks")
+      val legacy = JObject(pointer().obj.map {
+        case ("files", JObject(kv)) => "files" -> JObject(kv.filterNot(f => dropped(f._1)))
+        case kv => kv
+      })
+      val out = fsys.create(ptr, true)
+      try out.write(graft.sources.ManifestIO.seal(
+        JsonMethods.pretty(JsonMethods.render(legacy)).getBytes("UTF-8")))
+      finally out.close()
+      assert(fileKeys() == Seq("docs", "sigs", "hashes", "sketch", "bands"))
+      // it reads with those lists empty and the others as written
+      val read = m.snapshotFiles().get
+      assert(read.vecs.isEmpty && read.media.isEmpty && read.mediaBlocks.isEmpty)
+      assert(read == pinned)
+      assert(corpusIds(m) == Set(1L, 2L, 3L))
+      // vacuum deletes an orphan and no pinned file
+      docs(Seq((99L, mkText(99), "web"))).write.mode("append").parquet(m.docsPath)
+      val orphans = new java.io.File(m.docsPath).list().toSet
+        .filter(f => f.endsWith(".parquet") && !pinned.docs.exists(_.endsWith(f)))
+      assert(orphans.size == 1, orphans.toString)
+      val removed = m.vacuum(retainLast = 1)
+      assert(removed.map(_.stripPrefix("docs/")).toSet == orphans, removed.toString)
+      assert(pinned.byKey.values.flatten.forall(f => new java.io.File(s"$root/$f").exists()))
+      assert(corpusIds(m) == Set(1L, 2L, 3L))
+      // a shard ingests with the expected drop, and its commit writes all
+      // eight keys in order
+      val r = m.ingestShard(docs(Seq((10L, near(mkText(1)), "web"),
+        (11L, mkText(9), "web"))))
+      assert(r.ingested == 1 && r.duplicates == 1, r.toString)
+      assert(corpusIds(m) == Set(1L, 2L, 3L, 11L))
+      assert(fileKeys() == Seq("docs", "sigs", "hashes", "sketch", "bands", "vecs",
+        "media", "mediaBlocks"))
+    } finally {
+      Seq("cm_oldkeys_bands_v1", "cm_oldkeys_shard_bands")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("hasher choice stamps the scheme; switching hashers routes through migration") {
     val s = spark; import s.implicits._
     val root = tmpDir("cmxxh")

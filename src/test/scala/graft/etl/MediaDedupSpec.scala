@@ -46,7 +46,8 @@ class MediaDedupSpec extends SparkSpec {
     m.corpus().select("doc_id").collect().map(_.getLong(0)).toSet
 
   test("media near-dups with fresh texts dedup across initial, shard, compaction") {
-    val m = new CorpusManager("cm_media", tmpDir("cmmedia"), spark,
+    val root = tmpDir("cmmedia")
+    val m = new CorpusManager("cm_media", root, spark,
       numBuckets = 4, minTokens = 2, mediaCol = Some("img"))
     // initial: 1 and 2 share a near-identical image, texts fully fresh;
     // 3 has its own image; 4's bytes are undecodable (no media signal)
@@ -74,9 +75,16 @@ class MediaDedupSpec extends SparkSpec {
     assert(r2.duplicates == 1 && r2.ingested == 1, r2.toString)
     assert(ids(m) == Set(1L, 3L, 4L, 11L, 21L))
 
-    // vacuum after compaction: corpus intact, dedup still works
+    // vacuum after compaction: corpus intact, dedup still works, and
+    // the superseded block-store version is retired (dir and catalog
+    // table) while the live one survives
     m.vacuum(retainLast = 1)
     assert(ids(m) == Set(1L, 3L, 4L, 11L, 21L))
+    assert(m.readManifest().get.mediaBlocksVersion == 2)
+    assert(!new java.io.File(s"$root/media_blocks/v1").exists())
+    assert(!spark.catalog.tableExists("cm_media_media_blocks_v1"))
+    assert(new java.io.File(s"$root/media_blocks/v2").exists())
+    assert(spark.catalog.tableExists("cm_media_media_blocks_v2"))
     val r3 = m.ingestShard(docs(Seq((30L, text(30), "web", imgNear(21)))))
     assert(r3.duplicates == 1 && r3.ingested == 0, r3.toString)
   }

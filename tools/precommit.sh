@@ -6,20 +6,22 @@
 # than at the next bench or audit run. A staged change to the corpus
 # manager, the dedup pipeline or the concurrency helper runs the
 # shard-ingest cost fence (its job and SQL-execution bounds, artifact
-# parity and failed-append checks). A staged change to the
-# snapshot-manifest protocol (the snapshot log, the gridded store, its
-# manifest and descriptor, encoding surgery, the manifest envelope, the
-# commit primitives) or to the grid catalog runs the append cost fence,
-# the commit-protocol spec, the manifest-extent spec, the grid-catalog
-# spec and the shard-ingest cost fence: both versioned stores commit
-# through that code. A staged change to the dataset manager, the
-# quality checks or the update profile runs the append cost fence, the
-# post-parse read-back spec and the parse parity spec: parse pins,
-# profiles, samples and reads back its update through that code. A
-# staged change to the job recorder (graft/obs/) or to the probe main
-# runs the probe spec and the three fences that price by counting Spark
-# jobs: the append cost fence, the shard-ingest cost fence and the
-# signature-spread spec.
+# parity and failed-append checks); a staged corpus manager also runs
+# the corpus-manager and media-dedup specs, which drive its artifact
+# registry through compaction, the migrations and vacuum. A staged
+# change to the snapshot-manifest protocol (the snapshot log, the
+# gridded store, its manifest and descriptor, encoding surgery, the
+# manifest envelope, the commit primitives) or to the grid catalog
+# runs the append cost fence, the commit-protocol spec, the
+# manifest-extent spec, the grid-catalog spec and the shard-ingest
+# cost fence: both versioned stores commit through that code. A
+# staged change to the dataset manager, the quality checks or the
+# update profile runs the append cost fence, the post-parse read-back
+# spec and the parse parity spec: parse pins, profiles, samples and
+# reads back its update through that code. A staged change to the job
+# recorder (graft/obs/) or to the probe main runs the probe spec and
+# the three fences that price by counting Spark jobs: the append cost
+# fence, the shard-ingest cost fence and the signature-spread spec.
 # Install with:
 #   ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # Skips the sbt startup when nothing it checks is staged.
@@ -42,10 +44,14 @@ if echo "$staged" | grep -q -E '(^|/)(BENCH_FULL_.*\.json|PLAN_GAUGE\.json)$'; t
   }
 fi
 if echo "$staged" | grep -q -E '(^|/)(etl/CorpusManager|functions/Dedup[^/]*|operators/Concurrent)\.scala$'; then
-  echo "[pre-commit] staged corpus/dedup code -> shard-ingest cost fence"
-  sbt -batch "testOnly graft.etl.ShardIngestCostFenceSpec" \
+  specs="graft.etl.ShardIngestCostFenceSpec"
+  if echo "$staged" | grep -q -E '(^|/)etl/CorpusManager\.scala$'; then
+    specs="$specs graft.etl.CorpusManagerSpec graft.etl.MediaDedupSpec"
+  fi
+  echo "[pre-commit] staged corpus/dedup code -> $specs"
+  sbt -batch "testOnly $specs" \
       >/tmp/precommit_fence.log 2>&1 || {
-    echo "[pre-commit] SHARD-INGEST FENCE FAILED - commit blocked. tail of log:"
+    echo "[pre-commit] CORPUS/DEDUP SPECS FAILED - commit blocked. tail of log:"
     tail -20 /tmp/precommit_fence.log
     exit 1
   }
