@@ -10,9 +10,37 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time zone (oracle parity with DuckDB);
   *  - `nanosAsLong` so the driver's nanosecond-precision parquet
   *    (`events.ts`) is readable — Spark has no ns timestamp type, so we
-  *    read raw long nanos and derive µs explicitly (see [[Tables.events]]).
+  *    read raw long nanos and derive µs explicitly (see [[Tables.events]]);
+  *  - a codegen cache sized to graft's working set ([[CodegenCacheEntries]]).
   */
 object GraftSession {
+
+  /** Entries in Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * default 100): the compiled classes of whole-stage and expression
+    * codegen, an LRU keyed by (classloader, generated code), so the
+    * driver and the task threads each fill it. One graft operation needs
+    * more than 100, so at the default each run evicted what the next run
+    * of the same operation needed and compiled it again (4-core VM,
+    * sf0.01): a fence-sized shard ingest 156 classes, a warm q160 236
+    * (2.1–2.4 s of compiling), a warm q164 668 (5.6 s). A cold q164
+    * compiles 303 distinct classes, the largest working set measured;
+    * 1000 is about 3× that. With it a warm q160 or q164 and a repeated
+    * shard ingest compile none, and a repeated append only the classes
+    * whose code embeds its own times.
+    *
+    * The conf is static: Spark reads it once per JVM, when the first class
+    * is compiled, so it can only be set on the builder that makes the
+    * JVM's first session, never per session or per operation.
+    *
+    * It is not the JIT's code cache (`-XX:ReservedCodeCacheSize` in
+    * build.sbt), which holds the machine code HotSpot makes of hot
+    * methods, those of generated classes too. This one holds the
+    * Janino-compiled classes themselves, and a miss costs a compile on
+    * the calling thread. Keeping them costs no memory over recompiling
+    * them: non-heap use after three q160 runs read 267 MB at 1000
+    * entries and 276 MB at 100. */
+  val CodegenCacheEntries = 1000
+
   def builder(cores: Int): SparkSession.Builder =
     SparkSession
       .builder()
@@ -25,6 +53,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Iterative folds (LPA/PageRank/connected components) retire one
       // shuffle per round, but the files are deleted only when the
       // driver GCs the RDD references — with a large heap that can be

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.obs.JobLog
+import java.lang.management.ManagementFactory
+
+import graft.obs.{Compiles, JobLog}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -15,8 +17,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `query` runs `SparkEntry` queries over `SPARK_GRAFT_SF_DIR` in one
   *    session and prints, per run, the wall time and the Spark job
   *    breakdown: job count, summed job time, the call sites that took
-  *    it and the longest jobs. The first run is the cold one; the
-  *    bench's decision series is warm.
+  *    it and the longest jobs, plus the generated classes it compiled
+  *    and the time that took ([[Compiles]]) and the JVM's non-heap use
+  *    after it. The first run is the cold one; the bench's decision
+  *    series is warm, and a warm run of a query compiles nothing.
   *  - `plan` writes each query's formatted physical plan to
   *    `<dir>/<q>_<suffix>.txt` (the `plans/rNN/<q>_before.txt` /
   *    `_after.txt` evidence files), or prints it with no `dir`. Plans,
@@ -103,19 +107,20 @@ object Probe {
     try cmd.run(spark) finally spark.stop()
   }
 
-  /** One timed run of one query and the jobs it started. */
+  /** One timed run of one query, the jobs it started and the classes
+    * compiled meanwhile. */
   final case class Run(query: String, rep: Int, seconds: Double,
-                       jobs: Seq[JobLog.Job])
+                       jobs: Seq[JobLog.Job], compiles: Compiles)
 
   def query(spark: SparkSession, sfDir: String, names: Seq[String],
             reps: Int): Seq[Run] =
     for (q <- names; rep <- 1 to reps) yield {
-      val (seconds, jobs) = JobLog.measure(spark) {
+      val ((seconds, jobs), compiles) = Compiles.measure(JobLog.measure(spark) {
         val t0 = System.nanoTime()
         SparkEntry.queries(q)(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
-      }
-      val run = Run(q, rep, seconds, jobs)
+      })
+      val run = Run(q, rep, seconds, jobs, compiles)
       report(run)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
@@ -125,7 +130,9 @@ object Probe {
   private def report(r: Run): Unit = {
     val tag = s"rep${r.rep}"
     println(f"PROFILE $tag ${r.query} total ${r.seconds}%.2fs, " +
-      f"${r.jobs.size} jobs, job-sum ${r.jobs.map(_.ms).sum / 1e3}%.2fs")
+      f"${r.jobs.size} jobs, job-sum ${r.jobs.map(_.ms).sum / 1e3}%.2fs, " +
+      f"${r.compiles.classes} classes compiled, ${r.compiles.seconds}%.2f s compiling, " +
+      f"non-heap ${ManagementFactory.getMemoryMXBean.getNonHeapMemoryUsage.getUsed / 1e6}%.1f MB")
     val bySite = r.jobs.groupBy(_.site).map { case (s, js) =>
       (s, js.map(_.ms).sum, js.size) }.toSeq.sortBy(-_._2)
     bySite.take(25).foreach { case (s, ms, n) =>

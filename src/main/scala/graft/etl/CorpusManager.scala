@@ -592,13 +592,13 @@ class CorpusManager(
     * corpus pays no per-ingest re-expansion (the pre-store inline shape
     * re-blocked the whole corpus hash artifact every run — ~254M block
     * rows at 1.8M docs, measured). Corpus-side ids of the surviving
-    * pairs are semi-joined against the PINNED hash artifact — the
+    * pairs are semi-joined against the media hash artifact `man` pins — the
     * [[embCandidates]] orphan guard: a crashed ingest's orphan block
     * row must never drop a shard doc against a doc that never
     * committed. Package-private so the gate query and the plan spec
     * can drive exactly this path. */
   private[graft] def mediaCrossPairs(shardHashes: DataFrame, blocksV: Long,
-                                     combo: Int): DataFrame = {
+                                     combo: Int, man: CorpusManifest): DataFrame = {
     graft.sources.MediaBlockStore.write(shardHashes, mediaScheme,
       mediaMaxHamming, combo, s"${name}_shard_media_blocks",
       s"$root/shard_media_blocks", numBuckets)
@@ -611,7 +611,7 @@ class CorpusManager(
     graft.sources.MediaBlockStore
       .crossPairs(corpusB, shardB, mediaScheme, mediaMaxHamming)
       .pinned()
-      .join(scan(Media, readManifest().get).select(col("id").as("aid")), Seq("aid"), "left_semi")
+      .join(scan(Media, man).select(col("id").as("aid")), Seq("aid"), "left_semi")
       .select(least(col("aid"), col("bid")).as("d1"),
         greatest(col("aid"), col("bid")).as("d2"))
       .distinct()
@@ -840,38 +840,39 @@ class CorpusManager(
     graft.functions.VectorFunctions
       .ivfAssign(df.select(col(idCol), col(e)), idCol, e, cents)
 
-  /** Embedding near-dup candidate pairs of the shard against the CORPUS
-    * vector table: candidates only from shared IVF cells — the bucketed
-    * (cell)-keyed table joins exchange-free on the corpus side, the
-    * vector twin of the band-table path — then exact-cosine verify.
-    * Corpus-side ids are semi-joined against the PINNED hash table:
-    * unlike band rows (where the verify join already requires pinned
-    * signatures), a crashed ingest's orphan VECTOR row could otherwise
-    * make a shard doc look like a duplicate of a doc that never
-    * committed. Package-private so the spec can assert the plan. */
   /** The scan-and-verify stage of [[embCandidates]]: shard rows meet the
-    * (cell)-bucketed corpus vector table on their cell and survive the
-    * exact-cosine verify — the corpus side must scan bucketed, no
+    * (cell)-bucketed vector table `man` pins on their cell and survive
+    * the exact-cosine verify — the corpus side must scan bucketed, no
     * exchange. Split out so the spec can assert exactly this plan. */
-  private[etl] def embVerifiedPairs(shardAssigned: DataFrame): DataFrame = {
+  private[etl] def embVerifiedPairs(shardAssigned: DataFrame,
+                                    man: CorpusManifest): DataFrame = {
     val e = embCol.get
-    BucketedSignatureStore.table(spark, vecsTable(readManifest().get.bandsVersion)).as("c")
+    BucketedSignatureStore.table(spark, vecsTable(man.bandsVersion)).as("c")
       .join(shardAssigned.as("s"), Seq("cell"))
       .filter(graft.functions.VectorFunctions.cosineFast(
         col(s"c.$e"), col(s"s.$e")) >= embNearCos)
       .select(col(s"c.$idCol").as("cid_"), col(s"s.$idCol").as("sid_"))
   }
 
-  private[etl] def embCandidates(shardAssigned: DataFrame): DataFrame =
+  /** Embedding near-dup candidate pairs of the shard against the CORPUS
+    * vector table: candidates only from shared IVF cells — the bucketed
+    * (cell)-keyed table joins exchange-free on the corpus side, the
+    * vector twin of the band-table path — then exact-cosine verify.
+    * Corpus-side ids are semi-joined against `committedHashes`, the
+    * ingest's scan of the hash artifact `man` pins: unlike band rows
+    * (where the verify join already requires pinned signatures), a
+    * crashed ingest's orphan VECTOR row could otherwise make a shard doc
+    * look like a duplicate of a doc that never committed. */
+  private[etl] def embCandidates(shardAssigned: DataFrame, man: CorpusManifest,
+                                 committedHashes: DataFrame): DataFrame =
     // The orphan guard must run on the VERIFIED pairs (tiny), never the
     // vector table: the optimizer's semi-join pushdown would otherwise
     // move it below the cell join, re-shuffling the bucketed table by id
     // and forfeiting the exchange-free scan — the checkpoint is the
     // reorder barrier that keeps it above (measured: pushdown happens
     // without it), and the pair set it materializes is dup-graph-sized.
-    embVerifiedPairs(shardAssigned).pinned()
-      .join(scan(Hashes, readManifest().get).select(col(idCol).as("cid_")), Seq("cid_"),
-        "left_semi")
+    embVerifiedPairs(shardAssigned, man).pinned()
+      .join(committedHashes.select(col(idCol).as("cid_")), Seq("cid_"), "left_semi")
       .select(least(col("cid_"), col("sid_")).as("d1"),
         greatest(col("cid_"), col("sid_")).as("d2"))
       .distinct()
@@ -1221,14 +1222,14 @@ class CorpusManager(
     // grows, floored by the configured `embProbes`; multi-table LSH
     // remains the recall-GUARANTEED shape.
     val shardAssigned = embCol.map { e =>
-      val cents = readCentroids()
+      val cents = readCentroidsAt(man.bandsVersion)
       graft.functions.VectorFunctions.ivfAssignMulti(
           shard.select(col(idCol), col(e)), idCol, e,
           cents, probesFor(cents.length))
         .pinned()
     }
     val embEdges = shardAssigned.map { a =>
-      embCandidates(a).unionByName(embIntraPairs(shard))
+      embCandidates(a, man, committed.hashes).unionByName(embIntraPairs(shard))
     }
     // media edges: intra-shard blocked pairs + shard-vs-corpus pairs
     // through the PERSISTED block store (regenerated first if the
@@ -1238,7 +1239,7 @@ class CorpusManager(
     val mediaBlocksState = shardMedia.map(_ => ensureMediaBlocks(man))
     val mediaEdges = shardMedia.map { mh =>
       val (v, combo) = mediaBlocksState.get
-      mediaCrossPairs(mh, v, combo).unionByName(mediaIntraPairs(mh))
+      mediaCrossPairs(mh, v, combo, man).unionByName(mediaIntraPairs(mh))
     }
     // duplicate edges are harmless to the components, which pin their
     // input once — no distinct, no second pin here
@@ -1317,7 +1318,7 @@ class CorpusManager(
       () => merged.write.mode("append").parquet(sketchPath)) ++
       embCol.map { e => () =>
         BucketedSignatureStore.append(
-          assignCells(keepers, e, readCentroids()), vecsTable(man.bandsVersion),
+          assignCells(keepers, e, readCentroidsAt(man.bandsVersion)), vecsTable(man.bandsVersion),
           numBuckets, Seq("cell"))
       } ++
       keeperMedia.map { mh => () =>

@@ -635,8 +635,12 @@ class GriddedStore(val root: String, private[sources] val spark: SparkSession) {
           .select((d.dims :+ d.dataVar).map(col) :+ col("time_bucket"): _*)
         fresh ++= writeBuckets(survivors.unionByName(insertRows), d)
       }
+      // A pure append's times are all of the update's non-null ones, so
+      // its filter names none: `isin` would inline each append's own
+      // times into generated code, compiled afresh for every append.
       if (plan.appends.nonEmpty)
-        fresh ++= writeBuckets(p.filter(col(t).isin(plan.appends: _*)), d)
+        fresh ++= writeBuckets(p.filter(
+          if (plan.inserts.isEmpty) col(t).isNotNull else col(t).isin(plan.appends: _*)), d)
 
       // New manifest: committed files minus the replaced insert buckets,
       // plus exactly the files the two writes above created.

@@ -37,6 +37,13 @@ class ProbeSpec extends SparkSpec {
     runs.foreach(r => assert(r.jobs.nonEmpty, s"run ${r.rep} saw no jobs"))
   }
 
+  test("a query's second run compiles no generated class") {
+    // q160's run needs more generated classes than Spark's default
+    // codegen cache (100) holds
+    val runs = Probe.query(spark, Sf, Seq("q160_corpus_lifecycle"), reps = 2)
+    assert(runs(1).compiles.classes == 0, s"rep2 compiled ${runs(1).compiles}")
+  }
+
   test("scale gridded 5 passes its planted checks") {
     Probe.parse(Seq("scale", "gridded", "5"), env).run(spark)
   }

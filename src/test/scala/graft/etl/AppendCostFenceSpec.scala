@@ -2,14 +2,17 @@ package graft.etl
 
 import graft.SparkSpec
 import graft.model.{Category, ChunkGrid, DatasetDescriptor}
-import graft.obs.JobLog
+import graft.obs.{Compiles, JobLog}
 import org.apache.spark.sql.DataFrame
 
 /** An append costs O(update), not O(store): the same 1-day append is
   * parsed onto a 5-day and a 15-day store, and the whole parse, its
   * post-parse read-back and its STAC publish are priced by [[JobLog]]
   * (Spark jobs and task input records). A full-store read creeping back
-  * into either step makes the two stores' counts differ. */
+  * into either step makes the two stores' counts differ. The next day's
+  * append reuses the generated classes of the last one ([[Compiles]]),
+  * except those whose code holds the day itself, even when a corpus
+  * shard ingest ran in between. */
 class AppendCostFenceSpec extends SparkSpec {
 
   private val d = DatasetDescriptor("fence", "precip", Category.Observation,
@@ -27,10 +30,14 @@ class AppendCostFenceSpec extends SparkSpec {
   private final class Priced(storeRoot: String, catalogRoot: String)
       extends DatasetManager(d, storeRoot, catalogRoot, spark) {
     var postQc: (Int, Long) = (-1, -1L)
+    var postQcCompiles: Compiles = Compiles(-1L, -1L)
     var publish: (Int, Long) = (-1, -1L)
     var parsed: (Int, Long) = (-1, -1L)
-    override private[etl] def readBack(sample: DataFrame): Unit =
-      postQc = cost(super.readBack(sample))
+    override private[etl] def readBack(sample: DataFrame): Unit = {
+      val (c, compiles) = Compiles.measure(cost(super.readBack(sample)))
+      postQc = c
+      postQcCompiles = compiles
+    }
     override def publishMetadata(c: DatasetDescriptor): Unit =
       publish = cost(super.publishMetadata(c))
   }
@@ -65,5 +72,29 @@ class AppendCostFenceSpec extends SparkSpec {
     // axis aggregate and the sample ran one after another
     assert(small.parsed._1 == 9 && large.parsed._1 == 9,
       s"the 1-day parse ran ${small.parsed._1} and ${large.parsed._1} Spark jobs")
+  }
+
+  /** The classes of the read-back's scan (`GriddedStore.readTimes`):
+    * its `time IN (...)` filter inlines the sampled times, so each
+    * append's read-back compiles them afresh. */
+  private val ReadTimesClasses = 3
+
+  test("a 1-day parse after a shard ingest compiles only the classes that embed its own time") {
+    // one session serving both pipelines: the corpus ingest's classes,
+    // compiled between two appends, must not evict the append's
+    val m = appendOnto(5)
+    val s = spark
+    import s.implicits._
+    def docs(ids: Range) = ids.map(i => (i.toLong,
+      (0 until 8).map(j => s"w${i * 8 + j}").mkString(" "), "s0")).toDF("doc_id", "text", "source")
+    val corpus = new CorpusManager("fence_append_corpus", tmpDir("fence-corpus"), spark,
+      numBuckets = 2, minTokens = 2)
+    corpus.ingestInitial(docs(0 until 8))
+    corpus.ingestShard(docs(8 until 12))
+    val (_, compiles) = Compiles.measure(m.parse(cube(1, nLat, nLon, startDay = 6)))
+    assert(compiles.classes == m.postQcCompiles.classes,
+      s"the repeated 1-day parse compiled $compiles, its read-back ${m.postQcCompiles}")
+    assert(compiles.classes <= ReadTimesClasses,
+      s"the repeated 1-day parse compiled $compiles")
   }
 }

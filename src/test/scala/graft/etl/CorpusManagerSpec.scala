@@ -81,7 +81,7 @@ class CorpusManagerSpec extends SparkSpec {
       val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val plan = try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        m.embVerifiedPairs(assigned).queryExecution.executedPlan.toString()
+        m.embVerifiedPairs(assigned, m.readManifest().get).queryExecution.executedPlan.toString()
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       assert(plan.contains("Bucketed: true"), plan)
     } finally {
@@ -239,7 +239,7 @@ class CorpusManagerSpec extends SparkSpec {
       assert(!corpusIds(m).contains(401L) && corpusIds(m).contains(402L))
       // v2 is the one the candidate join reads, still bucketed
       val assigned = m.assignCells(newDirs, "emb", m.readCentroids())
-      val plan = m.embVerifiedPairs(assigned).queryExecution.executedPlan.toString()
+      val plan = m.embVerifiedPairs(assigned, m.readManifest().get).queryExecution.executedPlan.toString()
       assert(plan.contains("cm_rt_vecs_v2") || plan.contains("Bucketed: true"), plan)
       // retain only the live generation: ann/v1 (vectors + centroid
       // sidecar) must be reclaimed, v2 untouched, reads intact

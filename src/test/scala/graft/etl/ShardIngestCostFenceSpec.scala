@@ -2,13 +2,16 @@ package graft.etl
 
 import graft.SparkSpec
 import graft.functions.DedupPipeline
-import graft.obs.JobLog
+import graft.obs.{Compiles, JobLog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, md5}
 
 /** A shard ingest runs each dedup stage once: its Spark jobs, SQL
   * executions and serial steps are priced by [[JobLog]], bounded, and
-  * the same for the 2nd and the 5th shard of equal size. The committed
+  * the same for the 2nd and the 5th shard of equal size. A shard after
+  * the first reuses the generated classes the first compiled
+  * ([[Compiles]]): a codegen cache smaller than an ingest's working set
+  * recompiles about 190 classes per shard. The committed
   * artifacts equal what the committed docs recompute to, and a failed
   * append leaves the corpus, the generation and the lock as they were. */
 class ShardIngestCostFenceSpec extends SparkSpec {
@@ -17,22 +20,26 @@ class ShardIngestCostFenceSpec extends SparkSpec {
     * execution count as their own) that ran in `steps` serial steps:
     * groups of executions whose job intervals overlap. `unscoped` holds
     * the call sites of the jobs outside any execution (a parquet
-    * footer-inference job is one: `parquet at <file>:<line>`). */
-  private case class Cost(jobs: Int, executions: Int, steps: Int, unscoped: Seq[String]) {
-    override def toString: String = s"Cost($jobs jobs, $executions executions, $steps steps)"
+    * footer-inference job is one: `parquet at <file>:<line>`).
+    * `compiled` counts the generated classes compiled meanwhile. */
+  private case class Cost(jobs: Int, executions: Int, steps: Int, unscoped: Seq[String],
+                          compiled: Long) {
+    override def toString: String =
+      s"Cost($jobs jobs, $executions executions, $steps steps, $compiled compiles)"
   }
 
   /** The [[Cost]] of `body` and the threads it starts. A job that
     * has not ended closes no step. */
   private def cost(body: => Unit): Cost = {
-    val (_, jobs) = JobLog.measure(spark)(body)
+    val ((_, jobs), compiles) = Compiles.measure(JobLog.measure(spark)(body))
     val runs = jobs.groupBy(j => j.execution.getOrElse(s"job-${j.id}")).values
       .map(js => (js.map(_.startMs).min, js.map(_.endMs.getOrElse(Long.MaxValue)).max))
       .toSeq.sortBy(_._1)
     val steps = runs.foldLeft((0, Long.MinValue)) { case ((n, end), (s, e)) =>
       if (s > end) (n + 1, e) else (n, math.max(end, e))
     }._1
-    Cost(jobs.size, runs.size, steps, jobs.filter(_.execution.isEmpty).map(_.site))
+    Cost(jobs.size, runs.size, steps, jobs.filter(_.execution.isEmpty).map(_.site),
+      compiles.classes)
   }
 
   /** 12 words drawn from a 1,000-word vocabulary by a hash of (i, j):
@@ -92,6 +99,8 @@ class ShardIngestCostFenceSpec extends SparkSpec {
       c.unscoped.mkString("jobs outside any execution: ", ", ", "")))
     assert(second.jobs <= 43, s"$second")
     assert(second.executions <= 18, s"$second")
+    costs.drop(1).foreach(c => assert(c.compiled == 0,
+      s"shards 2-5 recompiled generated classes: ${costs.mkString(", ")}"))
   }
 
   test("committed artifacts equal the values recomputed from the committed docs") {

@@ -21,7 +21,10 @@
 # reads back its update through that code. A staged change to the job
 # recorder (graft/obs/) or to the probe main runs the probe spec and
 # the three fences that price by counting Spark jobs: the append cost
-# fence, the shard-ingest cost fence and the signature-spread spec.
+# fence, the shard-ingest cost fence and the signature-spread spec. A
+# staged session factory (GraftSession.scala, which sizes Spark's
+# codegen cache) runs the three fences that count recompiled classes:
+# the append cost fence, the shard-ingest cost fence and the probe spec.
 # Install with:
 #   ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 # Skips the sbt startup when nothing it checks is staged.
@@ -80,6 +83,15 @@ if echo "$staged" | grep -q -E '(^|/)graft/(obs/.*|Probe\.scala)$'; then
       >/tmp/precommit_obs.log 2>&1 || {
     echo "[pre-commit] JOB-RECORDER FENCES FAILED - commit blocked. tail of log:"
     tail -20 /tmp/precommit_obs.log
+    exit 1
+  }
+fi
+if echo "$staged" | grep -q -E '(^|/)graft/GraftSession\.scala$'; then
+  echo "[pre-commit] staged session factory -> compile-counting fences"
+  sbt -batch "testOnly graft.etl.AppendCostFenceSpec graft.etl.ShardIngestCostFenceSpec graft.ProbeSpec" \
+      >/tmp/precommit_session.log 2>&1 || {
+    echo "[pre-commit] COMPILE-COUNT FENCES FAILED - commit blocked. tail of log:"
+    tail -20 /tmp/precommit_session.log
     exit 1
   }
 fi
